@@ -21,9 +21,14 @@ import org.apache.spark.sql.functions._
   * Resume verifies every manifest-listed file exists before skipping a
   * bucket; committed reads load exactly the manifest's file list.
   *
-  * Buckets are processed in waves; each wave commits one snapshot, so a
-  * killed run resumes from the last committed snapshot and recomputes
-  * nothing that was committed.
+  * Buckets are processed in waves; each wave commits one snapshot. The
+  * waves are pipelined one deep (see `runWaves`): wave k+1 stages on a
+  * staging thread while the calling thread waits for wave k and commits
+  * it, so the driver-only part of one wave (planning, AQE re-planning,
+  * footer listing, commit) overlaps the other wave's tasks. Commits still
+  * land strictly in wave order. A killed run resumes from the last
+  * committed snapshot: committed waves survive and are never recomputed;
+  * at most the 2 waves that were in flight are recomputed on resume.
   */
 object ExtractionJob {
 
@@ -79,6 +84,9 @@ object ExtractionJob {
       toBranch: Option[String] = None
   )
 
+  /** `extract_ms` is the wall time of the wave's stageWave call (extraction,
+    * sorted write, footer listing). Waves are pipelined, so it overlaps the
+    * neighbouring wave's staging and the two share the executors. */
   final case class LineageRow(
       snapshot_id: Long,
       bucket: Long,
@@ -283,7 +291,6 @@ object ExtractionJob {
 
   private def runBucketGrained(spark: SparkSession, turns: Dataset[Turn], config: Config,
           format: TableFormat, acc: scala.collection.mutable.Set[Int]): Unit = {
-    import spark.implicits._
     // change-detection resume: a committed bucket whose INPUT fingerprint
     // differs from the one recorded at commit time is treated as
     // uncommitted and recomputed (upstream backfill semantics)
@@ -328,7 +335,6 @@ object ExtractionJob {
     val waveSize = math.max(1, math.ceil(remaining.size.toDouble / config.waves).toInt)
     val waves = remaining.grouped(waveSize).toVector
     var committed = already
-    var snapshotId = format.latestSnapshot(config.outDir).getOrElse(-1)
     var doneThisRun = Set.empty[Int]
     // carry forward only files of buckets still verified-committed; stale
     // entries of recomputed buckets are dropped and replaced by this run's
@@ -347,47 +353,114 @@ object ExtractionJob {
 
     // writer-unique staging names (see runConvGrained's runToken note)
     val runToken = SnapshotManifestFormat.newRunToken()
-    waves.zipWithIndex.foreach { case (waveBuckets, waveIdx) =>
-      val input = withBucket.where(col("bucket").isin(waveBuckets: _*)).as[TurnWithBucket]
-      val (staging, waveFiles, lineage) =
-        stageWave(spark, input, config, format, waveBuckets, s"wave-$waveIdx-$runToken",
-          snapshotId + 1)
-
-      snapshotId += 1
-      committed = committed ++ waveBuckets
-      doneThisRun = doneThisRun ++ waveBuckets
-      committedFiles = committedFiles ++ waveFiles
-      // promote the staged wave and atomically commit the snapshot
-      // recomputed buckets' carried fps are stale (data now reflects the
-      // CURRENT input) — drop them unless this run records fresh ones
-      format.commitWave(config.outDir, staging, snapshotId, committed, committedFiles,
-        lineage,
-        if (config.fingerprintInputs) (carriedFps -- doneThisRun) ++ currentFps
-        else carriedFps -- doneThisRun,
-        additive = false, convFpsDir = carriedConvFps,
-        deleteDirs = carriedDeleteDirs,
-        fpMode =
-          if (config.fingerprintInputs) Some("bucket")
-          else priorMan.flatMap(_.fpMode),
-        bucketCount = Some(config.buckets),
-        // recomputing a previously committed bucket rewrites its content
-        // (non-additive promote) — incremental readers must refuse across it
-        operation = if (waveBuckets.exists(verified.contains)) "replace" else "append")
-      acc ++= waveBuckets
-
-      if (config.failAfterWave == waveIdx)
-        throw new RuntimeException(s"simulated kill after wave $waveIdx (snapshot $snapshotId committed)")
+    val base = format.latestSnapshot(config.outDir).getOrElse(-1)
+    runWaves(spark, withBucket, config, format, waves, base + 1, runToken, firstWaveNo = 0) {
+      case (waveBuckets, seq, (staging, waveFiles, lineage)) =>
+        committed = committed ++ waveBuckets
+        doneThisRun = doneThisRun ++ waveBuckets
+        committedFiles = committedFiles ++ waveFiles
+        // promote the staged wave and atomically commit the snapshot
+        // recomputed buckets' carried fps are stale (data now reflects the
+        // CURRENT input) — drop them unless this run records fresh ones
+        format.commitWave(config.outDir, staging, seq, committed, committedFiles,
+          lineage,
+          if (config.fingerprintInputs) (carriedFps -- doneThisRun) ++ currentFps
+          else carriedFps -- doneThisRun,
+          additive = false, convFpsDir = carriedConvFps,
+          deleteDirs = carriedDeleteDirs,
+          fpMode =
+            if (config.fingerprintInputs) Some("bucket")
+            else priorMan.flatMap(_.fpMode),
+          bucketCount = Some(config.buckets),
+          // recomputing a previously committed bucket rewrites its content
+          // (non-additive promote) — incremental readers must refuse across it
+          operation = if (waveBuckets.exists(verified.contains)) "replace" else "append")
+        acc ++= waveBuckets
     }
   }
 
-  /** Extract one wave's input, stage the sorted per-bucket parquet output,
-    * and return (stagingDir, file entries stamped with `commitSeq`, lineage
-    * rows). Shared by the full-bucket waves and the conv-grained delta
-    * stage (whose input is the changed-conversation subset).
+  /** The wave loop of both run modes, pipelined one wave deep. Each wave
+    * stages (`stageWave`) on a staging thread; the calling thread waits for
+    * the waves in order and hands each to `commit` with its snapshot id
+    * (`firstSeq + i`). Waves 0 and 1 are launched together and wave k+2
+    * once wave k is committed, so at most 2 waves are in flight and commits
+    * land strictly in wave order. The staging threads carry the caller's
+    * active session and local properties (job group, job tags, scheduler
+    * pool), so cancelling the caller's group or tag reaches their jobs.
+    *
+    * On any throw (a lost commit race, a failed task, the failAfterWave
+    * hook, counted from `firstWaveNo`) every in-flight wave is cancelled
+    * through its job tag and awaited, the staging dirs of all uncommitted
+    * waves are deleted, and the throw propagates: the committed prefix
+    * stands, exactly as a sequential loop would leave it. */
+  private def runWaves(spark: SparkSession, withBucket: DataFrame, config: Config,
+                       format: TableFormat, waves: Seq[Seq[Int]], firstSeq: Int,
+                       runToken: String, firstWaveNo: Int)(
+      commit: (Seq[Int], Int, Staged) => Unit): Unit = {
+    import java.util.concurrent.{CompletableFuture, ExecutionException, Executors, TimeUnit}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val pool = Executors.newFixedThreadPool(2, { r: Runnable =>
+      val t = new Thread(r, s"graft-wave-staging-$runToken")
+      t.setDaemon(true)
+      t
+    })
+    def waveTag(i: Int) = s"wave-$i-$runToken"
+    def launch(i: Int) = org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool) {
+      sc.addJobTag(s"graft-${waveTag(i)}") // on the staging thread's copy of the properties
+      val input = withBucket.where(col("bucket").isin(waves(i): _*)).as[TurnWithBucket]
+      stageWave(spark, input, config, format, waves(i), waveTag(i), firstSeq + i)
+    }
+    val staged = scala.collection.mutable.ArrayBuffer.empty[CompletableFuture[Staged]]
+    def launchUpTo(n: Int): Unit =
+      while (staged.size < math.min(n, waves.size)) staged += launch(staged.size)
+    var done = 0
+    try {
+      while (done < waves.size) {
+        launchUpTo(done + 2)
+        val wave = try staged(done).get() catch { case e: ExecutionException => throw e.getCause }
+        commit(waves(done), firstSeq + done, wave)
+        done += 1
+        if (config.failAfterWave == firstWaveNo + done - 1)
+          throw new RuntimeException(
+            s"simulated kill after wave ${done - 1} (snapshot ${firstSeq + done - 1} committed)")
+      }
+    } catch {
+      case t: Throwable =>
+        var interrupted = false
+        (done until staged.size).foreach { i =>
+          // a job submitted after one cancel call is caught by the next
+          while (!staged(i).isDone) {
+            sc.cancelJobsWithTag(s"graft-${waveTag(i)}", "another wave of the run failed")
+            try staged(i).get(50, TimeUnit.MILLISECONDS) catch {
+              case _: InterruptedException => interrupted = true
+              case _: Exception =>
+            }
+          }
+          SnapshotManifestFormat.deleteRecursively(
+            java.nio.file.Paths.get(s"${config.outDir}/staging-${waveTag(i)}"))
+        }
+        if (interrupted) Thread.currentThread().interrupt()
+        throw t
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
+  }
+
+  /** A staged wave: staging dir, file entries, lineage rows. */
+  private type Staged = (String, Vector[FileEntry], Vector[LineageRow])
+
+  /** Extract one wave's input, stage the sorted per-bucket parquet output
+    * under `staging-<waveTag>`, and return (stagingDir, file entries stamped
+    * with `commitSeq`, lineage rows). Shared by the full-bucket waves and
+    * the conv-grained delta stage (whose input is the changed-conversation
+    * subset).
     */
   private[spark] def stageWave(spark: SparkSession, input: Dataset[TurnWithBucket], config: Config,
                         format: TableFormat, waveBuckets: Seq[Int], waveTag: String,
-                        commitSeq: Int): (String, Vector[FileEntry], Vector[LineageRow]) = {
+                        commitSeq: Int): Staged = {
     import spark.implicits._
     val t0 = System.nanoTime()
     // skew-aware compute shuffle: salted key, NOT conv_id
@@ -406,11 +479,12 @@ object ExtractionJob {
       sum(when(col("bucket") === b, col("field_count")).otherwise(lit(0L)))
         .as(s"fsum_$b"))
     // write-locality exchange: co-locate each bucket, restore stable order
+    // (leading `bucket` key: see rewriteSorted)
     val staging = s"${config.outDir}/staging-$waveTag"
     extracted
       .observe(obs, fieldSumMetrics.head, fieldSumMetrics.tail: _*)
       .repartition(waveBuckets.size, col("bucket"))
-      .sortWithinPartitions("conv_id", "turn_idx")
+      .sortWithinPartitions("bucket", "conv_id", "turn_idx")
       .write.mode(SaveMode.Overwrite)
       .options(SnapshotManifestFormat.convBloomOptions)
       .partitionBy("bucket").parquet(staging)
@@ -494,7 +568,6 @@ object ExtractionJob {
       // tracked delete dirs carry through every commit (manifest-referenced,
       // like data files); the delta stage appends its new dir
       var deleteDirs: Vector[String] = man.map(_.deleteDirs).getOrElse(Vector.empty)
-      var waveCounter = 0 // failAfterWave hook counts the delta stage as wave 0
       val withBucket = turns.withColumn("bucket", bucketOf(config.buckets))
 
       // ---- delta stage: changed conversations of dirty buckets ----
@@ -548,31 +621,25 @@ object ExtractionJob {
           deleteDirs = deleteDirs, fpMode = Some("conv"), bucketCount = Some(config.buckets),
           operation = "delta", toBranch = config.toBranch)
         acc ++= dirty
-        if (config.failAfterWave == waveCounter)
+        // the failAfterWave hook counts the delta stage as wave 0
+        if (config.failAfterWave == 0)
           throw new RuntimeException(s"simulated kill after delta (snapshot $snapshotId committed)")
-        waveCounter += 1
       }
 
       // ---- full waves for never-committed buckets ----
       if (uncommitted.nonEmpty) {
         val waveSize = math.max(1, math.ceil(uncommitted.size.toDouble / config.waves).toInt)
-        uncommitted.grouped(waveSize).zipWithIndex.foreach { case (waveBuckets, waveIdx) =>
-          val seq = snapshotId + 1
-          val input = withBucket.where(col("bucket").isin(waveBuckets: _*)).as[TurnWithBucket]
-          val (staging, files, lineage) =
-            stageWave(spark, input, config, format, waveBuckets, s"wave-$waveIdx-$runToken", seq)
-          snapshotId = seq
-          committed = committed ++ waveBuckets
-          committedFiles = committedFiles ++ files
-          fpsBase = fpsBase ++ waveBuckets.flatMap(b => currentFps.get(b).map(b -> _))
-          format.commitWave(config.outDir, staging, snapshotId, committed, committedFiles,
-            lineage, fpsBase, additive = false, convFpsDir = Some(newConvFpsDir),
-            deleteDirs = deleteDirs, fpMode = Some("conv"), bucketCount = Some(config.buckets),
-            operation = "append") // never-committed buckets: pure append
-          acc ++= waveBuckets
-          if (config.failAfterWave == waveCounter)
-            throw new RuntimeException(s"simulated kill after wave $waveIdx (snapshot $snapshotId committed)")
-          waveCounter += 1
+        runWaves(spark, withBucket, config, format, uncommitted.grouped(waveSize).toVector,
+            snapshotId + 1, runToken, firstWaveNo = if (dirty.nonEmpty) 1 else 0) {
+          case (waveBuckets, seq, (staging, files, lineage)) =>
+            committed = committed ++ waveBuckets
+            committedFiles = committedFiles ++ files
+            fpsBase = fpsBase ++ waveBuckets.flatMap(b => currentFps.get(b).map(b -> _))
+            format.commitWave(config.outDir, staging, seq, committed, committedFiles,
+              lineage, fpsBase, additive = false, convFpsDir = Some(newConvFpsDir),
+              deleteDirs = deleteDirs, fpMode = Some("conv"), bucketCount = Some(config.buckets),
+              operation = "append") // never-committed buckets: pure append
+            acc ++= waveBuckets
         }
       }
       // auto-compaction policy: bound the accumulated MOR delete debt
@@ -662,9 +729,11 @@ object ExtractionJob {
     val runToken = SnapshotManifestFormat.newRunToken()
     val staging = s"$outDir/staging-sortrewrite-$seq-$runToken"
     // the leading `bucket` sort key makes the plan's output ordering
-    // satisfy the partitioned write's required ordering, so the writer
-    // does NOT inject its own partition sort (which would not preserve
-    // the conv order the disjoint per-file bounds depend on)
+    // satisfy the partitioned write's required ordering. Without it the
+    // planned write adds its own sort on `bucket` alone and the optimizer
+    // drops the (conv_id, turn_idx) sort beneath it as redundant, so the
+    // files come out in no key order. Every partitioned write of table
+    // data sorts this way.
     format.readCommitted(spark, outDir)
       .repartition(buckets.size, col("bucket"))
       .sortWithinPartitions("bucket", "conv_id", "turn_idx")
@@ -698,7 +767,7 @@ object ExtractionJob {
       .drop("bucket")
       .withColumn("bucket", bucketOf(newBuckets))
       .repartition(newBuckets, col("bucket"))
-      .sortWithinPartitions("conv_id", "turn_idx")
+      .sortWithinPartitions("bucket", "conv_id", "turn_idx") // leading bucket: see rewriteSorted
       .write.mode(SaveMode.Overwrite)
       .options(SnapshotManifestFormat.convBloomOptions)
       .partitionBy("bucket").parquet(staging)

@@ -1946,7 +1946,7 @@ object SnapshotManifestFormat extends TableFormat {
       readCommitted(spark, outDir)
         .where(col("bucket").isin(affected.toSeq: _*))
         .repartition(affected.size, col("bucket"))
-        .sortWithinPartitions("conv_id", "turn_idx")
+        .sortWithinPartitions("bucket", "conv_id", "turn_idx") // leading bucket: see ExtractionJob.rewriteSorted
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .options(convBloomOptions)
         .partitionBy("bucket").parquet(staging)
@@ -2021,7 +2021,7 @@ object SnapshotManifestFormat extends TableFormat {
     // committed view of ONLY the small files: deletes applied, nothing else read
     readAt(spark, outDir, man.copy(files = toRewrite))
       .repartition(byBucket.size, col("bucket"))
-      .sortWithinPartitions("conv_id", "turn_idx")
+      .sortWithinPartitions("bucket", "conv_id", "turn_idx") // leading bucket: see ExtractionJob.rewriteSorted
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .options(convBloomOptions)
       .partitionBy("bucket").parquet(staging)

@@ -109,7 +109,7 @@ object TableReplication {
       val staging = s"$dstDir/staging-replica-$queryKey-$batchId"
       cached.where(col("_change_type") === "insert").drop("_change_type")
         .repartition(col("bucket"))
-        .sortWithinPartitions("conv_id", "turn_idx")
+        .sortWithinPartitions("bucket", "conv_id", "turn_idx") // leading bucket: see ExtractionJob.rewriteSorted
         .write.mode(SaveMode.Overwrite)
         .options(SnapshotManifestFormat.convBloomOptions)
         .partitionBy("bucket").parquet(staging)

@@ -2,9 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
-import graft.spark.{ExtractionJob, Transcripts}
-import java.nio.file.Files
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{Row, SparkSession}
+import graft.spark.{CommitConflictException, ExtractionJob, SnapshotManifestFormat, TableFormat,
+  Transcripts}
+import graft.spark.ExtractionJob.{FileEntry, LineageRow}
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Spark end-to-end: synthetic transcript table -> salted extraction ->
   * snapshot sink; per-turn byte equality vs the row-local core pipeline and
@@ -26,6 +32,95 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** A format whose commit number `raceAt` (0-based) loses a race: a
+    * competing writer lands a manifest-only commit, computed from the
+    * current state, just before the job's own commit, which therefore
+    * fails the optimistic check. */
+  private class RacingFormat(raceAt: Int = 0) extends TableFormat {
+    private val inner = SnapshotManifestFormat
+    private var commits = 0
+    var conflicts = 0
+    def latestSnapshot(outDir: String) = inner.latestSnapshot(outDir)
+    def readManifest(outDir: String) = inner.readManifest(outDir)
+    def committedBuckets(outDir: String) = inner.committedBuckets(outDir)
+    def listStagedFiles(s: SparkSession, staging: String) = inner.listStagedFiles(s, staging)
+    def readCommitted(s: SparkSession, outDir: String) = inner.readCommitted(s, outDir)
+    def readManifestAt(outDir: String, k: Int) = inner.readManifestAt(outDir, k)
+    def readCommittedAsOf(s: SparkSession, outDir: String, k: Int) =
+      inner.readCommittedAsOf(s, outDir, k)
+    def compact(s: SparkSession, outDir: String) = inner.compact(s, outDir)
+    def expireSnapshots(outDir: String, retainLast: Int) = inner.expireSnapshots(outDir, retainLast)
+    def removeOrphanFiles(outDir: String, olderThanMs: Long) =
+      inner.removeOrphanFiles(outDir, olderThanMs)
+    def readAppendsBetween(s: SparkSession, outDir: String, from: Int, to: Int) =
+      inner.readAppendsBetween(s, outDir, from, to)
+    def readDeleteKeysBetween(s: SparkSession, outDir: String, from: Int, to: Int) =
+      inner.readDeleteKeysBetween(s, outDir, from, to)
+    def branches(outDir: String) = inner.branches(outDir)
+    def expireBranches(outDir: String, olderThanMs: Long) = inner.expireBranches(outDir, olderThanMs)
+    def snapshotAsOfTimestamp(outDir: String, tsMillis: Long) =
+      inner.snapshotAsOfTimestamp(outDir, tsMillis)
+    def publishBranch(outDir: String, name: String) = inner.publishBranch(outDir, name)
+    def abandonBranch(outDir: String, name: String) = inner.abandonBranch(outDir, name)
+    def readCommittedAtBranch(s: SparkSession, outDir: String, name: String) =
+      inner.readCommittedAtBranch(s, outDir, name)
+    def commitWave(outDir: String, staging: String, snapshotId: Int,
+                   buckets: Set[Int], files: Seq[FileEntry], lineage: Seq[LineageRow],
+                   inputFps: Map[Int, Long], additive: Boolean,
+                   convFpsDir: Option[String], deleteDirs: Seq[String],
+                   fpMode: Option[String], bucketCount: Option[Int],
+                   operation: String, props: Map[String, String],
+                   schemaDdl: Option[String], toBranch: Option[String]): Unit = {
+      if (commits == raceAt) {
+        val man = inner.readManifest(outDir).get
+        inner.commitWave(outDir, s"$outDir/none", man.snapshotId + 1, man.buckets,
+          man.files, Vector.empty, man.inputFps, additive = true,
+          convFpsDir = man.convFpsDir, deleteDirs = man.deleteDirs, fpMode = man.fpMode,
+          bucketCount = man.bucketCount)
+      }
+      commits += 1
+      try inner.commitWave(outDir, staging, snapshotId, buckets, files, lineage,
+        inputFps, additive, convFpsDir, deleteDirs, fpMode, bucketCount, operation)
+      catch { case e: CommitConflictException => conflicts += 1; throw e }
+    }
+  }
+
+  /** Every row of the committed table, in key order. */
+  private def tableRows(out: String): Seq[Row] =
+    ExtractionJob.readCommitted(spark, out).collect().toSeq
+      .sortBy(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")))
+
+  private def stagingDirs(out: String): Seq[String] =
+    Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("staging-")).toSeq
+
+  /** After a failed run: no Spark job still runs (job-end events reach the
+    * status store through the listener bus, hence `eventually`) and no
+    * staging dir of the run is left at the table root. */
+  private def assertQuiet(out: String): Unit = {
+    eventually(timeout(Span(5, Seconds))) {
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty, "a wave still runs")
+    }
+    assert(stagingDirs(out).isEmpty, s"staging dirs left: ${stagingDirs(out)}")
+  }
+
+  /** Rows of one committed data file, in file order (one small file is one
+    * scan split). */
+  private def fileKeys(out: String, path: String): Seq[(String, Int)] =
+    spark.read.parquet(s"$out/data/$path").select("conv_id", "turn_idx")
+      .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+
+  private def assertFilesSorted(out: String, after: String): Unit = {
+    val files = ExtractionJob.readManifest(out).get.files
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val keys = fileKeys(out, f.path)
+      val disorder = keys.zip(keys.drop(1)).indexWhere { case (a, b) => Ordering[(String, Int)].gt(a, b) }
+      assert(disorder < 0,
+        s"after $after: ${f.path} leaves (conv_id, turn_idx) order at row ${disorder + 1}")
+    }
+  }
 
   test("generator is deterministic and heavy-tailed") {
     val a = Transcripts.generate(spark, 50).collect().sortBy(t => (t.conv_id, t.turn_idx))
@@ -712,67 +807,13 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ss = spark
     import ss.implicits._
     import org.apache.spark.sql.functions.col
-    import graft.spark.{CommitConflictException, ExtractionJob => _, _}
-    import graft.spark.ExtractionJob.{FileEntry, LineageRow, Manifest}
     val out = Files.createTempDirectory("graft-retryrun").toString
     val turns = Transcripts.generate(spark, 25)
     val cfg = ExtractionJob.Config(out, buckets = 4, waves = 2, convGrained = true,
       autoCompactDeletes = 0)
     assert(ExtractionJob.run(spark, turns, cfg) == Set(0, 1, 2, 3))
 
-    // a format whose FIRST commit races: a competing writer lands a
-    // manifest-only commit (computed from the current state) just before the
-    // job's own commit, which therefore loses the optimistic check
-    val inner = SnapshotManifestFormat
-    class RacingFormat extends TableFormat {
-      var injected = false
-      var conflicts = 0
-      def latestSnapshot(outDir: String) = inner.latestSnapshot(outDir)
-      def readManifest(outDir: String) = inner.readManifest(outDir)
-      def committedBuckets(outDir: String) = inner.committedBuckets(outDir)
-      def listStagedFiles(s: org.apache.spark.sql.SparkSession, staging: String) =
-        inner.listStagedFiles(s, staging)
-      def readCommitted(s: org.apache.spark.sql.SparkSession, outDir: String) =
-        inner.readCommitted(s, outDir)
-      def readManifestAt(outDir: String, k: Int) = inner.readManifestAt(outDir, k)
-      def readCommittedAsOf(s: org.apache.spark.sql.SparkSession, outDir: String, k: Int) =
-        inner.readCommittedAsOf(s, outDir, k)
-      def compact(s: org.apache.spark.sql.SparkSession, outDir: String) = inner.compact(s, outDir)
-      def expireSnapshots(outDir: String, retainLast: Int) = inner.expireSnapshots(outDir, retainLast)
-      def removeOrphanFiles(outDir: String, olderThanMs: Long) =
-        inner.removeOrphanFiles(outDir, olderThanMs)
-      def readAppendsBetween(s: org.apache.spark.sql.SparkSession, outDir: String,
-                             from: Int, to: Int) = inner.readAppendsBetween(s, outDir, from, to)
-      def readDeleteKeysBetween(s: org.apache.spark.sql.SparkSession, outDir: String,
-                                from: Int, to: Int) = inner.readDeleteKeysBetween(s, outDir, from, to)
-      def branches(outDir: String) = inner.branches(outDir)
-      def expireBranches(outDir: String, olderThanMs: Long) = inner.expireBranches(outDir, olderThanMs)
-      def snapshotAsOfTimestamp(outDir: String, tsMillis: Long) = inner.snapshotAsOfTimestamp(outDir, tsMillis)
-      def publishBranch(outDir: String, name: String) = inner.publishBranch(outDir, name)
-      def abandonBranch(outDir: String, name: String) = inner.abandonBranch(outDir, name)
-      def readCommittedAtBranch(s: org.apache.spark.sql.SparkSession, outDir: String,
-                                name: String) = inner.readCommittedAtBranch(s, outDir, name)
-      def commitWave(outDir: String, staging: String, snapshotId: Int,
-                     buckets: Set[Int], files: Seq[FileEntry], lineage: Seq[LineageRow],
-                     inputFps: Map[Int, Long], additive: Boolean,
-                     convFpsDir: Option[String], deleteDirs: Seq[String],
-                     fpMode: Option[String], bucketCount: Option[Int],
-                     operation: String, props: Map[String, String],
-                     schemaDdl: Option[String], toBranch: Option[String]): Unit = {
-        if (!injected) {
-          injected = true
-          val man = inner.readManifest(outDir).get
-          inner.commitWave(outDir, s"$outDir/none", man.snapshotId + 1, man.buckets,
-            man.files, Vector.empty, man.inputFps, additive = true,
-            convFpsDir = man.convFpsDir, deleteDirs = man.deleteDirs, fpMode = man.fpMode,
-            bucketCount = man.bucketCount)
-        }
-        try inner.commitWave(outDir, staging, snapshotId, buckets, files, lineage,
-          inputFps, additive, convFpsDir, deleteDirs, fpMode, bucketCount, operation)
-        catch { case e: CommitConflictException => conflicts += 1; throw e }
-      }
-    }
-
+    // the run's FIRST commit races (the conv-grained delta)
     val victim = turns.select("conv_id").as[String].head()
     val changed = turns.map(t => if (t.conv_id == victim) t.copy(text = t.text + "\nraced fix") else t)
     val fmt = new RacingFormat
@@ -899,5 +940,147 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     ExtractionJob.readCommittedAsOf(spark, out, man.snapshotId - 1).count() // no integrity trip
     // idempotent: a second sweep finds nothing
     assert(ExtractionJob.removeOrphanFiles(out, olderThanMs = 0).total == 0)
+  }
+
+  test("committed data files are in (conv_id, turn_idx) order after run, binpack, compact and rebucket") {
+    val ss = spark
+    import ss.implicits._
+    val out = Files.createTempDirectory("graft-sorted").toString
+    val turns = Transcripts.generate(spark, 14)
+    val cfg = ExtractionJob.Config(out, buckets = 2, waves = 2, convGrained = true,
+      autoCompactDeletes = 0)
+    assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
+    assertFilesSorted(out, "run")
+    // conv-grained corrections: small delta files plus pending deletes
+    val victims = turns.select("conv_id").as[String].distinct().collect().sorted.take(3)
+    var cur = turns.collect().toSeq
+    victims.zipWithIndex.foreach { case (v, i) =>
+      cur = cur.map(t => if (t.conv_id == v) t.copy(text = t.text + s"\nFix $i") else t)
+      assert(ExtractionJob.run(spark, cur.toDS(), cfg).nonEmpty)
+    }
+    assertFilesSorted(out, "delta runs")
+    assert(ExtractionJob.binpack(spark, out, minRows = Long.MaxValue).nonEmpty)
+    assertFilesSorted(out, "binpack")
+    assert(ExtractionJob.readManifest(out).get.deleteDirs.nonEmpty, "compact needs deletes")
+    assert(ExtractionJob.compact(spark, out).nonEmpty)
+    assertFilesSorted(out, "compact")
+    ExtractionJob.rebucket(spark, out, 3)
+    assertFilesSorted(out, "rebucket")
+  }
+
+  test("a kill mid-run cancels the in-flight wave, leaves no staging, and resumes to the uninterrupted table") {
+    val full = Files.createTempDirectory("graft-kill-full").toString
+    val out = Files.createTempDirectory("graft-kill").toString
+    val turns = Transcripts.generate(spark, 25)
+    val cfg = ExtractionJob.Config(out, buckets = 8, waves = 4)
+    ExtractionJob.run(spark, turns, cfg.copy(outDir = full))
+    val killed = intercept[RuntimeException] {
+      ExtractionJob.run(spark, turns, cfg.copy(failAfterWave = 1))
+    }
+    assert(killed.getMessage.contains("simulated kill after wave 1"))
+    assert(ExtractionJob.latestSnapshot(out).contains(1), "waves 0 and 1 committed, in order")
+    assertQuiet(out)
+    assert(ExtractionJob.run(spark, turns, cfg).size == 4)
+    assert(tableRows(out) == tableRows(full), "resumed table must equal the uninterrupted one")
+  }
+
+  test("a commit race at wave 1 cancels the in-flight wave; the retried or resumed table is whole") {
+    val full = Files.createTempDirectory("graft-race-full").toString
+    val turns = Transcripts.generate(spark, 25)
+    val cfg = ExtractionJob.Config(full, buckets = 8, waves = 4)
+    ExtractionJob.run(spark, turns, cfg)
+    val want = tableRows(full)
+
+    // no retries: the conflict reaches the caller with wave 0 committed
+    val lost = Files.createTempDirectory("graft-race-lost").toString
+    intercept[CommitConflictException] {
+      ExtractionJob.run(spark, turns, cfg.copy(outDir = lost, commitRetries = 0),
+        new RacingFormat(raceAt = 1))
+    }
+    // wave 0 at snapshot 0, the competing writer's commit at 1
+    assert(ExtractionJob.latestSnapshot(lost).contains(1))
+    assert(ExtractionJob.committedBuckets(lost).size == 2)
+    assertQuiet(lost)
+    assert(ExtractionJob.run(spark, turns, cfg.copy(outDir = lost)).size == 6)
+    assert(tableRows(lost) == want, "resumed table must equal the uninterrupted one")
+
+    // default retries: the run re-plans and completes by itself
+    val retried = Files.createTempDirectory("graft-race-retried").toString
+    val fmt = new RacingFormat(raceAt = 1)
+    assert(ExtractionJob.run(spark, turns, cfg.copy(outDir = retried), fmt) == (0 until 8).toSet)
+    assert(fmt.conflicts == 1)
+    assertQuiet(retried)
+    assert(tableRows(retried) == want, "retried table must equal the uninterrupted one")
+  }
+
+  test("the caller's job group and job tag cancel an in-flight run; its thread state is untouched") {
+    val sc = spark.sparkContext
+    val turns = Transcripts.generate(spark, 25)
+    /** Runs a job under `scope` while another thread calls `cancel` until
+      * the run ends; the run must fail with a cancelled Spark job. */
+    def cancelledRun(name: String)(scope: => Unit)(cancel: => Unit): Unit = {
+      val out = Files.createTempDirectory(s"graft-cancel-$name").toString
+      @volatile var running = true
+      val canceller = new Thread(() => while (running) { cancel; Thread.sleep(10) })
+      scope
+      try {
+        canceller.start()
+        val e = intercept[SparkException] {
+          ExtractionJob.run(spark, turns, ExtractionJob.Config(out, buckets = 8, waves = 4))
+        }
+        assert(e.getMessage.contains("cancelled"), e.getMessage)
+      } finally {
+        running = false
+        canceller.join()
+        sc.clearJobGroup()
+        sc.clearJobTags()
+      }
+      assertQuiet(out)
+    }
+    cancelledRun("group")(sc.setJobGroup("graft-caller-group", "caller"))(
+      sc.cancelJobGroup("graft-caller-group"))
+    cancelledRun("tag")(sc.addJobTag("graft-caller-tag"))(sc.cancelJobsWithTag("graft-caller-tag"))
+
+    // the caller's local properties and active session survive a run
+    sc.setJobGroup("graft-kept-group", "kept")
+    sc.addJobTag("graft-kept-tag")
+    sc.setLocalProperty("graft.test.prop", "kept")
+    def threadState = (Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel", "spark.sql.execution.id", "graft.test.prop")
+      .map(k => k -> sc.getLocalProperty(k)), sc.getJobTags())
+    try {
+      val before = threadState
+      val session = org.apache.spark.sql.SparkSession.getActiveSession
+      val out = Files.createTempDirectory("graft-props").toString
+      ExtractionJob.run(spark, turns, ExtractionJob.Config(out, buckets = 4, waves = 4))
+      assert(threadState == before)
+      assert(org.apache.spark.sql.SparkSession.getActiveSession == session)
+    } finally {
+      sc.clearJobGroup()
+      sc.clearJobTags()
+      sc.setLocalProperty("graft.test.prop", null)
+    }
+  }
+
+  test("back-to-back runs leave no staging threads behind") {
+    // Spark's own cached pools (exchange, query-stage, block-manager, task
+    // threads) add a thread per submission up to their caps and idle out
+    // after 60 s; they are not threads a run owns
+    val sparkPool = ("^(shuffle-exchange|broadcast-exchange|ResultQueryStageExecution|" +
+      "QueryStageCreator|block-manager-|map-output-dispatcher|task-result-getter|" +
+      "Executor task launch worker|ForkJoinPool.commonPool)").r
+    def owned = Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+      .filter(sparkPool.findFirstIn(_).isEmpty)
+    val turns = Transcripts.generate(spark, 6)
+    def runOnce(): Unit = {
+      val out = Files.createTempDirectory("graft-threads").toString
+      ExtractionJob.run(spark, turns, ExtractionJob.Config(out, buckets = 4, waves = 4))
+    }
+    runOnce()
+    val before = owned
+    (1 to 20).foreach(_ => runOnce())
+    val extra = owned -- before
+    assert(!owned.exists(_.startsWith("graft-wave-")), "staging threads outlived their run")
+    assert(extra.size <= 2, s"threads left by 20 runs: $extra")
   }
 }
