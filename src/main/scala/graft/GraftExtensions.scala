@@ -122,50 +122,50 @@ object GraftExtensions {
     * the corresponding DataFrame read and returns its ANALYZED plan, so
     * the SQL route and the programmatic route share one code path —
     * every integrity check (snapshot intactness, history-loss vs
-    * corruption distinction, loud legacy-deletes) fires identically. */
+    * corruption distinction) fires identically. */
   val tableFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)] = {
-    val job = graft.spark.ExtractionJob
+    val fmt = graft.spark.SnapshotManifestFormat
     Seq(
       tvf("graft_table", Set(1, 2)) { (spark, args) =>
         val path = litString("graft_table", "path", args.head)
         val df =
-          if (args.length == 1) job.readCommitted(spark, path)
-          else job.readCommittedAsOf(spark, path, litInt("graft_table", "snapshot", args(1)))
+          if (args.length == 1) fmt.readCommitted(spark, path)
+          else fmt.readCommittedAsOf(spark, path, litInt("graft_table", "snapshot", args(1)))
         df.queryExecution.analyzed
       },
       tvf("graft_table_at", Set(2)) { (spark, args) =>
-        job.readCommittedAsOfTimestamp(spark,
+        fmt.readCommittedAsOfTimestamp(spark,
           litString("graft_table_at", "path", args.head),
           litString("graft_table_at", "timestamp", args(1))).queryExecution.analyzed
       },
       tvf("graft_table_branch", Set(2)) { (spark, args) =>
-        job.readCommittedAtBranch(spark,
+        fmt.readCommittedAtBranch(spark,
           litString("graft_table_branch", "path", args.head),
           litString("graft_table_branch", "branch", args(1))).queryExecution.analyzed
       },
       tvf("graft_table_tag", Set(2)) { (spark, args) =>
-        job.readCommittedAtTag(spark,
+        fmt.readCommittedAtTag(spark,
           litString("graft_table_tag", "path", args.head),
           litString("graft_table_tag", "tag", args(1))).queryExecution.analyzed
       },
       tvf("graft_table_changes", Set(3)) { (spark, args) =>
-        job.readAppendsBetween(spark,
+        fmt.readAppendsBetween(spark,
           litString("graft_table_changes", "path", args.head),
           litInt("graft_table_changes", "from_snapshot", args(1)),
           litInt("graft_table_changes", "to_snapshot", args(2))).queryExecution.analyzed
       },
       tvf("graft_table_snapshots", Set(1)) { (spark, args) =>
-        job.readSnapshotsTable(spark,
+        fmt.readSnapshotsTable(spark,
           litString("graft_table_snapshots", "path", args.head)).queryExecution.analyzed
       },
       tvf("graft_table_files", Set(1, 2)) { (spark, args) =>
         val path = litString("graft_table_files", "path", args.head)
         val snap =
           if (args.length == 2) Some(litInt("graft_table_files", "snapshot", args(1))) else None
-        job.readFilesTable(spark, path, snap).queryExecution.analyzed
+        fmt.readFilesTable(spark, path, snap).queryExecution.analyzed
       },
       tvf("graft_table_lineage", Set(1)) { (spark, args) =>
-        job.readLineageTable(spark,
+        fmt.readLineageTable(spark,
           litString("graft_table_lineage", "path", args.head)).queryExecution.analyzed
       },
       tvf("graft_table_partitions", Set(1, 2)) { (spark, args) =>
@@ -173,7 +173,7 @@ object GraftExtensions {
         val small =
           if (args.length == 2) litInt("graft_table_partitions", "small_rows", args(1)).toLong
           else 1000L
-        job.readPartitionsTable(spark, path, small).queryExecution.analyzed
+        fmt.readPartitionsTable(spark, path, small).queryExecution.analyzed
       })
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.spark.SnapshotManifestFormat
 
 /** spark-submit entry point for the north-star extraction job:
   *
@@ -238,7 +239,7 @@ object JobMain {
           require(c >= 0, s"--doctor=MAX_FOOTER_CHECKS must be >= 0, got $c")
           c
         } else 10000
-      println(graft.spark.ExtractionJob.doctor(outDir, cap).render)
+      println(graft.spark.TableDoctor.diagnose(outDir, cap).render)
       return
     }
     val preexisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
@@ -254,8 +255,8 @@ object JobMain {
       require(ids.nonEmpty, "--get-conv=ID[,ID...] requires at least one conversation id")
       val man = graft.spark.ExtractionJob.readManifest(outDir)
         .getOrElse(throw new IllegalStateException(s"no committed snapshot under $outDir"))
-      val planned = graft.spark.SnapshotManifestFormat.pruneFilesForConvs(man, ids)
-      val rows = graft.spark.ExtractionJob.readCommittedForConvs(spark, outDir, ids).count()
+      val planned = SnapshotManifestFormat.pruneFilesForConvs(man, ids)
+      val rows = SnapshotManifestFormat.readCommittedForConvs(spark, outDir, ids).count()
       println(s"""{"keyed_convs":${ids.size},"rows":$rows,"planned_files":${planned.size},"total_files":${man.files.size},"out":"$outDir"}""")
       if (preexisting.isEmpty) spark.stop()
       return
@@ -266,7 +267,7 @@ object JobMain {
         catch { case _: NumberFormatException =>
           throw new IllegalArgumentException(s"--rollback=N requires a snapshot id, got: $a")
         }
-      val newSnap = graft.spark.ExtractionJob.rollbackTo(outDir, snap)
+      val newSnap = SnapshotManifestFormat.rollbackTo(outDir, snap)
       println(s"""{"rollback_to":$snap,"snapshot":$newSnap,"out":"$outDir"}""")
       if (preexisting.isEmpty) spark.stop()
       return
@@ -276,7 +277,7 @@ object JobMain {
       val colon = spec.indexOf(':')
       val (name, snap) =
         if (colon < 0) {
-          val latest = graft.spark.ExtractionJob.latestSnapshot(outDir)
+          val latest = SnapshotManifestFormat.latestSnapshot(outDir)
             .getOrElse(throw new IllegalStateException(s"no committed snapshot under $outDir"))
           (spec, latest)
         } else {
@@ -287,7 +288,7 @@ object JobMain {
             }
           (spec.substring(0, colon), n)
         }
-      graft.spark.ExtractionJob.tagSnapshot(outDir, name, snap)
+      SnapshotManifestFormat.tagSnapshot(outDir, name, snap)
       println(s"""{"tag":"$name","snapshot":$snap,"out":"$outDir"}""")
       if (preexisting.isEmpty) spark.stop()
       return
@@ -295,13 +296,13 @@ object JobMain {
     args.find(_.startsWith("--drop-tag=")).foreach { a =>
       val name = a.stripPrefix("--drop-tag=")
       require(name.nonEmpty, "--drop-tag=NAME requires a tag name")
-      graft.spark.ExtractionJob.dropTag(outDir, name)
+      SnapshotManifestFormat.dropTag(outDir, name)
       println(s"""{"dropped_tag":"$name","out":"$outDir"}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
     if (args.contains("--history")) {
-      val rows = graft.spark.ExtractionJob.readSnapshotsTable(spark, outDir)
+      val rows = SnapshotManifestFormat.readSnapshotsTable(spark, outDir)
         .collect().sortBy(_.getInt(0))
       val hist = rows.map { r =>
         val ts = r.getSeq[String](8).map(t => s""""$t"""").mkString("[", ",", "]")
@@ -327,7 +328,7 @@ object JobMain {
       require(n >= 1, s"--limit=N must be positive, got $n")
       n
     }.getOrElse(10000)
-    val jesc = graft.spark.SnapshotManifestFormat.jesc _
+    val jesc = SnapshotManifestFormat.jesc _
     args.find(a => a == "--files" || a.startsWith("--files=")).foreach { a =>
       // $files metadata table (Iceberg files analog): current snapshot, or
       // --files=SNAP for any retained one — per-file bucket/rows/seq/bounds
@@ -337,7 +338,7 @@ object JobMain {
           throw new IllegalArgumentException(s"--files=SNAP expects an integer, got: '$v'")
         }
       } else None
-      val rows = graft.spark.ExtractionJob.readFilesTable(spark, outDir, snap)
+      val rows = SnapshotManifestFormat.readFilesTable(spark, outDir, snap)
         .orderBy(org.apache.spark.sql.functions.col("bucket"),
           org.apache.spark.sql.functions.col("path"))
         .limit(metaLimit).collect()
@@ -357,7 +358,7 @@ object JobMain {
     }
     if (args.contains("--lineage")) {
       // per-bucket audit trail: which run produced each bucket, how long
-      val rows = graft.spark.ExtractionJob.readLineageTable(spark, outDir)
+      val rows = SnapshotManifestFormat.readLineageTable(spark, outDir)
         .orderBy(org.apache.spark.sql.functions.col("snapshot_id"),
           org.apache.spark.sql.functions.col("bucket"))
         .limit(metaLimit).collect()
@@ -380,7 +381,7 @@ object JobMain {
           throw new IllegalArgumentException(s"--partitions=SMALL_ROWS expects an integer, got: '$v'")
         }
       } else 1000L
-      val rows = graft.spark.ExtractionJob.readPartitionsTable(spark, outDir, thr)
+      val rows = SnapshotManifestFormat.readPartitionsTable(spark, outDir, thr)
         .orderBy(org.apache.spark.sql.functions.col("bucket"))
         .limit(metaLimit).collect()
       val ps = rows.map { r =>
@@ -393,7 +394,7 @@ object JobMain {
       return
     }
     if (args.contains("--branches")) {
-      val bs = graft.spark.ExtractionJob.branches(outDir).toSeq.sorted
+      val bs = SnapshotManifestFormat.branches(outDir).toSeq.sorted
         .map { case (n, s) => s""""$n":$s""" }.mkString("{", ",", "}")
       println(s"""{"branches":$bs,"out":"$outDir"}""")
       if (preexisting.isEmpty) spark.stop()
@@ -422,7 +423,7 @@ object JobMain {
       require(name.nonEmpty, "--audit-branch=NAME requires a branch name")
       val r = graft.spark.ExtractionJob.auditBranch(spark, outDir, name)
       val sc = r.schemaChanges
-        .map(s => "\"" + graft.spark.SnapshotManifestFormat.jesc(s) + "\"")
+        .map(s => "\"" + SnapshotManifestFormat.jesc(s) + "\"")
         .mkString("[", ",", "]")
       val bd = r.bucketRowDeltas.toSeq.sorted
         .map { case (b, d) => s""""$b":$d""" }.mkString("{", ",", "}")
@@ -442,7 +443,7 @@ object JobMain {
       val name = a.stripPrefix("--publish-branch=")
       require(name.nonEmpty, "--publish-branch=NAME requires a branch name")
       // the Spark overload: cherry-picks when the head moved since the stage
-      val snap = graft.spark.ExtractionJob.publishBranch(spark, outDir, name)
+      val snap = SnapshotManifestFormat.publishBranch(spark, outDir, name)
       println(s"""{"published_branch":"$name","snapshot":$snap,"out":"$outDir"}""")
       if (preexisting.isEmpty) spark.stop()
       return
@@ -450,13 +451,13 @@ object JobMain {
     args.find(_.startsWith("--abandon-branch=")).foreach { a =>
       val name = a.stripPrefix("--abandon-branch=")
       require(name.nonEmpty, "--abandon-branch=NAME requires a branch name")
-      graft.spark.ExtractionJob.abandonBranch(outDir, name)
+      SnapshotManifestFormat.abandonBranch(outDir, name)
       println(s"""{"abandoned_branch":"$name","out":"$outDir"}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
     if (args.contains("--tags")) {
-      val ts = graft.spark.ExtractionJob.tags(outDir).toSeq.sorted
+      val ts = SnapshotManifestFormat.tags(outDir).toSeq.sorted
         .map { case (n, s) => s""""$n":$s""" }.mkString("{", ",", "}")
       println(s"""{"tags":$ts,"out":"$outDir"}""")
       if (preexisting.isEmpty) spark.stop()
@@ -468,13 +469,13 @@ object JobMain {
         catch { case _: NumberFormatException =>
           throw new IllegalArgumentException(s"--appends-since=N requires an integer, got: $a")
         }
-      val to = graft.spark.ExtractionJob.latestSnapshot(outDir)
+      val to = SnapshotManifestFormat.latestSnapshot(outDir)
         .getOrElse(throw new IllegalStateException(s"no committed snapshot under $outDir"))
       // a poller that is already caught up sees zero changes, not an error
       val (rows, keys) =
         if (from >= to) (0L, 0L)
-        else (graft.spark.ExtractionJob.readAppendsBetween(spark, outDir, from, to).count(),
-          graft.spark.ExtractionJob.readDeleteKeysBetween(spark, outDir, from, to).count())
+        else (SnapshotManifestFormat.readAppendsBetween(spark, outDir, from, to).count(),
+          SnapshotManifestFormat.readDeleteKeysBetween(spark, outDir, from, to).count())
       println(s"""{"appends_from":$from,"appends_to":$to,"rows":$rows,"changed_keys":$keys,"out":"$outDir"}""")
       if (preexisting.isEmpty) spark.stop()
       return
@@ -493,7 +494,7 @@ object JobMain {
       val rows = graft.spark.TableReplication.replicateAvailableNow(spark, input, outDir, ckpt)
       val maint = runMaintenance(spark, outDir, doCompact, expireRetain, orphanAge, setProps,
         rebucketTo, rewriteSortedTarget, binpackMin, branchTtl)
-      val snap = graft.spark.ExtractionJob.latestSnapshot(outDir).getOrElse(-1)
+      val snap = SnapshotManifestFormat.latestSnapshot(outDir).getOrElse(-1)
       println(s"""{"replicate":true,"snapshot":$snap,"rows_applied":$rows,$maint"out":"$outDir"}""")
       if (preexisting.isEmpty) spark.stop()
       return
@@ -508,7 +509,7 @@ object JobMain {
       // must not silently drop its retention half
       val maint = runMaintenance(spark, outDir, doCompact, expireRetain, orphanAge, setProps,
         rebucketTo, rewriteSortedTarget, binpackMin, branchTtl)
-      val snap = graft.spark.ExtractionJob.latestSnapshot(outDir).getOrElse(-1)
+      val snap = SnapshotManifestFormat.latestSnapshot(outDir).getOrElse(-1)
       println(s"""{"stream_ingest":true,"snapshot":$snap,"rows_appended":$rows,$maint"out":"$outDir"}""")
       if (preexisting.isEmpty) spark.stop()
       return
@@ -523,7 +524,7 @@ object JobMain {
     // ref — report null so an unattended WAP pipeline skips the audit step
     // instead of crashing on a branch that was never created
     val branchJson = toBranch.map { n =>
-      if (graft.spark.ExtractionJob.branches(outDir).contains(n))
+      if (SnapshotManifestFormat.branches(outDir).contains(n))
         s""""staged_branch":"$n","""
       else s""""staged_branch":null,"""
     }.getOrElse("")
@@ -552,24 +553,24 @@ object JobMain {
       graft.spark.ExtractionJob.rewriteSorted(spark, outDir, n); n
     }
     val compacted =
-      if (doCompact) graft.spark.ExtractionJob.compact(spark, outDir) else Set.empty[Int]
+      if (doCompact) SnapshotManifestFormat.compact(spark, outDir) else Set.empty[Int]
     // binpack after compact: compaction already coalesces delete-affected
     // buckets, so binpack only pays for the residual small-file debt
     val binpacked = binpackMin.map(n =>
-      graft.spark.ExtractionJob.binpack(spark, outDir, n)).getOrElse(Set.empty[Int])
+      SnapshotManifestFormat.binpackDataFiles(spark, outDir, n)).getOrElse(Set.empty[Int])
     val (expired, gcFiles) = expireRetain match {
-      case Some(n) => graft.spark.ExtractionJob.expireSnapshots(outDir, n)
+      case Some(n) => SnapshotManifestFormat.expireSnapshots(outDir, n)
       case None => (0, 0)
     }
     val orphans = orphanAge match {
-      case Some(ms) => graft.spark.ExtractionJob.removeOrphanFiles(outDir, ms).total
+      case Some(ms) => SnapshotManifestFormat.removeOrphanFiles(outDir, ms).total
       case None => 0
     }
     // branch retention after snapshot expiry: an expired-stale branch no
     // longer pins files, so the NEXT --remove-orphans sweep reclaims them
     val expiredBranches = branchTtl
-      .map(ms => graft.spark.ExtractionJob.expireBranches(outDir, ms)).getOrElse(Seq.empty)
-    if (setProps.nonEmpty) graft.spark.SnapshotManifestFormat.setTableProps(outDir, setProps)
+      .map(ms => SnapshotManifestFormat.expireBranches(outDir, ms)).getOrElse(Seq.empty)
+    if (setProps.nonEmpty) SnapshotManifestFormat.setTableProps(outDir, setProps)
     s""""rebucketed_to":${rebucketed.getOrElse(0)},"compacted_buckets":${compacted.size},""" +
       s""""binpacked_buckets":${binpacked.size},""" +
       s""""sort_rewritten_target":${sortRewritten.getOrElse(0)},""" +

@@ -102,10 +102,7 @@ object GraftTableSource {
     val man = SnapshotManifestFormat.readManifest(dir).getOrElse(
       throw new IllegalStateException(
         s"no committed snapshot under $dir: the streaming source needs an existing table"))
-    val ddl = man.schemaDdl.getOrElse(throw new IllegalStateException(
-      s"manifest ${man.snapshotId} under $dir records no schema (legacy table): " +
-        "commit once with current code before streaming from it"))
-    StructType.fromDDL(ddl).add("bucket", IntegerType, nullable = true)
+    StructType.fromDDL(man.schemaDdl).add("bucket", IntegerType, nullable = true)
   }
 }
 
@@ -200,7 +197,7 @@ class GraftTableSource(spark: SparkSession, parameters: Map[String, String],
   // silently adopting the new head schema would misbind them), not just
   // when an uncommitted batch happens to be replayed
   private val pinnedDdl: Option[String] = {
-    val current = headManifest.flatMap(_.schemaDdl)
+    val current = headManifest.map(_.schemaDdl)
     readMeta("graft-schema") match {
       case Some(saved) =>
         if (current.exists(c => normalize(StructType.fromDDL(c)) !=
@@ -334,7 +331,7 @@ class GraftTableSource(spark: SparkSession, parameters: Map[String, String],
   }
 
   private def guardSchema(to: Int): Unit = {
-    val nowDdl = fmt.readManifestAt(dir, to).flatMap(_.schemaDdl)
+    val nowDdl = fmt.readManifestAt(dir, to).map(_.schemaDdl)
     // `to` below the head happens on restart re-initialization (the engine
     // replays getBatch over the committed range): the guard then catches a
     // schema that evolved while the stream was DOWN, which is just as

@@ -105,16 +105,12 @@ object ExtractionJob {
   final case class FileEntry(bucket: Int, path: String, rowCount: Long, seq: Int = 0,
                              minConv: Option[String] = None, maxConv: Option[String] = None)
 
-  /** hasFilesList distinguishes a manifest that genuinely lists zero files
-    * (all-empty buckets) from a legacy manifest written before file
-    * granularity existed — the two need different resume verification. */
+  /** A parsed snapshot manifest (see SnapshotManifestFormat.parseManifest
+    * for the on-disk key list). */
   final case class Manifest(snapshotId: Int, buckets: Set[Int], files: Vector[FileEntry],
-                            hasFilesList: Boolean, inputFps: Map[Int, Long],
+                            inputFps: Map[Int, Long],
                             convFpsDir: Option[String] = None,
                             deleteDirs: Vector[String] = Vector.empty,
-                            // distinguishes "no deletes" from a manifest written
-                            // before deletes were manifest-tracked (legacy scan)
-                            hasDeleteDirsList: Boolean = false,
                             // which fingerprint formula inputFps was computed
                             // with: "conv" (bucketFpsFromConv) or "bucket"
                             // (inputFingerprints); formulas are not comparable
@@ -131,13 +127,13 @@ object ExtractionJob {
                             // binpack, sorted rewrite, rebucket — served rows
                             // unchanged, files rewritten), "replace"
                             // (content-CHANGING rewrite: full-bucket
-                            // recompute, rollback). Incremental reads refuse
+                            // recompute, rollback), "props" (table properties
+                            // or fingerprints only). Incremental reads refuse
                             // across both rewrite and replace; consumers that
                             // only care about CONTENT (e.g. incremental
                             // curation) may skip a leading "rewrite" but must
-                            // rebuild on "replace". None on legacy manifests
-                            // (treated as "replace" — the conservative side).
-                            operation: Option[String] = None,
+                            // rebuild on "replace".
+                            operation: String,
                             // STICKY table properties (Iceberg
                             // table-properties / Delta txn-map analog):
                             // commitWave carries the previous manifest's
@@ -148,18 +144,16 @@ object ExtractionJob {
                             // not contain '{' or '}' (flat-JSON manifest
                             // encoding); commitWave enforces this.
                             props: Map[String, String] = Map.empty,
-                            // commit wall-clock instant, for the snapshots
-                            // metadata table. None on hand-written manifests.
-                            committedAt: Option[String] = None,
+                            // commit wall-clock instant (ISO-8601)
+                            committedAt: String,
                             // the table schema AT this snapshot, as Spark DDL
                             // (Iceberg snapshot-scoped schema analog). Derived
                             // from the committed wave's parquet footers and
                             // carried sticky across file-less commits; reads
                             // pin the scan to it, so added columns null-fill
                             // over older files and dropped columns project
-                            // away. None on legacy manifests (reads fall back
-                            // to footer inference, today's behavior).
-                            schemaDdl: Option[String] = None)
+                            // away.
+                            schemaDdl: String)
 
   /** Pure transform: turns -> extracted turns (no sink). The extraction is a
     * typed map — one codegen boundary, everything else stays Catalyst.
@@ -235,20 +229,22 @@ object ExtractionJob {
       .toMap
 
   // ---- table-format seam (SURVEY.md §7.4.7) ----
-  // The snapshot/commit/read protocol lives behind TableFormat; the default
-  // is the file-based snapshot-manifest implementation. These forwarders
-  // keep the historical ExtractionJob.* entry points stable.
+  // The snapshot/commit/read protocol lives behind TableFormat; callers use
+  // SnapshotManifestFormat (or TableDoctor) directly. These three entry
+  // points stay for code outside src/main that builds against this one.
 
   val defaultFormat: TableFormat = SnapshotManifestFormat
 
-  def latestSnapshot(outDir: String): Option[Int] = defaultFormat.latestSnapshot(outDir)
-
   def readManifest(outDir: String): Option[Manifest] = defaultFormat.readManifest(outDir)
 
-  def committedBuckets(outDir: String): Set[Int] = defaultFormat.committedBuckets(outDir)
+  def readCommitted(spark: SparkSession, outDir: String): DataFrame =
+    defaultFormat.readCommitted(spark, outDir)
 
-  private[spark] def listStagedFiles(spark: SparkSession, staging: String): Seq[FileEntry] =
-    defaultFormat.listStagedFiles(spark, staging)
+  /** Schema of the files a wave stages (`bucket` is their partition
+    * directory). A wave that stages no files records it explicitly in its
+    * commit: there is no footer to read it from. */
+  private lazy val stagedSchemaDdl: String =
+    org.apache.spark.sql.Encoders.product[ExtractedTurn].schema.toDDL
 
   /** Run the job with wave-grained snapshot commits. Returns the set of
     * buckets committed (or, conv-grained, delta-updated) by this invocation
@@ -374,7 +370,8 @@ object ExtractionJob {
           bucketCount = Some(config.buckets),
           // recomputing a previously committed bucket rewrites its content
           // (non-additive promote) — incremental readers must refuse across it
-          operation = if (waveBuckets.exists(verified.contains)) "replace" else "append")
+          operation = if (waveBuckets.exists(verified.contains)) "replace" else "append",
+          schemaDdl = if (waveFiles.isEmpty) Some(stagedSchemaDdl) else None)
         acc ++= waveBuckets
     }
   }
@@ -638,7 +635,8 @@ object ExtractionJob {
             format.commitWave(config.outDir, staging, seq, committed, committedFiles,
               lineage, fpsBase, additive = false, convFpsDir = Some(newConvFpsDir),
               deleteDirs = deleteDirs, fpMode = Some("conv"), bucketCount = Some(config.buckets),
-              operation = "append") // never-committed buckets: pure append
+              operation = "append", // never-committed buckets: pure append
+              schemaDdl = if (files.isEmpty) Some(stagedSchemaDdl) else None)
             acc ++= waveBuckets
         }
       }
@@ -662,50 +660,6 @@ object ExtractionJob {
     } finally { convFps.unpersist(); () }
   }
 
-  /** Snapshot-isolated read of the committed table (see
-    * TableFormat.readCommitted). */
-  def readCommitted(spark: SparkSession, outDir: String): DataFrame =
-    defaultFormat.readCommitted(spark, outDir)
-
-  /** Keyed read with manifest-level data skipping (see
-    * TableFormat.readCommittedForConvs). */
-  def readCommittedForConvs(spark: SparkSession, outDir: String, convIds: Seq[String]): DataFrame =
-    defaultFormat.readCommittedForConvs(spark, outDir, convIds)
-
-  /** Incremental append scan over (from, to] (see
-    * TableFormat.readAppendsBetween). */
-  def readAppendsBetween(spark: SparkSession, outDir: String, from: Int, to: Int): DataFrame =
-    defaultFormat.readAppendsBetween(spark, outDir, from, to)
-
-  /** Changed upsert keys over (from, to] (see
-    * TableFormat.readDeleteKeysBetween). */
-  def readDeleteKeysBetween(spark: SparkSession, outDir: String, from: Int, to: Int): DataFrame =
-    defaultFormat.readDeleteKeysBetween(spark, outDir, from, to)
-
-  /** Merge-on-read compaction (see TableFormat.compact). */
-  def compact(spark: SparkSession, outDir: String): Set[Int] =
-    defaultFormat.compact(spark, outDir)
-
-  /** Small-file coalescing maintenance (see
-    * SnapshotManifestFormat.binpackDataFiles). */
-  def binpack(spark: SparkSession, outDir: String, minRows: Long = 1000L): Set[Int] =
-    SnapshotManifestFormat.binpackDataFiles(spark, outDir, minRows)
-
-  /** Partition evolution (Iceberg's spec change, realized the only way a
-    * hash-modulus layout can be: a full rewrite): re-hash every committed
-    * row under a NEW bucket modulus and commit the result as one replacing
-    * snapshot. A table bucketed at creation for 10^9 conversations stops
-    * fitting after 100x growth — too few buckets means oversized delta
-    * scans and skewed maintenance; this is the sanctioned modulus change.
-    * Applies pending equality deletes in passing (the rewrite reads the
-    * committed view). The conv-fp sidecar is rewritten under the new
-    * modulus so conversation-grained diffing keeps working; recorded
-    * bucket-mode input fingerprints are keyed by OLD bucket ids and are
-    * dropped (the next fingerprinted run re-baselines). Incremental (CDC)
-    * reads refuse across the rebucket like any replacing commit, and time
-    * travel to pre-rebucket snapshots reports history loss once their
-    * files are gone — both the established `compact` contracts. Returns
-    * the new snapshot id; no-op when the modulus already matches. */
   /** Sort-ordered file-split rewrite (Iceberg `rewrite_data_files` with a
     * sort strategy + target file size): rewrite every bucket as
     * (conv_id, turn_idx)-sorted runs split at `targetRowsPerFile`, so each
@@ -753,6 +707,21 @@ object ExtractionJob {
     seq
   }
 
+  /** Partition evolution (Iceberg's spec change, realized the only way a
+    * hash-modulus layout can be: a full rewrite): re-hash every committed
+    * row under a NEW bucket modulus and commit the result as one replacing
+    * snapshot. A table bucketed at creation for 10^9 conversations stops
+    * fitting after 100x growth — too few buckets means oversized delta
+    * scans and skewed maintenance; this is the sanctioned modulus change.
+    * Applies pending equality deletes in passing (the rewrite reads the
+    * committed view). The conv-fp sidecar is rewritten under the new
+    * modulus so conversation-grained diffing keeps working; recorded
+    * bucket-mode input fingerprints are keyed by OLD bucket ids and are
+    * dropped (the next fingerprinted run re-baselines). Incremental (CDC)
+    * reads refuse across the rebucket like any replacing commit, and time
+    * travel to pre-rebucket snapshots reports history loss once their
+    * files are gone — both the established `compact` contracts. Returns
+    * the new snapshot id; no-op when the modulus already matches. */
   def rebucket(spark: SparkSession, outDir: String, newBuckets: Int,
                format: TableFormat = SnapshotManifestFormat): Int = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
@@ -796,81 +765,6 @@ object ExtractionJob {
     seq
   }
 
-  /** Time-travel read (see TableFormat.readCommittedAsOf). */
-  def readCommittedAsOf(spark: SparkSession, outDir: String, snapshotId: Int): DataFrame =
-    defaultFormat.readCommittedAsOf(spark, outDir, snapshotId)
-
-  /** Time-travel read by ISO-8601 instant (see
-    * TableFormat.readCommittedAsOfTimestamp). */
-  def readCommittedAsOfTimestamp(spark: SparkSession, outDir: String, ts: String): DataFrame =
-    defaultFormat.readCommittedAsOfTimestamp(spark, outDir, ts)
-
-  /** The snapshot the table served at an instant (see
-    * TableFormat.snapshotAsOfTimestamp). */
-  def snapshotAsOfTimestamp(outDir: String, tsMillis: Long): Int =
-    defaultFormat.snapshotAsOfTimestamp(outDir, tsMillis)
-
-  /** Snapshot expiry (see TableFormat.expireSnapshots). */
-  def expireSnapshots(outDir: String, retainLast: Int): (Int, Int) =
-    defaultFormat.expireSnapshots(outDir, retainLast)
-
-  /** Orphan-file cleanup (see TableFormat.removeOrphanFiles). */
-  def removeOrphanFiles(outDir: String, olderThanMs: Long): OrphanSweep =
-    defaultFormat.removeOrphanFiles(outDir, olderThanMs)
-
-  /** Table integrity report (see TableDoctor.diagnose): driver-side,
-    * manifest-sized, reports and never repairs. */
-  def doctor(outDir: String, maxFooterChecks: Int = 10000): TableDoctor.Report =
-    TableDoctor.diagnose(outDir, maxFooterChecks)
-
-  /** Tag a snapshot (see TableFormat.tagSnapshot). */
-  def tagSnapshot(outDir: String, name: String, snapshotId: Int): Unit =
-    defaultFormat.tagSnapshot(outDir, name, snapshotId)
-
-  /** Drop a tag (see TableFormat.dropTag). */
-  def dropTag(outDir: String, name: String): Unit = defaultFormat.dropTag(outDir, name)
-
-  /** All tags on the table (see TableFormat.tags). */
-  def tags(outDir: String): Map[String, Int] = defaultFormat.tags(outDir)
-
-  /** Read a tagged table version (see TableFormat.readCommittedAtTag). */
-  def readCommittedAtTag(spark: SparkSession, outDir: String, name: String): DataFrame =
-    defaultFormat.readCommittedAtTag(spark, outDir, name)
-
-  /** Roll back to a snapshot (see TableFormat.rollbackTo). */
-  def rollbackTo(outDir: String, snapshotId: Int): Int =
-    defaultFormat.rollbackTo(outDir, snapshotId)
-
-  /** Branch refs: name -> staged snapshot id (see TableFormat.branches). */
-  def branches(outDir: String): Map[String, Int] = defaultFormat.branches(outDir)
-
-  /** WAP publish: make the branch's staged snapshot the table head.
-    * Metadata-only; refuses when the head moved since the stage (use the
-    * SparkSession overload for the cherry-pick merge). */
-  def publishBranch(outDir: String, name: String): Int =
-    defaultFormat.publishBranch(outDir, name)
-
-  /** WAP publish with cherry-pick: when commits landed while the branch
-    * pended, the staged delta is re-bound onto the current head after
-    * bucket-disjointness conflict validation (see
-    * TableFormat.publishBranch(spark, ...)). */
-  def publishBranch(spark: SparkSession, outDir: String, name: String): Int =
-    defaultFormat.publishBranch(spark, outDir, name)
-
-  /** WAP abandon: drop the staged snapshot and GC what only it references. */
-  def abandonBranch(outDir: String, name: String): Unit =
-    defaultFormat.abandonBranch(outDir, name)
-
-  /** Branch retention: abandon pending branches staged longer ago than
-    * `olderThanMs` (see TableFormat.expireBranches). */
-  def expireBranches(outDir: String, olderThanMs: Long): Seq[String] =
-    defaultFormat.expireBranches(outDir, olderThanMs)
-
-  /** WAP audit read: the branch's snapshot exactly as the table would
-    * serve it after publish (MOR deletes applied). */
-  def readCommittedAtBranch(spark: SparkSession, outDir: String, name: String): DataFrame =
-    defaultFormat.readCommittedAtBranch(spark, outDir, name)
-
   /** Structural audit verdict for a staged branch (the "A" of
     * write-audit-publish). `ok` gates publish in an unattended pipeline.
     *
@@ -900,28 +794,25 @@ object ExtractionJob {
     * One distributed aggregation over the branch read; the intactness
     * sweep is driver-side and manifest-sized. */
   def auditBranch(spark: SparkSession, outDir: String, name: String): AuditReport = {
-    val id = defaultFormat.branches(outDir).getOrElse(name,
+    val fmt = SnapshotManifestFormat
+    val id = fmt.branches(outDir).getOrElse(name,
       throw new IllegalArgumentException(s"no branch '$name' on table $outDir"))
-    val man = SnapshotManifestFormat.stagedManifest(outDir, name).getOrElse(
+    val man = fmt.readBranchManifest(outDir, name).getOrElse(
       throw new IllegalStateException(
         s"branch '$name' points at snapshot $id but its staged manifest is missing under " +
           s"$outDir — a crashed publish/abandon; re-run abandonBranch to retire the ref"))
     // schema drift + row-count deltas vs the head come from MANIFESTS
     // only (driver-side, no data scan): what a production WAP gate
     // checks before paying for any read
-    val headMan = defaultFormat.latestSnapshot(outDir)
-      .flatMap(defaultFormat.readManifestAt(outDir, _))
-    val schemaChanges: Seq[String] =
-      (man.schemaDdl.map(org.apache.spark.sql.types.StructType.fromDDL),
-        headMan.flatMap(_.schemaDdl).map(org.apache.spark.sql.types.StructType.fromDDL)) match {
-        case (Some(bs), Some(hs)) =>
-          val added = bs.fields.filterNot(f => hs.fieldNames.contains(f.name))
-            .map(f => s"+${f.name} ${f.dataType.catalogString}")
-          val dropped = hs.fields.filterNot(f => bs.fieldNames.contains(f.name))
-            .map(f => s"-${f.name} ${f.dataType.catalogString}")
-          (added ++ dropped).toSeq
-        case _ => Nil
-      }
+    val headMan = fmt.readManifest(outDir)
+    val schemaChanges: Seq[String] = headMan.toSeq.flatMap { h =>
+      val bs = org.apache.spark.sql.types.StructType.fromDDL(man.schemaDdl)
+      val hs = org.apache.spark.sql.types.StructType.fromDDL(h.schemaDdl)
+      bs.fields.filterNot(f => hs.fieldNames.contains(f.name))
+        .map(f => s"+${f.name} ${f.dataType.catalogString}") ++
+        hs.fields.filterNot(f => bs.fieldNames.contains(f.name))
+          .map(f => s"-${f.name} ${f.dataType.catalogString}")
+    }
     def perBucketRows(m: Manifest): Map[Int, Long] =
       m.files.groupBy(_.bucket).view.mapValues(_.map(_.rowCount).sum).toMap
     val bRows = perBucketRows(man)
@@ -933,37 +824,18 @@ object ExtractionJob {
     // the audit must REPORT intact=false — running the distributed read
     // over missing files would crash with a raw read error instead of
     // the {ok:false} verdict the WAP pipeline gates on
-    if (!defaultFormat.snapshotIntact(outDir, man))
+    if (!fmt.snapshotIntact(outDir, man))
       return AuditReport(name, id, 0L, 0L, 0L, intact = false,
         schemaChanges = schemaChanges, bucketRowDeltas = bucketRowDeltas)
-    val r = defaultFormat.readCommittedAtBranch(spark, outDir, name).agg(
+    val r = fmt.readCommittedAtBranch(spark, outDir, name).agg(
       count(lit(1)).as("rows"),
       (count(lit(1)) - countDistinct(col("conv_id"), col("turn_idx"))).as("dups"),
       count(when(col("fields_json").isNull || length(col("fields_json")) === 0, lit(1)))
         .as("nulls")).collect()(0)
     AuditReport(name, id, r.getLong(0), r.getLong(1), r.getLong(2),
-      defaultFormat.snapshotIntact(outDir, man),
+      fmt.snapshotIntact(outDir, man),
       schemaChanges = schemaChanges, bucketRowDeltas = bucketRowDeltas)
   }
-
-  /** `$snapshots` metadata table (see TableFormat.readSnapshotsTable). */
-  def readSnapshotsTable(spark: SparkSession, outDir: String): DataFrame =
-    defaultFormat.readSnapshotsTable(spark, outDir)
-
-  /** `$files` metadata table (see TableFormat.readFilesTable). */
-  def readFilesTable(spark: SparkSession, outDir: String,
-                     snapshotId: Option[Int] = None): DataFrame =
-    defaultFormat.readFilesTable(spark, outDir, snapshotId)
-
-  /** Lineage metadata table (see TableFormat.readLineageTable). */
-  def readLineageTable(spark: SparkSession, outDir: String): DataFrame =
-    defaultFormat.readLineageTable(spark, outDir)
-
-  /** `$partitions` metadata table (see
-    * SnapshotManifestFormat.readPartitionsTable). */
-  def readPartitionsTable(spark: SparkSession, outDir: String,
-                          smallRowThreshold: Long = 1000L): DataFrame =
-    SnapshotManifestFormat.readPartitionsTable(spark, outDir, smallRowThreshold)
 }
 
 final case class TurnWithBucket(

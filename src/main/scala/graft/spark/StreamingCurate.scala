@@ -125,18 +125,19 @@ object StreamingCurate {
     * rebuild. */
   def cycle(spark: SparkSession, tableDir: String, workDir: String,
             hashBuckets: Int = 64): Option[CycleStats] = {
-    val head = ExtractionJob.latestSnapshot(tableDir).getOrElse(return None)
+    val fmt = SnapshotManifestFormat
+    val head = fmt.latestSnapshot(tableDir).getOrElse(return None)
     val last = lastCuratedSnapshot(workDir)
     if (head == last) return None
     require(last < head, s"curation checkpoint $last is ahead of table head $head under $tableDir")
     if (last >= 0) {
       // segment the range at replace commits; each segment is a batch
       val ops = (last + 1 to head).map { k =>
-        k -> SnapshotManifestFormat.readManifestAt(tableDir, k)
+        k -> fmt.readManifestAt(tableDir, k)
           .getOrElse(throw new IllegalStateException(
             s"snapshot $k expired before curation consumed it — cycle faster than retention, " +
               "or rebuild the curation state from scratch"))
-          .operation.getOrElse("append")
+          .operation
       }
       if (ops.exists(o => o._2 == "replace" || o._2 == "rewrite")) {
         // leading content-PRESERVING rewrites (compaction/binpack/sorted
@@ -157,16 +158,8 @@ object StreamingCurate {
           val s = cycleBatch(spark, tableDir, workDir, hashBuckets, -1, head)
           return Some(s.copy(from = last))
         }
-        if (from == head) {
-          // pre-upgrade workdirs have no _curated_rows file: count the
-          // corpus once and persist it (the same one-time migration
-          // cycleBatch runs), instead of reporting 0 curated rows
-          val rows = readCount(workDir).getOrElse {
-            val n = fullCuratedCount(spark, Paths.get(workDir, "curated"))
-            writeCount(workDir, n); n
-          }
-          return Some(CycleStats(last, head, 0L, 0L, 0, rows))
-        }
+        if (from == head)
+          return Some(CycleStats(last, head, 0L, 0L, 0, readCount(workDir)))
         return Some(cycleBatch(spark, tableDir, workDir, hashBuckets, from, head)
           .copy(from = last))
       }
@@ -180,14 +173,15 @@ object StreamingCurate {
                          hashBuckets: Int, last: Int, head: Int): CycleStats = {
     val bootstrap = last < 0
 
+    val fmt = SnapshotManifestFormat
     val keyCols = Seq("h", "conv_id", "turn_idx", "hb")
     val posts =
-      if (bootstrap) ExtractionJob.readCommittedAsOf(spark, tableDir, head) // pinned
-      else ExtractionJob.readAppendsBetween(spark, tableDir, last, head)
+      if (bootstrap) fmt.readCommittedAsOf(spark, tableDir, head) // pinned
+      else fmt.readAppendsBetween(spark, tableDir, last, head)
     // changed upsert keys: conv-grained, batch-bounded
     val delConvs: Seq[String] =
       if (bootstrap) Seq.empty
-      else ExtractionJob.readDeleteKeysBetween(spark, tableDir, last, head)
+      else fmt.readDeleteKeysBetween(spark, tableDir, last, head)
         .select("conv_id").distinct().collect().map(_.getString(0)).toSeq
 
     // materialize the batch-derived key sets once (they drive several
@@ -197,7 +191,7 @@ object StreamingCurate {
     val oldGated =
       if (delConvs.isEmpty) emptyState(spark)
       else withHash(gate(
-        ExtractionJob.readCommittedAsOf(spark, tableDir, last)
+        fmt.readCommittedAsOf(spark, tableDir, last)
           .where(col("conv_id").isin(delConvs: _*))), hashBuckets)
         .select(keyCols.map(col): _*).localCheckpoint(true)
 
@@ -236,7 +230,7 @@ object StreamingCurate {
       val fetched =
         if (keeperConvs.isEmpty) emptyCurated(spark)
         else withHash(gate(
-          ExtractionJob.readCommittedAsOf(spark, tableDir, head)
+          fmt.readCommittedAsOf(spark, tableDir, head)
             .where(col("conv_id").isin(keeperConvs: _*))), hashBuckets)
           .join(keepers, Seq("h", "conv_id", "turn_idx"))
           .select(col("h"), col("conv_id"), col("turn_idx"),
@@ -256,33 +250,28 @@ object StreamingCurate {
       // so the count lags by that one batch's delta; it stays internally
       // consistent afterwards and any rebuild resets it exactly.
       val oldAffRows = curatedAff.count()
-      // one-time migration for a pre-count-file workdir: the full scan
-      // runs at most once per workdir lifetime, then the running count
-      // takes over
-      val prev =
-        if (bootstrap) 0L
-        else readCount(workDir).getOrElse(fullCuratedCount(spark, curatedDir))
+      val prev = if (bootstrap) 0L else readCount(workDir)
       replacePartitions(curatedDir, affHb, newCurated)
       writeCount(workDir, prev - oldAffRows + newCurated.count())
     } else if (bootstrap) writeCount(workDir, 0L)
-    else if (readCount(workDir).isEmpty)
-      writeCount(workDir, fullCuratedCount(spark, curatedDir))
 
     writeMarker(workDir, head)
     CycleStats(last, head, newGated.count(), delConvs.size.toLong,
-      affHb.size, readCount(workDir).getOrElse(0L))
+      affHb.size, readCount(workDir))
   }
-
-  private def fullCuratedCount(spark: SparkSession, curatedDir: Path): Long =
-    if (hasPartitions(curatedDir)) spark.read.parquet(curatedDir.toString).count()
-    else 0L
 
   private def countPath(work: String): Path = Paths.get(work, "_curated_rows")
 
-  private def readCount(work: String): Option[Long] =
-    if (Files.exists(countPath(work)))
-      Some(new String(Files.readAllBytes(countPath(work)), StandardCharsets.UTF_8).trim.toLong)
-    else None
+  /** The running curated-row count, written by every cycle before its
+    * checkpoint marker. */
+  private def readCount(work: String): Long = {
+    if (!Files.exists(countPath(work)))
+      throw new IllegalStateException(
+        s"curation workdir $work has a checkpoint but no ${countPath(work).getFileName} " +
+          "count: it was written in an older layout, which is not migrated — rebuild " +
+          "the curation state from scratch")
+    new String(Files.readAllBytes(countPath(work)), StandardCharsets.UTF_8).trim.toLong
+  }
 
   private def writeCount(work: String, n: Long): Unit = {
     val tmp = Paths.get(work, "_curated_rows.tmp")

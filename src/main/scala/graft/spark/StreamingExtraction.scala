@@ -70,20 +70,6 @@ object StreamingExtraction {
                              checkpointDir: String, buckets: Int = 8,
                              queryKey: String = "stream",
                              format: TableFormat = SnapshotManifestFormat): Long = {
-    // Legacy (pre-sticky-props) markers are batch ids in THIS checkpoint's
-    // numbering only if the checkpoint predates the sink-id file — a
-    // checkpoint with streaming progress but no sink id. The determination
-    // is persisted so a crash between upgrade and first commit cannot
-    // flip it (a flip would un-detect a straddling replay).
-    val legacyFlag = java.nio.file.Paths.get(checkpointDir, "graft-sink-legacy")
-    val preUpgrade =
-      !java.nio.file.Files.exists(java.nio.file.Paths.get(checkpointDir, "graft-sink-id")) &&
-        java.nio.file.Files.isDirectory(java.nio.file.Paths.get(checkpointDir, "offsets"))
-    if (preUpgrade && !java.nio.file.Files.exists(legacyFlag)) {
-      java.nio.file.Files.createDirectories(legacyFlag.getParent)
-      java.nio.file.Files.write(legacyFlag, Array.emptyByteArray)
-    }
-    val legacyKey = if (java.nio.file.Files.exists(legacyFlag)) Some(queryKey) else None
     val sinkKey = s"$queryKey-${checkpointSinkId(checkpointDir)}"
     val appended = new java.util.concurrent.atomic.LongAdder
     val turns = spark.readStream
@@ -92,8 +78,7 @@ object StreamingExtraction {
       .as[Turn](Encoders.product[Turn])
     val q = turns.writeStream
       .foreachBatch { (batch: Dataset[Turn], batchId: Long) =>
-        appended.add(appendBatchToTable(spark, batch, batchId, tableDir, buckets, sinkKey,
-          format, legacyKey = legacyKey))
+        appended.add(appendBatchToTable(spark, batch, batchId, tableDir, buckets, sinkKey, format))
         ()
       }
       .option("checkpointLocation", checkpointDir)
@@ -144,26 +129,6 @@ object StreamingExtraction {
   private def markerOf(man: Option[ExtractionJob.Manifest], queryKey: String): Option[Long] =
     man.flatMap(_.props.get(s"stream.$queryKey")).map(_.toLong)
 
-  /** Pre-sticky-props tables recorded the marker as two keys
-    * (`stream.query` + `stream.batch_id`) on the sink's own snapshots only,
-    * so finding it needs the old newest-first history walk. Consulted once
-    * per append, only until the first sticky commit retires the legacy keys
-    * — without this fallback an upgrade straddling a crash replay would
-    * double-append the replayed batch. */
-  private def legacyCommittedBatch(tableDir: String, legacyKey: String,
-                                   format: TableFormat): Option[Long] = {
-    var k = format.latestSnapshot(tableDir).getOrElse(-1)
-    while (k >= 0) {
-      format.readManifestAt(tableDir, k) match {
-        case Some(m) if m.props.get("stream.query").contains(legacyKey) =>
-          return m.props.get("stream.batch_id").map(_.toLong)
-        case Some(_) => k -= 1
-        case None => return None // expired: older manifests are gone too
-      }
-    }
-    None
-  }
-
   /** Idempotent micro-batch append (the foreachBatch body). Returns rows
     * appended — 0 when the batch id was already committed (crash replay) or
     * the batch is empty. Extraction + staging happen once; only the commit
@@ -175,21 +140,12 @@ object StreamingExtraction {
     * and a racing commit that advanced this sink's own marker past
     * `batchId` (a zombie driver on the same checkpoint) turns the append
     * into a no-op instead of a double-append.
-    *
-    * `legacyKey` is the pre-sticky-props sink name; when the scoped marker
-    * is absent the legacy marker is consulted for replay detection and the
-    * legacy keys are retired (tombstoned) by this sink's first commit.
     */
   def appendBatchToTable(spark: SparkSession, batch: Dataset[Turn], batchId: Long,
                          tableDir: String, buckets: Int, queryKey: String,
-                         format: TableFormat, commitRetries: Int = 2,
-                         legacyKey: Option[String] = None): Long = {
+                         format: TableFormat, commitRetries: Int = 2): Long = {
     val man0 = format.readManifest(tableDir)
-    def committedMarker(man: Option[ExtractionJob.Manifest]): Option[Long] =
-      markerOf(man, queryKey).orElse(
-        legacyKey.filter(_ => man.nonEmpty)
-          .flatMap(lk => legacyCommittedBatch(tableDir, lk, format)))
-    committedMarker(man0) match {
+    markerOf(man0, queryKey) match {
       case Some(maxId) if batchId <= maxId => return 0L // replayed batch: already in the table
       case _ =>
     }
@@ -215,7 +171,7 @@ object StreamingExtraction {
     while (true) {
       val man = if (attempt == 0) man0 else format.readManifest(tableDir)
       // a zombie driver on the same checkpoint may have raced this batch in
-      if (attempt > 0 && committedMarker(man).exists(batchId <= _)) {
+      if (attempt > 0 && markerOf(man, queryKey).exists(batchId <= _)) {
         dropStaging(staging)
         return 0L
       }
@@ -234,13 +190,6 @@ object StreamingExtraction {
       val snapshotId = man.map(_.snapshotId).getOrElse(-1) + 1
       val files = files0.map(_.copy(seq = snapshotId))
       val lineage = lineage0.map(_.copy(snapshot_id = snapshotId))
-      // retire legacy two-key markers once the scoped marker takes over
-      // (empty value = sticky-prop tombstone)
-      val retire: Map[String, String] =
-        if (man.exists(_.props.contains("stream.query")) &&
-            legacyKey.exists(lk => man.exists(_.props.get("stream.query").contains(lk))))
-          Map("stream.query" -> "", "stream.batch_id" -> "")
-        else Map.empty
       try {
         format.commitWave(tableDir, staging, snapshotId,
           man.map(_.buckets).getOrElse(Set.empty) ++ files.map(_.bucket),
@@ -252,7 +201,7 @@ object StreamingExtraction {
           fpMode = man.flatMap(_.fpMode),
           bucketCount = Some(effBuckets),
           operation = "append",
-          props = retire + (s"stream.$queryKey" -> batchId.toString))
+          props = Map(s"stream.$queryKey" -> batchId.toString))
         return files.map(_.rowCount).sum
       } catch {
         case _: CommitConflictException if attempt < commitRetries => attempt += 1

@@ -48,15 +48,22 @@ object TableDoctor {
 
     // Every metadata read is defensive: the doctor's whole purpose is to
     // REPORT broken tables, so a read that the format itself would crash
-    // on (garbage _latest, corrupt branch ref, truncated branch manifest)
-    // becomes an error FINDING here, never a propagated exception.
+    // on (garbage _latest, corrupt branch ref, truncated branch manifest,
+    // a manifest in an older layout) becomes an error FINDING here, never
+    // a propagated exception.
     val head: Option[Int] =
       try fmt.latestSnapshot(outDir)
       catch { case e: Exception =>
         errs += Finding("head-pointer", s"_latest does not parse: ${e.getMessage}")
         None
       }
-    val mans = fmt.allManifests(outDir)
+    val mans = fmt.snapshotIds(outDir).flatMap { k =>
+      try fmt.readManifestAt(outDir, k)
+      catch { case e: Exception =>
+        errs += Finding("manifest-format", e.getMessage)
+        None
+      }
+    }
     info += ("retained_snapshots" -> mans.size.toLong)
     val branchRefs: Map[String, Int] =
       try fmt.branches(outDir)
@@ -77,7 +84,7 @@ object TableDoctor {
         if (mans.nonEmpty)
           errs += Finding("head-pointer",
             s"no _latest pointer but ${mans.size} manifest(s) exist")
-      case Some(h) if !mans.exists(_.snapshotId == h) =>
+      case Some(h) if !Files.exists(Paths.get(outDir, "snapshots", s"snap-$h.json")) =>
         errs += Finding("head-pointer", s"_latest names snapshot $h but snap-$h.json is missing")
       case _ =>
     }
@@ -121,11 +128,9 @@ object TableDoctor {
         if (!Files.isDirectory(Paths.get(outDir, "conv_fps", d)))
           errs += Finding("sidecar", s"manifest references missing conv-fp sidecar $d")
       }
-      man.schemaDdl.foreach { ddl =>
-        try { org.apache.spark.sql.types.StructType.fromDDL(ddl); () }
-        catch { case e: Exception =>
-          errs += Finding("schema", s"head schema DDL does not parse: ${e.getMessage}")
-        }
+      try { org.apache.spark.sql.types.StructType.fromDDL(man.schemaDdl); () }
+      catch { case e: Exception =>
+        errs += Finding("schema", s"head schema DDL does not parse: ${e.getMessage}")
       }
     }
 
@@ -150,8 +155,7 @@ object TableDoctor {
         errs += Finding("tag", s"tag '$name' names expired snapshot $id")
     }
 
-    // 5) branch refs, classified exactly like the recovery paths —
-    // BOTH layouts get the staged-intactness check
+    // 5) branch refs, classified exactly like the recovery paths
     var pending = 0L; var remnants = 0L
     branchRefs.foreach { case (name, id) =>
       val bman =
@@ -167,21 +171,11 @@ object TableDoctor {
           if (!fmt.snapshotIntact(outDir, m))
             errs += Finding("branch", s"pending branch '$name' references missing files")
         case None =>
-          val legacyMan =
-            if (head.forall(id > _)) fmt.readManifestAt(outDir, id) else None
-          legacyMan match {
-            case Some(m) =>
-              pending += 1
-              if (!fmt.snapshotIntact(outDir, m))
-                errs += Finding("branch",
-                  s"legacy-staged branch '$name' (snap-$id.json) references missing files")
-            case None =>
-              remnants += 1
-              warns += Finding("branch-remnant",
-                s"branch '$name' is a crashed stage/publish/abandon remnant (ref id $id, " +
-                  "no staged manifest) -- run abandonBranch (or publishBranch, which " +
-                  "resolves landed publishes via the intent marker)")
-          }
+          remnants += 1
+          warns += Finding("branch-remnant",
+            s"branch '$name' is a crashed stage/publish/abandon remnant (ref id $id, " +
+              "no staged manifest) -- run abandonBranch (or publishBranch, which " +
+              "resolves landed publishes via the intent marker)")
       }
     }
     info += ("pending_branches" -> pending)
@@ -208,7 +202,7 @@ object TableDoctor {
     val referencedData: Set[String] = allRefs.flatMap(_.files.map(_.path)).toSet
     val dataDir = Paths.get(outDir, "data")
     var orphanData = 0L
-    if (Files.isDirectory(dataDir) && allRefs.forall(_.hasFilesList)) {
+    if (Files.isDirectory(dataDir)) {
       listChildren(dataDir).filter(_.getFileName.toString.startsWith("bucket=")).foreach { bd =>
         listChildren(bd).foreach { f =>
           val n = f.getFileName.toString

@@ -138,9 +138,7 @@ trait TableFormat {
     * are committed serially (the CAS), so id order IS commit order; the
     * recorded instants assume commit-side clocks sane to within the
     * gap between commits, the same contract Iceberg's timestamp travel
-    * carries. Legacy manifests without a commit instant are never
-    * selected (their time is unknowable); throws when no snapshot is old
-    * enough. */
+    * carries. Throws when no snapshot is old enough. */
   def snapshotAsOfTimestamp(outDir: String, tsMillis: Long): Int
 
   /** [[snapshotAsOfTimestamp]] + [[readCommittedAsOf]] in one step; `ts`
@@ -286,13 +284,6 @@ trait TableFormat {
       val target = readManifestAt(outDir, snapshotId).getOrElse(throw new IllegalStateException(
         s"cannot roll back to snapshot $snapshotId under $outDir: " +
           "manifest missing — rewritten or expired"))
-      // a legacy manifest has no file list (committing it forward would
-      // silently declare an empty table) and no tracked delete dirs (its
-      // filesystem-scanned deletes would be dropped, resurrecting deleted
-      // rows) — refuse rather than lose data; migrate the table first
-      require(target.hasFilesList && target.hasDeleteDirsList,
-        s"cannot roll back to snapshot $snapshotId under $outDir: legacy manifest " +
-          "(no file list / untracked deletes) — compact or rewrite the table first")
       // the target's files may have been rewritten by compaction or GC'd
       // by expiry since its manifest was retained: committing them forward
       // would wedge the table HEAD on missing files
@@ -308,7 +299,7 @@ trait TableFormat {
           target.buckets, target.files, lineage = Seq.empty, inputFps = target.inputFps,
           additive = true, convFpsDir = target.convFpsDir, deleteDirs = target.deleteDirs,
           fpMode = target.fpMode, bucketCount = target.bucketCount,
-          operation = "replace", schemaDdl = target.schemaDdl)
+          operation = "replace", schemaDdl = Some(target.schemaDdl))
         return latest.snapshotId + 1
       } catch {
         case e: CommitConflictException =>
@@ -334,8 +325,8 @@ trait TableFormat {
       case Some(latest) => (0 to latest).flatMap(readManifestAt(outDir, _))
     }
 
-  /** Per-snapshot lineage rows. Formats that record no lineage (or legacy
-    * snapshots written before lineage existed) serve an empty seq. */
+  /** Per-snapshot lineage rows. Formats that record no lineage serve an
+    * empty seq. */
   def readLineage(outDir: String, snapshotId: Int): Seq[LineageRow] = Seq.empty
 
   /** Metadata table (Iceberg `$snapshots` / `$history` analog): one row
@@ -348,12 +339,10 @@ trait TableFormat {
     val current = latestSnapshot(outDir)
     val tagged = tags(outDir).toSeq.groupBy(_._2).view.mapValues(_.map(_._1).sorted).toMap
     val rows = retainedManifests(outDir).map { m =>
-      SnapshotMetaRow(m.snapshotId, m.operation.getOrElse("append"),
-        m.committedAt.getOrElse(""), m.files.size, m.files.map(_.rowCount).sum,
-        m.buckets.size, m.deleteDirs.size, current.contains(m.snapshotId),
-        tagged.getOrElse(m.snapshotId, Seq.empty),
-        m.schemaDdl.map(d => org.apache.spark.sql.types.StructType.fromDDL(d)
-          .fieldNames.toSeq).getOrElse(Seq.empty))
+      SnapshotMetaRow(m.snapshotId, m.operation, m.committedAt, m.files.size,
+        m.files.map(_.rowCount).sum, m.buckets.size, m.deleteDirs.size,
+        current.contains(m.snapshotId), tagged.getOrElse(m.snapshotId, Seq.empty),
+        org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl).fieldNames.toSeq)
     }
     import spark.implicits._
     rows.toDF()
@@ -388,8 +377,6 @@ trait TableFormat {
     val man = readManifest(outDir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $outDir"))
     val delByBucket: Map[Int, Long] = {
-      // manifest-tracked delete dirs only (legacy filesystem-scan tables
-      // report no delete debt here — their reads fail loudly elsewhere)
       val dirs = man.deleteDirs
         .map(d => java.nio.file.Paths.get(outDir, "deletes", d))
         .filter(java.nio.file.Files.isDirectory(_))
@@ -455,7 +442,7 @@ final case class SnapshotMetaRow(snapshot_id: Int, operation: String,
                                  delete_dir_count: Int, is_current: Boolean,
                                  tags: Seq[String],
                                  // top-level column names of the snapshot's
-                                 // recorded schema; empty on legacy manifests
+                                 // recorded schema
                                  schema_cols: Seq[String])
 
 /** One row of the `$files` metadata table. */
@@ -498,6 +485,10 @@ object SnapshotManifestFormat extends TableFormat {
   private val fileEntryRe =
     ("\\{\"bucket\":(\\d+),\"path\":\"([^\"]+)\",\"row_count\":(\\d+)(?:,\"seq\":(\\d+))?" +
       "(?:,\"min_conv\":\"((?:[^\"\\\\]|\\\\.)*)\",\"max_conv\":\"((?:[^\"\\\\]|\\\\.)*)\")?\\}").r
+
+  private val committedBucketsRe = "\"committed_buckets\"\\s*:\\s*\\[([0-9,\\s]*)\\]".r
+
+  private val filesListRe = "\"files\"\\s*:\\s*\\[".r
 
   private val convFpsDirRe = "\"conv_fps\"\\s*:\\s*\"([^\"]+)\"".r
 
@@ -551,18 +542,14 @@ object SnapshotManifestFormat extends TableFormat {
   private val committedAtRe = "\"committed_at\"\\s*:\\s*\"([^\"]+)\"".r
   private val propsPairRe = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
 
-  /** Parse the latest committed manifest. Manifest format:
-    * {"snapshot_id":K,"committed_buckets":[..],
-    *  "files":[{"bucket":B,"path":"bucket=B/part-..","row_count":N},..],
-    *  "committed_at":".."} — `files` lists every committed data file.
-    */
+  /** Parse the latest committed manifest. */
   override def readManifest(outDir: String): Option[Manifest] =
     latestSnapshot(outDir).flatMap(readManifestAt(outDir, _))
 
   override def readManifestAt(outDir: String, k: Int): Option[Manifest] = {
     val p = Paths.get(outDir, "snapshots", s"snap-$k.json")
     if (!Files.exists(p)) return None
-    Some(parseManifest(k, new String(Files.readAllBytes(p), StandardCharsets.UTF_8)))
+    Some(parseManifest(p, k, new String(Files.readAllBytes(p), StandardCharsets.UTF_8)))
   }
 
   /** A pending branch's staged manifest, written at the branch-scoped path
@@ -571,9 +558,7 @@ object SnapshotManifestFormat extends TableFormat {
     * and the table needs no freeze while branches are pending. Its
     * embedded snapshot_id is the id the stage was computed against + 1
     * (the base is snapshotId - 1); publish re-binds it to the then-current
-    * head + 1 (cherry-pick) when the head has moved. Tables written before
-    * branch-scoped staging keep their legacy `snap-<id>.json` staged
-    * manifests; readers fall back to that path. */
+    * head + 1 (cherry-pick) when the head has moved. */
   private[spark] def readBranchManifest(outDir: String, name: String): Option[Manifest] = {
     val p = branchManifestPath(outDir, name)
     if (!Files.exists(p)) return None
@@ -581,7 +566,7 @@ object SnapshotManifestFormat extends TableFormat {
     val id = "\"snapshot_id\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt)
       .getOrElse(throw new IllegalStateException(
         s"corrupt branch manifest for '$name' under $outDir: no snapshot_id"))
-    Some(parseManifest(id, txt))
+    Some(parseManifest(p, id, txt))
   }
 
   private[spark] def branchManifestPath(outDir: String, name: String): Path =
@@ -659,93 +644,83 @@ object SnapshotManifestFormat extends TableFormat {
           in.fpDir.forall(f => mm.convFpsDir.contains(f))
       }
 
-  /** The staged manifest of branch `name` under EITHER layout: the
-    * branch-scoped path, or (legacy tables) `snap-<refId>.json` when the
-    * ref id is beyond the head (a published id is a live snapshot, not a
-    * staged one). */
-  private[spark] def stagedManifest(outDir: String, name: String): Option[Manifest] =
-    readBranchManifest(outDir, name).orElse {
-      branches(outDir).get(name).filter(_ > latestSnapshot(outDir).getOrElse(-1))
-        .flatMap(readManifestAt(outDir, _))
-    }
-
-  /** Pending branches: name -> staged manifest. A branch is pending when
-    * its staged manifest still exists (new layout) or its ref id is beyond
-    * the head (legacy layout); a ref with neither is a crashed
-    * publish/abandon remnant, resolved by abandonBranch. */
+  /** Pending branches: name -> staged manifest. A ref without a staged
+    * manifest is a crashed stage/publish/abandon remnant, resolved by
+    * abandonBranch. */
   private[spark] def pendingBranchManifests(outDir: String): Map[String, Manifest] =
-    branches(outDir).keys.flatMap(n => stagedManifest(outDir, n).map(n -> _)).toMap
+    branches(outDir).keys.flatMap(n => readBranchManifest(outDir, n).map(n -> _)).toMap
 
-  /** LEGACY pending branches only (staged at `snap-<id>.json` by an older
-    * library version): these still freeze the table, because any other
-    * commit of that id would clobber the staged manifest file. New-layout
-    * branches stage at branch-scoped paths and freeze nothing — including
-    * a crashed new-layout remnant (ref beyond the head with NEITHER a
-    * branch manifest NOR a `snap-<id>.json`, left by a stage or abandon
-    * dying between its ref and manifest writes): there is no staged file
-    * for a commit to clobber, so it must not freeze the table either
-    * (abandonBranch retires it). */
-  private def legacyPendingBranches(outDir: String): Map[String, Int] = {
-    val cur = latestSnapshot(outDir).getOrElse(-1)
-    branches(outDir).filter { case (n, id) =>
-      id > cur && !Files.exists(branchManifestPath(outDir, n)) &&
-        Files.exists(Paths.get(outDir, "snapshots", s"snap-$id.json"))
-    }
-  }
-
-  private def parseManifest(k: Int, manifest: String): Manifest = {
-    val m = "\"committed_buckets\"\\s*:\\s*\\[([0-9,\\s]*)\\]".r
-      .findFirstMatchIn(manifest).map(_.group(1)).getOrElse("")
-    val buckets = m.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSet
+  /** The one manifest format, exactly what [[commitWave]] writes:
+    *
+    *   {"snapshot_id":K,                    required
+    *    "committed_buckets":[B,..],         required
+    *    "operation":"append",               required: append | delta | rewrite | replace | props
+    *    "schema":"<Spark DDL>",             required: the table schema at this snapshot
+    *    "props":{"k":"v",..},               only when sticky table properties are set
+    *    "bucket_count":N,                   only when the committer knows the hash modulus
+    *    "delete_dirs":["snap-S-<tok>",..],  required, possibly empty
+    *    "fp_mode":"conv"|"bucket",          only when input fingerprints carry a mode
+    *    "conv_fps":"fp-S-<tok>",            only when a conv-fingerprint sidecar exists
+    *    "input_fps":[{"bucket":B,"fp":F}],  only when bucket fingerprints are recorded
+    *    "files":[{"bucket":B,"path":"bucket=B/part-..","row_count":N,"seq":S,
+    *              "min_conv":"..","max_conv":".."},..],
+    *                                        required, possibly empty; the conv_id
+    *                                        bounds only when the footer has stats
+    *    "committed_at":"<ISO-8601>"}        required, always the last key
+    *
+    * A manifest lacking a required key was written in an older layout and
+    * is refused with one IllegalStateException naming the file: older
+    * layouts are not migrated. The snapshot id comes from the file name
+    * (branch manifests: from `snapshot_id`). */
+  private def parseManifest(path: Path, k: Int, manifest: String): Manifest = {
+    val buckets = committedBucketsRe.findFirstMatchIn(manifest).map(_.group(1))
+    val operation = operationRe.findFirstMatchIn(manifest).map(_.group(1))
+    val schema = schemaRe.findFirstMatchIn(manifest).map(m => junesc(m.group(1)))
+    val delDirs = deleteDirsRe.findFirstMatchIn(manifest).map(_.group(1))
+    val filesList = filesListRe.findFirstMatchIn(manifest)
+    // LAST match: committed_at is the manifest's trailing field
+    val committedAt = committedAtRe.findAllMatchIn(manifest).toSeq.lastOption.map(_.group(1))
+    val missing = Seq("committed_buckets" -> buckets, "operation" -> operation,
+      "schema" -> schema, "delete_dirs" -> delDirs, "files" -> filesList,
+      "committed_at" -> committedAt).collect { case (key, None) => key }
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"manifest $path lacks required key(s) ${missing.mkString(", ")}: it was written " +
+          "in an older table layout, which is refused — older layouts are not migrated")
     val files = fileEntryRe.findAllMatchIn(manifest)
       .map(f => FileEntry(f.group(1).toInt, f.group(2), f.group(3).toLong,
         seq = Option(f.group(4)).map(_.toInt).getOrElse(0),
         minConv = Option(f.group(5)).map(junesc),
         maxConv = Option(f.group(6)).map(junesc))).toVector
-    val fps = fpEntryRe.findAllMatchIn(manifest)
-      .map(m => m.group(1).toInt -> m.group(2).toLong).toMap
-    val convFps = convFpsDirRe.findFirstMatchIn(manifest).map(_.group(1))
-    val delDirs = deleteDirsRe.findFirstMatchIn(manifest).map(_.group(1)).toVector
-      .flatMap(_.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty))
-    Manifest(k, buckets, files, hasFilesList = manifest.contains("\"files\""),
-      inputFps = fps, convFpsDir = convFps, deleteDirs = delDirs,
-      hasDeleteDirsList = manifest.contains("\"delete_dirs\""),
+    Manifest(k, buckets.get.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSet, files,
+      inputFps = fpEntryRe.findAllMatchIn(manifest)
+        .map(m => m.group(1).toInt -> m.group(2).toLong).toMap,
+      convFpsDir = convFpsDirRe.findFirstMatchIn(manifest).map(_.group(1)),
+      deleteDirs = delDirs.get.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
+        .filter(_.nonEmpty).toVector,
       fpMode = fpModeRe.findFirstMatchIn(manifest).map(_.group(1)),
       bucketCount = bucketCountRe.findFirstMatchIn(manifest).map(_.group(1).toInt),
-      operation = operationRe.findFirstMatchIn(manifest).map(_.group(1)),
+      operation = operation.get,
       props = propsRe.findFirstMatchIn(manifest).map(_.group(1)) match {
         case None => Map.empty
         case Some(body) =>
           propsPairRe.findAllMatchIn(body).map(p => junesc(p.group(1)) -> junesc(p.group(2))).toMap
       },
-      // LAST match: the genuine committed_at is the manifest's trailing
-      // field; jesc-escaped prop values can't fake the unescaped key
-      // sequence, and the bare key is refused at write time — lastOption
-      // additionally covers tables written before that guard existed
-      committedAt = committedAtRe.findAllMatchIn(manifest).toSeq.lastOption.map(_.group(1)),
-      schemaDdl = schemaRe.findFirstMatchIn(manifest).map(m => junesc(m.group(1))))
+      committedAt = committedAt.get,
+      schemaDdl = schema.get)
   }
 
   /** Committed = listed in the manifest AND every listed data file for the
-    * bucket is still present on disk. A bucket whose files were lost (or a
-    * legacy partial promote) is treated as uncommitted and recomputed on
-    * resume. Buckets with zero rows legitimately list no files — but ONLY
-    * when the manifest carries a files list at all; a legacy manifest
-    * (pre-file-granularity, no "files" key) can't distinguish lost files
-    * from empty buckets, so it falls back to bucket-directory existence.
-    */
+    * bucket is still present on disk. A bucket whose files were lost is
+    * treated as uncommitted and recomputed on resume. Buckets with zero
+    * rows legitimately list no files. */
   override def committedBuckets(outDir: String): Set[Int] = readManifest(outDir) match {
     case None => Set.empty
     case Some(man) =>
       val dataDir = Paths.get(outDir, "data")
-      if (!man.hasFilesList)
-        man.buckets.filter(b => Files.isDirectory(dataDir.resolve(s"bucket=$b")))
-      else {
-        val byBucket = man.files.groupBy(_.bucket)
-        man.buckets.filter { b =>
-          byBucket.getOrElse(b, Vector.empty)
-            .forall(f => Files.exists(dataDir.resolve(f.path)))
-        }
+      val byBucket = man.files.groupBy(_.bucket)
+      man.buckets.filter { b =>
+        byBucket.getOrElse(b, Vector.empty).forall(f => Files.exists(dataDir.resolve(f.path)))
       }
   }
 
@@ -866,12 +841,8 @@ object SnapshotManifestFormat extends TableFormat {
       if (k.startsWith("ref.")) {
         require(v.isEmpty || v.matches("\\d{1,9}"),
           s"'$k' is in the reserved tag namespace; its value must be a snapshot id, got: '$v'")
-        // tombstones (empty value) are exempt from the name-charset check:
-        // a tag written before the charset tightened must stay DROPPABLE,
-        // or its snapshot is pinned against expiry forever
-        if (v.nonEmpty)
-          require(k.stripPrefix("ref.").matches("[A-Za-z0-9._-]+"),
-            s"invalid tag name in prop key '$k'")
+        require(k.stripPrefix("ref.").matches("[A-Za-z0-9._-]+"),
+          s"invalid tag name in prop key '$k'")
       }
       // committed_at is the manifest's own trailing field; a prop with
       // that key would shadow it for the parser (props serialize first)
@@ -896,24 +867,16 @@ object SnapshotManifestFormat extends TableFormat {
     // Head commits, maintenance, and any number of OTHER branches proceed
     // while branches pend; publishBranch cherry-picks the staged delta
     // onto the then-current head with conflict validation (the Iceberg
-    // WAP/branch shape). Only two refusals remain:
-    //  - a LEGACY pending branch (staged at snap-<id>.json by an older
-    //    library version) still freezes the table — any other commit of
-    //    that id would clobber its staged manifest file;
-    //  - re-staging a name that is already pending (publish or abandon
-    //    it first — a branch holds exactly one staged snapshot).
-    legacyPendingBranches(outDir).headOption.foreach { case (n, id) =>
-      throw new CommitConflictException(
-        s"cannot commit snapshot $snapshotId under $outDir: legacy-layout branch '$n' " +
-          s"holds staged snapshot $id at snap-$id.json — publish or abandon it first")
-    }
+    // WAP/branch shape). The one refusal is re-staging a name that is
+    // already pending (publish or abandon it first — a branch holds
+    // exactly one staged snapshot).
     toBranch.foreach { name =>
       require(name.matches("[A-Za-z0-9._-]+") && !name.endsWith(".tmp"),
         s"invalid branch name: '$name'") // .tmp is atomicWrite's staging suffix
       require(additive,
         s"branch commit '$name' must be additive (merge-on-read): a replacing " +
           "promote would rewrite published bucket dirs before the audit")
-      if (stagedManifest(outDir, name).isDefined)
+      if (readBranchManifest(outDir, name).isDefined)
         throw new CommitConflictException(
           s"cannot stage branch '$name' at snapshot $snapshotId under $outDir: " +
             "the branch already holds a staged snapshot — publish or abandon it first")
@@ -931,7 +894,9 @@ object SnapshotManifestFormat extends TableFormat {
     // add/drop subset expressible without field ids): the schema of THIS
     // commit is the staged wave's file schema — read from ONE footer,
     // driver-side — falling back sticky to the previous snapshot's when the
-    // commit stages no files (maintenance, delete-only, fp-rebaseline).
+    // commit stages no files (maintenance, delete-only, fp-rebaseline). A
+    // first commit without files must pass `schemaDdl`: every manifest
+    // records a schema.
     // Reads pin the scan to the manifest's schema, so older files null-fill
     // added columns and project away dropped ones; time travel serves each
     // snapshot under ITS schema. A same-named column changing TYPE is not
@@ -961,8 +926,7 @@ object SnapshotManifestFormat extends TableFormat {
           finally reader.close()
         }
     }
-    val prevSchema = prevMan.flatMap(_.schemaDdl)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
+    val prevSchema = prevMan.map(m => org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl))
     for (nw <- stagedSchema; pv <- prevSchema; f <- nw.fields) {
       pv.fields.find(_.name == f.name).foreach { p =>
         // catalogString compare = structural type equality ignoring
@@ -973,7 +937,9 @@ object SnapshotManifestFormat extends TableFormat {
       }
     }
     val effSchemaDdl = schemaDdl.orElse(stagedSchema.map(_.toDDL))
-      .orElse(prevMan.flatMap(_.schemaDdl))
+      .orElse(prevMan.map(_.schemaDdl)).getOrElse(throw new IllegalArgumentException(
+        s"commit of snapshot $snapshotId under $outDir has no schema: it stages no data " +
+          "files, passes no schemaDdl and has no previous snapshot to carry one from"))
     // promote staged bucket dirs into data/ then commit the snapshot
     val dataDir = Paths.get(outDir, "data")
     Files.createDirectories(dataDir)
@@ -1020,14 +986,12 @@ object SnapshotManifestFormat extends TableFormat {
       else inputFps.toSeq.sorted.map { case (b, fp) => s"""{"bucket":$b,"fp":$fp}""" }
         .mkString(""""input_fps":[""", ",", "],")
     val convFpsJson = convFpsDir.map(d => s""""conv_fps":"$d",""").getOrElse("")
-    // always written (possibly empty): its presence marks a manifest whose
-    // delete liveness is manifest-tracked, vs legacy filesystem-scan tables
     val deleteDirsJson =
       deleteDirs.sorted.map(d => "\"" + d + "\"").mkString(""""delete_dirs":[""", ",", "],")
     val fpModeJson = fpMode.map(m => s""""fp_mode":"$m",""").getOrElse("")
     val bucketCountJson = bucketCount.map(n => s""""bucket_count":$n,""").getOrElse("")
     val operationJson = s""""operation":"$operation","""
-    val schemaJson = effSchemaDdl.map(d => s""""schema":"${jesc(d)}",""").getOrElse("")
+    val schemaJson = s""""schema":"${jesc(effSchemaDdl)}","""
     val propsJson =
       if (effProps.isEmpty) ""
       else effProps.toSeq.sorted.map { case (k, v) => s""""${jesc(k)}":"${jesc(v)}"""" }
@@ -1068,11 +1032,7 @@ object SnapshotManifestFormat extends TableFormat {
     // head writers write byte-identical pointer content for the same id,
     // so a blind restore/delete would revert the WINNER's already-
     // acknowledged commit. The branch ref therefore carries a
-    // writer-unique token (legacy token-less refs stay parseable); the
-    // head pointer — whose bare-id format every reader and legacy table
-    // depends on — is only rolled back when the manifest winner is
-    // provably a LEGACY branch stager (new-layout stagers write
-    // branch-scoped files and can never win a head manifest race).
+    // writer-unique token; the head pointer is never rolled back.
     toBranch match {
       // branch commit: manifest + lineage live at branch-scoped paths,
       // the table head does NOT move, and nothing is frozen — only the
@@ -1122,29 +1082,13 @@ object SnapshotManifestFormat extends TableFormat {
         requireBaseUnmoved("concurrent publish/commit after manifest write")
         val head = Paths.get(outDir, "snapshots", "_latest")
         atomicWrite(head, snapshotId.toString)
-        if (manifestClobbered()) {
-          // the manifest winner is either another HEAD writer — whose
-          // head bytes are identical to ours, so the head is already
-          // correct for the winner and must be left alone — or a LEGACY
-          // branch stager (writes snap-<id>.json directly), whose staged
-          // manifest must NOT be served as the published head. New-layout
-          // stagers write branch-scoped manifest files: a ref at this id
-          // with a branch-scoped manifest is a concurrent stage that
-          // touched different files, never the manifest winner.
-          val stagerWon = branches(outDir).exists { case (n, id) =>
-            id == snapshotId && !Files.exists(branchManifestPath(outDir, n))
-          }
-          if (stagerWon) {
-            val cur = new String(Files.readAllBytes(head), StandardCharsets.UTF_8).trim
-            if (cur == snapshotId.toString) current match {
-              case Some(prev) => atomicWrite(head, prev.toString)
-              case None       => Files.deleteIfExists(head)
-            }
-          }
+        // the manifest winner can only be another HEAD writer (branch
+        // stagers write branch-scoped files), whose head bytes are
+        // identical to ours: the head is already correct for the winner
+        if (manifestClobbered())
           throw new CommitConflictException(
             s"commit of snapshot $snapshotId under $outDir lost a concurrent-commit race: " +
               "another writer overwrote the manifest after the optimistic check")
-        }
     }
   }
 
@@ -1159,9 +1103,9 @@ object SnapshotManifestFormat extends TableFormat {
       if (n.startsWith("branch-") && !n.endsWith(".tmp")) {
         val content = new String(Files.readAllBytes(p),
           java.nio.charset.StandardCharsets.UTF_8).trim
-        // "<id>" (legacy) or "<id> <runToken>" — the token lets a stage
-        // that lost the manifest race prove the ref is its own to delete
-        require(content.matches("\\d{1,9}( [0-9a-f]{8})?"),
+        // "<id> <runToken>" — the token lets a stage that lost the
+        // manifest race prove the ref is its own to delete
+        require(content.matches("\\d{1,9} [0-9a-f]{8}"),
           s"corrupt branch ref '$n' under $outDir: expected a snapshot id, got '$content'")
         Some(n.stripPrefix("branch-") -> content.takeWhile(_.isDigit).toInt)
       } else None
@@ -1176,9 +1120,8 @@ object SnapshotManifestFormat extends TableFormat {
 
   private def publishBranchImpl(sparkOpt: Option[SparkSession], outDir: String,
                                 name: String, retries: Int = 2): Int = {
-    val ref = Paths.get(outDir, "snapshots", s"branch-$name")
-    val refId = branches(outDir).getOrElse(name,
-      throw new IllegalArgumentException(s"no branch '$name' on table $outDir"))
+    if (!branches(outDir).contains(name))
+      throw new IllegalArgumentException(s"no branch '$name' on table $outDir")
     readBranchManifest(outDir, name) match {
       case Some(man) =>
         // a publish losing its optimistic race (another head commit or
@@ -1205,45 +1148,26 @@ object SnapshotManifestFormat extends TableFormat {
         // a failed attempt's marker cannot validate) — finish retiring.
         readPublishIntent(outDir, name).foreach { in =>
           if (intentLanded(outDir, in)) {
-            Files.deleteIfExists(ref)
+            Files.deleteIfExists(Paths.get(outDir, "snapshots", s"branch-$name"))
             Files.deleteIfExists(publishIntentPath(outDir, name))
             return in.n
           } else Files.deleteIfExists(publishIntentPath(outDir, name))
         }
-        // A run-token-stamped ref with no staged manifest and no landed
-        // intent is a crashed new-layout stage or abandon — nothing is
-        // staged, so publishing it must fail loudly, not guess.
-        val refTxt = new String(Files.readAllBytes(ref), StandardCharsets.UTF_8).trim
-        if (refTxt.matches("\\d{1,9} [0-9a-f]{8}"))
-          throw new IllegalStateException(
-            s"branch '$name' has a ref but no staged manifest under $outDir — a crashed " +
-              "stage or abandon left this remnant; nothing is staged to publish. " +
-              "Run abandonBranch to retire it")
-        // legacy layout (staged at snap-<id>.json by an older library
-        // version), or a crashed legacy publish remnant (ref only)
-        val cur = latestSnapshot(outDir).getOrElse(-1)
-        if (refId <= cur) { // publish crashed between the head swap and the ref
-          Files.deleteIfExists(ref) // delete: the snapshot is already live
-          return refId
-        }
-        require(refId == cur + 1,
-          s"branch '$name' head $refId is not the table's next snapshot (head is $cur) under $outDir")
-        val man = readManifestAt(outDir, refId).getOrElse(throw new IllegalStateException(
-          s"branch '$name' points at snapshot $refId but its manifest is missing under $outDir — " +
-            "a crashed abandon; re-run abandonBranch to finish retiring it"))
-        require(snapshotIntact(outDir, man),
-          s"cannot publish branch '$name': snapshot $refId references files missing under $outDir")
-        atomicWrite(Paths.get(outDir, "snapshots", "_latest"), refId.toString)
-        Files.deleteIfExists(ref)
-        refId
+        // A ref with no staged manifest and no landed intent is a crashed
+        // stage or abandon — nothing is staged, so publishing it must fail
+        // loudly, not guess.
+        throw new IllegalStateException(
+          s"branch '$name' has a ref but no staged manifest under $outDir — a crashed " +
+            "stage or abandon left this remnant; nothing is staged to publish. " +
+            "Run abandonBranch to retire it")
     }
   }
 
   /** One publish attempt of a branch-scoped stage. Base unmoved =
     * fast-forward; base moved = cherry-pick merge. Both commit through
     * [[commitWave]], so every optimistic-concurrency recheck (CAS,
-    * manifest-clobber detection, legacy freeze) guards a publish exactly
-    * like any other head commit. */
+    * manifest-clobber detection) guards a publish exactly like any other
+    * head commit. */
   private def publishStaged(sparkOpt: Option[SparkSession], outDir: String,
                             name: String, man: Manifest): Int = {
     val base = man.snapshotId - 1
@@ -1255,10 +1179,9 @@ object SnapshotManifestFormat extends TableFormat {
         "abandon and re-stage"))
     val deltaFiles = man.files.filter(_.seq == man.snapshotId)
     val branchNewDels = man.deleteDirs.filterNot(baseMan.deleteDirs.toSet)
-    // Crash-resume idempotence, strongest check first: the publish-intent
-    // marker names exactly what a prior attempt committed (attempt-unique
-    // names, so a failed attempt can never validate). It covers the one
-    // shape the weaker checks below cannot — a delete-only CHERRY-PICK,
+    // Crash-resume idempotence: the publish-intent marker names exactly
+    // what a prior attempt committed (attempt-unique names, so a failed
+    // attempt can never validate) — including a delete-only CHERRY-PICK,
     // whose committed artifacts are re-stamped copies. A marker that does
     // not validate is a failed attempt's leftover: discard it.
     readPublishIntent(outDir, name).foreach { in =>
@@ -1266,29 +1189,6 @@ object SnapshotManifestFormat extends TableFormat {
         retireBranchArtifacts(outDir, name, if (in.cherryPick) branchNewDels else Nil)
         return in.n
       } else Files.deleteIfExists(publishIntentPath(outDir, name))
-    }
-    // Weaker resume checks (pre-marker tables): a publish that committed
-    // but crashed before retiring the branch artifacts is detected by its
-    // delta files (writer-unique part names) already living in the head
-    // manifest — or, for a data-less stage, by its writer-unique sidecar
-    // dir already referenced by retained history. Finish the retirement
-    // and report the id it published at.
-    val headMan = readManifestAt(outDir, cur)
-    if (deltaFiles.nonEmpty && headMan.exists { h =>
-          val live = h.files.map(_.path).toSet
-          deltaFiles.forall(f => live.contains(f.path))
-        }) {
-      val seq = headMan.get.files.find(_.path == deltaFiles.head.path).get.seq
-      retireBranchArtifacts(outDir, name,
-        if (seq == man.snapshotId) Nil else branchNewDels)
-      return seq
-    }
-    if (deltaFiles.isEmpty && man.convFpsDir.exists(d =>
-          allManifests(outDir).exists(_.convFpsDir.contains(d)))) {
-      val pub = allManifests(outDir).find(_.convFpsDir == man.convFpsDir).get.snapshotId
-      retireBranchArtifacts(outDir, name,
-        if (pub == man.snapshotId) Nil else branchNewDels)
-      return pub
     }
     // props the branch changed vs its base; keys it retired become
     // tombstones so the overlay in commitWave retires them at the head too
@@ -1311,8 +1211,8 @@ object SnapshotManifestFormat extends TableFormat {
       commitWave(outDir, s"$outDir/staging-publish-none", man.snapshotId, man.buckets,
         man.files, readBranchLineage(outDir, name), man.inputFps, additive = true,
         convFpsDir = man.convFpsDir, deleteDirs = man.deleteDirs, fpMode = man.fpMode,
-        bucketCount = man.bucketCount, operation = man.operation.getOrElse("delta"),
-        props = propsDelta, schemaDdl = man.schemaDdl)
+        bucketCount = man.bucketCount, operation = man.operation,
+        props = propsDelta, schemaDdl = Some(man.schemaDdl))
       maybeTestCrash()
       retireBranchArtifacts(outDir, name, Nil)
       man.snapshotId
@@ -1330,10 +1230,9 @@ object SnapshotManifestFormat extends TableFormat {
           s"snapshot $k expired while branch '$name' pended — abandon and re-stage"))
       }
       interv.foreach { case (k, m) =>
-        val op = m.operation.getOrElse("append")
-        if (op == "rewrite" || op == "replace")
+        if (m.operation == "rewrite" || m.operation == "replace")
           throw new CommitConflictException(
-            s"cannot cherry-pick branch '$name': snapshot $k is a $op commit (files the " +
+            s"cannot cherry-pick branch '$name': snapshot $k is a ${m.operation} commit (files the " +
               "branch references were rewritten) — abandon and re-stage", retryable = false)
       }
       // intactness AFTER the op validation: a rewrite/replace is exactly
@@ -1348,7 +1247,7 @@ object SnapshotManifestFormat extends TableFormat {
           s"cannot cherry-pick branch '$name': bucket modulus or fingerprint mode diverged " +
             "from the head — abandon and re-stage", retryable = false)
       // schema: at most ONE side may have evolved it since the base
-      val mergedSchema: Option[String] = (man.schemaDdl, hMan.schemaDdl, baseMan.schemaDdl) match {
+      val mergedSchema: String = (man.schemaDdl, hMan.schemaDdl, baseMan.schemaDdl) match {
         case (s, h, _) if s == h => s
         case (s, h, b) if h == b => s // only the branch evolved the schema
         case (s, h, b) if s == b => h // only the head evolved it
@@ -1431,8 +1330,8 @@ object SnapshotManifestFormat extends TableFormat {
         mergedFiles, mergedLineage, mergedFps, additive = true,
         convFpsDir = mergedFpDir, deleteDirs = hMan.deleteDirs ++ restampedDels,
         fpMode = man.fpMode, bucketCount = man.bucketCount,
-        operation = man.operation.getOrElse("delta"),
-        props = propsDelta, schemaDdl = mergedSchema)
+        operation = man.operation,
+        props = propsDelta, schemaDdl = Some(mergedSchema))
       maybeTestCrash()
       retireBranchArtifacts(outDir, name, branchNewDels)
       n
@@ -1470,9 +1369,8 @@ object SnapshotManifestFormat extends TableFormat {
   }
 
   override def abandonBranch(outDir: String, name: String): Unit = {
-    val ref = Paths.get(outDir, "snapshots", s"branch-$name")
-    val id = branches(outDir).getOrElse(name,
-      throw new IllegalArgumentException(s"no branch '$name' on table $outDir"))
+    if (!branches(outDir).contains(name))
+      throw new IllegalArgumentException(s"no branch '$name' on table $outDir")
     // GC exactly what ONLY the branch references. Branch commits are
     // additive (head's files + new ones), so diffing against the head
     // would usually suffice — but older RETAINED manifests can also
@@ -1481,8 +1379,10 @@ object SnapshotManifestFormat extends TableFormat {
     // so the reference set is every retained manifest plus every other
     // branch's staged manifest, the same rule expireSnapshots GC uses.
     // Everything is deleteIfExists / recursive-quiet and the ref goes
-    // LAST, so a crash mid-abandon re-runs to completion.
-    def gcOnlyBranchReferenced(man: Manifest, others: Vector[Manifest]): Unit = {
+    // LAST, so a crash mid-abandon re-runs to completion. A ref without a
+    // staged manifest is a crash remnant: only the ref is dropped.
+    readBranchManifest(outDir, name).foreach { man =>
+      val others = allManifests(outDir) ++ (pendingBranchManifests(outDir) - name).values
       val refFiles = others.flatMap(_.files.map(_.path)).toSet
       man.files.filterNot(f => refFiles.contains(f.path))
         .foreach(f => Files.deleteIfExists(Paths.get(outDir, "data", f.path)))
@@ -1492,41 +1392,18 @@ object SnapshotManifestFormat extends TableFormat {
       val refFps = others.flatMap(_.convFpsDir).toSet
       for (fp <- man.convFpsDir if !refFps.contains(fp))
         deleteRecursively(Paths.get(outDir, "conv_fps", fp))
+      Files.deleteIfExists(branchLineagePath(outDir, name))
+      Files.deleteIfExists(branchManifestPath(outDir, name))
     }
-    readBranchManifest(outDir, name) match {
-      case Some(man) =>
-        gcOnlyBranchReferenced(man,
-          allManifests(outDir) ++ (pendingBranchManifests(outDir) - name).values)
-        Files.deleteIfExists(branchLineagePath(outDir, name))
-        Files.deleteIfExists(branchManifestPath(outDir, name))
-      case None =>
-        val cur = latestSnapshot(outDir).getOrElse(-1)
-        if (id > cur) {
-          // legacy layout: staged at snap-<id>.json by an older version
-          readManifestAt(outDir, id).foreach { man =>
-            gcOnlyBranchReferenced(man,
-              allManifests(outDir).filter(_.snapshotId != id) ++
-                (pendingBranchManifests(outDir) - name).values)
-            Files.deleteIfExists(Paths.get(outDir, "lineage", s"lineage-$id.json"))
-            Files.deleteIfExists(Paths.get(outDir, "snapshots", s"snap-$id.json"))
-          }
-        } // id <= cur: publish-crash remnant — the snapshot is live, only drop the ref
-    }
-    Files.deleteIfExists(ref)
+    Files.deleteIfExists(Paths.get(outDir, "snapshots", s"branch-$name"))
     Files.deleteIfExists(publishIntentPath(outDir, name))
     ()
   }
 
   override def snapshotAsOfTimestamp(outDir: String, tsMillis: Long): Int = {
-    val dated = allManifests(outDir).flatMap { m =>
-      m.committedAt.flatMap { s =>
-        try Some(m.snapshotId -> java.time.Instant.parse(s).toEpochMilli)
-        catch { case _: java.time.format.DateTimeParseException => None }
-      }
-    }
-    require(dated.nonEmpty,
-      s"no retained snapshot under $outDir records a commit instant (legacy table) — " +
-        "time travel by timestamp needs committed_at; travel by snapshot id instead")
+    val dated = allManifests(outDir)
+      .map(m => m.snapshotId -> java.time.Instant.parse(m.committedAt).toEpochMilli)
+    require(dated.nonEmpty, s"no committed snapshot under $outDir")
     val qualifying = dated.filter(_._2 <= tsMillis)
     if (qualifying.isEmpty) {
       val earliest = dated.minBy(_._2)
@@ -1543,29 +1420,27 @@ object SnapshotManifestFormat extends TableFormat {
 
   override def expireBranches(outDir: String, olderThanMs: Long): Seq[String] = {
     val cutoff = System.currentTimeMillis() - olderThanMs
-    val stale = pendingBranchManifests(outDir).toSeq.flatMap { case (name, man) =>
-      man.committedAt.flatMap { s =>
-        try Some(name -> java.time.Instant.parse(s).toEpochMilli)
-        catch { case _: java.time.format.DateTimeParseException => None }
-      }
-    }.collect { case (name, staged) if staged <= cutoff => name }.sorted
+    val stale = pendingBranchManifests(outDir).toSeq.collect {
+      case (name, man) if java.time.Instant.parse(man.committedAt).toEpochMilli <= cutoff => name
+    }.sorted
     stale.foreach(abandonBranch(outDir, _))
     stale
   }
 
   override def readCommittedAtBranch(spark: SparkSession, outDir: String,
-                                     name: String): DataFrame =
-    readBranchManifest(outDir, name) match {
-      case Some(man) =>
-        if (!snapshotIntact(outDir, man))
-          throw new IllegalStateException(
-            s"branch '$name' staged snapshot references files missing under $outDir")
-        readAt(spark, outDir, man)
-      case None => // legacy layout
-        val id = branches(outDir).getOrElse(name,
-          throw new IllegalArgumentException(s"no branch '$name' on table $outDir"))
-        readCommittedAsOf(spark, outDir, id)
+                                     name: String): DataFrame = {
+    val man = readBranchManifest(outDir, name).getOrElse {
+      if (!branches(outDir).contains(name))
+        throw new IllegalArgumentException(s"no branch '$name' on table $outDir")
+      throw new IllegalStateException(
+        s"branch '$name' has a ref but no staged manifest under $outDir — a crashed " +
+          "stage/publish/abandon left this remnant; run abandonBranch to retire it")
     }
+    if (!snapshotIntact(outDir, man))
+      throw new IllegalStateException(
+        s"branch '$name' staged snapshot references files missing under $outDir")
+    readAt(spark, outDir, man)
+  }
 
   /** Staged lineage rows of a pending branch (branch-scoped file). */
   private def readBranchLineage(outDir: String, name: String): Vector[LineageRow] = {
@@ -1582,42 +1457,25 @@ object SnapshotManifestFormat extends TableFormat {
     * deletes/snap-K dir left by a killed run is NEVER activated, even if a
     * later unrelated commit reuses snapshot id K). A tracked dir that is
     * missing on disk is an integrity error and fails LOUDLY, like a missing
-    * data file — silently skipping it would serve deleted rows. Manifests
-    * written before deletes were manifest-tracked (no delete_dirs key) fall
-    * back to the legacy filesystem scan (snap-K dirs with K <= snapshot),
-    * mirroring the hasFilesList fallback. */
+    * data file — silently skipping it would serve deleted rows. */
   private def manifestDeleteDirs(outDir: String, man: Manifest): Vector[Path] =
-    if (man.hasDeleteDirsList) {
-      man.deleteDirs.map { d =>
-        val p = Paths.get(outDir, "deletes", d)
-        require(Files.isDirectory(p), s"manifest-tracked delete dir missing: $p")
-        p
-      }
-    } else {
-      val root = Paths.get(outDir, "deletes")
-      if (!Files.isDirectory(root)) Vector.empty
-      else listDir(root).filter { d =>
-        // numeric-name filter first: a stray non-numeric dir (snap-tmp,
-        // editor backup) must not break every read of a legacy table
-        val n = d.getFileName.toString
-        n.matches("snap-\\d+") && n.stripPrefix("snap-").toInt <= man.snapshotId
-      }
+    man.deleteDirs.map { d =>
+      val p = Paths.get(outDir, "deletes", d)
+      require(Files.isDirectory(p), s"manifest-tracked delete dir missing: $p")
+      p
     }
 
   /** Driver-side, manifest-sized existence sweep over data files and
     * tracked delete dirs. */
-  override def snapshotIntact(outDir: String, man: Manifest): Boolean = {
-    val dataGone = man.files.exists(f => !Files.exists(Paths.get(outDir, "data", f.path)))
-    val deletesGone = man.hasDeleteDirsList &&
-      man.deleteDirs.exists(d => !Files.isDirectory(Paths.get(outDir, "deletes", d)))
-    !dataGone && !deletesGone
-  }
+  override def snapshotIntact(outDir: String, man: Manifest): Boolean =
+    man.files.forall(f => Files.exists(Paths.get(outDir, "data", f.path))) &&
+      man.deleteDirs.forall(d => Files.isDirectory(Paths.get(outDir, "deletes", d)))
 
   /** Read the committed table: exactly the data files listed in the latest
     * committed manifest. A crash between bucket promotion and the snapshot
     * commit can leave promoted-but-uncommitted dirs (or extra files) under
     * data/ — readers must not see them (snapshot-isolation read semantics).
-    * Legacy manifests without a file list fall back to committed bucket dirs.
+    * A snapshot without files reads as an empty frame with its schema.
     *
     * Merge-on-read: when equality delete files exist, each data file is read
     * with its manifest `seq`, and a row is dropped when some delete entry
@@ -1660,35 +1518,23 @@ object SnapshotManifestFormat extends TableFormat {
     // null-fill columns added since they were written, files carrying
     // since-dropped columns project them away, and NO footer is read for
     // schema inference (at 10^6 files the inference read alone matters).
-    // The bucket partition column is appended by partition discovery.
-    // Legacy manifests (no schema) infer from footers, as before.
+    // The bucket partition column is appended by partition discovery; a
+    // read of no files has nothing to discover it from, so its schema
+    // carries the column itself.
     // `streaming` swaps the DATA-side relations for streaming-flagged ones
     // (same parquet scan, see StreamRelationBridge) so the v1 streaming
     // source can serve this exact read as a microbatch; the delete side
     // stays a batch read (a stream-static anti-filter join).
-    val userSchema = man.schemaDdl.map(org.apache.spark.sql.types.StructType.fromDDL)
-    def mkRead(paths: Seq[String]): DataFrame =
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(man.schemaDdl)
+    def read(fs: Seq[FileEntry]): DataFrame = {
+      val paths = fs.map(f => s"$outDir/data/${f.path}")
+      val s = if (paths.isEmpty) schema.add("bucket", "int") else schema
       if (streaming)
         org.apache.spark.sql.graftbridge.StreamRelationBridge
-          .streamingParquet(spark, paths, userSchema, s"$outDir/data")
-      else userSchema.foldLeft(spark.read)(_ schema _)
-        .option("basePath", s"$outDir/data")
-        .parquet(paths: _*)
-    def readPlain(): DataFrame = {
-      val paths =
-        if (man.files.nonEmpty) man.files.map(f => s"$outDir/data/${f.path}")
-        else man.buckets.toSeq.sorted.map(b => s"$outDir/data/bucket=$b")
-      require(paths.nonEmpty, s"empty committed snapshot under $outDir")
-      mkRead(paths)
+          .streamingParquet(spark, paths, Some(s), s"$outDir/data")
+      else spark.read.schema(s).option("basePath", s"$outDir/data").parquet(paths: _*)
     }
-    // a legacy manifest (no file list) cannot carry per-file seq numbers, so
-    // equality deletes CANNOT be applied — reading plain would silently
-    // serve deleted rows; fail loudly instead
-    if (deletes.nonEmpty && !man.hasFilesList)
-      throw new IllegalStateException(
-        s"equality deletes exist under $outDir but manifest ${man.snapshotId} has no file " +
-          "list (legacy format): deletes cannot be applied — compact or rewrite the table")
-    if (deletes.isEmpty) readPlain()
+    if (deletes.isEmpty || man.files.isEmpty) read(man.files)
     else {
       // only delete-affected BUCKETS pay the anti-filter join; every other
       // bucket's files are read plain (at 4096 buckets with one dirty
@@ -1700,7 +1546,6 @@ object SnapshotManifestFormat extends TableFormat {
       val delBuckets = perBucket.map(_.getInt(0)).toSet
       val delRows = perBucket.map(_.getLong(1)).sum
       val (affectedFiles, cleanFiles) = man.files.partition(f => delBuckets.contains(f.bucket))
-      def read(fs: Seq[FileEntry]): DataFrame = mkRead(fs.map(f => s"$outDir/data/${f.path}"))
       val filteredPart =
         if (affectedFiles.isEmpty) None
         else {
@@ -1723,8 +1568,7 @@ object SnapshotManifestFormat extends TableFormat {
       (filteredPart, if (cleanFiles.nonEmpty) Some(read(cleanFiles)) else None) match {
         case (Some(a), Some(b)) => a.unionByName(b)
         case (Some(a), None) => a
-        case (None, Some(b)) => b
-        case (None, None) => readPlain() // deletes exist but reference no files
+        case (None, b) => b.get // no affected files: man.files are all clean
       }
     }
   }
@@ -1742,7 +1586,7 @@ object SnapshotManifestFormat extends TableFormat {
       case Some(n) =>
         val target = convIds.map(ExtractionJob.bucketOfConvId(_, n)).toSet
         man.files.filter(f => target.contains(f.bucket))
-      case None => man.files // legacy manifest: modulus unknown, keep all
+      case None => man.files // modulus not recorded: keep all
     }
     byBucket.filter { f =>
       (f.minConv, f.maxConv) match {
@@ -1759,13 +1603,9 @@ object SnapshotManifestFormat extends TableFormat {
       throw new IllegalArgumentException("readCommittedForConvs: no conversations requested")
     val man = readManifest(outDir)
       .getOrElse(throw new IllegalStateException(s"no committed snapshot under $outDir"))
-    if (!man.hasFilesList) return super.readCommittedForConvs(spark, outDir, convIds)
-    val pruned = pruneFilesForConvs(man, convIds)
-    // empty pruning result: no file can contain the requested conversations;
-    // read one file for the schema — the key filter yields zero rows
-    val eff = if (pruned.nonEmpty) pruned else man.files.take(1)
-    if (eff.isEmpty) return super.readCommittedForConvs(spark, outDir, convIds)
-    readAt(spark, outDir, man.copy(files = eff))
+    // an empty pruning result (no file can hold the requested
+    // conversations) reads as an empty frame with the table's schema
+    readAt(spark, outDir, man.copy(files = pruneFilesForConvs(man, convIds)))
       .where(col("conv_id").isin(convIds: _*))
   }
 
@@ -1778,7 +1618,7 @@ object SnapshotManifestFormat extends TableFormat {
       val man = readManifestAt(outDir, k).getOrElse(throw new IllegalStateException(
         s"snapshot $k has been expired (snapshot history GC'd); incremental read over " +
           s"($from, $to] is unavailable"))
-      if (man.operation.exists(op => op == "replace" || op == "rewrite"))
+      if (man.operation == "replace" || man.operation == "rewrite")
         throw new IllegalStateException(
           s"snapshot $k is a replacing commit (maintenance rewrite / bucket recompute / " +
             "rollback): incremental reads across it are unavailable — fall back to a " +
@@ -1787,12 +1627,6 @@ object SnapshotManifestFormat extends TableFormat {
     }
   }
 
-  /** Delete dirs of `man` whose snapshot falls in (from, to]. */
-  /** Commit seq encoded in a delete dir's name: `snap-<seq>` (legacy) or
-    * `snap-<seq>-<runToken>` — the token makes pre-commit artifacts
-    * writer-unique so concurrent writers computing the same next snapshot
-    * id can never overwrite each other's files before the optimistic
-    * commit check settles who wins. */
   /** Parquet bloom-filter options for the conv_id column, applied by
     * every data-file writer (base waves, deltas, compaction, binpack,
     * sorted rewrite, rebucket, replication): keyed reads push
@@ -1818,7 +1652,7 @@ object SnapshotManifestFormat extends TableFormat {
     java.util.UUID.randomUUID().toString.substring(0, 8)
 
   /** Test-only race-injection point: invoked inside commitWave AFTER the
-    * optimistic-CAS + pending-branch freeze checks and the staged-dir
+    * optimistic-CAS + branch checks and the staged-dir
     * promote, but BEFORE any pointer/manifest write — i.e. at the widest
     * check-then-act window. Specs install a closure here to land a
     * concurrent publish/stage/commit deterministically inside the window
@@ -1827,17 +1661,16 @@ object SnapshotManifestFormat extends TableFormat {
     * in production; restore in a finally. */
   private[graft] var commitRaceHook: () => Unit = () => ()
 
+  /** Commit seq encoded in a delete dir's name `snap-<seq>-<runToken>` —
+    * the token makes pre-commit artifacts writer-unique so concurrent
+    * writers computing the same next snapshot id can never overwrite each
+    * other's files before the optimistic commit check settles who wins. */
   private[spark] def deleteDirSeq(name: String): Option[Int] =
-    if (!name.startsWith("snap-")) None
-    else {
-      val rest = name.stripPrefix("snap-")
-      val digits = rest.takeWhile(_.isDigit)
-      if (digits.isEmpty || digits.length > 9) None
-      else if (rest.length == digits.length || rest.charAt(digits.length) == '-')
-        Some(digits.toInt)
-      else None
-    }
+    deleteDirNameRe.unapplySeq(name).map(_.head.toInt)
 
+  private val deleteDirNameRe = "snap-(\\d{1,9})-.+".r
+
+  /** Delete dirs of `man` whose snapshot falls in (from, to]. */
   private def rangeDeleteDirs(man: Manifest, from: Int, to: Int): Vector[String] =
     man.deleteDirs.filter(d => deleteDirSeq(d).exists(n => n > from && n <= to))
 
@@ -1848,28 +1681,15 @@ object SnapshotManifestFormat extends TableFormat {
   private def appendsBetween(spark: SparkSession, outDir: String,
                              fromSnapshot: Int, toSnapshot: Int,
                              streaming: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val mans = rangeManifests(outDir, fromSnapshot, toSnapshot)
-    val manTo = mans.last
-    if (!manTo.hasFilesList)
-      throw new IllegalStateException(
-        s"manifest $toSnapshot has no file list (legacy format): incremental read unavailable")
-    val files = manTo.files.filter(f => f.seq > fromSnapshot && f.seq <= toSnapshot)
-    if (files.isEmpty) {
-      // nothing appended in range (delete-only or fp-rebaseline commits):
-      // schema-only empty frame off one committed file
-      val eff = manTo.files.take(1)
-      if (eff.isEmpty)
-        throw new IllegalStateException(s"empty committed snapshot under $outDir")
-      return readAt(spark, outDir, manTo.copy(files = eff, deleteDirs = Vector.empty),
-        streaming)
-        .where(lit(false))
-    }
+    val manTo = rangeManifests(outDir, fromSnapshot, toSnapshot).last
     // the range's own deletes supersede its earlier deltas (seq-aware);
     // deletes BEFORE the range never apply to in-range files (lower seq),
-    // deletes AFTER it are outside the requested snapshot horizon
+    // deletes AFTER it are outside the requested snapshot horizon. A range
+    // that appended nothing (delete-only or fp-rebaseline commits) reads
+    // as an empty frame with the snapshot's schema.
     readAt(spark, outDir, manTo.copy(
-      files = files, deleteDirs = rangeDeleteDirs(manTo, fromSnapshot, toSnapshot)),
+      files = manTo.files.filter(f => f.seq > fromSnapshot && f.seq <= toSnapshot),
+      deleteDirs = rangeDeleteDirs(manTo, fromSnapshot, toSnapshot)),
       streaming)
   }
 
@@ -1970,15 +1790,10 @@ object SnapshotManifestFormat extends TableFormat {
     // to an intermediate delta snapshot into an integrity error. Drop only
     // dirs no on-disk manifest references (normally none until the history
     // is expired; expireSnapshots GCs the rest — the Iceberg split between
-    // rewrite_data_files and expire_snapshots). A legacy manifest without a
-    // tracked list implicitly references every snap-K dir ≤ its id, so its
-    // presence blocks this GC entirely.
-    val allMans = allManifests(outDir)
-    if (allMans.forall(_.hasDeleteDirsList)) {
-      val stillReferenced = allMans.flatMap(_.deleteDirs).toSet
-      delDirs.filterNot(d => stillReferenced.contains(d.getFileName.toString))
-        .foreach(deleteRecursively)
-    }
+    // rewrite_data_files and expire_snapshots).
+    val stillReferenced = allManifests(outDir).flatMap(_.deleteDirs).toSet
+    delDirs.filterNot(d => stillReferenced.contains(d.getFileName.toString))
+      .foreach(deleteRecursively)
     affected
   }
 
@@ -2009,7 +1824,6 @@ object SnapshotManifestFormat extends TableFormat {
                        minRows: Long = 1000L): Set[Int] = {
     import org.apache.spark.sql.functions.col
     val man = readManifest(outDir).getOrElse(return Set.empty)
-    if (!man.hasFilesList) return Set.empty // legacy: no per-file stats to pack by
     val byBucket = man.files.filter(_.rowCount < minRows)
       .groupBy(_.bucket).filter(_._2.size >= 2)
     if (byBucket.isEmpty) return Set.empty
@@ -2042,12 +1856,7 @@ object SnapshotManifestFormat extends TableFormat {
     require(retainLast >= 1, "must retain at least the latest snapshot")
     val latest = latestSnapshot(outDir).getOrElse(return (0, 0))
     val snapDir = Paths.get(outDir, "snapshots")
-    val existing = listDir(snapDir).flatMap { p =>
-      val n = p.getFileName.toString
-      if (n.matches("snap-\\d+\\.json")) // snap-branch-<name>.json is a staged branch, not history
-        Some(n.stripPrefix("snap-").stripSuffix(".json").toInt)
-      else None
-    }.sorted
+    val existing = snapshotIds(outDir)
     // tagged snapshots (ref.<name> props) are pinned: a tag names a table
     // version someone depends on (e.g. the version a model trained on), so
     // retention never expires it — Iceberg's tag/retention semantics
@@ -2060,10 +1869,6 @@ object SnapshotManifestFormat extends TableFormat {
     // never GC the files the audit (or the eventual publish) will serve
     val retainedMans = retained.flatMap(k => readManifestAt(outDir, k)) ++
       pendingBranchManifests(outDir).values
-    // legacy manifests carry no file list — references can't be proven, so
-    // refuse to GC rather than delete live data
-    require(retainedMans.forall(_.hasFilesList),
-      "cannot expire: a retained manifest has no file list (legacy format)")
     val referenced: Set[String] = retainedMans.flatMap(_.files.map(_.path)).toSet
     val referencedFps: Set[String] = retainedMans.flatMap(_.convFpsDir).toSet
 
@@ -2121,15 +1926,17 @@ object SnapshotManifestFormat extends TableFormat {
   }
 
   /** Every manifest currently on disk (retained history), snapshot order. */
-  private[spark] def allManifests(outDir: String): Vector[Manifest] = {
+  private[spark] def allManifests(outDir: String): Vector[Manifest] =
+    snapshotIds(outDir).flatMap(readManifestAt(outDir, _))
+
+  /** Ids of the snapshot manifests on disk, ascending (snap-branch-<name>
+    * files are staged branches, not history). */
+  private[spark] def snapshotIds(outDir: String): Vector[Int] = {
     val snapDir = Paths.get(outDir, "snapshots")
-    if (!Files.isDirectory(snapDir)) return Vector.empty
-    listDir(snapDir).flatMap { p =>
-      val n = p.getFileName.toString
-      if (n.matches("snap-\\d+\\.json"))
-        readManifestAt(outDir, n.stripPrefix("snap-").stripSuffix(".json").toInt)
-      else None
-    }.sortBy(_.snapshotId)
+    if (!Files.isDirectory(snapDir)) Vector.empty
+    else listDir(snapDir).map(_.getFileName.toString).collect {
+      case n if n.matches("snap-\\d+\\.json") => n.stripPrefix("snap-").stripSuffix(".json").toInt
+    }.sorted
   }
 
   /** Newest modification time anywhere in a file tree — a staging dir or
@@ -2179,12 +1986,10 @@ object SnapshotManifestFormat extends TableFormat {
     }
 
     // data files no manifest references (promoted by a commit whose manifest
-    // write never landed, or left behind by a non-additive replay). A legacy
-    // manifest without a file list implicitly references everything in its
-    // buckets — references can't be proven, so the data sweep is skipped.
+    // write never landed, or left behind by a non-additive replay)
     var dataFiles = 0
     val dataDir = Paths.get(outDir, "data")
-    if (mans.forall(_.hasFilesList) && Files.isDirectory(dataDir)) {
+    if (Files.isDirectory(dataDir)) {
       val referenced: Set[String] = mans.flatMap(_.files.map(_.path)).toSet
       listDir(dataDir).filter(_.getFileName.toString.startsWith("bucket=")).foreach { bd =>
         val bucketName = bd.getFileName.toString
@@ -2192,10 +1997,9 @@ object SnapshotManifestFormat extends TableFormat {
           // only files shaped like manifest-referencable data files: hidden
           // bookkeeping (.crc sidecars, _SUCCESS) belongs to live parquet
           // and is never manifest-listed — not orphaned data
-          val n = f.getFileName.toString
-          val dataShaped = n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
           val rel = s"$bucketName/${f.getFileName}"
-          if (dataShaped && !referenced.contains(rel) && !Files.isDirectory(f) && oldEnough(f)) {
+          if (isDataFile(f.getFileName.toString) && !referenced.contains(rel) &&
+              !Files.isDirectory(f) && oldEnough(f)) {
             if (Files.deleteIfExists(f)) dataFiles += 1
           }
         }
@@ -2203,13 +2007,10 @@ object SnapshotManifestFormat extends TableFormat {
     }
 
     // delete dirs no manifest tracks — exactly the shape a run that lost its
-    // optimistic commit race leaves behind, and the one a later snapshot-id
-    // reuse could wrongly activate on a legacy read. A manifest without a
-    // tracked delete list implicitly references every snap-K dir ≤ its id,
-    // so its presence blocks this sweep.
+    // optimistic commit race leaves behind
     var deleteDirs = 0
     val delRoot = Paths.get(outDir, "deletes")
-    if (mans.forall(_.hasDeleteDirsList) && Files.isDirectory(delRoot)) {
+    if (Files.isDirectory(delRoot)) {
       val tracked: Set[String] = mans.flatMap(_.deleteDirs).toSet
       listDir(delRoot).filter { d =>
         !tracked.contains(d.getFileName.toString) && oldEnough(d)

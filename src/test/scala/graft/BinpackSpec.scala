@@ -59,7 +59,7 @@ class BinpackSpec extends AnyFunSuite with BeforeAndAfterAll {
     val bigBefore = manBefore.files.filterNot(_.rowCount < minRows).map(_.path).toSet
     assert(smallBefore.size >= 2, s"setup needs small-file debt, got ${manBefore.files}")
 
-    val affected = ExtractionJob.binpack(spark, out, minRows)
+    val affected = SnapshotManifestFormat.binpackDataFiles(spark, out, minRows)
     assert(affected.nonEmpty, "binpack must report the coalesced buckets")
     val manAfter = ExtractionJob.readManifest(out).get
 
@@ -80,38 +80,37 @@ class BinpackSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(manAfter.files.size < manBefore.files.size, "file count must shrink")
     // deletes carried forward for the unrewritten files
     assert(manAfter.deleteDirs == manBefore.deleteDirs)
-    assert(manAfter.operation.contains("rewrite"),
+    assert(manAfter.operation == "rewrite",
       "binpack is a rewrite: CDC readers must refuse across it")
 
     // retained history still time travels (old small files stay on disk
     // until expiry), and the pre-binpack snapshot serves the same rows
-    assert(rows(ExtractionJob.readCommittedAsOf(spark, out, sBefore)) == before)
+    assert(rows(SnapshotManifestFormat.readCommittedAsOf(spark, out, sBefore)) == before)
 
     // keyed read still prunes + serves correctly after the rewrite
     val v = victims.head
-    val keyed = ExtractionJob.readCommittedForConvs(spark, out, Seq(v))
+    val keyed = SnapshotManifestFormat.readCommittedForConvs(spark, out, Seq(v))
     assert(rows(keyed) == before.filter(_._1 == v))
 
     // idempotent: nothing left to pack
-    assert(ExtractionJob.binpack(spark, out, minRows).isEmpty)
+    assert(SnapshotManifestFormat.binpackDataFiles(spark, out, minRows).isEmpty)
 
     // a later correction + compact still works on the packed table
     val v2 = victims.last
     cur = cur.map(t => if (t.conv_id == v2) t.copy(text = t.text + "\nPost-pack fix") else t)
     assert(ExtractionJob.run(spark, cur.toDS(), cfg).nonEmpty)
-    assert(ExtractionJob.compact(spark, out).nonEmpty)
+    assert(SnapshotManifestFormat.compact(spark, out).nonEmpty)
     assert(rows(ExtractionJob.readCommitted(spark, out)) ==
       rows(ExtractionJob.extract(spark, cur.toDS()).toDF()))
   }
 
-  test("binpack is a no-op on a healthy table and on legacy manifests") {
+  test("binpack is a no-op on a healthy table") {
     val ss = spark
     import ss.implicits._
     val out = Files.createTempDirectory("graft-binpack-noop").toString
     val cfg = ExtractionJob.Config(out, buckets = 2, waves = 1, convGrained = true)
     assert(ExtractionJob.run(spark, Transcripts.generate(spark, 8), cfg).nonEmpty)
     // threshold below every file's row count -> no debt
-    assert(ExtractionJob.binpack(spark, out, minRows = 1L).isEmpty)
-    assert(SnapshotManifestFormat.binpackDataFiles(spark, out, 1L).isEmpty)
+    assert(SnapshotManifestFormat.binpackDataFiles(spark, out, minRows = 1L).isEmpty)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
-import graft.spark.{ExtractionJob, Transcripts}
+import graft.spark.{ExtractionJob, SnapshotManifestFormat, Transcripts}
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
@@ -68,7 +68,7 @@ class BloomSkipSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // behavioral: the keyed read still serves exactly the right rows
     val v = turns.select("conv_id").as[String].head()
-    val keyed = ExtractionJob.readCommittedForConvs(spark, out, Seq(v))
+    val keyed = SnapshotManifestFormat.readCommittedForConvs(spark, out, Seq(v))
       .select("conv_id").distinct().as[String].collect().toSet
     assert(keyed == Set(v))
   }

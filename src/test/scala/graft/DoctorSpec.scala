@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
-import graft.spark.{ExtractionJob, TableDoctor, Transcripts}
+import graft.spark.{ExtractionJob, SnapshotManifestFormat, TableDoctor, Transcripts}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** `--doctor` table integrity report: detects every corruption shape a
@@ -49,10 +49,10 @@ class DoctorSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 10)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val head = ExtractionJob.latestSnapshot(out).get
+    val head = SnapshotManifestFormat.latestSnapshot(out).get
 
     // healthy: no errors, footer counts verified for every head file
-    val healthy = ExtractionJob.doctor(out)
+    val healthy = TableDoctor.diagnose(out)
     assert(healthy.ok, healthy.render)
     assert(healthy.head.contains(head))
     assert(healthy.info("footer_checked") == healthy.info("head_files"))
@@ -60,7 +60,7 @@ class DoctorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(healthy.render.startsWith("""{"ok":true"""))
 
     // footer cap is honored AND reported, never silent
-    val capped = ExtractionJob.doctor(out, maxFooterChecks = 1)
+    val capped = TableDoctor.diagnose(out, maxFooterChecks = 1)
     assert(capped.ok && capped.info("footer_checked") == 1L)
     assert(capped.warnings.exists(_.check == "footer-cap"))
 
@@ -73,7 +73,7 @@ class DoctorSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(Paths.get(out, "snapshots", "publish-intent-gone.json"),
       """{"snapshot_id":1,"cherry_pick":true,"delete_dirs":[],"files":[]}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val warned = ExtractionJob.doctor(out)
+    val warned = TableDoctor.diagnose(out)
     assert(warned.ok, warned.render)
     assert(warned.info("orphan_data_files") == 1L)
     assert(warned.info("branch_remnants") == 1L)
@@ -85,9 +85,9 @@ class DoctorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val v = convs.head
     val edit = turns.map(t => if (t.conv_id == v) t.copy(text = t.text + "\nWard: 3") else t)
     assert(ExtractionJob.run(spark, edit, cfg.copy(toBranch = Some("pend"))).nonEmpty)
-    assert(ExtractionJob.doctor(out).info("pending_branches") == 1L)
-    ExtractionJob.abandonBranch(out, "pend")
-    ExtractionJob.abandonBranch(out, "ghost")
+    assert(TableDoctor.diagnose(out).info("pending_branches") == 1L)
+    SnapshotManifestFormat.abandonBranch(out, "pend")
+    SnapshotManifestFormat.abandonBranch(out, "ghost")
 
     // row-count drift: a head-listed file replaced by a valid parquet
     // with a different row count (silent data corruption a plain
@@ -100,7 +100,7 @@ class DoctorSpec extends AnyFunSuite with BeforeAndAfterAll {
       val saved = Files.readAllBytes(victim)
       Files.copy(donor, victim, StandardCopyOption.REPLACE_EXISTING)
       dropCrc(victim)
-      val drift = ExtractionJob.doctor(out)
+      val drift = TableDoctor.diagnose(out)
       assert(!drift.ok && drift.errors.exists(_.check == "row-count"), drift.render)
       Files.write(victim, saved)
       dropCrc(victim)
@@ -110,7 +110,7 @@ class DoctorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val victim2 = Paths.get(out, "data", man.files.head.path)
     val saved2 = Files.readAllBytes(victim2)
     Files.delete(victim2)
-    val broken = ExtractionJob.doctor(out)
+    val broken = TableDoctor.diagnose(out)
     assert(!broken.ok && broken.errors.exists(_.check == "head-data-file"), broken.render)
     Files.write(victim2, saved2)
     dropCrc(victim2)
@@ -118,35 +118,40 @@ class DoctorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a dangling head pointer is an error
     Files.write(Paths.get(out, "snapshots", "_latest"),
       "999".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val dangling = ExtractionJob.doctor(out)
+    val dangling = TableDoctor.diagnose(out)
     assert(!dangling.ok && dangling.errors.exists(_.check == "head-pointer"), dangling.render)
 
     // GARBAGE metadata must become error findings, never crash the
     // doctor — it exists to report exactly these tables
     Files.write(Paths.get(out, "snapshots", "_latest"),
       "not-a-number".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val garbage = ExtractionJob.doctor(out)
+    val garbage = TableDoctor.diagnose(out)
     assert(!garbage.ok && garbage.errors.exists(f =>
       f.check == "head-pointer" && f.detail.contains("parse")), garbage.render)
     Files.write(Paths.get(out, "snapshots", "_latest"),
       head.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     Files.write(Paths.get(out, "snapshots", "branch-bad"),
       "garbage ref".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val badRef = ExtractionJob.doctor(out)
+    val badRef = TableDoctor.diagnose(out)
     assert(!badRef.ok && badRef.errors.exists(_.check == "branch-ref"), badRef.render)
     Files.delete(Paths.get(out, "snapshots", "branch-bad"))
 
-    // a legacy-layout staged branch (bare ref + snap-<id>.json) counts
-    // as pending and gets the intactness check like the new layout
-    val headManifest = Paths.get(out, "snapshots", s"snap-$head.json")
-    Files.copy(headManifest, Paths.get(out, "snapshots", s"snap-${head + 1}.json"))
-    Files.write(Paths.get(out, "snapshots", "branch-leg"),
-      s"${head + 1}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val legacy = ExtractionJob.doctor(out)
-    assert(legacy.info("pending_branches") == 1L, legacy.render)
-    Files.delete(Paths.get(out, "snapshots", s"snap-${head + 1}.json"))
-    Files.delete(Paths.get(out, "snapshots", "branch-leg"))
-    assert(ExtractionJob.doctor(out).ok)
+    assert(TableDoctor.diagnose(out).ok)
+  }
+
+  test("a manifest in an older layout is an error finding, never a throw") {
+    val out = Files.createTempDirectory("graft-doctor-old").toString
+    ExtractionJob.run(spark, Transcripts.generate(spark, 6),
+      ExtractionJob.Config(out, buckets = 2, waves = 1))
+    val head = SnapshotManifestFormat.latestSnapshot(out).get
+    // the pre-file-list layout: no files, delete_dirs, operation or schema
+    Files.write(Paths.get(out, "snapshots", s"snap-$head.json"),
+      s"""{"snapshot_id":$head,"committed_buckets":[0,1],"committed_at":"x"}""".getBytes)
+    val rep = TableDoctor.diagnose(out)
+    assert(!rep.ok && rep.errors.exists(f => f.check == "manifest-format" &&
+      f.detail.contains(s"snap-$head.json") && f.detail.contains("not migrated")), rep.render)
+    // the head pointer still names an existing file: not reported as missing
+    assert(!rep.errors.exists(_.check == "head-pointer"), rep.render)
   }
 
   test("doctor runs from the CLI as a metadata mode") {

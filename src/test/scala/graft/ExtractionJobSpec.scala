@@ -169,7 +169,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         ExtractionJob.Config(partial, buckets = 8, waves = 4, failAfterWave = 1))
     }
     assert(killed.getMessage.contains("simulated kill"))
-    val committedAfterKill = ExtractionJob.committedBuckets(partial)
+    val committedAfterKill = SnapshotManifestFormat.committedBuckets(partial)
     assert(committedAfterKill.size == 4, s"2 waves of 2 buckets committed, got $committedAfterKill")
 
     // record committed files before resume — they must not be rewritten
@@ -209,7 +209,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[RuntimeException] {
       ExtractionJob.run(spark, turns, ExtractionJob.Config(out, buckets = 8, waves = 4, failAfterWave = 0))
     }
-    val committed = ExtractionJob.committedBuckets(out)
+    val committed = SnapshotManifestFormat.committedBuckets(out)
     assert(committed.size == 2)
     // simulate a kill mid-wave-1: a bucket dir promoted into data/ but the
     // snapshot never committed, plus a stale staging dir
@@ -265,7 +265,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // committed, and a resume run must recompute exactly that bucket
     val victim = man.files.head
     Files.delete(Paths.get(out, "data", victim.path))
-    assert(!ExtractionJob.committedBuckets(out).contains(victim.bucket))
+    assert(!SnapshotManifestFormat.committedBuckets(out).contains(victim.bucket))
     val recomputed = ExtractionJob.run(spark, turns, ExtractionJob.Config(out, buckets = 4, waves = 2))
     assert(recomputed == Set(victim.bucket), s"resume must recompute only bucket ${victim.bucket}")
 
@@ -273,7 +273,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val man2 = ExtractionJob.readManifest(out).get
     man2.files.foreach(f => assert(Files.exists(Paths.get(out, "data", f.path)), f.path))
     assert(ExtractionJob.readCommitted(spark, out).count() == turns.count())
-    assert(ExtractionJob.committedBuckets(out) == Set(0, 1, 2, 3))
+    assert(SnapshotManifestFormat.committedBuckets(out) == Set(0, 1, 2, 3))
   }
 
   test("change-detection resume recomputes exactly the buckets whose input changed") {
@@ -317,10 +317,10 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val turns = Transcripts.generate(spark, 25)
     val cfg = ExtractionJob.Config(out, buckets = 4, waves = 2, convGrained = true)
     assert(ExtractionJob.run(spark, turns, cfg) == Set(0, 1, 2, 3))
-    val snapAfterFull = ExtractionJob.latestSnapshot(out).get
+    val snapAfterFull = SnapshotManifestFormat.latestSnapshot(out).get
     // unchanged input -> nothing recomputes, no new snapshot
     assert(ExtractionJob.run(spark, turns, cfg) == Set.empty)
-    assert(ExtractionJob.latestSnapshot(out).get == snapAfterFull)
+    assert(SnapshotManifestFormat.latestSnapshot(out).get == snapAfterFull)
 
     val filesBefore = ExtractionJob.readManifest(out).get.files
 
@@ -375,7 +375,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // time travel: as-of the pre-correction snapshot the ORIGINAL victim
     // content is served (additive delta commits preserve older files)
-    val asOf = ExtractionJob.readCommittedAsOf(spark, out, snapAfterFull)
+    val asOf = SnapshotManifestFormat.readCommittedAsOf(spark, out, snapAfterFull)
     assert(asOf.count() == turns.count())
     val asOfVictim = asOf.where(col("conv_id") === victim)
       .select("conv_id", "turn_idx", "fields_json")
@@ -390,7 +390,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val servedBefore = served
       .select("conv_id", "turn_idx", "fields_json")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
-    val compacted = ExtractionJob.compact(spark, out)
+    val compacted = SnapshotManifestFormat.compact(spark, out)
     assert(compacted == victimBucket, s"compacted $compacted")
     val manCompacted = ExtractionJob.readManifest(out).get
     // the new manifest references no deletes; the applied delete dir stays
@@ -404,7 +404,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // snapshot is genuinely gone — reported as history loss, NOT as a
     // corruption/integrity error
     val historyGone = intercept[IllegalStateException] {
-      ExtractionJob.readCommittedAsOf(spark, out, manAfter.snapshotId)
+      SnapshotManifestFormat.readCommittedAsOf(spark, out, manAfter.snapshotId)
     }
     assert(historyGone.getMessage.contains("rewritten or expired"), historyGone.getMessage)
     val rewritten = manCompacted.files.filter(_.bucket == victimBucket.head)
@@ -415,7 +415,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
     assert(servedAfter == servedBefore, "compaction must not change the table")
     // compaction is idempotent and preserves the resume no-op
-    assert(ExtractionJob.compact(spark, out) == Set.empty)
+    assert(SnapshotManifestFormat.compact(spark, out) == Set.empty)
     assert(ExtractionJob.run(spark, changed, cfg) == Set.empty)
   }
 
@@ -439,7 +439,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(served.count() == without.count())
     // rerun no-op; compaction rewrites the bucket and drops the delete file
     assert(ExtractionJob.run(spark, without, cfg) == Set.empty)
-    assert(ExtractionJob.compact(spark, out) == victimBucket)
+    assert(SnapshotManifestFormat.compact(spark, out) == victimBucket)
     val after = ExtractionJob.readCommitted(spark, out)
     assert(after.count() == without.count())
     assert(after.where(col("conv_id") === victim).count() == 0)
@@ -469,7 +469,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getInt(0), r.getString(1))).toSet
     assert(got == want, "latest correction must win")
     // compaction folds BOTH delta rounds + both delete files away
-    assert(ExtractionJob.compact(spark, out).nonEmpty)
+    assert(SnapshotManifestFormat.compact(spark, out).nonEmpty)
     assert(ExtractionJob.readCommitted(spark, out).count() == v2.count())
     assert(ExtractionJob.run(spark, v2, cfg) == Set.empty)
   }
@@ -522,24 +522,24 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val changed = turns.map(t =>
       if (t.conv_id == victim) t.copy(text = t.text + "\nfix") else t)
     assert(ExtractionJob.run(spark, changed, cfg).nonEmpty) // delta snapshot
-    assert(ExtractionJob.compact(spark, out).nonEmpty)      // rewrite snapshot
-    val latest = ExtractionJob.latestSnapshot(out).get
+    assert(SnapshotManifestFormat.compact(spark, out).nonEmpty)      // rewrite snapshot
+    val latest = SnapshotManifestFormat.latestSnapshot(out).get
     val preCount = ExtractionJob.readCommitted(spark, out).count()
 
-    val (expired, deleted) = ExtractionJob.expireSnapshots(out, retainLast = 1)
+    val (expired, deleted) = SnapshotManifestFormat.expireSnapshots(out, retainLast = 1)
     assert(expired > 0, "older manifests must expire")
     assert(deleted > 0, "pre-compaction files must be garbage-collected")
     // latest snapshot fully intact
-    assert(ExtractionJob.latestSnapshot(out).contains(latest))
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(latest))
     assert(ExtractionJob.readCommitted(spark, out).count() == preCount)
     val man = ExtractionJob.readManifest(out).get
     man.files.foreach(f => assert(Files.exists(Paths.get(out, "data", f.path))))
     // expired snapshots are gone for time travel
     intercept[IllegalStateException] {
-      ExtractionJob.readCommittedAsOf(spark, out, latest - 1)
+      SnapshotManifestFormat.readCommittedAsOf(spark, out, latest - 1)
     }
     // expiry is idempotent; resume is still a no-op
-    assert(ExtractionJob.expireSnapshots(out, retainLast = 1) == ((0, 0)))
+    assert(SnapshotManifestFormat.expireSnapshots(out, retainLast = 1) == ((0, 0)))
     assert(ExtractionJob.run(spark, changed, cfg) == Set.empty)
   }
 
@@ -554,7 +554,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[RuntimeException] {
       ExtractionJob.run(spark, turns, cfg.copy(failAfterWave = 0))
     }
-    val latest = ExtractionJob.latestSnapshot(out).get
+    val latest = SnapshotManifestFormat.latestSnapshot(out).get
     val victim = turns.select("conv_id").as[String].head()
     // a killed conv-grained delta left an ORPHAN delete dir at the id the
     // next commit will reuse, listing a live conversation
@@ -565,7 +565,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(s"$out/deletes/snap-${latest + 1}")
     // resume commits snapshot latest+1 (an unrelated full wave)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    assert(ExtractionJob.latestSnapshot(out).get >= latest + 1)
+    assert(SnapshotManifestFormat.latestSnapshot(out).get >= latest + 1)
     // the orphan is NOT referenced by any manifest, so the victim stays served
     val served = ExtractionJob.readCommitted(spark, out)
     assert(served.where(col("conv_id") === victim).count() ==
@@ -601,12 +601,12 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the conv-grained rerun re-baselines ONLY the recomputed bucket —
     // and since no conversation actually changed, it commits refreshed
     // fingerprints without writing deletes or re-extracting anything
-    val snapBefore = ExtractionJob.latestSnapshot(out).get
+    val snapBefore = SnapshotManifestFormat.latestSnapshot(out).get
     assert(ExtractionJob.run(spark, turns, convCfg) == Set(lost))
     val manRebased = ExtractionJob.readManifest(out).get
     assert(manRebased.deleteDirs.isEmpty, "re-baseline must not write deletes")
     assert(manRebased.files.toSet == manAfter.files.toSet, "re-baseline must not write data")
-    assert(ExtractionJob.latestSnapshot(out).get == snapBefore + 1)
+    assert(SnapshotManifestFormat.latestSnapshot(out).get == snapBefore + 1)
     // and from here on, unchanged input is a true no-op
     assert(ExtractionJob.run(spark, turns, convCfg) == Set.empty,
       "mode mixing must not force a mass re-extraction")
@@ -614,27 +614,31 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ExtractionJob.readCommitted(spark, out).count() == turns.count())
   }
 
-  test("legacy manifest (no files list) verifies bucket dirs, not vacuous-forall") {
+  test("a manifest in an older layout gets one clear refusal from every reader") {
     import java.nio.file.Paths
-    val out = Files.createTempDirectory("graft-legacy").toString
+    val out = Files.createTempDirectory("graft-old-layout").toString
     val turns = Transcripts.generate(spark, 25)
-    ExtractionJob.run(spark, turns, ExtractionJob.Config(out, buckets = 4, waves = 2))
+    val cfg = ExtractionJob.Config(out, buckets = 4, waves = 2)
+    ExtractionJob.run(spark, turns, cfg)
 
-    // rewrite the manifest in the legacy pre-file-granularity format
-    val k = ExtractionJob.latestSnapshot(out).get
-    val legacy = s"""{"snapshot_id":$k,"committed_buckets":[0,1,2,3],"committed_at":"x"}"""
-    Files.write(Paths.get(out, "snapshots", s"snap-$k.json"), legacy.getBytes)
+    // rewrite the head manifest in the pre-file-list layout, and stage a
+    // branch in the same layout
+    val k = SnapshotManifestFormat.latestSnapshot(out).get
+    def old(id: Int) = s"""{"snapshot_id":$id,"committed_buckets":[0,1,2,3],"committed_at":"x"}"""
+    Files.write(Paths.get(out, "snapshots", s"snap-$k.json"), old(k).getBytes)
+    Files.write(Paths.get(out, "snapshots", "branch-old"), s"${k + 1} 0123abcd".getBytes)
+    Files.write(Paths.get(out, "snapshots", "snap-branch-old.json"), old(k + 1).getBytes)
 
-    // all bucket dirs present -> all committed (legacy fallback)
-    assert(ExtractionJob.committedBuckets(out) == Set(0, 1, 2, 3))
-    // delete a whole bucket dir: with no file list, the old vacuous
-    // forall-over-empty would still have claimed it committed
-    val victimDir = Paths.get(out, "data", "bucket=2")
-    Files.walk(victimDir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.delete(p))
-    assert(ExtractionJob.committedBuckets(out) == Set(0, 1, 3))
-    val recomputed = ExtractionJob.run(spark, turns, ExtractionJob.Config(out, buckets = 4, waves = 2))
-    assert(recomputed == Set(2), "legacy resume must recompute exactly the lost bucket")
+    def refused(file: String)(read: => Any): Unit = {
+      val e = intercept[IllegalStateException](read)
+      assert(e.getMessage.contains(file) &&
+        e.getMessage.contains("lacks required key(s) operation, schema, delete_dirs, files") &&
+        e.getMessage.contains("older layouts are not migrated"), e.getMessage)
+    }
+    refused(s"snap-$k.json")(ExtractionJob.run(spark, turns, cfg))
+    refused(s"snap-$k.json")(ExtractionJob.readCommitted(spark, out))
+    refused(s"snap-$k.json")(SnapshotManifestFormat.committedBuckets(out))
+    refused("snap-branch-old.json")(SnapshotManifestFormat.publishBranch(spark, out, "old"))
   }
 
   test("optimistic commit: of two writers computed from one table state, the loser throws and the table is unchanged") {
@@ -665,7 +669,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // the loser changed nothing: winner's manifest byte-identical, _latest
     // unmoved, loser's staged file still in staging, NOT promoted into data/
-    assert(ExtractionJob.latestSnapshot(out).contains(next))
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(next))
     assert(new String(Files.readAllBytes(
       Paths.get(out, "snapshots", s"snap-$next.json"))) == winner)
     assert(Files.exists(stagingB.resolve("part-loser.parquet")))
@@ -690,19 +694,19 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cfg = ExtractionJob.Config(out, buckets = 4, waves = 2, convGrained = true,
       autoCompactDeletes = 0)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
 
     val ids = turns.select("conv_id").as[String].distinct().collect().sorted
     val convA = ids.head
     val convB = ids.last
     val v1 = turns.map(t => if (t.conv_id == convA) t.copy(text = t.text + "\ncdc fix 1") else t)
     assert(ExtractionJob.run(spark, v1, cfg).nonEmpty)
-    val s1 = ExtractionJob.latestSnapshot(out).get
+    val s1 = SnapshotManifestFormat.latestSnapshot(out).get
     // second change of A AND removal of B in one upstream revision
     val v2 = v1.map(t => if (t.conv_id == convA) t.copy(text = t.text + "\ncdc fix 2") else t)
       .where(col("conv_id") =!= convB).as[graft.spark.Turn]
     assert(ExtractionJob.run(spark, v2, cfg).nonEmpty)
-    val s2 = ExtractionJob.latestSnapshot(out).get
+    val s2 = SnapshotManifestFormat.latestSnapshot(out).get
 
     def rows(df: org.apache.spark.sql.DataFrame): Set[(String, Int, String)] =
       df.select("conv_id", "turn_idx", "fields_json")
@@ -712,42 +716,42 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         src.where(col("conv_id") === conv).as[graft.spark.Turn]).toDF())
 
     // (s0, s1]: exactly A's first-correction post-image
-    assert(rows(ExtractionJob.readAppendsBetween(spark, out, s0, s1)) == extracted(v1, convA))
+    assert(rows(SnapshotManifestFormat.readAppendsBetween(spark, out, s0, s1)) == extracted(v1, convA))
     // (s0, s2] spans BOTH corrections: only the latest post-image surfaces
     // (the range's own max-seq deletes supersede its earlier delta)
-    assert(rows(ExtractionJob.readAppendsBetween(spark, out, s0, s2)) == extracted(v2, convA))
+    assert(rows(SnapshotManifestFormat.readAppendsBetween(spark, out, s0, s2)) == extracted(v2, convA))
     // (s1, s2]: the second correction only
-    assert(rows(ExtractionJob.readAppendsBetween(spark, out, s1, s2)) == extracted(v2, convA))
+    assert(rows(SnapshotManifestFormat.readAppendsBetween(spark, out, s1, s2)) == extracted(v2, convA))
 
     // changed keys over (s0, s2]: A (re-extracted) and B (removed)
-    val keys = ExtractionJob.readDeleteKeysBetween(spark, out, s0, s2)
+    val keys = SnapshotManifestFormat.readDeleteKeysBetween(spark, out, s0, s2)
       .select("conv_id").as[String].collect().toSet
     assert(keys == Set(convA, convB), s"changed keys $keys")
 
     // THE CDC invariant: base snapshot minus changed keys plus appends ==
     // the live table, byte-for-byte
-    val base = rows(ExtractionJob.readCommittedAsOf(spark, out, s0))
+    val base = rows(SnapshotManifestFormat.readCommittedAsOf(spark, out, s0))
     val replayed = base.filterNot { case (c, _, _) => keys.contains(c) } ++
-      rows(ExtractionJob.readAppendsBetween(spark, out, s0, s2))
+      rows(SnapshotManifestFormat.readAppendsBetween(spark, out, s0, s2))
     assert(replayed == rows(ExtractionJob.readCommitted(spark, out)),
       "CDC replay must reconstruct the live table exactly")
 
     // a compaction is a replacing commit: incremental reads across it refuse
-    assert(ExtractionJob.compact(spark, out).nonEmpty)
-    val s3 = ExtractionJob.latestSnapshot(out).get
+    assert(SnapshotManifestFormat.compact(spark, out).nonEmpty)
+    val s3 = SnapshotManifestFormat.latestSnapshot(out).get
     val replaced = intercept[IllegalStateException] {
-      ExtractionJob.readAppendsBetween(spark, out, s0, s3)
+      SnapshotManifestFormat.readAppendsBetween(spark, out, s0, s3)
     }
     assert(replaced.getMessage.contains("replacing commit"), replaced.getMessage)
     // expired history is reported distinctly
-    ExtractionJob.expireSnapshots(out, retainLast = 1)
+    SnapshotManifestFormat.expireSnapshots(out, retainLast = 1)
     val expired = intercept[IllegalStateException] {
-      ExtractionJob.readAppendsBetween(spark, out, s0, s1)
+      SnapshotManifestFormat.readAppendsBetween(spark, out, s0, s1)
     }
     assert(expired.getMessage.contains("expired"), expired.getMessage)
     // inverted/empty ranges are caller errors
     intercept[IllegalArgumentException] {
-      ExtractionJob.readAppendsBetween(spark, out, s2, s2)
+      SnapshotManifestFormat.readAppendsBetween(spark, out, s2, s2)
     }
   }
 
@@ -788,7 +792,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pruned.size < man.files.size, "pruning must actually skip files")
 
     // the pruned keyed read serves exactly the full-read-filtered content
-    val got = ExtractionJob.readCommittedForConvs(spark, out, convs)
+    val got = SnapshotManifestFormat.readCommittedForConvs(spark, out, convs)
       .select("conv_id", "turn_idx", "fields_json")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
     val want = ExtractionJob.readCommitted(spark, out)
@@ -800,7 +804,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.exists { case (c, _, j) => c == victim && j.nonEmpty })
 
     // an unknown conversation reads empty without error
-    assert(ExtractionJob.readCommittedForConvs(spark, out, Seq("no-such-conv")).count() == 0)
+    assert(SnapshotManifestFormat.readCommittedForConvs(spark, out, Seq("no-such-conv")).count() == 0)
   }
 
   test("commit retry: a run that loses a race re-plans against the winner's state and completes") {
@@ -870,7 +874,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       Vector.empty, man.inputFps, additive = true, convFpsDir = man.convFpsDir,
       deleteDirs = man.deleteDirs, fpMode = man.fpMode)
     // compact computed against the new state succeeds normally afterwards
-    assert(ExtractionJob.compact(spark, out).nonEmpty)
+    assert(SnapshotManifestFormat.compact(spark, out).nonEmpty)
     val served = ExtractionJob.readCommitted(spark, out)
       .where(col("conv_id") === victim).count()
     assert(served > 0)
@@ -918,12 +922,12 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // a conservative age threshold protects in-flight writers: nothing is
     // young enough to sweep
-    val none = ExtractionJob.removeOrphanFiles(out, olderThanMs = 3600L * 1000)
+    val none = SnapshotManifestFormat.removeOrphanFiles(out, olderThanMs = 3600L * 1000)
     assert(none.total == 0, s"young files must survive: $none")
     assert(Files.exists(orphanData) && Files.isDirectory(orphanDel))
 
     // at threshold 0 exactly the four planted orphans go
-    val swept = ExtractionJob.removeOrphanFiles(out, olderThanMs = 0)
+    val swept = SnapshotManifestFormat.removeOrphanFiles(out, olderThanMs = 0)
     assert(swept == graft.spark.OrphanSweep(1, 1, 1, 1), s"unexpected sweep: $swept")
     assert(!Files.exists(staging.getParent) && !Files.exists(orphanData) &&
       !Files.exists(orphanDel) && !Files.exists(orphanFp))
@@ -937,9 +941,9 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("conv_id", "turn_idx", "fields_json").collect().map(_.toSeq).sortBy(_.toString)
     assert(after.length == baseline.length &&
       after.zip(baseline).forall { case (x, y) => x == y })
-    ExtractionJob.readCommittedAsOf(spark, out, man.snapshotId - 1).count() // no integrity trip
+    SnapshotManifestFormat.readCommittedAsOf(spark, out, man.snapshotId - 1).count() // no integrity trip
     // idempotent: a second sweep finds nothing
-    assert(ExtractionJob.removeOrphanFiles(out, olderThanMs = 0).total == 0)
+    assert(SnapshotManifestFormat.removeOrphanFiles(out, olderThanMs = 0).total == 0)
   }
 
   test("committed data files are in (conv_id, turn_idx) order after run, binpack, compact and rebucket") {
@@ -959,10 +963,10 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(ExtractionJob.run(spark, cur.toDS(), cfg).nonEmpty)
     }
     assertFilesSorted(out, "delta runs")
-    assert(ExtractionJob.binpack(spark, out, minRows = Long.MaxValue).nonEmpty)
+    assert(SnapshotManifestFormat.binpackDataFiles(spark, out, minRows = Long.MaxValue).nonEmpty)
     assertFilesSorted(out, "binpack")
     assert(ExtractionJob.readManifest(out).get.deleteDirs.nonEmpty, "compact needs deletes")
-    assert(ExtractionJob.compact(spark, out).nonEmpty)
+    assert(SnapshotManifestFormat.compact(spark, out).nonEmpty)
     assertFilesSorted(out, "compact")
     ExtractionJob.rebucket(spark, out, 3)
     assertFilesSorted(out, "rebucket")
@@ -978,7 +982,7 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       ExtractionJob.run(spark, turns, cfg.copy(failAfterWave = 1))
     }
     assert(killed.getMessage.contains("simulated kill after wave 1"))
-    assert(ExtractionJob.latestSnapshot(out).contains(1), "waves 0 and 1 committed, in order")
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(1), "waves 0 and 1 committed, in order")
     assertQuiet(out)
     assert(ExtractionJob.run(spark, turns, cfg).size == 4)
     assert(tableRows(out) == tableRows(full), "resumed table must equal the uninterrupted one")
@@ -998,8 +1002,8 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         new RacingFormat(raceAt = 1))
     }
     // wave 0 at snapshot 0, the competing writer's commit at 1
-    assert(ExtractionJob.latestSnapshot(lost).contains(1))
-    assert(ExtractionJob.committedBuckets(lost).size == 2)
+    assert(SnapshotManifestFormat.latestSnapshot(lost).contains(1))
+    assert(SnapshotManifestFormat.committedBuckets(lost).size == 2)
     assertQuiet(lost)
     assert(ExtractionJob.run(spark, turns, cfg.copy(outDir = lost)).size == 6)
     assert(tableRows(lost) == want, "resumed table must equal the uninterrupted one")

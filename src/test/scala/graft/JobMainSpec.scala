@@ -28,7 +28,7 @@ class JobMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     val committed = graft.spark.ExtractionJob.readCommitted(spark, out)
     assert(committed.count() == turns.count())
     assert(committed.columns.contains("form_subtype"))
-    assert(graft.spark.ExtractionJob.committedBuckets(out) == Set(0, 1, 2, 3))
+    assert(graft.spark.SnapshotManifestFormat.committedBuckets(out) == Set(0, 1, 2, 3))
 
     // resume: everything committed -> nothing recomputed
     val s = spark
@@ -57,9 +57,9 @@ class JobMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     JobMain.main(Array(in2, out, "4", "2", "--conv-grained", "--compact", "--expire=1"))
     // only the latest snapshot remains; the table still serves the
     // corrected content and resume stays a no-op
-    val latest = graft.spark.ExtractionJob.latestSnapshot(out).get
+    val latest = graft.spark.SnapshotManifestFormat.latestSnapshot(out).get
     intercept[IllegalStateException] {
-      graft.spark.ExtractionJob.readCommittedAsOf(spark, out, latest - 1)
+      graft.spark.SnapshotManifestFormat.readCommittedAsOf(spark, out, latest - 1)
     }
     val served = graft.spark.ExtractionJob.readCommitted(spark, out)
     assert(served.count() == turns.count())
@@ -81,7 +81,7 @@ class JobMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(planned >= 1 && planned < total, s"expected a strict file subset: $line")
 
     // --appends-since: a caught-up poller reports zero changes without error
-    val latestSnap = graft.spark.ExtractionJob.latestSnapshot(out).get
+    val latestSnap = graft.spark.SnapshotManifestFormat.latestSnapshot(out).get
     val buf2 = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(buf2)) {
       JobMain.main(Array(in2, out, s"--appends-since=$latestSnap"))
@@ -135,7 +135,7 @@ class JobMainSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.parquet(in2)
 
     JobMain.main(Array(in1, out, "4", "2", "--conv-grained"))
-    val s0 = graft.spark.ExtractionJob.latestSnapshot(out).get
+    val s0 = graft.spark.SnapshotManifestFormat.latestSnapshot(out).get
 
     def cli(args: String*): String = {
       val buf = new java.io.ByteArrayOutputStream()
@@ -147,7 +147,7 @@ class JobMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     JobMain.main(Array(in2, out, "4", "2", "--conv-grained")) // move the table on
     assert(cli(in1, out, "--tags") == s"""{"tags":{"train-v1":$s0},"out":"$out"}""")
 
-    val s1 = graft.spark.ExtractionJob.latestSnapshot(out).get
+    val s1 = graft.spark.SnapshotManifestFormat.latestSnapshot(out).get
     val line = cli(in1, out, s"--rollback=$s0")
     assert(line.contains(s""""rollback_to":$s0""") && line.contains(s""""snapshot":${s1 + 1}"""), line)
     // rolled back: victim serves the ORIGINAL extraction again
@@ -267,7 +267,7 @@ class JobMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val files = cli(in, out, "--files")
     assert(files.contains("\"files\":[{") && files.contains("\"min_conv\":"), files)
-    val snap = graft.spark.ExtractionJob.latestSnapshot(out).get
+    val snap = graft.spark.SnapshotManifestFormat.latestSnapshot(out).get
     assert(cli(in, out, s"--files=$snap") == files, "explicit snapshot == current")
     val lineage = cli(in, out, "--lineage")
     assert(lineage.contains("\"lineage\":[{") && lineage.contains("\"extract_ms\":"), lineage)
@@ -307,7 +307,7 @@ class JobMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     val turns = graft.spark.Transcripts.generate(s, 16)
     turns.write.parquet(in1)
     JobMain.main(Array(in1, out, "4", "2", "--conv-grained"))
-    val s0 = graft.spark.ExtractionJob.latestSnapshot(out).get
+    val s0 = graft.spark.SnapshotManifestFormat.latestSnapshot(out).get
     val victim = turns.select("conv_id").as[String].head()
     turns.map(t => if (t.conv_id == victim) t.copy(text = t.text + "\nState: IL") else t)
       .write.parquet(in2)
@@ -318,7 +318,7 @@ class JobMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val staged = cli(in2, out, "4", "2", "--conv-grained", "--to-branch=audit")
     assert(staged.contains(""""staged_branch":"audit""""), staged)
-    assert(graft.spark.ExtractionJob.latestSnapshot(out).contains(s0),
+    assert(graft.spark.SnapshotManifestFormat.latestSnapshot(out).contains(s0),
       "the head must not move on a branch stage")
     assert(cli(in1, out, "--branches") ==
       s"""{"branches":{"audit":${s0 + 1}},"out":"$out"}""")
@@ -326,13 +326,13 @@ class JobMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(audit.contains(""""ok":true""") && audit.contains(""""duplicate_keys":0"""), audit)
     val pub = cli(in1, out, "--publish-branch=audit")
     assert(pub.contains(s""""snapshot":${s0 + 1}"""), pub)
-    assert(graft.spark.ExtractionJob.latestSnapshot(out).contains(s0 + 1))
+    assert(graft.spark.SnapshotManifestFormat.latestSnapshot(out).contains(s0 + 1))
     assert(graft.spark.ExtractionJob.readCommitted(s, out).count() == turns.count())
     // a no-op stage (input unchanged after publish) creates no ref and
     // says so — an unattended pipeline reads null and skips the audit
     val noop = cli(in2, out, "4", "2", "--conv-grained", "--to-branch=noop")
     assert(noop.contains(""""staged_branch":null"""), noop)
-    assert(graft.spark.ExtractionJob.branches(out).isEmpty)
+    assert(graft.spark.SnapshotManifestFormat.branches(out).isEmpty)
     // --to-branch refuses head-committing companions at parse time
     intercept[IllegalArgumentException] {
       JobMain.main(Array(in2, out, "4", "2", "--conv-grained",

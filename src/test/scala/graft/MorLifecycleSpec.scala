@@ -113,7 +113,7 @@ class MorLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     var history = Map.empty[Int, Snapshot]
 
     def record(): Unit =
-      ExtractionJob.latestSnapshot(out).foreach(k => history += k -> expectedOf(model))
+      SnapshotManifestFormat.latestSnapshot(out).foreach(k => history += k -> expectedOf(model))
 
     def checkServed(ctx: String): Unit = {
       val got = serve(out)
@@ -128,7 +128,7 @@ class MorLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
       val keys = history.keys.toVector.sorted
       val k = keys(rnd.nextInt(keys.size))
       try {
-        val got = ExtractionJob.readCommittedAsOf(spark, out, k)
+        val got = SnapshotManifestFormat.readCommittedAsOf(spark, out, k)
           .select("conv_id", "turn_idx", "fields_json")
           .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
         assert(got == history(k),
@@ -172,10 +172,10 @@ class MorLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
         ExtractionJob.run(spark, toDs(model), cfg)
         record(); checkServed(s"$ctx add")
       } else if (roll < 75) { // compaction (content-neutral)
-        ExtractionJob.compact(spark, out)
+        SnapshotManifestFormat.compact(spark, out)
         record(); checkServed(s"$ctx compact")
       } else if (roll < 84) { // snapshot expiry
-        ExtractionJob.expireSnapshots(out, retainLast = 1 + rnd.nextInt(2))
+        SnapshotManifestFormat.expireSnapshots(out, retainLast = 1 + rnd.nextInt(2))
         checkServed(s"$ctx expire")
       } else if (roll < 91) { // WAP: stage on a branch, audit, publish/abandon
         val victim = convIds(rnd.nextInt(convIds.size))
@@ -192,8 +192,8 @@ class MorLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
         // cherry-pick (a props commit touches no buckets, so it can
         // never conflict)
         checkServed(s"$ctx wap-staged")
-        ExtractionJob.tagSnapshot(out, s"pin$op",
-          ExtractionJob.latestSnapshot(out).get)
+        SnapshotManifestFormat.tagSnapshot(out, s"pin$op",
+          SnapshotManifestFormat.latestSnapshot(out).get)
         checkServed(s"$ctx wap-staged-tagged")
         val audit = ExtractionJob.auditBranch(spark, out, branch)
         assert(audit.ok, s"[seed=$seed $ctx] audit must be green, got $audit")
@@ -211,23 +211,23 @@ class MorLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
           if (rnd.nextInt(3) == 0) {
             SnapshotManifestFormat.testCrashAfterPublishCommit = true
             val crash = intercept[IllegalStateException] {
-              ExtractionJob.publishBranch(spark, out, branch)
+              SnapshotManifestFormat.publishBranch(spark, out, branch)
             }
             assert(crash.getMessage.contains("injected test crash"),
               s"[seed=$seed $ctx] ${crash.getMessage}")
-            val headAfter = ExtractionJob.latestSnapshot(out).get
-            val resumed = ExtractionJob.publishBranch(spark, out, branch)
+            val headAfter = SnapshotManifestFormat.latestSnapshot(out).get
+            val resumed = SnapshotManifestFormat.publishBranch(spark, out, branch)
             assert(resumed == headAfter,
               s"[seed=$seed $ctx] crash-resume must report the landed snapshot " +
                 s"$headAfter, got $resumed")
-            assert(ExtractionJob.latestSnapshot(out).contains(headAfter),
+            assert(SnapshotManifestFormat.latestSnapshot(out).contains(headAfter),
               s"[seed=$seed $ctx] resume must not commit a second snapshot")
           } else
-            ExtractionJob.publishBranch(spark, out, branch)
+            SnapshotManifestFormat.publishBranch(spark, out, branch)
           model = staged
           record(); checkServed(s"$ctx wap-published")
         } else {
-          ExtractionJob.abandonBranch(out, branch)
+          SnapshotManifestFormat.abandonBranch(out, branch)
           checkServed(s"$ctx wap-abandoned")
           // the abandoned correction must still land through a normal
           // commit — no fingerprint residue claiming the work was done

@@ -53,7 +53,7 @@ class RebucketSpec extends AnyFunSuite with BeforeAndAfterAll {
     val man = fmt.readManifest(out).get
     assert(man.snapshotId == snap)
     assert(man.bucketCount.contains(8))
-    assert(man.operation.contains("rewrite"))
+    assert(man.operation == "rewrite")
     assert(man.deleteDirs.isEmpty, "the rewrite applies pending deletes")
     assert(rows(ExtractionJob.readCommitted(spark, out)) == want,
       "rebucket must not change served content")
@@ -62,7 +62,7 @@ class RebucketSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(f.bucket >= 0 && f.bucket < 8, s"file outside new modulus: $f")
     }
     // keyed read prunes with the new modulus
-    val keyed = ExtractionJob.readCommittedForConvs(spark, out, Seq(victim))
+    val keyed = SnapshotManifestFormat.readCommittedForConvs(spark, out, Seq(victim))
     assert(keyed.count() > 0)
     assert(keyed.collect().forall(_.getAs[String]("conv_id") == victim))
 
@@ -84,7 +84,7 @@ class RebucketSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // CDC refuses across the replacing rebucket commit
     val e = intercept[IllegalStateException] {
-      ExtractionJob.readAppendsBetween(spark, out, snap - 1, snap + 1).count()
+      SnapshotManifestFormat.readAppendsBetween(spark, out, snap - 1, snap + 1).count()
     }
     assert(e.getMessage.contains("replacing commit"), e.getMessage)
   }
@@ -120,7 +120,7 @@ class RebucketSpec extends AnyFunSuite with BeforeAndAfterAll {
     // modulus — without it, every future input change would be invisible
     assert(ExtractionJob.run(spark, turns, cfg) == Set.empty)
     val man = fmt.readManifest(out).get
-    assert(man.snapshotId == snap + 1 && man.operation.contains("props"),
+    assert(man.snapshotId == snap + 1 && man.operation == "props",
       s"expected a props-only baseline commit, got ${man.operation} @ ${man.snapshotId}")
     assert(man.inputFps.nonEmpty && man.fpMode.contains("bucket"))
     assert(man.files.toSet == fmt.readManifestAt(out, snap).get.files.toSet,

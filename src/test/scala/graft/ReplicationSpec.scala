@@ -46,7 +46,7 @@ class ReplicationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n1 = TableReplication.replicateAvailableNow(spark, src, dst, ckpt)
     assert(n1 > 0L)
     assert(content(dst) == content(src), "replica must equal the source after seeding")
-    assert(fmt.readManifest(dst).get.operation.contains("append"))
+    assert(fmt.readManifest(dst).get.operation == "append")
     assert(fmt.readManifest(dst).get.bucketCount ==
       fmt.readManifest(src).get.bucketCount, "replica adopts the source modulus")
 
@@ -63,7 +63,7 @@ class ReplicationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TableReplication.replicateAvailableNow(spark, src, dst, ckpt) > 0L)
     assert(content(dst) == content(src), "replica must carry the corrected content")
     val man = fmt.readManifest(dst).get
-    assert(man.operation.contains("delta") && man.deleteDirs.nonEmpty,
+    assert(man.operation == "delta" && man.deleteDirs.nonEmpty,
       "a correction must replicate as an equality-delete delta")
 
     // keyed read on the replica prunes through the adopted layout

@@ -50,7 +50,7 @@ class SchemaEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
       bucketCount = Some(2))
     val r0 = fmt.readCommitted(spark, out)
     assert(r0.columns.toSeq == Seq("conv_id", "score", "bucket"))
-    assert(fmt.readManifest(out).get.schemaDdl.exists(_.contains("score")))
+    assert(fmt.readManifest(out).get.schemaDdl.contains("score"))
 
     // engine v2 ADDS quality: additive commit; old files never rewritten
     val s1 = stage(out, "staging-1",
@@ -99,27 +99,6 @@ class SchemaEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fmt.readManifest(out).get.schemaDdl == fmt.readManifestAt(out, 2).get.schemaDdl)
   }
 
-  test("legacy manifests without a recorded schema still read via footer inference") {
-    val ss = spark
-    import ss.implicits._
-    val out = Files.createTempDirectory("graft-schema-legacy").toString
-    val s0 = stage(out, "staging-0",
-      Seq((0, "c0", 10L), (1, "c1", 20L)).toDF("bucket", "conv_id", "score"))
-    val files0 = fmt.listStagedFiles(spark, s0).toVector
-    fmt.commitWave(out, s0, 0, Set(0, 1), files0, Vector.empty, Map.empty,
-      bucketCount = Some(2))
-    // strip the schema field, emulating a manifest written before schema
-    // tracking existed
-    val manPath = Paths.get(out, "snapshots", "snap-0.json")
-    val stripped = new String(Files.readAllBytes(manPath), StandardCharsets.UTF_8)
-      .replaceAll("\"schema\":\"(?:[^\"\\\\]|\\\\.)*\",", "")
-    Files.write(manPath, stripped.getBytes(StandardCharsets.UTF_8))
-    assert(fmt.readManifest(out).get.schemaDdl.isEmpty)
-    val r = fmt.readCommitted(spark, out)
-    assert(r.columns.toSeq == Seq("conv_id", "score", "bucket"))
-    assert(r.count() == 2)
-  }
-
   test("rollback across a schema change restores the target snapshot's schema") {
     val ss = spark
     import ss.implicits._
@@ -158,7 +137,7 @@ class SchemaEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val turns = Transcripts.generate(spark, 8)
     ExtractionJob.run(spark, turns, ExtractionJob.Config(out, buckets = 2, waves = 1))
     val ddl = fmt.readManifest(out).get.schemaDdl
-    assert(ddl.exists(_.contains("fields_json")), s"job manifest must record schema, got $ddl")
+    assert(ddl.contains("fields_json"), s"job manifest must record schema, got $ddl")
     // pinned-schema read returns the same rows as ever
     assert(fmt.readCommitted(spark, out).count() ==
       graft.spark.ExtractionJob.extract(spark, turns).count())

@@ -57,7 +57,7 @@ class SortRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val snap = ExtractionJob.rewriteSorted(spark, out, targetRowsPerFile = 60)
     val man = ExtractionJob.readManifest(out).get
-    assert(man.snapshotId == snap && man.operation.contains("rewrite"))
+    assert(man.snapshotId == snap && man.operation == "rewrite")
     assert(man.deleteDirs.isEmpty, "the rewrite must have applied the deletes")
     assert(rows(ExtractionJob.readCommitted(spark, out)) == want)
 
@@ -85,7 +85,7 @@ class SortRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val planned = SnapshotManifestFormat.pruneFilesForConvs(man, Seq(victim))
     assert(planned.nonEmpty && planned.size < bucketFiles,
       s"expected intra-bucket pruning: planned ${planned.size} of $bucketFiles bucket files")
-    assert(rows(ExtractionJob.readCommittedForConvs(spark, out, Seq(victim))) ==
+    assert(rows(SnapshotManifestFormat.readCommittedForConvs(spark, out, Seq(victim))) ==
       want.filter(_._1 == victim))
 
     // incremental runs continue cleanly after the replacing rewrite

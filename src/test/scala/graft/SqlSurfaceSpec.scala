@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
-import graft.spark.{ExtractionJob, Transcripts}
+import graft.spark.{ExtractionJob, SnapshotManifestFormat, Transcripts}
 import java.nio.file.Files
 
 /** The SQL table-valued-function surface (`graft_table` & co., injected
@@ -39,7 +39,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 20)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    s0 = ExtractionJob.latestSnapshot(out).get
+    s0 = SnapshotManifestFormat.latestSnapshot(out).get
     // move the head once so time travel has something to travel past
     val victim = turns.select("conv_id").collect().map(_.getString(0)).min
     val ss = spark; import ss.implicits._
@@ -99,7 +99,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("conv_id"),
       s"expected conv_id in PushedFilters, plan:\n${plan.take(2000)}")
-    val viaApi = ExtractionJob.readCommittedForConvs(spark, out, Seq(conv))
+    val viaApi = SnapshotManifestFormat.readCommittedForConvs(spark, out, Seq(conv))
       .select("conv_id", "turn_idx", "main_text").collect().map(_.toString).sorted
     val viaSql = df.select("conv_id", "turn_idx", "main_text")
       .collect().map(_.toString).sorted
@@ -107,7 +107,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("time travel, tags, branches, and CDC all read through SQL") {
-    val head = ExtractionJob.latestSnapshot(out).get
+    val head = SnapshotManifestFormat.latestSnapshot(out).get
     // time travel: the pre-edit snapshot has no 'Room: 12' anywhere
     val old = sql(s"SELECT main_text FROM graft_table('$out', $s0)")
       .collect().map(_.getString(0))
@@ -116,7 +116,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(_.getString(0)).exists(_.contains("Room: 12")))
 
     // tag pins the old snapshot by name
-    ExtractionJob.tagSnapshot(out, "v0", s0)
+    SnapshotManifestFormat.tagSnapshot(out, "v0", s0)
     val viaTag = sql(s"SELECT main_text FROM graft_table_tag('$out', 'v0')")
       .collect().map(_.getString(0)).sorted
     assert(viaTag.toSeq == old.sorted.toSeq)
@@ -134,12 +134,12 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(_.getString(0)).exists(_.contains("Ward: 7")))
     assert(!sql(s"SELECT main_text FROM graft_table('$out')")
       .collect().map(_.getString(0)).exists(_.contains("Ward: 7")))
-    ExtractionJob.abandonBranch(out, "sqlview")
+    SnapshotManifestFormat.abandonBranch(out, "sqlview")
 
     // CDC: SQL range read equals the programmatic appends read
     val viaSqlCdc = sql(s"SELECT conv_id, turn_idx FROM graft_table_changes('$out', $s0, $head)")
       .collect().map(_.toString).sorted
-    val viaApiCdc = ExtractionJob.readAppendsBetween(spark, out, s0, head)
+    val viaApiCdc = SnapshotManifestFormat.readAppendsBetween(spark, out, s0, head)
       .select("conv_id", "turn_idx").collect().map(_.toString).sorted
     assert(viaSqlCdc.nonEmpty && viaSqlCdc.toSeq == viaApiCdc.toSeq)
 
@@ -159,19 +159,19 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("timestamp time travel: graft_table_at serves the snapshot live at the instant") {
-    val head = ExtractionJob.latestSnapshot(out).get
+    val head = SnapshotManifestFormat.latestSnapshot(out).get
     // the recorded commit instants come from the $snapshots metadata table
     val instants = sql(s"SELECT snapshot_id, committed_at FROM graft_table_snapshots('$out')")
       .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(instants.values.forall(_.nonEmpty), "every snapshot records its commit instant")
     // at exactly s0's instant the table served s0 (ids are committed
     // serially, so the highest qualifying id wins)
-    assert(ExtractionJob.snapshotAsOfTimestamp(out,
+    assert(SnapshotManifestFormat.snapshotAsOfTimestamp(out,
       java.time.Instant.parse(instants(s0)).toEpochMilli) == s0)
     // asking for "now" serves the head; asking before history errors
-    assert(ExtractionJob.snapshotAsOfTimestamp(out, System.currentTimeMillis()) == head)
+    assert(SnapshotManifestFormat.snapshotAsOfTimestamp(out, System.currentTimeMillis()) == head)
     intercept[IllegalStateException] {
-      ExtractionJob.snapshotAsOfTimestamp(out, 0L)
+      SnapshotManifestFormat.snapshotAsOfTimestamp(out, 0L)
     }
     val viaTs = sql(s"SELECT main_text FROM graft_table_at('$out', '${instants(s0)}')")
       .collect().map(_.getString(0)).sorted
@@ -191,5 +191,23 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       sql(s"SELECT * FROM graft_table('$out', 4294967296)").collect()
     }
     assert(big.getMessage.contains("out of range"), big.getMessage)
+  }
+
+  test("a run over empty input commits an empty table that reads back with its schema") {
+    val ss = spark
+    import ss.implicits._
+    val empty = Files.createTempDirectory("graft-empty-input").toString
+    ExtractionJob.run(spark, spark.emptyDataset[graft.spark.Turn],
+      ExtractionJob.Config(empty, buckets = 4, waves = 1))
+    val man = ExtractionJob.readManifest(empty).get
+    assert(man.files.isEmpty && man.buckets == Set(0, 1, 2, 3))
+    val cols = org.apache.spark.sql.Encoders.product[graft.spark.ExtractedTurn].schema
+      .fieldNames.toSeq :+ "bucket"
+    val df = ExtractionJob.readCommitted(spark, empty)
+    assert(df.columns.toSeq == cols && df.count() == 0L)
+    assert(SnapshotManifestFormat.readCommittedForConvs(spark, empty, Seq("c0")).count() == 0L)
+    val viaSql = spark.sql(s"SELECT * FROM graft_table('$empty')")
+    assert(viaSql.columns.toSeq == cols && viaSql.count() == 0L)
+    assert(graft.spark.TableDoctor.diagnose(empty).ok)
   }
 }

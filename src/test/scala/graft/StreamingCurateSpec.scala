@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
-import graft.spark.{ExtractionJob, StreamingCurate, Transcripts, Turn}
+import graft.spark.{ExtractionJob, SnapshotManifestFormat, StreamingCurate, Transcripts, Turn}
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
@@ -119,7 +119,7 @@ class StreamingCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
     // snapshot, and still matches from-scratch
     val v5 = v4.map(t => if (t.conv_id == victim) t.copy(text = t.text + "\nStep: 5") else t)
     assert(ExtractionJob.run(spark, v5.toDS(), cfg).nonEmpty)
-    assert(ExtractionJob.compact(spark, out).nonEmpty)
+    assert(SnapshotManifestFormat.compact(spark, out).nonEmpty)
     val v6 = v5.map(t => if (t.conv_id == victim) t.copy(text = t.text + "\nStep: 6") else t)
     assert(ExtractionJob.run(spark, v6.toDS(), cfg).nonEmpty)
     val s6 = StreamingCurate.cycle(spark, out, work).get
@@ -128,8 +128,8 @@ class StreamingCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // 6) a backlog ENDING at a replace commit: checkpoint advances with
     // zero data work, corpus unchanged
-    ExtractionJob.compact(spark, out) // may or may not find debt
-    val headNow = ExtractionJob.latestSnapshot(out).get
+    SnapshotManifestFormat.compact(spark, out) // may or may not find debt
+    val headNow = SnapshotManifestFormat.latestSnapshot(out).get
     if (headNow > StreamingCurate.lastCuratedSnapshot(work)) {
       val s7 = StreamingCurate.cycle(spark, out, work).get
       assert(s7.upserts == 0L && s7.deletedConvs == 0L,
@@ -137,19 +137,14 @@ class StreamingCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
       assertMatchesFromScratch(out, work, "replace-terminated backlog")
     }
 
-    // 7) pre-upgrade workdir (no _curated_rows count file) taking the
-    // rewrite-only skip-to-head path: the cycle must re-count the corpus
-    // once (and persist it), never report 0 curated rows
+    // 7) a workdir in the older layout (a checkpoint but no _curated_rows
+    // count file) taking the rewrite-only skip-to-head path is refused
+    // with one clear error, never reported as 0 curated rows
     ExtractionJob.rewriteSorted(spark, out, targetRowsPerFile = 1000)
-    if (ExtractionJob.latestSnapshot(out).get > StreamingCurate.lastCuratedSnapshot(work)) {
+    if (SnapshotManifestFormat.latestSnapshot(out).get > StreamingCurate.lastCuratedSnapshot(work)) {
       Files.deleteIfExists(Paths.get(work, "_curated_rows"))
-      val s8 = StreamingCurate.cycle(spark, out, work).get
-      val realRows = StreamingCurate.readCurated(spark, work).count()
-      assert(realRows > 0)
-      assert(s8.curatedRows == realRows,
-        s"skip-to-head on a pre-upgrade workdir must re-count, got ${s8.curatedRows} vs $realRows")
-      assert(Files.exists(Paths.get(work, "_curated_rows")),
-        "the re-count must be persisted (one-time migration)")
+      val e = intercept[IllegalStateException](StreamingCurate.cycle(spark, out, work))
+      assert(e.getMessage.contains("not migrated"), e.getMessage)
     }
   }
 
@@ -172,7 +167,7 @@ class StreamingCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
     val changed = turns.map(t =>
       if (t.conv_id == victim) t.copy(text = t.text + "\nCounty: Travis") else t)
     assert(ExtractionJob.run(spark, changed, cfgB).nonEmpty)
-    assert(ExtractionJob.readManifest(out).get.operation.contains("replace"),
+    assert(ExtractionJob.readManifest(out).get.operation == "replace",
       "setup must produce a content-changing replace commit")
     assert(StreamingCurate.cycle(spark, out, work).nonEmpty)
     // without the rebuild the checkpoint would skip the replace and the
@@ -205,7 +200,7 @@ class StreamingCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
               if (t.conv_id == v) t.copy(text = t.text + s"\nRnd $mutation") else t)
             assert(ExtractionJob.run(spark, cur.toDS(), cfg).nonEmpty)
           case 1 => // maintenance (replace commit) — content preserved
-            ExtractionJob.compact(spark, out)
+            SnapshotManifestFormat.compact(spark, out)
           case 2 => // curate whatever backlog accumulated
             StreamingCurate.cycle(spark, out, work)
             val got = StreamingCurate.readCurated(spark, work)

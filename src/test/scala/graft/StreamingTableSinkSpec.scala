@@ -18,6 +18,9 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private val fmt = SnapshotManifestFormat
+  // a table's first commit without data files must name its schema
+  private val extractedDdl =
+    org.apache.spark.sql.Encoders.product[graft.spark.ExtractedTurn].schema.toDDL
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder().master("local[4]")
@@ -61,7 +64,7 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (key2, batch2) = streamMarker(table)
     assert(key2 == key1 && batch2 > batch1, s"same sink, advancing marker: $key2 $batch2")
     val man2 = fmt.readManifest(table).get
-    assert(man2.operation.contains("append"))
+    assert(man2.operation == "append")
 
     // a third run with no new input commits nothing (no empty snapshots)
     assert(StreamingExtraction.runAvailableNowToTable(spark, in, table, ckpt, buckets = 4) == 0L)
@@ -157,7 +160,7 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       "stream.plain" -> "42", "k\\slash" -> "v\\end")
     fmt.commitWave(table, staging = table + "/no-staging", snapshotId = 0,
       buckets = Set.empty, files = Vector.empty, lineage = Vector.empty,
-      inputFps = Map.empty, additive = true, props = props)
+      inputFps = Map.empty, additive = true, props = props, schemaDdl = Some(extractedDdl))
     assert(fmt.readManifest(table).get.props == props)
 
     // sticky merge: a later commit's props lay OVER the carried-forward ones
@@ -229,7 +232,8 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val racing = new InjectingFormat(out =>
       fmt.commitWave(out, staging = out + "/none", snapshotId = 0,
         buckets = Set.empty, files = Vector.empty, lineage = Vector.empty,
-        inputFps = Map.empty, additive = true, bucketCount = Some(2)))
+        inputFps = Map.empty, additive = true, bucketCount = Some(2),
+        schemaDdl = Some(extractedDdl)))
     val batch = sp.range(0, 6).flatMap(o => Transcripts.turnsFor(o))
     val n = StreamingExtraction.appendBatchToTable(spark, batch, batchId = 0L,
       table, buckets = 4, queryKey = "q", racing)
@@ -265,39 +269,12 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!names.exists(_.startsWith("staging-")), "fenced append must clean its staging")
   }
 
-  test("pre-sticky-props legacy marker detects a straddling replay and is retired by the first scoped commit") {
-    val sp = spark
-    import sp.implicits._
-    val table = Files.createTempDirectory("tsink-legacy").toString
-    // a table upgraded mid-stream: the old sink recorded its marker as the
-    // two-key format the previous release wrote
-    fmt.commitWave(table, staging = table + "/no-staging", snapshotId = 0,
-      buckets = Set.empty, files = Vector.empty, lineage = Vector.empty,
-      inputFps = Map.empty, additive = true, bucketCount = Some(4),
-      props = Map("stream.query" -> "stream", "stream.batch_id" -> "12"))
-    val sinkKey = "stream-upgraded-uuid"
-    // the crash-replayed batch 12 must be detected through the LEGACY marker
-    val replay = sp.range(0, 2).flatMap(o => Transcripts.turnsFor(o))
-    assert(StreamingExtraction.appendBatchToTable(spark, replay, batchId = 12L,
-      table, buckets = 4, queryKey = sinkKey, fmt, legacyKey = Some("stream")) == 0L,
-      "upgrade must not double-append a straddling replay")
-    // batch 13 lands under the scoped key; the legacy keys are tombstoned
-    val b13 = sp.range(0, 2).flatMap(o => Transcripts.turnsFor(o))
-    assert(StreamingExtraction.appendBatchToTable(spark, b13, batchId = 13L,
-      table, buckets = 4, queryKey = sinkKey, fmt, legacyKey = Some("stream")) ==
-      expectedRows(0 until 2))
-    val props = fmt.readManifest(table).get.props
-    assert(props.get(s"stream.$sinkKey").contains("13"))
-    assert(!props.contains("stream.query") && !props.contains("stream.batch_id"),
-      "legacy keys must be retired once the scoped marker takes over")
-  }
-
   test("setTableProps commits sticky props and retires keys with empty values") {
     val table = Files.createTempDirectory("tsink-setprops").toString
     intercept[IllegalStateException] { fmt.setTableProps(table, Map("a" -> "b")) }
     fmt.commitWave(table, staging = table + "/no-staging", snapshotId = 0,
       buckets = Set.empty, files = Vector.empty, lineage = Vector.empty,
-      inputFps = Map.empty, additive = true)
+      inputFps = Map.empty, additive = true, schemaDdl = Some(extractedDdl))
     assert(fmt.setTableProps(table, Map("owner" -> "teamA", "stream.dead-sink" -> "99")) == 1)
     assert(fmt.readManifest(table).get.props ==
       Map("owner" -> "teamA", "stream.dead-sink" -> "99"))
@@ -305,6 +282,6 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fmt.setTableProps(table, Map("stream.dead-sink" -> "")) == 2)
     val man = fmt.readManifest(table).get
     assert(man.props == Map("owner" -> "teamA"))
-    assert(man.operation.contains("props"))
+    assert(man.operation == "props")
   }
 }

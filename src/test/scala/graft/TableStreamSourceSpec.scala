@@ -100,9 +100,9 @@ class TableStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // upstream deletion: delete-only commit -> the drain succeeds and
     // appends nothing (retractions are served by readDeleteKeysBetween)
     val gone = v1.where($"conv_id" =!= victim).as[graft.spark.Turn]
-    val preDelete = ExtractionJob.latestSnapshot(out).get
+    val preDelete = SnapshotManifestFormat.latestSnapshot(out).get
     assert(ExtractionJob.run(spark, gone, cfg).nonEmpty)
-    val postDelete = ExtractionJob.latestSnapshot(out).get
+    val postDelete = SnapshotManifestFormat.latestSnapshot(out).get
     drain(out, sink, ckpt)
     assert(sinkRows(sink).size == afterDelta.size, "delete-only commit must stream no rows")
     val delKeys = fmt.readDeleteKeysBetween(spark, out, preDelete, postDelete)
@@ -136,7 +136,7 @@ class TableStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // explicit start id: serve increments from that snapshot on, no initial
     // snapshot batch
-    val deltaSnap = ExtractionJob.latestSnapshot(out).get
+    val deltaSnap = SnapshotManifestFormat.latestSnapshot(out).get
     drain(out, s"$base/sink2", s"$base/ckpt2", Map("startSnapshot" -> deltaSnap.toString))
     val fromId = sinkRows(s"$base/sink2")
     assert(fromId == tailed, "explicit startSnapshot must serve the same delta rows")
@@ -162,7 +162,7 @@ class TableStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val v2 = v1.map(t =>
       if (t.conv_id == victim) t.copy(text = t.text + "\ncap fix 2") else t)
     assert(ExtractionJob.run(spark, v2, cfg).nonEmpty)
-    val head = ExtractionJob.latestSnapshot(out).get
+    val head = SnapshotManifestFormat.latestSnapshot(out).get
 
     // one AvailableNow drain, one snapshot per batch: the whole backlog
     // arrives, split into bounded batches (capped initial snapshot first)
@@ -198,13 +198,13 @@ class TableStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns1 = Transcripts.generate(spark, 12)
     assert(ExtractionJob.run(spark, turns1, cfg1).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out1).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out1).get
     drain(out1, s"$base1/sink", s"$base1/ckpt")
     val victim1 = turns1.select("conv_id").as[String].head()
     val w1 = turns1.map(t =>
       if (t.conv_id == victim1) t.copy(text = t.text + "\nrollback fix") else t)
     assert(ExtractionJob.run(spark, w1, cfg1).nonEmpty)
-    ExtractionJob.rollbackTo(out1, s0) // replace commit, no file rewrite
+    SnapshotManifestFormat.rollbackTo(out1, s0) // replace commit, no file rewrite
     val e1 = intercept[StreamingQueryException] {
       drain(out1, s"$base1/sink", s"$base1/ckpt")
     }
@@ -228,7 +228,7 @@ class TableStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w2 = turns2.map(t =>
       if (t.conv_id == victim2) t.copy(text = t.text + "\ncompact fix") else t)
     assert(ExtractionJob.run(spark, w2, cfg2).nonEmpty)
-    assert(ExtractionJob.compact(spark, out2).nonEmpty)
+    assert(SnapshotManifestFormat.compact(spark, out2).nonEmpty)
     val e2 = intercept[StreamingQueryException] {
       drain(out2, s"$base2/sink", s"$base2/ckpt")
     }

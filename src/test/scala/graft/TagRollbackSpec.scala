@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import graft.spark.{ExtractionJob, Transcripts}
+import graft.spark.{ExtractionJob, SnapshotManifestFormat, Transcripts}
 import java.nio.file.Files
 
 /** Snapshot refs (Iceberg tag analog) and rollback: a tag pins a table
@@ -42,13 +42,13 @@ class TagRollbackSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 18)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
     val v0Rows = rows(ExtractionJob.readCommitted(spark, out))
 
     // guard rails first: bad names and missing snapshots refuse
-    intercept[IllegalArgumentException] { ExtractionJob.tagSnapshot(out, "", s0) }
-    intercept[IllegalArgumentException] { ExtractionJob.tagSnapshot(out, "a{b}", s0) }
-    intercept[IllegalArgumentException] { ExtractionJob.tagSnapshot(out, "ghost", s0 + 900) }
+    intercept[IllegalArgumentException] { SnapshotManifestFormat.tagSnapshot(out, "", s0) }
+    intercept[IllegalArgumentException] { SnapshotManifestFormat.tagSnapshot(out, "a{b}", s0) }
+    intercept[IllegalArgumentException] { SnapshotManifestFormat.tagSnapshot(out, "ghost", s0 + 900) }
 
     // the ref.* prop namespace is tag-reserved: free-form values that would
     // wedge tags()/expiry are refused at WRITE time, as is the committed_at
@@ -63,8 +63,8 @@ class TagRollbackSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.spark.SnapshotManifestFormat.setTableProps(out, Map("committed_at" -> "bogus"))
     }
 
-    ExtractionJob.tagSnapshot(out, "train-v1", s0)
-    assert(ExtractionJob.tags(out) == Map("train-v1" -> s0))
+    SnapshotManifestFormat.tagSnapshot(out, "train-v1", s0)
+    assert(SnapshotManifestFormat.tags(out) == Map("train-v1" -> s0))
 
     // two later corrections move the live table away from the tagged version
     val victim = turns.select("conv_id").as[String].head()
@@ -72,36 +72,36 @@ class TagRollbackSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ExtractionJob.run(spark, v1, cfg).nonEmpty)
     val v2 = v1.map(t => if (t.conv_id == victim) t.copy(text = t.text + "\ntag fix 2") else t)
     assert(ExtractionJob.run(spark, v2, cfg).nonEmpty)
-    val s2 = ExtractionJob.latestSnapshot(out).get
+    val s2 = SnapshotManifestFormat.latestSnapshot(out).get
 
     // the tag is a sticky prop: unrelated commits carry it forward
-    assert(ExtractionJob.tags(out) == Map("train-v1" -> s0))
-    assert(rows(ExtractionJob.readCommittedAtTag(spark, out, "train-v1")) == v0Rows)
+    assert(SnapshotManifestFormat.tags(out) == Map("train-v1" -> s0))
+    assert(rows(SnapshotManifestFormat.readCommittedAtTag(spark, out, "train-v1")) == v0Rows)
     assert(rows(ExtractionJob.readCommitted(spark, out)) != v0Rows)
 
     // expiry: the tagged snapshot survives retention; untagged history dies
-    val (expired, _) = ExtractionJob.expireSnapshots(out, retainLast = 1)
+    val (expired, _) = SnapshotManifestFormat.expireSnapshots(out, retainLast = 1)
     assert(expired > 0)
-    assert(rows(ExtractionJob.readCommittedAtTag(spark, out, "train-v1")) == v0Rows,
+    assert(rows(SnapshotManifestFormat.readCommittedAtTag(spark, out, "train-v1")) == v0Rows,
       "tag must keep serving the pinned bytes after expiry")
     intercept[IllegalStateException] { // untagged intermediate snapshot is gone
-      ExtractionJob.readCommittedAsOf(spark, out, s0 + 1)
+      SnapshotManifestFormat.readCommittedAsOf(spark, out, s0 + 1)
     }
-    assert(rows(ExtractionJob.readCommittedAsOf(spark, out, s0)) == v0Rows)
+    assert(rows(SnapshotManifestFormat.readCommittedAsOf(spark, out, s0)) == v0Rows)
 
     // drop the tag: the pin is released, the next expiry collects it
-    ExtractionJob.dropTag(out, "train-v1")
-    assert(ExtractionJob.tags(out).isEmpty)
+    SnapshotManifestFormat.dropTag(out, "train-v1")
+    assert(SnapshotManifestFormat.tags(out).isEmpty)
     intercept[IllegalArgumentException] {
-      ExtractionJob.readCommittedAtTag(spark, out, "train-v1")
+      SnapshotManifestFormat.readCommittedAtTag(spark, out, "train-v1")
     }
-    val (expired2, _) = ExtractionJob.expireSnapshots(out, retainLast = 1)
+    val (expired2, _) = SnapshotManifestFormat.expireSnapshots(out, retainLast = 1)
     assert(expired2 > 0, "formerly tagged snapshot must be expirable after dropTag")
-    intercept[IllegalStateException] { ExtractionJob.readCommittedAsOf(spark, out, s0) }
+    intercept[IllegalStateException] { SnapshotManifestFormat.readCommittedAsOf(spark, out, s0) }
     // the live table is untouched throughout
     assert(rows(ExtractionJob.readCommitted(spark, out)) ==
-      rows(ExtractionJob.readCommittedAsOf(spark, out, ExtractionJob.latestSnapshot(out).get)))
-    assert(s2 <= ExtractionJob.latestSnapshot(out).get)
+      rows(SnapshotManifestFormat.readCommittedAsOf(spark, out, SnapshotManifestFormat.latestSnapshot(out).get)))
+    assert(s2 <= SnapshotManifestFormat.latestSnapshot(out).get)
   }
 
   test("rollback commits old content forward as a replace; history and resume semantics hold") {
@@ -112,36 +112,36 @@ class TagRollbackSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 18)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
     val v0Rows = rows(ExtractionJob.readCommitted(spark, out))
 
     val victim = turns.select("conv_id").as[String].head()
     val v1 = turns.map(t => if (t.conv_id == victim) t.copy(text = t.text + "\nbad fix") else t)
     assert(ExtractionJob.run(spark, v1, cfg).nonEmpty)
-    val s1 = ExtractionJob.latestSnapshot(out).get
+    val s1 = SnapshotManifestFormat.latestSnapshot(out).get
     val v1Rows = rows(ExtractionJob.readCommitted(spark, out))
     assert(v1Rows != v0Rows)
 
     // rollback: live table serves the pre-correction bytes again
-    val s2 = ExtractionJob.rollbackTo(out, s0)
+    val s2 = SnapshotManifestFormat.rollbackTo(out, s0)
     assert(s2 == s1 + 1, "rollback must commit a NEW snapshot, not rewrite history")
-    assert(ExtractionJob.latestSnapshot(out).contains(s2))
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(s2))
     assert(rows(ExtractionJob.readCommitted(spark, out)) == v0Rows)
-    assert(ExtractionJob.readManifest(out).get.operation.contains("replace"))
+    assert(ExtractionJob.readManifest(out).get.operation == "replace")
 
     // history is preserved: the rolled-back-over snapshot still time-travels
-    assert(rows(ExtractionJob.readCommittedAsOf(spark, out, s1)) == v1Rows)
+    assert(rows(SnapshotManifestFormat.readCommittedAsOf(spark, out, s1)) == v1Rows)
     // but CDC across the replace refuses (added-rows semantics undefined)
     val replaced = intercept[IllegalStateException] {
-      ExtractionJob.readAppendsBetween(spark, out, s0, s2)
+      SnapshotManifestFormat.readAppendsBetween(spark, out, s0, s2)
     }
     assert(replaced.getMessage.contains("replacing commit"), replaced.getMessage)
 
     // rollback to the current snapshot is a no-op
-    assert(ExtractionJob.rollbackTo(out, s2) == s2)
-    assert(ExtractionJob.latestSnapshot(out).contains(s2))
+    assert(SnapshotManifestFormat.rollbackTo(out, s2) == s2)
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(s2))
     // rollback to a never-existing snapshot reports history loss
-    val gone = intercept[IllegalStateException] { ExtractionJob.rollbackTo(out, s2 + 900) }
+    val gone = intercept[IllegalStateException] { SnapshotManifestFormat.rollbackTo(out, s2 + 900) }
     assert(gone.getMessage.contains("rewritten or expired"), gone.getMessage)
 
     // the rollback also reset the conv fingerprints: re-running with the
@@ -153,8 +153,8 @@ class TagRollbackSpec extends AnyFunSuite with BeforeAndAfterAll {
     // roll back again, then expire everything but the rollback snapshot:
     // its (old) data files must survive GC because the latest manifest
     // references them — content still served byte-for-byte
-    val s4 = ExtractionJob.rollbackTo(out, s0)
-    ExtractionJob.expireSnapshots(out, retainLast = 1)
+    val s4 = SnapshotManifestFormat.rollbackTo(out, s0)
+    SnapshotManifestFormat.expireSnapshots(out, retainLast = 1)
     assert(rows(ExtractionJob.readCommitted(spark, out)) == v0Rows,
       "GC must keep files referenced by the rollback manifest")
     // and the table still accepts normal incremental work afterwards
@@ -171,12 +171,12 @@ class TagRollbackSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 15)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
     val victim = turns.select("conv_id").as[String].head()
     val v1 = turns.map(t => if (t.conv_id == victim) t.copy(text = t.text + "\nrb fix") else t)
     assert(ExtractionJob.run(spark, v1, cfg).nonEmpty)
-    assert(ExtractionJob.compact(spark, out).nonEmpty) // rewrites s0's dirty-bucket files
-    val e = intercept[IllegalStateException] { ExtractionJob.rollbackTo(out, s0) }
+    assert(SnapshotManifestFormat.compact(spark, out).nonEmpty) // rewrites s0's dirty-bucket files
+    val e = intercept[IllegalStateException] { SnapshotManifestFormat.rollbackTo(out, s0) }
     assert(e.getMessage.contains("rewritten or expired"), e.getMessage)
     // the refusal left the table untouched and serving the corrected content
     assert(ExtractionJob.readCommitted(spark, out).count() == turns.count())
@@ -190,21 +190,21 @@ class TagRollbackSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 15)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
-    ExtractionJob.tagSnapshot(out, "base", s0)
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
+    SnapshotManifestFormat.tagSnapshot(out, "base", s0)
     val victim = turns.select("conv_id").as[String].head()
     val v1 = turns.map(t => if (t.conv_id == victim) t.copy(text = t.text + "\nmeta fix") else t)
     assert(ExtractionJob.run(spark, v1, cfg).nonEmpty)
-    assert(ExtractionJob.compact(spark, out).nonEmpty)
+    assert(SnapshotManifestFormat.compact(spark, out).nonEmpty)
 
     // $snapshots: one row per retained manifest, ops in lifecycle order,
     // exactly one current row, the tag attached to its snapshot
-    val snaps = ExtractionJob.readSnapshotsTable(spark, out)
+    val snaps = SnapshotManifestFormat.readSnapshotsTable(spark, out)
       .collect().sortBy(_.getInt(0))
     val mans = graft.spark.SnapshotManifestFormat.retainedManifests(out)
     assert(snaps.length == mans.size)
     assert(snaps.map(_.getString(1)).toSeq ==
-      mans.map(_.operation.getOrElse("append")))
+      mans.map(_.operation))
     val ops = snaps.map(_.getString(1)).toSeq
     assert(ops.head == "append" && ops.contains("props") && ops.contains("delta"), ops.toString)
     assert(snaps.last.getString(1) == "rewrite") // the compaction
@@ -217,52 +217,26 @@ class TagRollbackSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(snaps.last.getLong(4) == ExtractionJob.readCommitted(spark, out).count())
 
     // $files: exactly the current manifest's files, bounds included
-    val files = ExtractionJob.readFilesTable(spark, out).collect()
+    val files = SnapshotManifestFormat.readFilesTable(spark, out).collect()
     val man = ExtractionJob.readManifest(out).get
     assert(files.map(r => (r.getInt(1), r.getString(2), r.getLong(3))).toSet ==
       man.files.map(f => (f.bucket, f.path, f.rowCount)).toSet)
     assert(files.forall(r => !r.isNullAt(5) && !r.isNullAt(6)), "conv bounds must surface")
     // as-of a historical snapshot it serves THAT manifest's files
-    val filesAt0 = ExtractionJob.readFilesTable(spark, out, Some(s0)).collect()
+    val filesAt0 = SnapshotManifestFormat.readFilesTable(spark, out, Some(s0)).collect()
     assert(filesAt0.map(_.getString(2)).toSet ==
       graft.spark.SnapshotManifestFormat.readManifestAt(out, s0).get.files.map(_.path).toSet)
 
     // $lineage: extraction audit rows — each wave commit records its own
     // buckets, so the initial run's waves sum to the whole input
-    val lin = ExtractionJob.readLineageTable(spark, out)
+    val lin = SnapshotManifestFormat.readLineageTable(spark, out)
     assert(lin.where(org.apache.spark.sql.functions.col("snapshot_id") <= s0)
       .agg(org.apache.spark.sql.functions.sum("row_count")).as[Long].head() == turns.count())
 
     // expiry shrinks $snapshots to the retained set (tagged s0 survives)
-    ExtractionJob.expireSnapshots(out, retainLast = 1)
-    val after = ExtractionJob.readSnapshotsTable(spark, out).collect().map(_.getInt(0)).toSet
+    SnapshotManifestFormat.expireSnapshots(out, retainLast = 1)
+    val after = SnapshotManifestFormat.readSnapshotsTable(spark, out).collect().map(_.getInt(0)).toSet
     assert(after.contains(s0) && after.contains(man.snapshotId))
     assert(after.size < snaps.length)
-  }
-
-  test("a legacy tag whose name violates the tightened charset stays droppable (tombstone exemption)") {
-    val out = Files.createTempDirectory("graft-tag-legacy").toString
-    val cfg = ExtractionJob.Config(out, buckets = 2, waves = 1)
-    assert(ExtractionJob.run(spark, Transcripts.generate(spark, 8), cfg).nonEmpty)
-    val latest = ExtractionJob.latestSnapshot(out).get
-
-    // inject a ref prop written before the name charset tightened (names
-    // with spaces were once accepted) straight into the manifest, the way
-    // an old engine version left it on disk
-    val manPath = java.nio.file.Paths.get(out, "snapshots", s"snap-$latest.json")
-    val raw = new String(Files.readAllBytes(manPath), java.nio.charset.StandardCharsets.UTF_8)
-    assert(raw.contains("\"operation\":"))
-    Files.write(manPath, raw.replaceFirst("\"operation\":\"([a-z]+)\",",
-      "\"operation\":\"$1\",\"props\":{\"ref.bad name\":\"0\"},")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    assert(ExtractionJob.tags(out) == Map("bad name" -> 0))
-
-    // creating such a tag is refused today...
-    intercept[IllegalArgumentException] { ExtractionJob.tagSnapshot(out, "bad name", 0) }
-    // ...but the legacy one MUST stay droppable, or its snapshot is pinned
-    // against expiry forever (the tombstone's empty value is exempt from
-    // the name-charset check)
-    ExtractionJob.dropTag(out, "bad name")
-    assert(ExtractionJob.tags(out).isEmpty)
   }
 }

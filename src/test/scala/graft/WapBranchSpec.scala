@@ -54,7 +54,7 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 18)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
     val baseline = rows(ExtractionJob.readCommitted(spark, out))
 
     // stage a correction on a branch
@@ -65,13 +65,13 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(done.nonEmpty, "the delta must have been staged")
 
     // invisible to readers; head unmoved; ref pending
-    assert(ExtractionJob.latestSnapshot(out).contains(s0))
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(s0))
     assert(rows(ExtractionJob.readCommitted(spark, out)) == baseline)
-    assert(ExtractionJob.branches(out) == Map("audit" -> (s0 + 1)))
+    assert(SnapshotManifestFormat.branches(out) == Map("audit" -> (s0 + 1)))
 
     // the branch read serves exactly the post-correction extraction
     val want = rows(ExtractionJob.extract(spark, changed).toDF())
-    assert(rows(ExtractionJob.readCommittedAtBranch(spark, out, "audit")) == want)
+    assert(rows(SnapshotManifestFormat.readCommittedAtBranch(spark, out, "audit")) == want)
     assert(want != baseline, "the mutation must change extraction output")
 
     // a branch holds exactly one staged snapshot: re-staging the SAME
@@ -88,22 +88,15 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected a green audit, got $audit")
 
     // publish: atomic head swap, ref retired, readers now see the correction
-    assert(ExtractionJob.publishBranch(out, "audit") == s0 + 1)
-    assert(ExtractionJob.latestSnapshot(out).contains(s0 + 1))
-    assert(ExtractionJob.branches(out).isEmpty)
+    assert(SnapshotManifestFormat.publishBranch(out, "audit") == s0 + 1)
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(s0 + 1))
+    assert(SnapshotManifestFormat.branches(out).isEmpty)
     assert(rows(ExtractionJob.readCommitted(spark, out)) == want)
     // CDC across the published branch snapshot works like any delta
-    assert(ExtractionJob.readAppendsBetween(spark, out, s0, s0 + 1)
+    assert(SnapshotManifestFormat.readAppendsBetween(spark, out, s0, s0 + 1)
       .where(org.apache.spark.sql.functions.col("conv_id") === victim).count() > 0)
     // time travel to the pre-publish head still serves the baseline
-    assert(rows(ExtractionJob.readCommittedAsOf(spark, out, s0)) == baseline)
-
-    // publish-crash remnant: a ref left behind pointing at the (already
-    // published) snapshot is retired idempotently, with nothing touched
-    Files.write(Paths.get(out, "snapshots", "branch-audit"), (s0 + 1).toString.getBytes)
-    assert(ExtractionJob.publishBranch(out, "audit") == s0 + 1)
-    assert(ExtractionJob.branches(out).isEmpty)
-    assert(rows(ExtractionJob.readCommitted(spark, out)) == want)
+    assert(rows(SnapshotManifestFormat.readCommittedAsOf(spark, out, s0)) == baseline)
   }
 
   test("abandon: the staged snapshot and everything only it references are GC'd; table is untouched") {
@@ -114,7 +107,7 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 15)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
     val baseline = rows(ExtractionJob.readCommitted(spark, out))
     val filesBefore = dataFiles(out)
 
@@ -124,9 +117,9 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ExtractionJob.run(spark, changed, cfg.copy(toBranch = Some("oops"))).nonEmpty)
     assert(dataFiles(out) != filesBefore, "the branch must have added delta files")
 
-    ExtractionJob.abandonBranch(out, "oops")
-    assert(ExtractionJob.branches(out).isEmpty)
-    assert(ExtractionJob.latestSnapshot(out).contains(s0))
+    SnapshotManifestFormat.abandonBranch(out, "oops")
+    assert(SnapshotManifestFormat.branches(out).isEmpty)
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(s0))
     assert(ExtractionJob.readManifest(out).get.snapshotId == s0)
     assert(SnapshotManifestFormat.readManifestAt(out, s0 + 1).isEmpty,
       "the staged manifest must be gone")
@@ -174,7 +167,7 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val audit = ExtractionJob.auditBranch(spark, out, "bad")
     assert(audit.duplicateKeys >= 1 && !audit.ok, s"audit must flag the duplicate, got $audit")
     // the gate holds: abandon instead of publish, table stays clean
-    ExtractionJob.abandonBranch(out, "bad")
+    SnapshotManifestFormat.abandonBranch(out, "bad")
     val after = ExtractionJob.readCommitted(spark, out)
     assert(after.count() ==
       after.dropDuplicates("conv_id", "turn_idx").count())
@@ -193,17 +186,17 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val changed = turns.map(t =>
       if (t.conv_id == victim) t.copy(text = t.text + "\nEmail: a@b.co") else t)
     assert(ExtractionJob.run(spark, changed, cfg.copy(toBranch = Some("hold"))).nonEmpty)
-    val want = rows(ExtractionJob.readCommittedAtBranch(spark, out, "hold"))
+    val want = rows(SnapshotManifestFormat.readCommittedAtBranch(spark, out, "hold"))
 
-    ExtractionJob.expireSnapshots(out, retainLast = 1)
-    ExtractionJob.removeOrphanFiles(out, olderThanMs = 0)
+    SnapshotManifestFormat.expireSnapshots(out, retainLast = 1)
+    SnapshotManifestFormat.removeOrphanFiles(out, olderThanMs = 0)
 
     // staged snapshot survived both sweeps intact
-    assert(rows(ExtractionJob.readCommittedAtBranch(spark, out, "hold")) == want)
+    assert(rows(SnapshotManifestFormat.readCommittedAtBranch(spark, out, "hold")) == want)
     val audit = ExtractionJob.auditBranch(spark, out, "hold")
     assert(audit.ok, s"post-maintenance audit must stay green, got $audit")
-    val snap = ExtractionJob.publishBranch(out, "hold")
-    assert(ExtractionJob.latestSnapshot(out).contains(snap))
+    val snap = SnapshotManifestFormat.publishBranch(out, "hold")
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(snap))
     assert(rows(ExtractionJob.readCommitted(spark, out)) == want)
   }
 
@@ -215,28 +208,28 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 8)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
 
     // exactly what a kill between atomicWrite's write(tmp) and move leaves
     // behind — once with complete digits (would register a phantom branch
     // named 'ghost.tmp' freezing the table) and once with partial content
     // (would throw 'corrupt branch ref' from every later commit)
     Files.write(Paths.get(out, "snapshots", "branch-ghost.tmp"), (s0 + 1).toString.getBytes)
-    assert(ExtractionJob.branches(out).isEmpty, ".tmp staging leftovers are not refs")
+    assert(SnapshotManifestFormat.branches(out).isEmpty, ".tmp staging leftovers are not refs")
     Files.write(Paths.get(out, "snapshots", "branch-ghost.tmp"), "1".getBytes) // partial
-    assert(ExtractionJob.branches(out).isEmpty)
+    assert(SnapshotManifestFormat.branches(out).isEmpty)
 
     // the table is NOT frozen: a head commit and a real branch both land
     val victim = turns.select("conv_id").as[String].head()
     val changed = turns.map(t =>
       if (t.conv_id == victim) t.copy(text = t.text + "\nZip: 10001") else t)
     assert(ExtractionJob.run(spark, changed, cfg).nonEmpty)
-    assert(ExtractionJob.latestSnapshot(out).contains(s0 + 1))
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(s0 + 1))
     val changed2 = changed.map(t =>
       if (t.conv_id == victim) t.copy(text = t.text + "\nState: NY") else t)
     assert(ExtractionJob.run(spark, changed2, cfg.copy(toBranch = Some("real"))).nonEmpty)
-    assert(ExtractionJob.branches(out) == Map("real" -> (s0 + 2)))
-    ExtractionJob.abandonBranch(out, "real")
+    assert(SnapshotManifestFormat.branches(out) == Map("real" -> (s0 + 2)))
+    SnapshotManifestFormat.abandonBranch(out, "real")
 
     // and a branch NAMED like the staging suffix is refused outright —
     // its ref file would be indistinguishable from a crash leftover
@@ -245,7 +238,7 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("branch refs carry a writer-unique token; legacy bare-id refs still parse") {
+  test("branch refs carry a writer-unique token; bare-id refs are refused") {
     val ss = spark
     import ss.implicits._
     val out = Files.createTempDirectory("graft-wap-token").toString
@@ -257,19 +250,18 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val changed = turns.map(t =>
       if (t.conv_id == victim) t.copy(text = t.text + "\nCity: Austin") else t)
     assert(ExtractionJob.run(spark, changed, cfg.copy(toBranch = Some("tok"))).nonEmpty)
-    val s1 = ExtractionJob.latestSnapshot(out).get + 1
+    val s1 = SnapshotManifestFormat.latestSnapshot(out).get + 1
     val content = new String(Files.readAllBytes(
       Paths.get(out, "snapshots", "branch-tok")), "UTF-8")
     // "<id> <token>": the token is what lets a stage that lost the
     // manifest race prove the ref is its OWN to delete
     assert(content.matches(s"$s1 [0-9a-f]{8}"), s"unexpected ref format: '$content'")
-    assert(ExtractionJob.branches(out) == Map("tok" -> s1))
-    ExtractionJob.abandonBranch(out, "tok")
-    // legacy bare-id ref (pre-token tables) parses and publishes
+    assert(SnapshotManifestFormat.branches(out) == Map("tok" -> s1))
+    SnapshotManifestFormat.abandonBranch(out, "tok")
+    // a bare-id ref is an older layout: refused as corrupt, never guessed at
     Files.write(Paths.get(out, "snapshots", "branch-old"), (s1 - 1).toString.getBytes)
-    assert(ExtractionJob.branches(out) == Map("old" -> (s1 - 1)))
-    assert(ExtractionJob.publishBranch(out, "old") == s1 - 1) // already-live remnant
-    assert(ExtractionJob.branches(out).isEmpty)
+    val e = intercept[IllegalArgumentException] { SnapshotManifestFormat.branches(out) }
+    assert(e.getMessage.contains("corrupt branch ref 'branch-old'"), e.getMessage)
   }
 
   /** Deterministic interleaving harness for the commit races: the hook
@@ -291,7 +283,7 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 10)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
     val victim = turns.select("conv_id").as[String].head()
     val branchEdit = turns.map(t =>
       if (t.conv_id == victim) t.copy(text = t.text + "\nCity: Austin") else t)
@@ -306,15 +298,15 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     withRace(() => {
       assert(ExtractionJob.run(spark, branchEdit,
         cfg.copy(toBranch = Some("hotfix"))).nonEmpty)
-      assert(ExtractionJob.publishBranch(out, "hotfix") == s0 + 1)
+      assert(SnapshotManifestFormat.publishBranch(out, "hotfix") == s0 + 1)
     }) {
       intercept[CommitConflictException] {
         ExtractionJob.run(spark, headEdit, cfg.copy(commitRetries = 0))
       }
     }
     // the published audit data is served intact; the loser changed nothing
-    assert(ExtractionJob.latestSnapshot(out).contains(s0 + 1))
-    assert(ExtractionJob.branches(out).isEmpty)
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(s0 + 1))
+    assert(SnapshotManifestFormat.branches(out).isEmpty)
     assert(rows(ExtractionJob.readCommitted(spark, out)) ==
       rows(ExtractionJob.extract(spark, branchEdit).toDF()),
       "the published branch content must survive the losing head commit")
@@ -332,7 +324,7 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 10)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
     // distinct-bucket victims so the cherry-pick is conflict-free
     val convs = turns.select("conv_id").distinct().as[String].collect().sorted
     val vA = convs.find(c => ExtractionJob.bucketOfConvId(c, 2) == 0).get
@@ -353,18 +345,18 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // head advanced to the head commit; the branch pends with an intact
     // staged manifest computed against the OLD base
-    assert(ExtractionJob.latestSnapshot(out).contains(s0 + 1))
-    assert(ExtractionJob.branches(out) == Map("hold" -> (s0 + 1)))
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(s0 + 1))
+    assert(SnapshotManifestFormat.branches(out) == Map("hold" -> (s0 + 1)))
     val audit = ExtractionJob.auditBranch(spark, out, "hold")
     assert(audit.ok, s"staged branch must audit green after the race, got $audit")
     // metadata-only publish refuses (head moved); the Spark overload
     // cherry-picks the staged delta onto the moved head
     val moved = intercept[IllegalStateException] {
-      ExtractionJob.publishBranch(out, "hold")
+      SnapshotManifestFormat.publishBranch(out, "hold")
     }
     assert(moved.getMessage.contains("cherry-pick"), moved.getMessage)
-    assert(ExtractionJob.publishBranch(spark, out, "hold") == s0 + 2)
-    assert(ExtractionJob.branches(out).isEmpty)
+    assert(SnapshotManifestFormat.publishBranch(spark, out, "hold") == s0 + 2)
+    assert(SnapshotManifestFormat.branches(out).isEmpty)
     // the final table carries BOTH edits
     val both = turns.map { t =>
       if (t.conv_id == vA) t.copy(text = t.text + "\nState: NY")
@@ -373,9 +365,9 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(ExtractionJob.readCommitted(spark, out)) ==
       rows(ExtractionJob.extract(spark, both).toDF()))
     // CDC attributes the cherry-picked delta to ITS published snapshot
-    assert(ExtractionJob.readAppendsBetween(spark, out, s0 + 1, s0 + 2)
+    assert(SnapshotManifestFormat.readAppendsBetween(spark, out, s0 + 1, s0 + 2)
       .select("conv_id").distinct().as[String].collect().toSet == Set(vA))
-    assert(ExtractionJob.readDeleteKeysBetween(spark, out, s0 + 1, s0 + 2)
+    assert(SnapshotManifestFormat.readDeleteKeysBetween(spark, out, s0 + 1, s0 + 2)
       .select("conv_id").distinct().as[String].collect().toSet == Set(vA))
   }
 
@@ -387,7 +379,7 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 10)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
     val convs = turns.select("conv_id").distinct().as[String].collect().sorted
     val vA = convs.find(c => ExtractionJob.bucketOfConvId(c, 2) == 0).get
     val vB = convs.find(c => ExtractionJob.bucketOfConvId(c, 2) == 1).get
@@ -406,15 +398,15 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
         cfg.copy(toBranch = Some("second"), commitRetries = 0)).nonEmpty)
     }
     // BOTH branches pend, each audited independently against the head
-    assert(ExtractionJob.branches(out) ==
+    assert(SnapshotManifestFormat.branches(out) ==
       Map("first" -> (s0 + 1), "second" -> (s0 + 1)))
     assert(ExtractionJob.auditBranch(spark, out, "first").ok)
     assert(ExtractionJob.auditBranch(spark, out, "second").ok)
     // publish "second" first (fast-forward: head unmoved), then "first"
     // (cherry-pick: "second"'s publish moved the head, disjoint buckets)
-    assert(ExtractionJob.publishBranch(out, "second") == s0 + 1)
-    assert(ExtractionJob.publishBranch(spark, out, "first") == s0 + 2)
-    assert(ExtractionJob.branches(out).isEmpty)
+    assert(SnapshotManifestFormat.publishBranch(out, "second") == s0 + 1)
+    assert(SnapshotManifestFormat.publishBranch(spark, out, "first") == s0 + 2)
+    assert(SnapshotManifestFormat.branches(out).isEmpty)
     val both = turns.map { t =>
       if (t.conv_id == vA) t.copy(text = t.text + "\nZip: 10001")
       else if (t.conv_id == vB) t.copy(text = t.text + "\nZip: 94103") else t
@@ -443,7 +435,7 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       cfg.copy(toBranch = Some("stale"))).nonEmpty)
     assert(ExtractionJob.run(spark, headEdit, cfg).nonEmpty)
     val clash = intercept[CommitConflictException] {
-      ExtractionJob.publishBranch(spark, out, "stale")
+      SnapshotManifestFormat.publishBranch(spark, out, "stale")
     }
     assert(clash.getMessage.contains("same") && clash.getMessage.contains("bucket"),
       clash.getMessage)
@@ -453,8 +445,8 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the head's content is untouched by the refused publish
     assert(rows(ExtractionJob.readCommitted(spark, out)) ==
       rows(ExtractionJob.extract(spark, headEdit).toDF()))
-    ExtractionJob.abandonBranch(out, "stale")
-    assert(ExtractionJob.branches(out).isEmpty)
+    SnapshotManifestFormat.abandonBranch(out, "stale")
+    assert(SnapshotManifestFormat.branches(out).isEmpty)
 
     // a maintenance rewrite (compaction) landing while a branch pends
     // physically rewrites files the staged manifest references — refuse
@@ -466,12 +458,12 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       cfg.copy(toBranch = Some("preRewrite"))).nonEmpty)
     ExtractionJob.rewriteSorted(spark, out, targetRowsPerFile = 1000)
     val rw = intercept[CommitConflictException] {
-      ExtractionJob.publishBranch(spark, out, "preRewrite")
+      SnapshotManifestFormat.publishBranch(spark, out, "preRewrite")
     }
     assert(rw.getMessage.contains("rewrite"), rw.getMessage)
     assert(!rw.retryable, "rewritten-base conflicts must not be retried")
-    ExtractionJob.abandonBranch(out, "preRewrite")
-    assert(ExtractionJob.branches(out).isEmpty)
+    SnapshotManifestFormat.abandonBranch(out, "preRewrite")
+    assert(SnapshotManifestFormat.branches(out).isEmpty)
   }
 
   test("delete-only cherry-pick publish: a crash after the commit resumes idempotently via the intent marker") {
@@ -482,7 +474,7 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 12)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
     val convs = turns.select("conv_id").distinct().as[String].collect().sorted
     val vDel = convs.find(c => ExtractionJob.bucketOfConvId(c, 2) == 0).get
     val vEdit = convs.find(c => ExtractionJob.bucketOfConvId(c, 2) == 1).get
@@ -490,8 +482,8 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     // DELETE-ONLY branch stage: same corpus minus one conversation — no
     // changed text, so the stage carries an equality-delete dir and NO
     // delta files. The commit this publish produces holds only re-stamped
-    // COPIES of the branch's artifacts, so no pre-marker resume check can
-    // tie it back to the branch.
+    // COPIES of the branch's artifacts: only the intent marker ties it
+    // back to the branch.
     assert(ExtractionJob.run(spark, turns.filter(_.conv_id != vDel),
       cfg.copy(toBranch = Some("dels"))).nonEmpty)
     val stagedTxt = new String(Files.readAllBytes(
@@ -507,23 +499,23 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the publish attempt dies in the worst window: committed, unretired
     SnapshotManifestFormat.testCrashAfterPublishCommit = true
     val crash = intercept[IllegalStateException] {
-      ExtractionJob.publishBranch(spark, out, "dels")
+      SnapshotManifestFormat.publishBranch(spark, out, "dels")
     }
     assert(crash.getMessage.contains("injected test crash"), crash.getMessage)
-    val headAfterCrash = ExtractionJob.latestSnapshot(out).get
+    val headAfterCrash = SnapshotManifestFormat.latestSnapshot(out).get
     assert(headAfterCrash == s0 + 2, "the merged snapshot must be live despite the crash")
     assert(Files.exists(SnapshotManifestFormat.publishIntentPath(out, "dels")),
       "the intent marker must survive the crash window")
 
     // resume: reports the SAME snapshot id, finishes retirement, commits
-    // nothing new (pre-marker, this threw a spurious bucket-overlap
-    // conflict against the publish's own re-stamped delete dirs)
-    val resumed = ExtractionJob.publishBranch(spark, out, "dels")
+    // nothing new (not a spurious bucket-overlap conflict against the
+    // publish's own re-stamped delete dirs)
+    val resumed = SnapshotManifestFormat.publishBranch(spark, out, "dels")
     assert(resumed == headAfterCrash, s"expected idempotent resume at $headAfterCrash, got $resumed")
-    assert(ExtractionJob.branches(out).isEmpty)
+    assert(SnapshotManifestFormat.branches(out).isEmpty)
     assert(!Files.exists(Paths.get(out, "snapshots", "snap-branch-dels.json")))
     assert(!Files.exists(SnapshotManifestFormat.publishIntentPath(out, "dels")))
-    assert(ExtractionJob.latestSnapshot(out).contains(headAfterCrash),
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(headAfterCrash),
       "resume must not commit a second snapshot")
 
     // semantics: the deletion AND the head edit are both visible
@@ -539,27 +531,26 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 8)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
 
     // a stager that died between its ref write and its manifest write:
     // ref with a run token, no branch manifest, no snap-<id>.json
     Files.write(Paths.get(out, "snapshots", "branch-ghost"),
       s"${s0 + 1} deadbeef".getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-    // the table stays fully writable — pre-fix, the legacy-branch freeze
-    // misfired on this remnant and pointed at a nonexistent snap file
+    // the table stays fully writable: the remnant freezes nothing
     val edit = turns.map(t => t.copy(text = t.text + "\nSuite: 1Z"))
     assert(ExtractionJob.run(spark, edit, cfg).nonEmpty)
-    assert(ExtractionJob.latestSnapshot(out).contains(s0 + 1))
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(s0 + 1))
 
     // publishing the remnant reports the truth instead of guessing that
     // some other writer's snapshot was this branch's publish
     val e = intercept[IllegalStateException] {
-      ExtractionJob.publishBranch(spark, out, "ghost")
+      SnapshotManifestFormat.publishBranch(spark, out, "ghost")
     }
     assert(e.getMessage.contains("abandonBranch"), e.getMessage)
-    ExtractionJob.abandonBranch(out, "ghost")
-    assert(ExtractionJob.branches(out).isEmpty)
+    SnapshotManifestFormat.abandonBranch(out, "ghost")
+    assert(SnapshotManifestFormat.branches(out).isEmpty)
     assert(rows(ExtractionJob.readCommitted(spark, out)) ==
       rows(ExtractionJob.extract(spark, edit).toDF()))
   }
@@ -572,7 +563,7 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       autoCompactDeletes = 0)
     val turns = Transcripts.generate(spark, 10)
     assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
-    val s0 = ExtractionJob.latestSnapshot(out).get
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
     val convs = turns.select("conv_id").distinct().as[String].collect().sorted
     val vA = convs.find(c => ExtractionJob.bucketOfConvId(c, 2) == 0).get
     val vB = convs.find(c => ExtractionJob.bucketOfConvId(c, 2) == 1).get
@@ -584,36 +575,39 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       cfg.copy(toBranch = Some("crashy"))).nonEmpty)
     assert(ExtractionJob.run(spark, headEdit, cfg).nonEmpty) // head moves
 
-    // snapshot the branch artifacts, publish (cherry-pick), then restore
-    // them — exactly the on-disk state of a publish that committed its
-    // merged snapshot but crashed before retirement
+    // the publish attempt dies in the worst window (committed, unretired);
+    // the resume finishes the retirement from the intent marker alone,
+    // reports the SAME snapshot id and commits nothing new
     val fmt = SnapshotManifestFormat
-    val manPath = Paths.get(out, "snapshots", "snap-branch-crashy.json")
-    val refPath = Paths.get(out, "snapshots", "branch-crashy")
-    val linPath = Paths.get(out, "lineage", "lineage-branch-crashy.json")
-    val manBytes = Files.readAllBytes(manPath)
-    val refBytes = Files.readAllBytes(refPath)
-    val linBytes = Files.readAllBytes(linPath)
-    val published = ExtractionJob.publishBranch(spark, out, "crashy")
-    assert(published == s0 + 2)
-    Files.write(manPath, manBytes)
-    Files.write(refPath, refBytes)
-    Files.write(linPath, linBytes)
-
-    // the resumed publish detects the already-published delta, finishes
-    // the retirement, and reports the SAME snapshot id — no double-apply
-    val resumed = ExtractionJob.publishBranch(spark, out, "crashy")
-    assert(resumed == published, s"expected idempotent resume at $published, got $resumed")
-    assert(ExtractionJob.branches(out).isEmpty)
-    assert(!Files.exists(manPath) && !Files.exists(linPath))
-    assert(ExtractionJob.latestSnapshot(out).contains(s0 + 2),
-      "resume must not commit a second snapshot")
+    def crashThenResume(name: String): Int = {
+      fmt.testCrashAfterPublishCommit = true
+      val crash = intercept[IllegalStateException](fmt.publishBranch(spark, out, name))
+      assert(crash.getMessage.contains("injected test crash"), crash.getMessage)
+      val published = fmt.latestSnapshot(out).get
+      val resumed = fmt.publishBranch(spark, out, name)
+      assert(resumed == published, s"expected idempotent resume at $published, got $resumed")
+      assert(fmt.branches(out).isEmpty)
+      assert(!Files.exists(Paths.get(out, "snapshots", s"snap-branch-$name.json")) &&
+        !Files.exists(Paths.get(out, "lineage", s"lineage-branch-$name.json")) &&
+        !Files.exists(fmt.publishIntentPath(out, name)))
+      assert(fmt.latestSnapshot(out).contains(published), "resume must not commit a second snapshot")
+      resumed
+    }
+    // a cherry-pick carrying delta files (the head moved while it pended)
+    assert(crashThenResume("crashy") == s0 + 2)
     val both = turns.map { t =>
       if (t.conv_id == vA) t.copy(text = t.text + "\nSuite: 4B")
       else if (t.conv_id == vB) t.copy(text = t.text + "\nSuite: 9C") else t
     }
     assert(rows(ExtractionJob.readCommitted(spark, out)) ==
       rows(ExtractionJob.extract(spark, both).toDF()))
+    // a data-less fast-forward: a delete-only stage on the unmoved head
+    val gone = convs.find(c => c != vA && c != vB).get
+    assert(ExtractionJob.run(spark, both.filter(_.conv_id != gone),
+      cfg.copy(toBranch = Some("dels"))).nonEmpty)
+    assert(crashThenResume("dels") == s0 + 3)
+    assert(rows(ExtractionJob.readCommitted(spark, out)) ==
+      rows(ExtractionJob.extract(spark, both.filter(_.conv_id != gone)).toDF()))
   }
 
   test("branch retention: expireBranches abandons only stale stages and frees their files for GC") {
@@ -632,14 +626,14 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     stage("stale1", convs.head)
     stage("stale2", convs.last)
-    assert(ExtractionJob.branches(out).keySet == Set("stale1", "stale2"))
+    assert(SnapshotManifestFormat.branches(out).keySet == Set("stale1", "stale2"))
     // a generous TTL abandons nothing — both stages are seconds old
-    assert(ExtractionJob.expireBranches(out, olderThanMs = 24L * 3600 * 1000).isEmpty)
-    assert(ExtractionJob.branches(out).keySet == Set("stale1", "stale2"))
+    assert(SnapshotManifestFormat.expireBranches(out, olderThanMs = 24L * 3600 * 1000).isEmpty)
+    assert(SnapshotManifestFormat.branches(out).keySet == Set("stale1", "stale2"))
     // TTL 0: every stage is older than "now" — both abandoned, files GC'd
     val before = dataFiles(out)
-    assert(ExtractionJob.expireBranches(out, olderThanMs = 0L) == Seq("stale1", "stale2"))
-    assert(ExtractionJob.branches(out).isEmpty)
+    assert(SnapshotManifestFormat.expireBranches(out, olderThanMs = 0L) == Seq("stale1", "stale2"))
+    assert(SnapshotManifestFormat.branches(out).isEmpty)
     assert(dataFiles(out).size < before.size,
       "abandoning the stale stages must GC their branch-only data files")
     // the published table is untouched
@@ -667,7 +661,7 @@ class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a.schemaChanges.isEmpty, s"unexpected drift: ${a.schemaChanges}")
     assert(a.bucketRowDeltas.size == 1 && a.bucketRowDeltas.values.head == victimTurns,
       s"expected one bucket +$victimTurns raw rows, got ${a.bucketRowDeltas}")
-    ExtractionJob.abandonBranch(out, "delta")
+    SnapshotManifestFormat.abandonBranch(out, "delta")
 
     // low-level table whose branch ADDS a column: drift is reported as
     // "+name type" without tripping `ok` (evolution is a legitimate
