@@ -179,6 +179,7 @@ object JobMain {
         require(eq > 0, s"--set-prop expects KEY=VALUE (empty VALUE retires the key), got: $a")
         kv.substring(0, eq) -> kv.substring(eq + 1)
       }.toMap
+    SnapshotManifestFormat.requireValidProps(setProps)
     val toBranch: Option[String] =
       args.find(_.startsWith("--to-branch=")).map { a =>
         val n = a.stripPrefix("--to-branch=")

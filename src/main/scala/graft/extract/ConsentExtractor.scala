@@ -57,7 +57,6 @@ object ConsentExtractor {
     "parent’s name", "parent's name", "guardian’s name", "guardian's name",
     "parent/guardian’s name", "parent/guardian's name")
   private val tagRe = "<[^>]+>".r
-  private val brSplitRe = java.util.regex.Pattern.compile("<br>")
   // one-pass DFAs over the witness/doctor banks (these run per <br> segment
   // of every consent body)
   private val witnessQuickTokens = Vector("witness", "doctor", "dr.", "dentist",
@@ -177,22 +176,6 @@ object ConsentExtractor {
     text = mdBoldRe.replaceAllIn(text, "<strong>$1</strong>")
     text = mdLooseHashRe.replaceAllIn(text, " ")
     text.trim
-  }
-
-  // ---- title case for section names (consent_converter.py:168-203) ----
-  private val lowercaseWords = Set("a", "an", "and", "as", "at", "but", "by",
-    "for", "in", "of", "on", "or", "the", "to", "with")
-
-  def toTitleCase(text: String): String = {
-    if (text == null || text.isEmpty) return text
-    def cap(w: String): String =
-      if (w.isEmpty) w else w.substring(0, 1).toUpperCase + w.substring(1).toLowerCase
-    text.split(" ").filter(_.nonEmpty).zipWithIndex.map { case (word, i) =>
-      if (word.contains("-")) word.split("-", -1).map(cap).mkString("-")
-      else if (i == 0 || "(\"".contains(word.charAt(0).toString)) cap(word)
-      else if (lowercaseWords.contains(word.toLowerCase)) word.toLowerCase
-      else cap(word)
-    }.mkString(" ")
   }
 
   // ---- practice info removal inside joined HTML (consent_converter.py:944-962) ----

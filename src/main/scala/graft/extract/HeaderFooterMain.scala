@@ -188,21 +188,4 @@ object HeaderFooterMain {
     }
     (kept.result(), flagsOut.result())
   }
-
-  /** Positional heuristic (header_footer_manager.py:185-215): first/last 5%
-    * of lines + practice info → header/footer. */
-  private val positionIndicatorsAC = MultiSubstring(Vector("page ", "of ", "©",
-    "copyright", "all rights reserved", "confidential", "proprietary",
-    "revised", "version", "form id", "document id"))
-
-  def isLikelyHeaderFooter(line: String, lineIndex: Int, totalLines: Int): Boolean = {
-    val headerThreshold = math.max(1, (totalLines * 0.05).toInt)
-    val footerThreshold = totalLines - headerThreshold
-    val positional = lineIndex < headerThreshold || lineIndex >= footerThreshold
-    if (!positional) return false
-    if (isPracticeInformation(line)) return true
-    // "page "/"of " end in a space, so the trim matters; fold spares the
-    // lowercase copy and this runs only on the positional 10% of lines
-    positionIndicatorsAC.containsAnyFold(line.trim)
-  }
 }

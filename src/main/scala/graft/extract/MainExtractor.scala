@@ -604,11 +604,6 @@ object MainExtractor {
     if (formType == "patient_info") fields.filter(f => referenceKeys.contains(f.key)) else fields
 
   // ---------- routing (pdf_to_json_converter.py:2874-2904) ----------
-  def extractFieldsFromText(textLines: Seq[String]): (String, Vector[FieldInfo]) = {
-    val (ft, _, fields) = extractFieldsAndClassify(textLines)
-    (ft, fields)
-  }
-
   /** Routing plus the modular subtype classification, sharing ONE joined
     * lowercase view of the document (the join is ~the whole cost of
     * classification on large forms; computing it twice per turn was the

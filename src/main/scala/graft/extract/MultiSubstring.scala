@@ -350,39 +350,6 @@ final class MultiSubstring private (
     (seenPre, seenFull)
   }
 
-
-  /** One pass computing BOTH counts the classifier needs: distinct patterns
-    * occurring within the prefix s[0, prefixEnd) and within all of s. An
-    * occurrence lies in the prefix iff its end offset is <= prefixEnd.
-    * Equivalent to (bank.count(s.take(prefixEnd).contains), bank.count(s.contains)).
-    */
-  def countDistinctPrefixAndFull(s: String, prefixEnd: Int): (Int, Int) = {
-    if (size == 0) return (0, 0)
-    val seenPre = new Array[Boolean](size)
-    val seenFull = new Array[Boolean](size)
-    var cntPre = 0
-    var cntFull = 0
-    var st = 0
-    var i = 0
-    val n = s.length
-    while (i < n && (cntFull < size || (cntPre < size && i < prefixEnd))) {
-      val v = nextF(st * width + cls(s.charAt(i)))
-      st = v & 0x7FFF
-      if (v < 0) {
-        val o = out(st)
-        var j = 0
-        while (j < o.length) {
-          val id = o(j)
-          if (!seenFull(id)) { seenFull(id) = true; cntFull += 1 }
-          if (i + 1 <= prefixEnd && !seenPre(id)) { seenPre(id) = true; cntPre += 1 }
-          j += 1
-        }
-      }
-      i += 1
-    }
-    (cntPre, cntFull)
-  }
-
   /** Number of DISTINCT patterns occurring in s (early exit once all seen).
     * Equivalent to bank.count(s.contains). */
   def countDistinct(s: String): Int = {
@@ -459,37 +426,6 @@ final class MultiSubstring private (
       }
     }
     false
-  }
-
-  /** countDistinct(s.toLowerCase) without building the lowered string
-    * (lowercase pattern bank required, like the other *Fold scans). */
-  def countDistinctFold(s: String): Int = {
-    if (size == 0) return 0
-    val seen = new Array[Boolean](size)
-    var cnt = 0
-    var st = 0
-    var i = 0
-    val n = s.length
-    while (i < n && cnt < size) {
-      if (st == 0) {
-        while (i < n && { val c = s.charAt(i); c < 256 && rootStayFold(c) }) i += 1
-      }
-      if (i < n) {
-        val v = nextF(st * width + clsFold(s.charAt(i)))
-        st = v & 0x7FFF
-        if (v < 0) {
-          val o = out(st)
-          var j = 0
-          while (j < o.length) {
-            val id = o(j)
-            if (!seen(id)) { seen(id) = true; cnt += 1 }
-            j += 1
-          }
-        }
-        i += 1
-      }
-    }
-    cnt
   }
 }
 

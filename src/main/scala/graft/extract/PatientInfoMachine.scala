@@ -176,19 +176,9 @@ object PatientInfoMachine {
         "Dad" -> JStr("Dad"), "Step Parent" -> JStr("Step Parent"),
         "Shared Custody" -> JStr("Shared Custody"), "Guardian" -> JStr("Guardian"))))
 
-  def detectRadioQuestion(line: String): Option[(String, JArr)] =
-    detectRadioQuestionLower(line.toLowerCase)
-
-  /** Variant taking the caller's already-lowercased line (the machine keeps
-    * one lowercase view per line); plain loop, no per-call closure. */
   // one DFA pass gates the whole bank (this runs on EVERY machine line;
   // the per-bank contains scans only run when some gate token is present)
   private lazy val radioBankGateAC = MultiSubstring(radioBanks.map(_._1))
-
-  def detectRadioQuestionLower(lower: String): Option[(String, JArr)] = {
-    if (!radioBankGateAC.containsAny(lower)) return None
-    detectRadioQuestionUngated(lower)
-  }
 
   private def detectRadioQuestionUngated(lower: String): Option[(String, JArr)] = {
     var i = 0

@@ -195,7 +195,6 @@ object SpecNormalization {
   }
 
   private val escapedUnicodeRe = "\\\\u[0-9a-fA-F]{4}".r
-  private val unicodeBlockRe = "[\\uf000-\\uffff]".r
 
   /** split("\\s+").filter(nonEmpty).mkString(" ") without the regex engine:
     * collapse ASCII \s runs to one space, trim edges. */
@@ -687,10 +686,4 @@ object RecordsRelease {
     FieldInfo("date_signed", "Date Signed", "date", "Signature",
       optional = false, JObj.of("input_type" -> JStr("past")), 401),
     in("initials_2", "Initial", "Signature", "initials", 402))
-}
-
-/** Patient-info route: the NPF 86-field machine. */
-object PatientInfo {
-  def extract(textLines: Seq[String]): Vector[FieldInfo] =
-    PatientInfoMachine.extract(textLines)
 }

@@ -24,13 +24,10 @@ object Text3Formatter {
       ("Payment is due at the time services are rendered",
         "<strong>Payment is due at the time services are rendered</strong>")
 
-  private val headerBoldPairsArr = headerBoldPairs.toArray
-
   // one-pass equivalent of the replace chain: targets never collide at the
   // same position ("Payment:" vs "Payment is due..." differ at char 7) and
   // no replacement creates a new target occurrence
-  private def boldHeaders(text0: String): String =
-    StrUtil.replaceLiterals(text0, headerBoldPairsArr)
+  private val headerBoldPairsArr = headerBoldPairs.toArray
 
   /** temporary_html_text: bullets preserved (`- `), IS N OT unfixed,
     * If-we-are sentences unbolded, Scheduling/Authorizations sections absent.

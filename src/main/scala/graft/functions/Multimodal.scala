@@ -168,8 +168,6 @@ object Multimodal {
   /** Decoded image: RGB row-major top-down pixel bytes plus dimensions. */
   final case class Decoded(width: Int, height: Int, channels: Int, pixels: Array[Byte])
 
-  final case class MediaMeta(width: Int, height: Int, channels: Int, bytes: Int)
-
   /** Format dispatch on container magic — the codec registry shape a real
     * JPEG/PNG decoder would slot into. */
   def decode(blob: Array[Byte]): Decoded =
@@ -487,34 +485,5 @@ object Multimodal {
       }
     }.toDF("doc_id", "width", "height", "channels", "payload_bytes", "feature_checksum")
       .orderBy("doc_id")
-  }
-
-  /** The production read shape: blobs come from REAL parquet binary columns
-    * (doc_id:bigint, img:binary, wav:binary, vid:binary) — a table scan,
-    * not in-query synthesis — then the same batched decode. Only metadata
-    * and checksums leave the partition; the multi-KB blobs never shuffle.
-    * (The q24/q35 oracle queries synthesize blobs in-query because the
-    * DuckDB oracle needs deterministic inputs; this entry point + its spec
-    * cover the scan-a-binary-column path end to end.)
-    */
-  def pipelineFromBlobs(spark: SparkSession, blobs: DataFrame): DataFrame = {
-    import spark.implicits._
-    blobs.select(col("doc_id"), col("img"), col("wav"), col("vid"))
-      .as[(Long, Array[Byte], Array[Byte], Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (docId, imgBlob, wavBlob, vidBlob) =>
-          // binary parquet columns are nullable: fail with the doc id, not
-          // an opaque NPE from inside a codec
-          require(imgBlob != null && wavBlob != null && vidBlob != null,
-            s"null blob column for doc $docId")
-          val img = decode(imgBlob)
-          val audio = decodeWav(wavBlob)
-          val sampled = sampleFrames(vidBlob, 3)
-          (docId, img.width, img.height, featureChecksum(features(img)),
-            audio.sampleRate, audioChecksum(audio),
-            videoFrameCount(vidBlob), videoChecksum(sampled))
-        }
-      }.toDF("doc_id", "width", "height", "feature_checksum",
-        "sample_rate", "audio_checksum", "n_frames", "video_checksum")
   }
 }

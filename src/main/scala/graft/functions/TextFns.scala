@@ -48,25 +48,6 @@ object TextFns {
     if (score == 0) "und" else best
   }
 
-  // ---- quality scoring ----
-  /** Heuristic doc-quality score in [0,1000]: combines length signal,
-    * alpha ratio, punctuation ratio and mean word length. Deterministic
-    * integer output (scaled by 1000) for engine/oracle comparability.
-    */
-  def qualityScore(text: String): Int = {
-    if (text == null || text.isEmpty) return 0
-    val toks = tokens(text)
-    if (toks.isEmpty) return 0
-    val alpha = text.count(_.isLetter).toDouble / text.length
-    val punct = text.count(c => ",.;:!?".indexOf(c) >= 0).toDouble / text.length
-    val meanWord = toks.map(_.length).sum.toDouble / toks.length
-    val lenSig = math.min(1.0, toks.length / 100.0)
-    val wordSig = math.max(0.0, 1.0 - math.abs(meanWord - 5.0) / 5.0)
-    val punctSig = math.max(0.0, 1.0 - punct * 10)
-    val s = 0.35 * alpha + 0.25 * lenSig + 0.2 * wordSig + 0.2 * punctSig
-    (s * 1000).toInt
-  }
-
   // ---- hashing (xxhash-style 64-bit mix; public-domain finalizer) ----
   /** 64-bit string hash with a seed — splitmix64-finalized polynomial hash.
     * Deterministic across JVMs (no String.hashCode reliance beyond content).
@@ -212,8 +193,6 @@ object TextFns {
     while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
     out
   }
-
-  def hammingDistance(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   // ---- document fingerprinting (winnowing-style rolling hash) ----
   /** Karp-Rabin rolling hashes of char w-grams, winnowed: keep the minimum

@@ -83,16 +83,4 @@ object Slugify {
     }
     if (sb.length() == 0) fallback else sb.toString
   }
-
-  /** Detector slugify (/root/reference/field_detection/field_detector.py:170-177):
-    * keeps `\w` (digits + underscore), different regex — both semantics exist
-    * in the reference and both are needed (SURVEY.md §2.5 #39).
-    */
-  private val nonWordRe = java.util.regex.Pattern.compile("[^\\w\\s-]")
-  private val wsDashRe = java.util.regex.Pattern.compile("[-\\s]+")
-
-  def slugifyDetector(text: String): String = {
-    val cleaned = nonWordRe.matcher(text).replaceAll("").trim.toLowerCase
-    wsDashRe.matcher(cleaned).replaceAll("_")
-  }
 }

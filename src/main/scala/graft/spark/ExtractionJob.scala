@@ -475,19 +475,15 @@ object ExtractionJob {
     val fieldSumMetrics = waveBuckets.map(b =>
       sum(when(col("bucket") === b, col("field_count")).otherwise(lit(0L)))
         .as(s"fsum_$b"))
-    // write-locality exchange: co-locate each bucket, restore stable order
-    // (leading `bucket` key: see rewriteSorted)
+    // write-locality exchange: co-locate each bucket; the writer restores
+    // key order and reads per-file row counts from the parquet footers
     val staging = s"${config.outDir}/staging-$waveTag"
-    extracted
+    val observed = extracted
       .observe(obs, fieldSumMetrics.head, fieldSumMetrics.tail: _*)
       .repartition(waveBuckets.size, col("bucket"))
-      .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-      .write.mode(SaveMode.Overwrite)
-      .options(SnapshotManifestFormat.convBloomOptions)
-      .partitionBy("bucket").parquet(staging)
+    val perFile = SnapshotManifestFormat.writeSortedBuckets(format, observed, staging)
 
     val extractMs = (System.nanoTime() - t0) / 1000000
-    val now = java.time.Instant.now().toString
     val fieldSums: Map[Int, Long] = waveBuckets.map { b =>
       // getOrElse: a zero-row wave (delete-only conv-grained delta) may
       // observe no metrics at all
@@ -496,15 +492,8 @@ object ExtractionJob {
         case n: Number => n.longValue()
       })
     }.toMap
-    // per-file row counts come from the parquet FOOTERS (pure metadata
-    // reads — at 100 TB this replaces a second full-output scan with a few
-    // KB per file; file paths are preserved by the promote's directory move)
-    val perFile = format.listStagedFiles(spark, staging).toVector
-    val lineage = perFile.groupBy(_.bucket).map { case (bucket, fs) =>
-      LineageRow(commitSeq, bucket.toLong, fs.map(_.rowCount).sum,
-        fieldSums.getOrElse(bucket, 0L), extractMs, now)
-    }.toVector
-    (staging, perFile.map(_.copy(seq = commitSeq)), lineage)
+    (staging, perFile.map(_.copy(seq = commitSeq)),
+      SnapshotManifestFormat.bucketLineage(commitSeq, perFile, fieldSums, extractMs))
   }
 
   /** Conversation-grained incremental run (config.convGrained): per-conv
@@ -682,25 +671,11 @@ object ExtractionJob {
     // writer-unique names (see runConvGrained's runToken note)
     val runToken = SnapshotManifestFormat.newRunToken()
     val staging = s"$outDir/staging-sortrewrite-$seq-$runToken"
-    // the leading `bucket` sort key makes the plan's output ordering
-    // satisfy the partitioned write's required ordering. Without it the
-    // planned write adds its own sort on `bucket` alone and the optimizer
-    // drops the (conv_id, turn_idx) sort beneath it as redundant, so the
-    // files come out in no key order. Every partitioned write of table
-    // data sorts this way.
-    format.readCommitted(spark, outDir)
-      .repartition(buckets.size, col("bucket"))
-      .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", targetRowsPerFile)
-      .options(SnapshotManifestFormat.convBloomOptions)
-      .partitionBy("bucket").parquet(staging)
-    val newFiles = format.listStagedFiles(spark, staging).toVector.map(_.copy(seq = seq))
-    val now = java.time.Instant.now().toString
-    val lineage = newFiles.groupBy(_.bucket).map { case (b, fs) =>
-      LineageRow(seq, b.toLong, fs.map(_.rowCount).sum, 0L, 0L, now)
-    }.toVector
-    format.commitWave(outDir, staging, seq, man.buckets, newFiles, lineage,
+    val committed = format.readCommitted(spark, outDir).repartition(buckets.size, col("bucket"))
+    val newFiles = SnapshotManifestFormat.writeSortedBuckets(format, committed, staging,
+      maxRecordsPerFile = targetRowsPerFile).map(_.copy(seq = seq))
+    format.commitWave(outDir, staging, seq, man.buckets, newFiles,
+      SnapshotManifestFormat.bucketLineage(seq, newFiles),
       man.inputFps, additive = false, convFpsDir = man.convFpsDir,
       deleteDirs = Seq.empty, // applied by the rewrite
       fpMode = man.fpMode, bucketCount = man.bucketCount, operation = "rewrite")
@@ -732,19 +707,12 @@ object ExtractionJob {
     // writer-unique names (see runConvGrained's runToken note)
     val runToken = SnapshotManifestFormat.newRunToken()
     val staging = s"$outDir/staging-rebucket-$seq-$runToken"
-    format.readCommitted(spark, outDir)
+    val rehashed = format.readCommitted(spark, outDir)
       .drop("bucket")
       .withColumn("bucket", bucketOf(newBuckets))
       .repartition(newBuckets, col("bucket"))
-      .sortWithinPartitions("bucket", "conv_id", "turn_idx") // leading bucket: see rewriteSorted
-      .write.mode(SaveMode.Overwrite)
-      .options(SnapshotManifestFormat.convBloomOptions)
-      .partitionBy("bucket").parquet(staging)
-    val newFiles = format.listStagedFiles(spark, staging).toVector.map(_.copy(seq = seq))
-    val now = java.time.Instant.now().toString
-    val lineage = newFiles.groupBy(_.bucket).map { case (b, fs) =>
-      LineageRow(seq, b.toLong, fs.map(_.rowCount).sum, 0L, 0L, now)
-    }.toVector
+    val newFiles = SnapshotManifestFormat.writeSortedBuckets(format, rehashed, staging)
+      .map(_.copy(seq = seq))
     val (newConvFpsDir, fps) = man.convFpsDir match {
       case Some(d) if new java.io.File(s"$outDir/conv_fps/$d").isDirectory =>
         val nd = s"fp-$seq-$runToken"
@@ -756,7 +724,8 @@ object ExtractionJob {
       case _ => (None, Map.empty[Int, Long])
     }
     format.commitWave(outDir, staging, seq, (0 until newBuckets).toSet, newFiles,
-      lineage, fps, additive = false, convFpsDir = newConvFpsDir,
+      SnapshotManifestFormat.bucketLineage(seq, newFiles), fps, additive = false,
+      convFpsDir = newConvFpsDir,
       deleteDirs = Seq.empty, // applied by the rewrite
       fpMode = if (newConvFpsDir.isDefined) Some("conv") else None,
       bucketCount = Some(newBuckets), operation = "rewrite")

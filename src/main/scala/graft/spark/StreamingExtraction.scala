@@ -1,8 +1,7 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
 /** Structured Streaming surface (SURVEY.md §7.5): the alternative resume
   * mechanism — `readStream` over the transcripts table, the same fused
@@ -209,68 +208,4 @@ object StreamingExtraction {
     }
     0L // unreachable
   }
-
-  /** Watermarked windowed aggregation over a turn stream: turns per
-    * conversation per hour — the streaming-state shape (event-time window +
-    * watermark) the engine needs for live transcript feeds.
-    */
-  def turnsPerConversationWindow(turns: Dataset[Turn]): DataFrame =
-    turns
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("conv_id"))
-      .agg(count(lit(1)).as("n_turns"), sum(length(col("text"))).as("chars"))
-
-  /** Streaming exact dedup with BOUNDED state (flatMapGroupsWithState,
-    * event-time timeout): the first turn seen for each content hash is
-    * emitted immediately (`kind = "first"`); later duplicates within the
-    * horizon are suppressed but counted in state. When the watermark
-    * passes a hash's last activity + horizon, its state times out and one
-    * summary row (`kind = "expired"`, with the duplicate count) is
-    * emitted, then the state is dropped — so at 100 TB the state store
-    * holds only the hashes active inside the horizon, never full history.
-    * The built-in dropDuplicates can suppress; it cannot report counts.
-    *
-    * Dedup key = TextFns.hash64 of (tool, text) — the q10 exact-dedup identity.
-    */
-  def streamingDedupFirstSeen(spark: SparkSession, turns: Dataset[Turn],
-                              horizonSec: Long = 3600L): Dataset[DedupEvent] = {
-    import spark.implicits._
-    val hMs = horizonSec * 1000L
-    turns
-      .withWatermark("ts", s"$horizonSec seconds")
-      .groupByKey(t => graft.functions.TextFns.hash64(t.tool + " " + t.text))
-      .flatMapGroupsWithState[DedupState, DedupEvent](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (hash: Long, it: Iterator[Turn], state: GroupState[DedupState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(DedupEvent("expired", hash, s.firstConv, s.firstTurnIdx, s.dups))
-          } else {
-            val batch = it.toArray
-            // deterministic first: earliest (ts, conv_id, turn_idx) in batch
-            java.util.Arrays.sort(batch, Ordering.by((t: Turn) => (t.ts.getTime, t.conv_id, t.turn_idx)))
-            val known = state.getOption
-            val head = batch.head
-            val s0 = known.getOrElse(DedupState(head.conv_id, head.turn_idx, 0L))
-            val newDups = batch.length - (if (known.isEmpty) 1 else 0)
-            val s1 = s0.copy(dups = s0.dups + newDups)
-            state.update(s1)
-            // expire once the watermark passes last activity + horizon
-            val maxTs = batch.map(_.ts.getTime).max
-            state.setTimeoutTimestamp(maxTs + hMs)
-            if (known.isEmpty)
-              Iterator.single(DedupEvent("first", hash, head.conv_id, head.turn_idx, 0L))
-            else Iterator.empty
-          }
-      }
-  }
 }
-
-/** Per-hash dedup state: the first-seen row's identity + duplicate count. */
-final case class DedupState(firstConv: String, firstTurnIdx: Int, dups: Long)
-
-/** Output of the streaming dedup: `first` = first occurrence (emitted
-  * immediately), `expired` = end-of-horizon summary with duplicate count. */
-final case class DedupEvent(kind: String, content_hash: Long, conv_id: String,
-                            turn_idx: Int, dups: Long)

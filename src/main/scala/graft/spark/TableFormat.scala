@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -742,17 +742,17 @@ object SnapshotManifestFormat extends TableFormat {
   private[spark] def deleteRecursively(root: Path): Unit =
     StateDirs.deleteRecursively(root)
 
+  /** A staged/committed parquet DATA file (not a marker or hidden file) —
+    * the one filter both the commit's file listing and its schema read use. */
+  private[spark] def isDataFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
+
   /** Row counts come from each parquet file's FOOTER metadata — a
     * driver-side read of a few KB per file instead of a second scan of the
     * wave's data. File count per wave is bounded by the write's partition
     * count, so the driver-side loop is manifest-sized (the same loop a real
     * Iceberg commit performs when it collects DataFile stats).
     */
-  /** A staged/committed parquet DATA file (not a marker or hidden file) —
-    * the one filter both the commit's file listing and its schema read use. */
-  private[spark] def isDataFile(name: String): Boolean =
-    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
-
   override def listStagedFiles(spark: SparkSession, staging: String): Seq[FileEntry] = {
     val hconf = spark.sessionState.newHadoopConf()
     val stagingPath = Paths.get(staging)
@@ -818,20 +818,18 @@ object SnapshotManifestFormat extends TableFormat {
     Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  override def commitWave(outDir: String, staging: String, snapshotId: Int,
-                          buckets: Set[Int], files: Seq[FileEntry], lineage: Seq[LineageRow],
-                          inputFps: Map[Int, Long], additive: Boolean = false,
-                          convFpsDir: Option[String] = None,
-                          deleteDirs: Seq[String] = Seq.empty,
-                          fpMode: Option[String] = None,
-                          bucketCount: Option[Int] = None,
-                          operation: String = "append",
-                          props: Map[String, String] = Map.empty,
-                          schemaDdl: Option[String] = None,
-                          toBranch: Option[String] = None): Unit = {
-    // flat-JSON manifest encoding: a '{'/'}' inside a props value would
-    // break the object-scoped parse regex — refuse loudly at write time
+  /** Every top-level key [[commitWave]] writes (see [[parseManifest]]). */
+  private val manifestKeys = Set("snapshot_id", "committed_buckets", "operation", "schema",
+    "props", "bucket_count", "delete_dirs", "fp_mode", "conv_fps", "input_fps", "files",
+    "committed_at")
+
+  /** Refuse sticky props the manifest cannot carry, before anything is
+    * written: [[commitWave]] checks every commit, and JobMain checks its
+    * --set-prop arguments before it runs. */
+  private[graft] def requireValidProps(props: Map[String, String]): Unit =
     props.foreach { case (k, v) =>
+      // flat-JSON manifest encoding: a '{'/'}' inside a props value would
+      // break the object-scoped parse regex — refuse loudly at write time
       require(!k.exists(c => c == '{' || c == '}') && !v.exists(c => c == '{' || c == '}'),
         s"manifest props must not contain braces: $k=$v")
       // the ref.* namespace is reserved for snapshot tags: a free-form
@@ -844,10 +842,26 @@ object SnapshotManifestFormat extends TableFormat {
         require(k.stripPrefix("ref.").matches("[A-Za-z0-9._-]+"),
           s"invalid tag name in prop key '$k'")
       }
-      // committed_at is the manifest's own trailing field; a prop with
-      // that key would shadow it for the parser (props serialize first)
-      require(k != "committed_at", "prop key 'committed_at' is reserved")
+      // parseManifest finds each manifest key with its own first-match
+      // regex and props serialize before the optional keys, so a prop key
+      // that spells a manifest key, or ends in one after an (escaped)
+      // quote, would read back as the manifest's own field
+      require(!manifestKeys.exists(m => k == m || k.endsWith("\"" + m)),
+        s"prop key '$k' is reserved: it would read back as a manifest key")
     }
+
+  override def commitWave(outDir: String, staging: String, snapshotId: Int,
+                          buckets: Set[Int], files: Seq[FileEntry], lineage: Seq[LineageRow],
+                          inputFps: Map[Int, Long], additive: Boolean = false,
+                          convFpsDir: Option[String] = None,
+                          deleteDirs: Seq[String] = Seq.empty,
+                          fpMode: Option[String] = None,
+                          bucketCount: Option[Int] = None,
+                          operation: String = "append",
+                          props: Map[String, String] = Map.empty,
+                          schemaDdl: Option[String] = None,
+                          toBranch: Option[String] = None): Unit = {
+    requireValidProps(props)
     // Optimistic-concurrency precondition (Iceberg's commit re-check): the
     // commit was computed against snapshot `snapshotId - 1`; if `_latest`
     // has moved past that, another writer won the race — refuse BEFORE
@@ -1643,6 +1657,41 @@ object SnapshotManifestFormat extends TableFormat {
     "parquet.bloom.filter.enabled#conv_id" -> "true",
     "parquet.bloom.filter.expected.ndv#conv_id" -> "20000")
 
+  /** The one writer of table data files: stage `data` under `staging` as
+    * per-bucket parquet dirs in (conv_id, turn_idx) order, with the conv_id
+    * bloom filter, and return the staged files as `format` lists them
+    * (unstamped: `seq` 0). The caller repartitions by `bucket` first, with
+    * its own partition count. A positive `maxRecordsPerFile` splits each
+    * bucket's run into files of at most that many rows; 0 leaves the
+    * session's `spark.sql.files.maxRecordsPerFile` in force (default 0,
+    * no limit).
+    *
+    * The leading `bucket` sort key makes the plan's output ordering satisfy
+    * the partitioned write's required ordering. Without it the planned
+    * write adds its own sort on `bucket` alone and the optimizer drops the
+    * (conv_id, turn_idx) sort beneath it as redundant, so the files come
+    * out in no key order. */
+  private[graft] def writeSortedBuckets(format: TableFormat, data: Dataset[_], staging: String,
+                                        maxRecordsPerFile: Long = 0L): Vector[FileEntry] = {
+    val writer = data.sortWithinPartitions("bucket", "conv_id", "turn_idx")
+      .write.mode(SaveMode.Overwrite)
+      .options(convBloomOptions)
+    (if (maxRecordsPerFile > 0) writer.option("maxRecordsPerFile", maxRecordsPerFile) else writer)
+      .partitionBy("bucket").parquet(staging)
+    format.listStagedFiles(data.sparkSession, staging).toVector
+  }
+
+  /** Per-bucket lineage rows of commit `seq` over its staged `files`.
+    * Rewrites extract nothing, so their field sums and extract time are 0. */
+  private[graft] def bucketLineage(seq: Int, files: Seq[FileEntry],
+                                   fieldSums: Map[Int, Long] = Map.empty,
+                                   extractMs: Long = 0L): Vector[LineageRow] = {
+    val now = java.time.Instant.now().toString
+    files.groupBy(_.bucket).map { case (b, fs) =>
+      LineageRow(seq, b.toLong, fs.map(_.rowCount).sum, fieldSums.getOrElse(b, 0L), extractMs, now)
+    }.toVector
+  }
+
   /** Token for writer-unique PRE-COMMIT artifact names (staging dirs,
     * delete dirs `snap-<seq>-<token>`, conv-fp sidecars `fp-<seq>-<token>`):
     * concurrent writers computing the same next snapshot id must never
@@ -1763,20 +1812,12 @@ object SnapshotManifestFormat extends TableFormat {
       // the committed view already applies the deletes — rewrite it as
       // clean sorted files, one dir per bucket
       val staging = s"$outDir/staging-compact-$seq-$runToken"
-      readCommitted(spark, outDir)
+      val rows = readCommitted(spark, outDir)
         .where(col("bucket").isin(affected.toSeq: _*))
         .repartition(affected.size, col("bucket"))
-        .sortWithinPartitions("bucket", "conv_id", "turn_idx") // leading bucket: see ExtractionJob.rewriteSorted
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .options(convBloomOptions)
-        .partitionBy("bucket").parquet(staging)
-      val newFiles = listStagedFiles(spark, staging).map(_.copy(seq = seq))
+      val newFiles = writeSortedBuckets(this, rows, staging).map(_.copy(seq = seq))
       val kept = man.files.filterNot(f => affected.contains(f.bucket))
-      // lineage: rewritten row counts (no extraction happened -> field sums 0)
-      val now = java.time.Instant.now().toString
-      val lineage = newFiles.groupBy(_.bucket).map { case (b, fs) =>
-        LineageRow(seq, b.toLong, fs.map(_.rowCount).sum, 0L, 0L, now)
-      }.toVector
+      val lineage = bucketLineage(seq, newFiles)
       // non-additive promote replaces the affected bucket dirs (base +
       // delta files) with the compacted ones; fingerprints and the conv-fp
       // sidecar pointer are carried through unchanged
@@ -1833,19 +1874,11 @@ object SnapshotManifestFormat extends TableFormat {
     val runToken = newRunToken()
     val staging = s"$outDir/staging-binpack-$seq-$runToken"
     // committed view of ONLY the small files: deletes applied, nothing else read
-    readAt(spark, outDir, man.copy(files = toRewrite))
+    val rows = readAt(spark, outDir, man.copy(files = toRewrite))
       .repartition(byBucket.size, col("bucket"))
-      .sortWithinPartitions("bucket", "conv_id", "turn_idx") // leading bucket: see ExtractionJob.rewriteSorted
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .options(convBloomOptions)
-      .partitionBy("bucket").parquet(staging)
-    val newFiles = listStagedFiles(spark, staging).map(_.copy(seq = seq))
+    val newFiles = writeSortedBuckets(this, rows, staging).map(_.copy(seq = seq))
     val kept = man.files.filterNot(f => rewritten.contains(f.path))
-    val now = java.time.Instant.now().toString
-    val lineage = newFiles.groupBy(_.bucket).map { case (b, fs) =>
-      LineageRow(seq, b.toLong, fs.map(_.rowCount).sum, 0L, 0L, now)
-    }.toVector
-    commitWave(outDir, staging, seq, man.buckets, kept ++ newFiles, lineage,
+    commitWave(outDir, staging, seq, man.buckets, kept ++ newFiles, bucketLineage(seq, newFiles),
       man.inputFps, additive = true, convFpsDir = man.convFpsDir,
       deleteDirs = man.deleteDirs, fpMode = man.fpMode,
       bucketCount = man.bucketCount, operation = "rewrite")

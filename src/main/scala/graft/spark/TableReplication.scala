@@ -107,13 +107,9 @@ object TableReplication {
         .select(col("bucket"), col("conv_id"))
       val nDel = delDf.count()
       val staging = s"$dstDir/staging-replica-$queryKey-$batchId"
-      cached.where(col("_change_type") === "insert").drop("_change_type")
+      val inserts = cached.where(col("_change_type") === "insert").drop("_change_type")
         .repartition(col("bucket"))
-        .sortWithinPartitions("bucket", "conv_id", "turn_idx") // leading bucket: see ExtractionJob.rewriteSorted
-        .write.mode(SaveMode.Overwrite)
-        .options(SnapshotManifestFormat.convBloomOptions)
-        .partitionBy("bucket").parquet(staging)
-      val files0 = format.listStagedFiles(spark, staging)
+      val files0 = SnapshotManifestFormat.writeSortedBuckets(format, inserts, staging)
       if (files0.isEmpty && nDel == 0L) {
         dropDir(staging)
         return 0L // empty batch: nothing to commit, nothing to fence

@@ -15,9 +15,9 @@ package graft.tools
   * span them.
   *
   * Usage: CpuBenchDocling [samples=12] [sleepSec=5]
-  * (CpuBench in ProfileExtract.scala is the per-payload breakdown variant;
-  * this one runs the generated docling_md mix with SPACED samples — the
-  * BASELINE.md protocol tool.)
+  * (perfbench's `turn_latency` workload gives the per-layer breakdown,
+  * `extract.*_us_per_turn`; this one runs the generated docling_md mix with
+  * SPACED samples — the BASELINE.md protocol tool.)
   */
 object CpuBenchDocling {
   def main(args: Array[String]): Unit = {

@@ -170,36 +170,6 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException](Multimodal.decodeWav(wavNeg))
   }
 
-  test("binary-column parquet scan feeds the decode pipeline (production read shape)") {
-    import graft.functions.Multimodal
-    val ss = spark
-    import ss.implicits._
-    val dirOut = java.nio.file.Files.createTempDirectory("graft-blobs").toString
-    val rows = (0L until 40L).map { id =>
-      val text = s"doc body $id"
-      (id, Multimodal.synthesizeBlob(id, text), Multimodal.synthesizeWav(id, text),
-        Multimodal.synthesizeVideo(id, text))
-    }
-    rows.toDF("doc_id", "img", "wav", "vid").repartition(4)
-      .write.mode("overwrite").parquet(dirOut)
-    val scanned = spark.read.parquet(dirOut)
-    // the scan really carries binary columns
-    assert(Seq("img", "wav", "vid").forall(c =>
-      scanned.schema(c).dataType == org.apache.spark.sql.types.BinaryType))
-    val got = Multimodal.pipelineFromBlobs(spark, scanned)
-      .collect().map(r => r.getLong(0) ->
-        (r.getLong(3), r.getLong(5), r.getInt(6), r.getLong(7))).toMap
-    assert(got.size == 40)
-    rows.foreach { case (id, img, wav, vid) =>
-      val d = Multimodal.decode(img)
-      val a = Multimodal.decodeWav(wav)
-      val s3 = Multimodal.sampleFrames(vid, 3)
-      assert(got(id) == ((Multimodal.featureChecksum(Multimodal.features(d)),
-        Multimodal.audioChecksum(a), Multimodal.videoFrameCount(vid),
-        Multimodal.videoChecksum(s3))), s"doc $id")
-    }
-  }
-
   test("q35 audio/video pipeline checksums match independent row-local recomputation") {
     import graft.functions.Multimodal
     val texts = spark.read.parquet(s"$dir/documents.parquet")

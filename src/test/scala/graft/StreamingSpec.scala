@@ -3,12 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
 import graft.spark.{StreamingExtraction, Transcripts}
 import java.nio.file.Files
 
 /** Structured Streaming: AvailableNow extraction with checkpoint resume
-  * (no re-extraction of committed files) and watermarked windowed aggs.
+  * (no re-extraction of committed files).
   */
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -55,65 +54,5 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("fields_json").as[String].head()
     val t = Transcripts.turnsFor(3).head
     assert(streamed == graft.extract.Extractor.extractTurn(t.text, t.tool).fieldsJson)
-  }
-
-  test("stateful streaming dedup: first-seen emitted, dups counted, state expires") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[graft.spark.Turn]
-    val deduped = StreamingExtraction.streamingDedupFirstSeen(sp, mem.toDS(), horizonSec = 3600)
-    val q = deduped.writeStream.format("memory").queryName("dedup")
-      .outputMode("append").start()
-    def ts(min: Long) = new java.sql.Timestamp((Transcripts.Epoch + min * 60) * 1000L)
-    def turn(c: String, i: Int, text: String, m: Long) =
-      graft.spark.Turn(c, i, "user", text, "consent_txt", ts(m))
-    val hHello = graft.functions.TextFns.hash64("consent_txt hello doc")
-
-    // batch 1: A, a same-batch duplicate of A, and B
-    mem.addData(turn("c1", 0, "hello doc", 0), turn("c2", 5, "hello doc", 1),
-      turn("c1", 1, "other text", 2))
-    q.processAllAvailable()
-    val r1 = sp.sql("select * from dedup").collect()
-    assert(r1.length == 2 && r1.forall(_.getString(0) == "first"), r1.mkString("|"))
-    val firstA = r1.find(_.getLong(1) == hHello).get
-    assert(firstA.getString(2) == "c1" && firstA.getInt(3) == 0)
-
-    // batch 2: a cross-batch duplicate of A (suppressed) + new C
-    mem.addData(turn("c3", 0, "hello doc", 10), turn("c4", 0, "third text", 12))
-    q.processAllAvailable()
-    val r2 = sp.sql("select * from dedup").collect()
-    assert(r2.count(_.getString(0) == "first") == 3, r2.mkString("|"))
-    assert(r2.count(r => r.getString(0) == "first" && r.getLong(1) == hHello) == 1)
-
-    // batch 3: far-future event pushes the watermark past every horizon —
-    // expired summaries carry the duplicate counts, state is dropped
-    mem.addData(turn("c9", 0, "way later", 600))
-    q.processAllAvailable()
-    val r3 = sp.sql("select * from dedup").collect()
-    val expired = r3.filter(_.getString(0) == "expired")
-    assert(expired.length == 3, r3.mkString("|"))
-    val expA = expired.find(_.getLong(1) == hHello).get
-    assert(expA.getLong(4) == 2L, s"dups=${expA.getLong(4)}") // c2 + c3
-    assert(expired.filterNot(_.getLong(1) == hHello).forall(_.getLong(4) == 0L))
-    q.stop()
-  }
-
-  test("watermarked hourly window aggregates turns per conversation") {
-    val sp = spark
-    import sp.implicits._
-    val in = Files.createTempDirectory("stream-win-in").toString
-    Transcripts.generate(spark, 12).write.mode("append").parquet(in)
-    val turns = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[graft.spark.Turn].schema)
-      .parquet(in).as[graft.spark.Turn]
-    val agg = StreamingExtraction.turnsPerConversationWindow(turns)
-    val q = agg.writeStream.format("memory").queryName("winagg")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.sql("select * from winagg").collect()
-    assert(rows.nonEmpty)
-    val total = rows.map(_.getAs[Long]("n_turns")).sum
-    assert(total == Transcripts.generate(spark, 12).count())
   }
 }

@@ -104,6 +104,40 @@ class TagRollbackSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s2 <= SnapshotManifestFormat.latestSnapshot(out).get)
   }
 
+  test("a prop key that spells a manifest key is refused; the manifest and JobMain's run stay untouched") {
+    val base = Files.createTempDirectory("graft-reserved-props").toString
+    val in = s"$base/turns"
+    val out = s"$base/out"
+    val turns = Transcripts.generate(spark, 4)
+    turns.write.parquet(in)
+    ExtractionJob.run(spark, turns, ExtractionJob.Config(out, buckets = 2, waves = 1))
+    val snap = SnapshotManifestFormat.latestSnapshot(out).get
+    val manifestPath = java.nio.file.Paths.get(out, "snapshots", s"snap-$snap.json")
+    val bytes = Files.readAllBytes(manifestPath).toSeq
+    def refusal(props: Map[String, String]): String =
+      intercept[IllegalArgumentException](SnapshotManifestFormat.setTableProps(out, props)).getMessage
+    val keys = Seq("snapshot_id", "committed_buckets", "operation", "schema", "props",
+      "bucket_count", "delete_dirs", "fp_mode", "conv_fps", "input_fps", "files", "committed_at")
+    keys.foreach(k => assert(refusal(Map(k -> "x")).contains(s"prop key '$k' is reserved")))
+    // the reported hijack: these props would have read back as the
+    // manifest's own fp_mode and conv-fp sidecar pointer
+    assert(refusal(Map("fp_mode" -> "conv", "conv_fps" -> "fp-9-bogus")).contains("is reserved"))
+    // so would a key ending in one after a quote: its escaped form
+    // "x\"fp_mode" ends in the bare "fp_mode" the parser looks for
+    assert(refusal(Map("x\"fp_mode" -> "conv")).contains("is reserved"))
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(snap))
+    assert(Files.readAllBytes(manifestPath).toSeq == bytes)
+    val man = ExtractionJob.readManifest(out).get
+    assert(man.fpMode.isEmpty && man.convFpsDir.isEmpty && man.props.isEmpty)
+
+    // JobMain refuses the same key with the same message, before it runs
+    val viaJobMain = intercept[IllegalArgumentException] {
+      JobMain.main(Array(in, out, "2", "1", "--set-prop=fp_mode=conv"))
+    }.getMessage
+    assert(viaJobMain == refusal(Map("fp_mode" -> "conv")))
+    assert(SnapshotManifestFormat.latestSnapshot(out).contains(snap))
+  }
+
   test("rollback commits old content forward as a replace; history and resume semantics hold") {
     val ss = spark
     import ss.implicits._
