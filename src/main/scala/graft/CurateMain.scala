@@ -160,16 +160,11 @@ object CurateMain {
     }
     val f = curate(spark, docs, outDir,
       target, shards, epoch, nearDupCap)
-    val outJson = outDir.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c => c.toString
-    }
     println(s"""{"input":${f.input},"quality_kept":${f.qualityKept},""" +
       s""""exact_unique":${f.exactUnique},"near_dup_removed":${f.nearDupRemoved},""" +
       s""""untargeted_dropped":${f.untargetedDropped},""" +
       s""""mixture_kept":${f.mixtureKept},"shards":$shards,"epoch":$epoch,""" +
-      s""""out":"$outJson"}""")
+      s""""out":${graft.model.Json.renderCompact(graft.model.JStr(outDir))}}""")
     if (preexisting.isEmpty) spark.stop()
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.model.{JStr, Json}
 import graft.spark.SnapshotManifestFormat
 
 /** spark-submit entry point for the north-star extraction job:
@@ -225,6 +226,9 @@ object JobMain {
           "--stream-ingest/--replicate) — run them as separate invocations")
     val pos = args.filterNot(_.startsWith("--"))
     val Array(input, outDir) = pos.take(2)
+    // every line printed below is one JSON object: free strings such as
+    // the table dir go through the Json escaper
+    val outJson = jstr(outDir)
     val buckets = if (pos.length > 2) pos(2).toInt else 256
     val waves = if (pos.length > 3) pos(3).toInt else 8
     // --doctor is purely driver-side (filesystem + parquet footers): it
@@ -258,7 +262,7 @@ object JobMain {
         .getOrElse(throw new IllegalStateException(s"no committed snapshot under $outDir"))
       val planned = SnapshotManifestFormat.pruneFilesForConvs(man, ids)
       val rows = SnapshotManifestFormat.readCommittedForConvs(spark, outDir, ids).count()
-      println(s"""{"keyed_convs":${ids.size},"rows":$rows,"planned_files":${planned.size},"total_files":${man.files.size},"out":"$outDir"}""")
+      println(s"""{"keyed_convs":${ids.size},"rows":$rows,"planned_files":${planned.size},"total_files":${man.files.size},"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -269,7 +273,7 @@ object JobMain {
           throw new IllegalArgumentException(s"--rollback=N requires a snapshot id, got: $a")
         }
       val newSnap = SnapshotManifestFormat.rollbackTo(outDir, snap)
-      println(s"""{"rollback_to":$snap,"snapshot":$newSnap,"out":"$outDir"}""")
+      println(s"""{"rollback_to":$snap,"snapshot":$newSnap,"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -290,7 +294,7 @@ object JobMain {
           (spec.substring(0, colon), n)
         }
       SnapshotManifestFormat.tagSnapshot(outDir, name, snap)
-      println(s"""{"tag":"$name","snapshot":$snap,"out":"$outDir"}""")
+      println(s"""{"tag":${jstr(name)},"snapshot":$snap,"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -298,7 +302,7 @@ object JobMain {
       val name = a.stripPrefix("--drop-tag=")
       require(name.nonEmpty, "--drop-tag=NAME requires a tag name")
       SnapshotManifestFormat.dropTag(outDir, name)
-      println(s"""{"dropped_tag":"$name","out":"$outDir"}""")
+      println(s"""{"dropped_tag":${jstr(name)},"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -306,13 +310,13 @@ object JobMain {
       val rows = SnapshotManifestFormat.readSnapshotsTable(spark, outDir)
         .collect().sortBy(_.getInt(0))
       val hist = rows.map { r =>
-        val ts = r.getSeq[String](8).map(t => s""""$t"""").mkString("[", ",", "]")
-        val cols = r.getSeq[String](9).map(c => s""""$c"""").mkString("[", ",", "]")
-        s"""{"snapshot":${r.getInt(0)},"op":"${r.getString(1)}","files":${r.getInt(3)},""" +
+        val ts = r.getSeq[String](8).map(jstr).mkString("[", ",", "]")
+        val cols = r.getSeq[String](9).map(jstr).mkString("[", ",", "]")
+        s"""{"snapshot":${r.getInt(0)},"op":${jstr(r.getString(1))},"files":${r.getInt(3)},""" +
           s""""rows":${r.getLong(4)},"deletes":${r.getInt(6)},"current":${r.getBoolean(7)},""" +
           s""""tags":$ts,"schema_cols":$cols}"""
       }.mkString("[", ",", "]")
-      println(s"""{"history":$hist,"out":"$outDir"}""")
+      println(s"""{"history":$hist,"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -329,7 +333,6 @@ object JobMain {
       require(n >= 1, s"--limit=N must be positive, got $n")
       n
     }.getOrElse(10000)
-    val jesc = SnapshotManifestFormat.jesc _
     args.find(a => a == "--files" || a.startsWith("--files=")).foreach { a =>
       // $files metadata table (Iceberg files analog): current snapshot, or
       // --files=SNAP for any retained one — per-file bucket/rows/seq/bounds
@@ -346,14 +349,14 @@ object JobMain {
       val fs = rows.map { r =>
         val bounds = (r.isNullAt(5), r.isNullAt(6)) match {
           case (false, false) =>
-            s""","min_conv":"${jesc(r.getString(5))}","max_conv":"${jesc(r.getString(6))}""""
+            s""","min_conv":${jstr(r.getString(5))},"max_conv":${jstr(r.getString(6))}"""
           case _ => ""
         }
-        s"""{"bucket":${r.getInt(1)},"path":"${jesc(r.getString(2))}",""" +
+        s"""{"bucket":${r.getInt(1)},"path":${jstr(r.getString(2))},""" +
           s""""rows":${r.getLong(3)},"seq":${r.getInt(4)}$bounds}"""
       }.mkString("[", ",", "]")
       val sid = if (rows.isEmpty) -1 else rows.head.getInt(0)
-      println(s"""{"snapshot":$sid,"files":$fs,"limit":$metaLimit,"out":"$outDir"}""")
+      println(s"""{"snapshot":$sid,"files":$fs,"limit":$metaLimit,"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -366,9 +369,9 @@ object JobMain {
       val ls = rows.map { r =>
         s"""{"snapshot":${r.getLong(0)},"bucket":${r.getLong(1)},"rows":${r.getLong(2)},""" +
           s""""field_count_sum":${r.getLong(3)},"extract_ms":${r.getLong(4)},""" +
-          s""""committed_at":"${jesc(r.getString(5))}"}"""
+          s""""committed_at":${jstr(r.getString(5))}}"""
       }.mkString("[", ",", "]")
-      println(s"""{"lineage":$ls,"limit":$metaLimit,"out":"$outDir"}""")
+      println(s"""{"lineage":$ls,"limit":$metaLimit,"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -390,14 +393,14 @@ object JobMain {
           s""""small_files":${r.getInt(3)},"min_file_rows":${r.getLong(4)},""" +
           s""""max_file_rows":${r.getLong(5)},"delete_rows":${r.getLong(6)}}"""
       }.mkString("[", ",", "]")
-      println(s"""{"partitions":$ps,"small_threshold":$thr,"limit":$metaLimit,"out":"$outDir"}""")
+      println(s"""{"partitions":$ps,"small_threshold":$thr,"limit":$metaLimit,"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
     if (args.contains("--branches")) {
       val bs = SnapshotManifestFormat.branches(outDir).toSeq.sorted
-        .map { case (n, s) => s""""$n":$s""" }.mkString("{", ",", "}")
-      println(s"""{"branches":$bs,"out":"$outDir"}""")
+        .map { case (n, s) => s"${jstr(n)}:$s" }.mkString("{", ",", "}")
+      println(s"""{"branches":$bs,"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -412,9 +415,9 @@ object JobMain {
           println(s"""{"curate_increment":{"from":${s.from},"to":${s.to},""" +
             s""""upserts":${s.upserts},"deleted_convs":${s.deletedConvs},""" +
             s""""affected_hash_buckets":${s.affectedHashBuckets},""" +
-            s""""curated_rows":${s.curatedRows}},"out":"$outDir"}""")
+            s""""curated_rows":${s.curatedRows}},"out":$outJson}""")
         case None =>
-          println(s"""{"curate_increment":null,"note":"no new snapshot","out":"$outDir"}""")
+          println(s"""{"curate_increment":null,"note":"no new snapshot","out":$outJson}""")
       }
       if (preexisting.isEmpty) spark.stop()
       return
@@ -423,15 +426,13 @@ object JobMain {
       val name = a.stripPrefix("--audit-branch=")
       require(name.nonEmpty, "--audit-branch=NAME requires a branch name")
       val r = graft.spark.ExtractionJob.auditBranch(spark, outDir, name)
-      val sc = r.schemaChanges
-        .map(s => "\"" + SnapshotManifestFormat.jesc(s) + "\"")
-        .mkString("[", ",", "]")
+      val sc = r.schemaChanges.map(jstr).mkString("[", ",", "]")
       val bd = r.bucketRowDeltas.toSeq.sorted
         .map { case (b, d) => s""""$b":$d""" }.mkString("{", ",", "}")
-      println(s"""{"audit_branch":"$name","snapshot":${r.snapshotId},"rows":${r.rows},""" +
+      println(s"""{"audit_branch":${jstr(name)},"snapshot":${r.snapshotId},"rows":${r.rows},""" +
         s""""duplicate_keys":${r.duplicateKeys},"null_specs":${r.nullSpecs},""" +
         s""""intact":${r.intact},"schema_changes":$sc,"bucket_row_deltas":$bd,""" +
-        s""""ok":${r.ok},"out":"$outDir"}""")
+        s""""ok":${r.ok},"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       // gate for shell pipelines: `--audit-branch && --publish-branch`
       // publishes only a snapshot that passed the audit. Exit-code
@@ -445,7 +446,7 @@ object JobMain {
       require(name.nonEmpty, "--publish-branch=NAME requires a branch name")
       // the Spark overload: cherry-picks when the head moved since the stage
       val snap = SnapshotManifestFormat.publishBranch(spark, outDir, name)
-      println(s"""{"published_branch":"$name","snapshot":$snap,"out":"$outDir"}""")
+      println(s"""{"published_branch":${jstr(name)},"snapshot":$snap,"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -453,14 +454,14 @@ object JobMain {
       val name = a.stripPrefix("--abandon-branch=")
       require(name.nonEmpty, "--abandon-branch=NAME requires a branch name")
       SnapshotManifestFormat.abandonBranch(outDir, name)
-      println(s"""{"abandoned_branch":"$name","out":"$outDir"}""")
+      println(s"""{"abandoned_branch":${jstr(name)},"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
     if (args.contains("--tags")) {
       val ts = SnapshotManifestFormat.tags(outDir).toSeq.sorted
-        .map { case (n, s) => s""""$n":$s""" }.mkString("{", ",", "}")
-      println(s"""{"tags":$ts,"out":"$outDir"}""")
+        .map { case (n, s) => s"${jstr(n)}:$s" }.mkString("{", ",", "}")
+      println(s"""{"tags":$ts,"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -477,7 +478,7 @@ object JobMain {
         if (from >= to) (0L, 0L)
         else (SnapshotManifestFormat.readAppendsBetween(spark, outDir, from, to).count(),
           SnapshotManifestFormat.readDeleteKeysBetween(spark, outDir, from, to).count())
-      println(s"""{"appends_from":$from,"appends_to":$to,"rows":$rows,"changed_keys":$keys,"out":"$outDir"}""")
+      println(s"""{"appends_from":$from,"appends_to":$to,"rows":$rows,"changed_keys":$keys,"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -496,7 +497,7 @@ object JobMain {
       val maint = runMaintenance(spark, outDir, doCompact, expireRetain, orphanAge, setProps,
         rebucketTo, rewriteSortedTarget, binpackMin, branchTtl)
       val snap = SnapshotManifestFormat.latestSnapshot(outDir).getOrElse(-1)
-      println(s"""{"replicate":true,"snapshot":$snap,"rows_applied":$rows,$maint"out":"$outDir"}""")
+      println(s"""{"replicate":true,"snapshot":$snap,"rows_applied":$rows,$maint"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -511,7 +512,7 @@ object JobMain {
       val maint = runMaintenance(spark, outDir, doCompact, expireRetain, orphanAge, setProps,
         rebucketTo, rewriteSortedTarget, binpackMin, branchTtl)
       val snap = SnapshotManifestFormat.latestSnapshot(outDir).getOrElse(-1)
-      println(s"""{"stream_ingest":true,"snapshot":$snap,"rows_appended":$rows,$maint"out":"$outDir"}""")
+      println(s"""{"stream_ingest":true,"snapshot":$snap,"rows_appended":$rows,$maint"out":$outJson}""")
       if (preexisting.isEmpty) spark.stop()
       return
     }
@@ -526,12 +527,14 @@ object JobMain {
     // instead of crashing on a branch that was never created
     val branchJson = toBranch.map { n =>
       if (SnapshotManifestFormat.branches(outDir).contains(n))
-        s""""staged_branch":"$n","""
+        s""""staged_branch":${jstr(n)},"""
       else s""""staged_branch":null,"""
     }.getOrElse("")
-    println(s"""{"committed_buckets_this_run":${done.size},$branchJson$maint"out":"$outDir"}""")
+    println(s"""{"committed_buckets_this_run":${done.size},$branchJson$maint"out":$outJson}""")
     if (preexisting.isEmpty) spark.stop() // don't stop a host-owned session
   }
+
+  private def jstr(s: String): String = Json.renderCompact(JStr(s))
 
   /** The post-run maintenance half shared by the batch and streaming paths:
     * compaction, snapshot expiry, orphan sweep, props commit. Returns the

@@ -3,38 +3,14 @@ package graft.spark
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
-/** Structured Streaming surface (SURVEY.md §7.5): the alternative resume
-  * mechanism — `readStream` over the transcripts table, the same fused
-  * per-turn extraction, `writeStream` with checkpointLocation and
-  * Trigger.AvailableNow. The checkpoint replaces the snapshot-manifest
-  * protocol: a killed run resumes from the last committed micro-batch, and
-  * files already processed are never re-extracted.
+/** Structured Streaming surface (SURVEY.md §7.5): `readStream` over the
+  * transcripts table, the same fused per-turn extraction, and a
+  * `foreachBatch` sink into the snapshot-manifest table with
+  * checkpointLocation and Trigger.AvailableNow. The checkpoint records
+  * which input files were processed, so a killed run resumes from the last
+  * committed micro-batch and never re-extracts a processed file.
   */
 object StreamingExtraction {
-
-  /** Incremental extraction: processes exactly the files not yet recorded in
-    * the checkpoint, then stops (Trigger.AvailableNow).
-    */
-  def runAvailableNow(spark: SparkSession, inputDir: String, outDir: String,
-                      checkpointDir: String): Unit = {
-    import spark.implicits._
-    val turns = spark.readStream
-      .schema(Encoders.product[Turn].schema)
-      .parquet(inputDir)
-      .as[Turn]
-    val extracted = turns.map { t =>
-      val e = graft.extract.Extractor.extractTurn(t.text, t.tool)
-      ExtractedTurn(t.conv_id, t.turn_idx, e.formType, e.formSubtype, e.mainText, e.spans,
-        e.fieldsJson, e.fieldCount, e.sectionCount)
-    }
-    val q = extracted.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 
   /** Exactly-once streaming ingestion into the snapshot-manifest TABLE
     * (Iceberg streaming-sink analog). Each micro-batch runs the same fused

@@ -1,6 +1,7 @@
 package graft.spark
 
 import java.nio.file.{Files, Path, Paths}
+import graft.model.{JArr, JBool, JInt, JObj, JStr, Json}
 import scala.jdk.CollectionConverters._
 
 /** Table integrity checker (`JobMain --doctor`): verifies every structural
@@ -26,14 +27,11 @@ object TableDoctor {
                           info: Map[String, Long]) {
     def ok: Boolean = errors.isEmpty
     def render: String = {
-      def arr(fs: Vector[Finding]) = fs.map(f =>
-        s"""{"check":"${SnapshotManifestFormat.jesc(f.check)}","detail":"${SnapshotManifestFormat.jesc(f.detail)}"}""")
-        .mkString("[", ",", "]")
-      val inf = info.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""${SnapshotManifestFormat.jesc(k)}":$v""" }
-        .mkString("{", ",", "}")
-      s"""{"ok":$ok,"head":${head.getOrElse(-1)},"snapshots":$snapshots,""" +
-        s""""errors":${arr(errors)},"warnings":${arr(warnings)},"info":$inf}"""
+      def arr(fs: Vector[Finding]) =
+        JArr(fs.map(f => JObj.of("check" -> JStr(f.check), "detail" -> JStr(f.detail))))
+      Json.renderCompact(JObj.of("ok" -> JBool(ok), "head" -> JInt(head.getOrElse(-1).toLong),
+        "snapshots" -> JInt(snapshots), "errors" -> arr(errors), "warnings" -> arr(warnings),
+        "info" -> JObj(info.toVector.sortBy(_._1).map { case (k, v) => k -> JInt(v) })))
     }
   }
 

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import graft.model.{JArr, JBool, JInt, JObj, JStr, Json}
 import ExtractionJob.{FileEntry, LineageRow, Manifest}
 
 /** Optimistic-concurrency conflict: the table advanced past the snapshot
@@ -479,68 +480,51 @@ object SnapshotManifestFormat extends TableFormat {
     else None
   }
 
-  private val fpEntryRe =
-    "\\{\"bucket\":(\\d+),\"fp\":(-?\\d+)\\}".r
-
-  private val fileEntryRe =
-    ("\\{\"bucket\":(\\d+),\"path\":\"([^\"]+)\",\"row_count\":(\\d+)(?:,\"seq\":(\\d+))?" +
-      "(?:,\"min_conv\":\"((?:[^\"\\\\]|\\\\.)*)\",\"max_conv\":\"((?:[^\"\\\\]|\\\\.)*)\")?\\}").r
-
-  private val committedBucketsRe = "\"committed_buckets\"\\s*:\\s*\\[([0-9,\\s]*)\\]".r
-
-  private val filesListRe = "\"files\"\\s*:\\s*\\[".r
-
-  private val convFpsDirRe = "\"conv_fps\"\\s*:\\s*\"([^\"]+)\"".r
-
-  private val bucketCountRe = "\"bucket_count\"\\s*:\\s*(\\d+)".r
-
-  private val operationRe = "\"operation\"\\s*:\\s*\"([a-z]+)\"".r
-
-  /** Minimal JSON string escape/unescape for conv_id bounds (ids are free
-    * text upstream; the rest of the manifest's strings are self-generated
-    * paths that never need escaping). Shared with the CLI (`JobMain`
-    * --files/--lineage print the same values). */
-  private[graft] def jesc(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 2)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '"' || c == '\\') { sb.append('\\'); sb.append(c) }
-      else if (c < ' ') sb.append(String.format("\\u%04x", Integer.valueOf(c.toInt)))
-      else sb.append(c)
-      i += 1
-    }
-    sb.toString
+  /** The one reader of table metadata (manifests, lineage files, publish
+    * intents): the file parsed into a Jackson tree, refusing duplicate keys
+    * and trailing text. Any parse failure is one IllegalStateException
+    * naming the file. The writers render through `Json.renderCompact`. */
+  private def readMeta(path: Path): Meta = {
+    val root =
+      try metaMapper.readTree(path.toFile)
+      catch { case e: com.fasterxml.jackson.core.JacksonException =>
+        throw new IllegalStateException(
+          s"metadata file $path does not parse as JSON: ${e.getOriginalMessage}", e)
+      }
+    if (root == null || root.isMissingNode)
+      throw new IllegalStateException(s"metadata file $path is empty")
+    Meta(path, root)
   }
 
-  private def junesc(s: String): String =
-    if (s.indexOf('\\') < 0) s
-    else {
-      val sb = new java.lang.StringBuilder(s.length)
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '\\' && i + 1 < s.length) {
-          s.charAt(i + 1) match {
-            case 'u' if i + 5 < s.length =>
-              sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-            case e => sb.append(e); i += 2
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
+  private lazy val metaMapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .enable(com.fasterxml.jackson.core.StreamReadFeature.STRICT_DUPLICATE_DETECTION)
+    .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+    .build()
 
-  private val deleteDirsRe = "\"delete_dirs\"\\s*:\\s*\\[([^\\]]*)\\]".r
-
-  private val fpModeRe = "\"fp_mode\"\\s*:\\s*\"([^\"]+)\"".r
-
-  // commit properties: a flat string->string object (no nesting — commitWave
-  // refuses braces inside values, so [^}]* is object-scoped and exact)
-  private val propsRe = "\"props\"\\s*:\\s*\\{([^}]*)\\}".r
-  private val schemaRe = "\"schema\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-  private val committedAtRe = "\"committed_at\"\\s*:\\s*\"([^\"]+)\"".r
-  private val propsPairRe = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
+  /** A node of a parsed metadata file. Typed reads refuse a missing key or a
+    * value of the wrong JSON type with an IllegalStateException naming the
+    * file, like a parse failure. */
+  private final case class Meta(path: Path, node: com.fasterxml.jackson.databind.JsonNode) {
+    private def fail(what: String): Nothing =
+      throw new IllegalStateException(s"metadata file $path is malformed: $what")
+    def opt(key: String): Option[Meta] =
+      if (node.isObject) Option(node.get(key)).map(Meta(path, _)) else None
+    def apply(key: String): Meta = opt(key).getOrElse(fail(s"no '$key' in $node"))
+    def str: String = if (node.isTextual) node.textValue else fail(s"$node is not a string")
+    def long: Long =
+      if (node.isIntegralNumber && node.canConvertToLong) node.longValue
+      else fail(s"$node is not an integer")
+    def int: Int =
+      if (node.isIntegralNumber && node.canConvertToInt) node.intValue
+      else fail(s"$node is not an int")
+    def bool: Boolean = if (node.isBoolean) node.booleanValue else fail(s"$node is not a boolean")
+    def items: Vector[Meta] =
+      if (node.isArray) node.elements.asScala.map(Meta(path, _)).toVector
+      else fail(s"$node is not an array")
+    def fields: Vector[(String, Meta)] =
+      if (node.isObject) node.properties.asScala.map(e => e.getKey -> Meta(path, e.getValue)).toVector
+      else fail(s"$node is not an object")
+  }
 
   /** Parse the latest committed manifest. */
   override def readManifest(outDir: String): Option[Manifest] =
@@ -549,7 +533,7 @@ object SnapshotManifestFormat extends TableFormat {
   override def readManifestAt(outDir: String, k: Int): Option[Manifest] = {
     val p = Paths.get(outDir, "snapshots", s"snap-$k.json")
     if (!Files.exists(p)) return None
-    Some(parseManifest(p, k, new String(Files.readAllBytes(p), StandardCharsets.UTF_8)))
+    Some(parseManifest(readMeta(p), k))
   }
 
   /** A pending branch's staged manifest, written at the branch-scoped path
@@ -562,11 +546,8 @@ object SnapshotManifestFormat extends TableFormat {
   private[spark] def readBranchManifest(outDir: String, name: String): Option[Manifest] = {
     val p = branchManifestPath(outDir, name)
     if (!Files.exists(p)) return None
-    val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    val id = "\"snapshot_id\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"corrupt branch manifest for '$name' under $outDir: no snapshot_id"))
-    Some(parseManifest(p, id, txt))
+    val m = readMeta(p)
+    Some(parseManifest(m, m("snapshot_id").int))
   }
 
   private[spark] def branchManifestPath(outDir: String, name: String): Path =
@@ -589,7 +570,7 @@ object SnapshotManifestFormat extends TableFormat {
   private[graft] def publishIntentPath(outDir: String, name: String): Path =
     Paths.get(outDir, "snapshots", s"publish-intent-$name.json")
 
-  private case class PublishIntent(n: Int, cherryPick: Boolean,
+  private[graft] case class PublishIntent(n: Int, cherryPick: Boolean,
                                    deleteDirs: Vector[String], fpDir: Option[String],
                                    filePaths: Vector[String]) {
     /** A marker with no attempt-unique artifact names could validate
@@ -598,27 +579,22 @@ object SnapshotManifestFormat extends TableFormat {
   }
 
   private def writePublishIntent(outDir: String, name: String, in: PublishIntent): Unit =
-    atomicWrite(publishIntentPath(outDir, name),
-      s"""{"snapshot_id":${in.n},"cherry_pick":${in.cherryPick},""" +
-        s""""delete_dirs":[${in.deleteDirs.map(d => "\"" + jesc(d) + "\"").mkString(",")}],""" +
-        in.fpDir.map(f => s""""conv_fps_dir":"${jesc(f)}",""").getOrElse("") +
-        s""""files":[${in.filePaths.map(p => "\"" + jesc(p) + "\"").mkString(",")}]}""")
+    atomicWrite(publishIntentPath(outDir, name), Json.renderCompact(JObj(
+      Vector("snapshot_id" -> JInt(in.n), "cherry_pick" -> JBool(in.cherryPick),
+        "delete_dirs" -> strArr(in.deleteDirs)) ++
+        in.fpDir.map(f => "conv_fps_dir" -> JStr(f)) :+
+        ("files" -> strArr(in.filePaths)))))
 
-  private def readPublishIntent(outDir: String, name: String): Option[PublishIntent] = {
+  private[graft] def readPublishIntent(outDir: String, name: String): Option[PublishIntent] = {
     val p = publishIntentPath(outDir, name)
     if (!Files.exists(p)) return None
-    val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    def strList(key: String): Vector[String] =
-      ("\"" + key + "\"\\s*:\\s*\\[([^\\]]*)\\]").r.findFirstMatchIn(txt).map(_.group(1))
-        .toVector.flatMap(_.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).map(junesc))
-    "\"snapshot_id\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt).map { n =>
-      PublishIntent(n, txt.contains("\"cherry_pick\":true"), strList("delete_dirs"),
-        "\"conv_fps_dir\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt)
-          .map(m => junesc(m.group(1))),
-        strList("files"))
-    }
+    val m = readMeta(p)
+    Some(PublishIntent(m("snapshot_id").int, m("cherry_pick").bool,
+      m("delete_dirs").items.map(_.str), m.opt("conv_fps_dir").map(_.str),
+      m("files").items.map(_.str)))
   }
+
+  private def strArr(xs: Seq[String]): JArr = JArr(xs.map(JStr).toVector)
 
   /** Fault injection for specs ONLY: when set, the next publish attempt
     * throws immediately after its commitWave returns and before any
@@ -650,64 +626,49 @@ object SnapshotManifestFormat extends TableFormat {
   private[spark] def pendingBranchManifests(outDir: String): Map[String, Manifest] =
     branches(outDir).keys.flatMap(n => readBranchManifest(outDir, n).map(n -> _)).toMap
 
-  /** The one manifest format, exactly what [[commitWave]] writes:
+  /** The one manifest format, exactly what [[commitWave]] writes: one
+    * compact JSON object with these keys, in this order:
     *
-    *   {"snapshot_id":K,                    required
-    *    "committed_buckets":[B,..],         required
-    *    "operation":"append",               required: append | delta | rewrite | replace | props
-    *    "schema":"<Spark DDL>",             required: the table schema at this snapshot
-    *    "props":{"k":"v",..},               only when sticky table properties are set
-    *    "bucket_count":N,                   only when the committer knows the hash modulus
-    *    "delete_dirs":["snap-S-<tok>",..],  required, possibly empty
-    *    "fp_mode":"conv"|"bucket",          only when input fingerprints carry a mode
-    *    "conv_fps":"fp-S-<tok>",            only when a conv-fingerprint sidecar exists
-    *    "input_fps":[{"bucket":B,"fp":F}],  only when bucket fingerprints are recorded
-    *    "files":[{"bucket":B,"path":"bucket=B/part-..","row_count":N,"seq":S,
-    *              "min_conv":"..","max_conv":".."},..],
-    *                                        required, possibly empty; the conv_id
-    *                                        bounds only when the footer has stats
-    *    "committed_at":"<ISO-8601>"}        required, always the last key
+    *   snapshot_id        int                    required
+    *   committed_buckets  [int]                  required
+    *   operation          string                 required: append | delta | rewrite | replace | props
+    *   schema             string (Spark DDL)     required: the table schema at this snapshot
+    *   props              object of strings      only when sticky table properties are set
+    *   bucket_count       int                    only when the committer knows the hash modulus
+    *   delete_dirs        [string snap-S-<tok>]  required, possibly empty
+    *   fp_mode            "conv" | "bucket"      only when input fingerprints carry a mode
+    *   conv_fps           string fp-S-<tok>      only when a conv-fingerprint sidecar exists
+    *   input_fps          [object bucket, fp]    only when bucket fingerprints are recorded
+    *   files              [object bucket, path, row_count, seq, min_conv, max_conv]
+    *                                             required, possibly empty; the conv_id
+    *                                             bounds only when the footer has stats
+    *   committed_at       string (ISO-8601)      required, always the last key
     *
     * A manifest lacking a required key was written in an older layout and
     * is refused with one IllegalStateException naming the file: older
     * layouts are not migrated. The snapshot id comes from the file name
     * (branch manifests: from `snapshot_id`). */
-  private def parseManifest(path: Path, k: Int, manifest: String): Manifest = {
-    val buckets = committedBucketsRe.findFirstMatchIn(manifest).map(_.group(1))
-    val operation = operationRe.findFirstMatchIn(manifest).map(_.group(1))
-    val schema = schemaRe.findFirstMatchIn(manifest).map(m => junesc(m.group(1)))
-    val delDirs = deleteDirsRe.findFirstMatchIn(manifest).map(_.group(1))
-    val filesList = filesListRe.findFirstMatchIn(manifest)
-    // LAST match: committed_at is the manifest's trailing field
-    val committedAt = committedAtRe.findAllMatchIn(manifest).toSeq.lastOption.map(_.group(1))
-    val missing = Seq("committed_buckets" -> buckets, "operation" -> operation,
-      "schema" -> schema, "delete_dirs" -> delDirs, "files" -> filesList,
-      "committed_at" -> committedAt).collect { case (key, None) => key }
+  private def parseManifest(m: Meta, k: Int): Manifest = {
+    val missing = Seq("committed_buckets", "operation", "schema", "delete_dirs", "files",
+      "committed_at").filter(m.opt(_).isEmpty)
     if (missing.nonEmpty)
       throw new IllegalStateException(
-        s"manifest $path lacks required key(s) ${missing.mkString(", ")}: it was written " +
+        s"manifest ${m.path} lacks required key(s) ${missing.mkString(", ")}: it was written " +
           "in an older table layout, which is refused — older layouts are not migrated")
-    val files = fileEntryRe.findAllMatchIn(manifest)
-      .map(f => FileEntry(f.group(1).toInt, f.group(2), f.group(3).toLong,
-        seq = Option(f.group(4)).map(_.toInt).getOrElse(0),
-        minConv = Option(f.group(5)).map(junesc),
-        maxConv = Option(f.group(6)).map(junesc))).toVector
-    Manifest(k, buckets.get.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSet, files,
-      inputFps = fpEntryRe.findAllMatchIn(manifest)
-        .map(m => m.group(1).toInt -> m.group(2).toLong).toMap,
-      convFpsDir = convFpsDirRe.findFirstMatchIn(manifest).map(_.group(1)),
-      deleteDirs = delDirs.get.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toVector,
-      fpMode = fpModeRe.findFirstMatchIn(manifest).map(_.group(1)),
-      bucketCount = bucketCountRe.findFirstMatchIn(manifest).map(_.group(1).toInt),
-      operation = operation.get,
-      props = propsRe.findFirstMatchIn(manifest).map(_.group(1)) match {
-        case None => Map.empty
-        case Some(body) =>
-          propsPairRe.findAllMatchIn(body).map(p => junesc(p.group(1)) -> junesc(p.group(2))).toMap
-      },
-      committedAt = committedAt.get,
-      schemaDdl = schema.get)
+    Manifest(k, m("committed_buckets").items.map(_.int).toSet,
+      m("files").items.map(f => FileEntry(f("bucket").int, f("path").str, f("row_count").long,
+        seq = f("seq").int, minConv = f.opt("min_conv").map(_.str),
+        maxConv = f.opt("max_conv").map(_.str))),
+      inputFps = m.opt("input_fps").toVector.flatMap(_.items)
+        .map(e => e("bucket").int -> e("fp").long).toMap,
+      convFpsDir = m.opt("conv_fps").map(_.str),
+      deleteDirs = m("delete_dirs").items.map(_.str),
+      fpMode = m.opt("fp_mode").map(_.str),
+      bucketCount = m.opt("bucket_count").map(_.int),
+      operation = m("operation").str,
+      props = m.opt("props").toVector.flatMap(_.fields).map { case (key, v) => key -> v.str }.toMap,
+      committedAt = m("committed_at").str,
+      schemaDdl = m("schema").str)
   }
 
   /** Committed = listed in the manifest AND every listed data file for the
@@ -818,20 +779,13 @@ object SnapshotManifestFormat extends TableFormat {
     Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Every top-level key [[commitWave]] writes (see [[parseManifest]]). */
-  private val manifestKeys = Set("snapshot_id", "committed_buckets", "operation", "schema",
-    "props", "bucket_count", "delete_dirs", "fp_mode", "conv_fps", "input_fps", "files",
-    "committed_at")
-
-  /** Refuse sticky props the manifest cannot carry, before anything is
+  /** Refuse sticky props the table cannot hold, before anything is
     * written: [[commitWave]] checks every commit, and JobMain checks its
-    * --set-prop arguments before it runs. */
+    * --set-prop arguments before it runs. Outside the ref.* namespace keys
+    * and values are free strings: the manifest stores them as a nested JSON
+    * object that cannot shadow a manifest field. */
   private[graft] def requireValidProps(props: Map[String, String]): Unit =
     props.foreach { case (k, v) =>
-      // flat-JSON manifest encoding: a '{'/'}' inside a props value would
-      // break the object-scoped parse regex — refuse loudly at write time
-      require(!k.exists(c => c == '{' || c == '}') && !v.exists(c => c == '{' || c == '}'),
-        s"manifest props must not contain braces: $k=$v")
       // the ref.* namespace is reserved for snapshot tags: a free-form
       // value written via setTableProps would wedge every later tags()/
       // expireSnapshots call, so validate at WRITE time (empty = tombstone;
@@ -842,12 +796,6 @@ object SnapshotManifestFormat extends TableFormat {
         require(k.stripPrefix("ref.").matches("[A-Za-z0-9._-]+"),
           s"invalid tag name in prop key '$k'")
       }
-      // parseManifest finds each manifest key with its own first-match
-      // regex and props serialize before the optional keys, so a prop key
-      // that spells a manifest key, or ends in one after an (escaped)
-      // quote, would read back as the manifest's own field
-      require(!manifestKeys.exists(m => k == m || k.endsWith("\"" + m)),
-        s"prop key '$k' is reserved: it would read back as a manifest key")
     }
 
   override def commitWave(outDir: String, staging: String, snapshotId: Int,
@@ -978,41 +926,39 @@ object SnapshotManifestFormat extends TableFormat {
       deleteRecursively(Paths.get(staging))
     }
 
+    // one row per line, so a lineage file reads and diffs by line
     val lineageJson = lineage.sortBy(_.bucket).map { r =>
-      s"""{"snapshot_id":${r.snapshot_id},"bucket":${r.bucket},"row_count":${r.row_count},""" +
-        s""""field_count_sum":${r.field_count_sum},"extract_ms":${r.extract_ms},"committed_at":"${r.committed_at}"}"""
+      Json.renderCompact(JObj.of("snapshot_id" -> JInt(r.snapshot_id), "bucket" -> JInt(r.bucket),
+        "row_count" -> JInt(r.row_count), "field_count_sum" -> JInt(r.field_count_sum),
+        "extract_ms" -> JInt(r.extract_ms), "committed_at" -> JStr(r.committed_at)))
     }.mkString("[\n", ",\n", "\n]")
     // branch stages write lineage at the branch-scoped path too — a head
     // commit may legitimately land at this same id while the branch pends,
     // and publish re-stamps the rows to the published id anyway
     atomicWrite(toBranch.map(branchLineagePath(outDir, _))
       .getOrElse(Paths.get(outDir, "lineage", s"lineage-$snapshotId.json")), lineageJson)
-    val filesJson = files.sortBy(f => (f.bucket, f.path)).map { f =>
+    val fileEntries = files.toVector.sortBy(f => (f.bucket, f.path)).map { f =>
       val bounds = (f.minConv, f.maxConv) match {
-        case (Some(lo), Some(hi)) =>
-          s""","min_conv":"${jesc(lo)}","max_conv":"${jesc(hi)}""""
-        case _ => ""
+        case (Some(lo), Some(hi)) => Vector("min_conv" -> JStr(lo), "max_conv" -> JStr(hi))
+        case _ => Vector.empty
       }
-      s"""{"bucket":${f.bucket},"path":"${f.path}","row_count":${f.rowCount},"seq":${f.seq}$bounds}"""
-    }.mkString("[", ",", "]")
-    val fpsJson =
-      if (inputFps.isEmpty) ""
-      else inputFps.toSeq.sorted.map { case (b, fp) => s"""{"bucket":$b,"fp":$fp}""" }
-        .mkString(""""input_fps":[""", ",", "],")
-    val convFpsJson = convFpsDir.map(d => s""""conv_fps":"$d",""").getOrElse("")
-    val deleteDirsJson =
-      deleteDirs.sorted.map(d => "\"" + d + "\"").mkString(""""delete_dirs":[""", ",", "],")
-    val fpModeJson = fpMode.map(m => s""""fp_mode":"$m",""").getOrElse("")
-    val bucketCountJson = bucketCount.map(n => s""""bucket_count":$n,""").getOrElse("")
-    val operationJson = s""""operation":"$operation","""
-    val schemaJson = s""""schema":"${jesc(effSchemaDdl)}","""
-    val propsJson =
-      if (effProps.isEmpty) ""
-      else effProps.toSeq.sorted.map { case (k, v) => s""""${jesc(k)}":"${jesc(v)}"""" }
-        .mkString(""""props":{""", ",", "},")
-    val manifest =
-      s"""{"snapshot_id":$snapshotId,"committed_buckets":[${buckets.toSeq.sorted.mkString(",")}],""" +
-        s"""$operationJson$schemaJson$propsJson$bucketCountJson$deleteDirsJson$fpModeJson$convFpsJson$fpsJson"files":$filesJson,"committed_at":"${java.time.Instant.now()}"}"""
+      JObj(Vector("bucket" -> JInt(f.bucket), "path" -> JStr(f.path),
+        "row_count" -> JInt(f.rowCount), "seq" -> JInt(f.seq)) ++ bounds)
+    }
+    val manifest = Json.renderCompact(JObj(
+      Vector("snapshot_id" -> JInt(snapshotId),
+        "committed_buckets" -> JArr(buckets.toVector.sorted.map(b => JInt(b))),
+        "operation" -> JStr(operation), "schema" -> JStr(effSchemaDdl)) ++
+        Option.when(effProps.nonEmpty)("props" ->
+          JObj(effProps.toVector.sorted.map { case (k, v) => k -> JStr(v) })) ++
+        bucketCount.map(n => "bucket_count" -> JInt(n)) ++
+        Vector("delete_dirs" -> strArr(deleteDirs.sorted)) ++
+        fpMode.map(m => "fp_mode" -> JStr(m)) ++
+        convFpsDir.map(d => "conv_fps" -> JStr(d)) ++
+        Option.when(inputFps.nonEmpty)("input_fps" -> JArr(inputFps.toVector.sorted.map {
+          case (b, fp) => JObj.of("bucket" -> JInt(b), "fp" -> JInt(fp)) })) ++
+        Vector("files" -> JArr(fileEntries),
+          "committed_at" -> JStr(java.time.Instant.now().toString))))
     val manPath = toBranch.map(branchManifestPath(outDir, _))
       .getOrElse(Paths.get(outDir, "snapshots", s"snap-$snapshotId.json"))
     // Post-write overwrite check: the freeze/CAS reads above are
@@ -1459,11 +1405,7 @@ object SnapshotManifestFormat extends TableFormat {
   /** Staged lineage rows of a pending branch (branch-scoped file). */
   private def readBranchLineage(outDir: String, name: String): Vector[LineageRow] = {
     val p = branchLineagePath(outDir, name)
-    if (!Files.exists(p)) return Vector.empty
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    lineageRowRe.findAllMatchIn(json).map(m =>
-      LineageRow(m.group(1).toLong, m.group(2).toLong, m.group(3).toLong,
-        m.group(4).toLong, m.group(5).toLong, m.group(6))).toVector
+    if (Files.exists(p)) readLineageFile(p) else Vector.empty
   }
 
   /** Delete-file directories visible at a snapshot: exactly the manifest's
@@ -1945,18 +1887,15 @@ object SnapshotManifestFormat extends TableFormat {
     * can have a latest id far above their retained count. */
   override def retainedManifests(outDir: String): Seq[Manifest] = allManifests(outDir)
 
-  private val lineageRowRe =
-    ("\\{\"snapshot_id\":(\\d+),\"bucket\":(\\d+),\"row_count\":(\\d+)," +
-      "\"field_count_sum\":(\\d+),\"extract_ms\":(\\d+),\"committed_at\":\"([^\"]*)\"\\}").r
-
   override def readLineage(outDir: String, snapshotId: Int): Seq[LineageRow] = {
     val p = Paths.get(outDir, "lineage", s"lineage-$snapshotId.json")
-    if (!Files.exists(p)) return Seq.empty
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    lineageRowRe.findAllMatchIn(json).map(m =>
-      LineageRow(m.group(1).toLong, m.group(2).toLong, m.group(3).toLong,
-        m.group(4).toLong, m.group(5).toLong, m.group(6))).toVector
+    if (Files.exists(p)) readLineageFile(p) else Seq.empty
   }
+
+  private def readLineageFile(p: Path): Vector[LineageRow] =
+    readMeta(p).items.map(r => LineageRow(r("snapshot_id").long, r("bucket").long,
+      r("row_count").long, r("field_count_sum").long, r("extract_ms").long,
+      r("committed_at").str))
 
   /** Every manifest currently on disk (retained history), snapshot order. */
   private[spark] def allManifests(outDir: String): Vector[Manifest] =

@@ -299,6 +299,18 @@ class JobMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c2.contains("\"curate_increment\":null"), c2)
   }
 
+  test("JobMain prints valid JSON for a table dir whose name holds a quote and a backslash") {
+    val out = Files.createTempDirectory("graft-jobmain-quote").resolve("t\"a\\b").toString
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf)) {
+      JobMain.main(Array("unused-input", out, "--branches"))
+    }
+    val line = buf.toString.linesIterator.find(_.startsWith("{")).get
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(parsed.get("out").textValue == out, line)
+    assert(parsed.get("branches").isObject && parsed.get("branches").isEmpty, line)
+  }
+
   test("JobMain WAP cycle from the CLI: --to-branch stages, --audit-branch gates, --publish-branch serves; --rewrite-sorted splits files") {
     val s = spark
     import s.implicits._

@@ -61,6 +61,11 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = fmt.readCommitted(spark, table)
     assert(all.count() == expectedRows(0 until 14))
     assert(all.select("conv_id", "turn_idx").distinct().count() == expectedRows(0 until 14))
+    // streamed extraction bytes == batch extraction bytes
+    val streamed = all.where($"conv_id" === "c00000003" && $"turn_idx" === 0)
+      .select("fields_json").as[String].head()
+    val t = Transcripts.turnsFor(3).head
+    assert(streamed == graft.extract.Extractor.extractTurn(t.text, t.tool).fieldsJson)
     val (key2, batch2) = streamMarker(table)
     assert(key2 == key1 && batch2 > batch1, s"same sink, advancing marker: $key2 $batch2")
     val man2 = fmt.readManifest(table).get
@@ -154,7 +159,7 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(StreamingExtraction.lastCommittedBatch(table, "other", fmt).contains(0L))
   }
 
-  test("manifest props round-trip through escaping, merge stickily; braces are refused at write time") {
+  test("manifest props round-trip through escaping and merge stickily; braces round-trip too") {
     val table = Files.createTempDirectory("tsink-props").toString
     val props = Map("stream.a \"quoted\" name\twith\nescapes" -> "7",
       "stream.plain" -> "42", "k\\slash" -> "v\\end")
@@ -171,12 +176,17 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fmt.readManifest(table).get.props ==
       props + ("stream.plain" -> "43") + ("new.key" -> "x"))
 
-    val ex = intercept[IllegalArgumentException] {
-      fmt.commitWave(table, staging = table + "/no-staging", snapshotId = 2,
-        buckets = Set.empty, files = Vector.empty, lineage = Vector.empty,
-        inputFps = Map.empty, additive = true, props = Map("k" -> "{bad}"))
-    }
-    assert(ex.getMessage.contains("braces"))
+    // props are a nested JSON object, so braces (and a key that spells a
+    // manifest key) are plain text: they commit and read back exactly
+    val before = fmt.readManifest(table).get
+    val braced = Map("k" -> "{bad}", "{k}" -> "}{", "files" -> "{\"bucket\":0}")
+    fmt.commitWave(table, staging = table + "/no-staging", snapshotId = 2,
+      buckets = Set.empty, files = Vector.empty, lineage = Vector.empty,
+      inputFps = Map.empty, additive = true, props = braced)
+    val man = fmt.readManifest(table).get
+    assert(man.props == before.props ++ braced)
+    assert(man.operation == "append" && man.files.isEmpty && man.fpMode.isEmpty &&
+      man.convFpsDir.isEmpty)
   }
 
   /** Delegating format that runs `inject` once just before the first commit

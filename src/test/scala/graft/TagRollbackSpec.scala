@@ -51,16 +51,12 @@ class TagRollbackSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] { SnapshotManifestFormat.tagSnapshot(out, "ghost", s0 + 900) }
 
     // the ref.* prop namespace is tag-reserved: free-form values that would
-    // wedge tags()/expiry are refused at WRITE time, as is the committed_at
-    // key (it would shadow the manifest's own trailing field)
+    // wedge tags()/expiry are refused at WRITE time
     intercept[IllegalArgumentException] {
       graft.spark.SnapshotManifestFormat.setTableProps(out, Map("ref.notes" -> "see-wiki"))
     }
     intercept[IllegalArgumentException] {
       graft.spark.SnapshotManifestFormat.setTableProps(out, Map("ref.a\"b" -> "3"))
-    }
-    intercept[IllegalArgumentException] {
-      graft.spark.SnapshotManifestFormat.setTableProps(out, Map("committed_at" -> "bogus"))
     }
 
     SnapshotManifestFormat.tagSnapshot(out, "train-v1", s0)
@@ -104,38 +100,44 @@ class TagRollbackSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s2 <= SnapshotManifestFormat.latestSnapshot(out).get)
   }
 
-  test("a prop key that spells a manifest key is refused; the manifest and JobMain's run stay untouched") {
+  test("a prop key that spells a manifest key round-trips as a prop; the manifest's own fields and JobMain's run are untouched") {
     val base = Files.createTempDirectory("graft-reserved-props").toString
     val in = s"$base/turns"
     val out = s"$base/out"
     val turns = Transcripts.generate(spark, 4)
     turns.write.parquet(in)
     ExtractionJob.run(spark, turns, ExtractionJob.Config(out, buckets = 2, waves = 1))
-    val snap = SnapshotManifestFormat.latestSnapshot(out).get
-    val manifestPath = java.nio.file.Paths.get(out, "snapshots", s"snap-$snap.json")
-    val bytes = Files.readAllBytes(manifestPath).toSeq
-    def refusal(props: Map[String, String]): String =
-      intercept[IllegalArgumentException](SnapshotManifestFormat.setTableProps(out, props)).getMessage
+    val before = ExtractionJob.readManifest(out).get
+    assert(before.fpMode.isEmpty && before.convFpsDir.isEmpty && before.props.isEmpty)
+    // every manifest field but the ones each commit writes anew
+    def fields(m: ExtractionJob.Manifest) =
+      m.copy(snapshotId = 0, operation = "", props = Map.empty, committedAt = "")
+    def commitsAndReadsBack(props: Map[String, String]): Unit = {
+      val snap = SnapshotManifestFormat.setTableProps(out, props)
+      val man = ExtractionJob.readManifest(out).get
+      assert(man.snapshotId == snap && man.props == props, man.props)
+      assert(man.operation == "props" && man.fpMode.isEmpty && man.convFpsDir.isEmpty)
+      assert(man.files == before.files && fields(man) == fields(before))
+      assert(java.time.Instant.parse(man.committedAt).toEpochMilli > 0)
+      // retire them again (empty value = tombstone)
+      SnapshotManifestFormat.setTableProps(out, props.map { case (k, _) => k -> "" })
+      assert(ExtractionJob.readManifest(out).get.props.isEmpty)
+    }
     val keys = Seq("snapshot_id", "committed_buckets", "operation", "schema", "props",
       "bucket_count", "delete_dirs", "fp_mode", "conv_fps", "input_fps", "files", "committed_at")
-    keys.foreach(k => assert(refusal(Map(k -> "x")).contains(s"prop key '$k' is reserved")))
-    // the reported hijack: these props would have read back as the
-    // manifest's own fp_mode and conv-fp sidecar pointer
-    assert(refusal(Map("fp_mode" -> "conv", "conv_fps" -> "fp-9-bogus")).contains("is reserved"))
-    // so would a key ending in one after a quote: its escaped form
-    // "x\"fp_mode" ends in the bare "fp_mode" the parser looks for
-    assert(refusal(Map("x\"fp_mode" -> "conv")).contains("is reserved"))
-    assert(SnapshotManifestFormat.latestSnapshot(out).contains(snap))
-    assert(Files.readAllBytes(manifestPath).toSeq == bytes)
-    val man = ExtractionJob.readManifest(out).get
-    assert(man.fpMode.isEmpty && man.convFpsDir.isEmpty && man.props.isEmpty)
+    keys.foreach(k => commitsAndReadsBack(Map(k -> "x")))
+    commitsAndReadsBack(keys.map(k => k -> s"$k-value").toMap)
+    // the pair that once read back as the manifest's own fp_mode and
+    // conv-fp sidecar pointer, and a key ending in one after a quote
+    commitsAndReadsBack(Map("fp_mode" -> "conv", "conv_fps" -> "fp-9-bogus"))
+    commitsAndReadsBack(Map("x\"fp_mode" -> "conv"))
 
-    // JobMain refuses the same key with the same message, before it runs
-    val viaJobMain = intercept[IllegalArgumentException] {
-      JobMain.main(Array(in, out, "2", "1", "--set-prop=fp_mode=conv"))
-    }.getMessage
-    assert(viaJobMain == refusal(Map("fp_mode" -> "conv")))
-    assert(SnapshotManifestFormat.latestSnapshot(out).contains(snap))
+    // JobMain's --set-prop commits the same key as a plain prop
+    JobMain.main(Array(in, out, "2", "1", "--set-prop=fp_mode=conv"))
+    val man = ExtractionJob.readManifest(out).get
+    assert(man.props == Map("fp_mode" -> "conv"))
+    assert(man.fpMode.isEmpty && man.convFpsDir.isEmpty)
+    assert(man.files == before.files && fields(man) == fields(before))
   }
 
   test("rollback commits old content forward as a replace; history and resume semantics hold") {
