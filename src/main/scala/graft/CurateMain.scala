@@ -182,7 +182,7 @@ object CurateMain {
       qualityGate(docs.observe(obsIn, count(lit(1)).as("n")))
         .observe(obsGate, count(lit(1)).as("n")))
     val staging = s"$outDir/staging-dedup"
-    staged.write.mode(SaveMode.Overwrite).parquet(staging)
+    graft.spark.StateDirs.write(staged).mode(SaveMode.Overwrite).parquet(staging)
     val input = obsIn.get.getOrElse("n", 0L).asInstanceOf[Long]
     val gateKept = obsGate.get.getOrElse("n", 0L).asInstanceOf[Long]
 
@@ -212,10 +212,10 @@ object CurateMain {
     // observes no metrics — getOrElse covers the empty corpus, which a
     // partitioned-parquet read-back could not even infer a schema for)
     val obsOut = org.apache.spark.sql.Observation()
-    graft.queries.Queries.epochOrder(mixed, shards, epoch)
+    graft.spark.StateDirs.write(graft.queries.Queries.epochOrder(mixed, shards, epoch)
       .select("doc_id", "lang", "source", "text", "shard", "pos")
-      .observe(obsOut, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
+      .observe(obsOut, count(lit(1)).as("n")))
+      .mode(SaveMode.Overwrite)
       .partitionBy("shard").parquet(s"$outDir/corpus")
     val mixtureKept = obsOut.get.getOrElse("n", 0L).asInstanceOf[Long]
     Funnel(input, gateKept, exactUnique, nearDupRemoved, untargetedDropped,

@@ -135,7 +135,7 @@ object IncrementalNearDup {
     recoverWhole(dir)
     val tmp = dir.resolveSibling(dir.getFileName.toString + ".next")
     val old = dir.resolveSibling(dir.getFileName.toString + ".old")
-    rows.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    graft.spark.StateDirs.write(rows).mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (Files.exists(dir)) Files.move(dir, old)
     Files.move(tmp, dir)
     deleteRecursively(old)

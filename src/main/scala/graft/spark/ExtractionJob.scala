@@ -543,7 +543,7 @@ object ExtractionJob {
       val runToken = SnapshotManifestFormat.newRunToken()
       // this run's conv-fp sidecar; prior sidecars stay for older snapshots
       val newConvFpsDir = s"fp-${snapshotId + 1}-$runToken"
-      convFps.write.mode(SaveMode.Overwrite)
+      StateDirs.write(convFps).mode(SaveMode.Overwrite)
         .parquet(s"${config.outDir}/conv_fps/$newConvFpsDir")
 
       var committed = verified
@@ -583,8 +583,8 @@ object ExtractionJob {
             // equality delete file (the Iceberg MOR shape): rows for these
             // conversations in files with a LOWER seq are invisible to readers
             val delDir = s"snap-$seq-$runToken"
-            differing.select(col("bucket"), col("conv_id"), lit(seq).as("seq"))
-              .write.mode(SaveMode.Overwrite).parquet(s"${config.outDir}/deletes/$delDir")
+            StateDirs.write(differing.select(col("bucket"), col("conv_id"), lit(seq).as("seq")))
+              .mode(SaveMode.Overwrite).parquet(s"${config.outDir}/deletes/$delDir")
             deleteDirs = deleteDirs :+ delDir
             // recompute ONLY conversations that still exist with changed content
             val changedKeys = differing.where(col("cfp").isNotNull).select("bucket", "conv_id")
@@ -716,10 +716,10 @@ object ExtractionJob {
     val (newConvFpsDir, fps) = man.convFpsDir match {
       case Some(d) if new java.io.File(s"$outDir/conv_fps/$d").isDirectory =>
         val nd = s"fp-$seq-$runToken"
-        spark.read.parquet(s"$outDir/conv_fps/$d")
+        StateDirs.write(spark.read.parquet(s"$outDir/conv_fps/$d")
           .drop("bucket").withColumn("bucket", bucketOf(newBuckets))
-          .select("bucket", "conv_id", "fp")
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/conv_fps/$nd")
+          .select("bucket", "conv_id", "fp"))
+          .mode(SaveMode.Overwrite).parquet(s"$outDir/conv_fps/$nd")
         (Some(nd), bucketFpsFromConv(spark.read.parquet(s"$outDir/conv_fps/$nd")))
       case _ => (None, Map.empty[Int, Long])
     }

@@ -230,9 +230,7 @@ object TableDoctor {
 
   private def footerRowCount(p: Path): Option[Long] =
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri), new org.apache.hadoop.conf.Configuration())
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val reader = StateDirs.openFooter(p)
       try Some(reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
       finally reader.close()
     } catch { case _: Exception => None }

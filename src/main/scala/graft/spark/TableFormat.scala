@@ -715,7 +715,6 @@ object SnapshotManifestFormat extends TableFormat {
     * Iceberg commit performs when it collects DataFile stats).
     */
   override def listStagedFiles(spark: SparkSession, staging: String): Seq[FileEntry] = {
-    val hconf = spark.sessionState.newHadoopConf()
     val stagingPath = Paths.get(staging)
     if (!Files.isDirectory(stagingPath)) return Seq.empty
     listDir(stagingPath)
@@ -725,9 +724,7 @@ object SnapshotManifestFormat extends TableFormat {
         listDir(bucketDir)
           .filter(f => isDataFile(f.getFileName.toString))
           .map { f =>
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(f.toUri), hconf)
-            val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+            val reader = StateDirs.openFooter(f)
             val (rows, minConv, maxConv) = try {
               // conv_id bounds from the same footer read as the row count —
               // every row group must carry stats or the bounds are unusable
@@ -878,12 +875,7 @@ object SnapshotManifestFormat extends TableFormat {
           .filter(f => isDataFile(f.getFileName.toString)))
         .nextOption()
         .map { f =>
-          // bare Configuration is deliberate: this format is local-FS by
-          // construction (every manifest/promote path uses java.nio.Files),
-          // and commitWave has no SparkSession to borrow a conf from
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.toUri), new org.apache.hadoop.conf.Configuration())
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val reader = StateDirs.openFooter(f)
           try parquetSchemaConverter.convert(reader.getFooter.getFileMetaData.getSchema)
           finally reader.close()
         }
@@ -1264,11 +1256,11 @@ object SnapshotManifestFormat extends TableFormat {
         case (Some(bd), Some(hd)) =>
           val nd = s"fp-$n-$tok"
           val bvals = branchBuckets.toSeq.map(Integer.valueOf)
-          spark.read.parquet(s"$outDir/conv_fps/$bd")
+          StateDirs.write(spark.read.parquet(s"$outDir/conv_fps/$bd")
             .where(col("bucket").isin(bvals: _*))
             .unionByName(spark.read.parquet(s"$outDir/conv_fps/$hd")
-              .where(!col("bucket").isin(bvals: _*)))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+              .where(!col("bucket").isin(bvals: _*))))
+            .mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$outDir/conv_fps/$nd")
           Some(nd)
         case (None, None) => None
@@ -1615,8 +1607,8 @@ object SnapshotManifestFormat extends TableFormat {
     * out in no key order. */
   private[graft] def writeSortedBuckets(format: TableFormat, data: Dataset[_], staging: String,
                                         maxRecordsPerFile: Long = 0L): Vector[FileEntry] = {
-    val writer = data.sortWithinPartitions("bucket", "conv_id", "turn_idx")
-      .write.mode(SaveMode.Overwrite)
+    val writer = StateDirs.write(data.sortWithinPartitions("bucket", "conv_id", "turn_idx"))
+      .mode(SaveMode.Overwrite)
       .options(convBloomOptions)
     (if (maxRecordsPerFile > 0) writer.option("maxRecordsPerFile", maxRecordsPerFile) else writer)
       .partitionBy("bucket").parquet(staging)

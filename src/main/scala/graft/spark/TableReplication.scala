@@ -139,8 +139,8 @@ object TableReplication {
         val deleteDir = if (nDel == 0L) None else {
           val name = s"snap-$seq-$runToken"
           lastDeleteDir.filter(_ != name).foreach(dropDeleteDirIfUnreferenced)
-          delDf.withColumn("seq", lit(seq))
-            .write.mode(SaveMode.Overwrite).parquet(s"$dstDir/deletes/$name")
+          StateDirs.write(delDf.withColumn("seq", lit(seq)))
+            .mode(SaveMode.Overwrite).parquet(s"$dstDir/deletes/$name")
           lastDeleteDir = Some(name)
           lastDeleteDir
         }
