@@ -49,9 +49,6 @@ class WritePathSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally { rec.close(); Files.deleteIfExists(f) }
   }
 
-  /** Stock RawLocalFileSystem forks chmod only when libhadoop is missing. */
-  private def stockForks: Boolean = !org.apache.hadoop.io.nativeio.NativeIO.isAvailable
-
   test("table and state writes start no chmod process") {
     val ss = spark
     import ss.implicits._
@@ -102,8 +99,9 @@ class WritePathSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nio = base.resolve("nio")
     val stockChmods = chmodForks(frame.write.partitionBy("p").parquet(stock.toString))
     val nioChmods = chmodForks(StateDirs.write(frame).partitionBy("p").parquet(nio.toString))
-    // the recording sees the stock path's forks, so its silence below is real
-    if (stockForks) assert(stockChmods.nonEmpty)
+    // the recording sees the stock path's forks (made only when libhadoop is
+    // missing), so its silence on the other path is real
+    if (!org.apache.hadoop.io.nativeio.NativeIO.isAvailable) assert(stockChmods.nonEmpty)
     assert(nioChmods.size == 0, s"chmod processes, first: ${nioChmods.headOption}")
     val (a, b) = (modes(stock), modes(nio))
     assert(a.keySet.exists(_.endsWith("_SUCCESS")) && a.keySet.exists(_.endsWith(".crc")), a.keySet)
@@ -158,12 +156,15 @@ class WritePathSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hits = for ((file, lines) <- sources; (l, n) <- lines.zipWithIndex
                     if !Seq("//", "*", "/*").exists(l.trim.startsWith)) yield (file, n + 1, l)
 
+    val stateDirs = sources.toMap.apply("graft/spark/StateDirs.scala")
+    // the nearest `def` at or above 1-based `line` of StateDirs.scala
+    def stateDirsDefAt(line: Int): Option[String] =
+      stateDirs.take(line).reverseIterator.find(_.contains("def "))
+
     val opens = hits.filter(_._3.contains("ParquetFileReader.open"))
     assert(opens.map(_._1) == Seq("graft/spark/StateDirs.scala"), opens)
-    val stateDirs = sources.toMap.apply("graft/spark/StateDirs.scala")
-    val openLine = opens.head._2
-    assert(stateDirs.take(openLine).reverseIterator.find(_.contains("def ")).exists(
-      _.contains("def openFooter(")), "ParquetFileReader.open must sit inside openFooter")
+    assert(stateDirsDefAt(opens.head._2).exists(_.contains("def openFooter(")),
+      "ParquetFileReader.open must sit inside openFooter")
 
     // a Dataset's `.write` is paren-less; OutputStream/Files writes are calls
     val datasetWrite = """\.write\b(?!\s*\()(?!Stream)""".r
@@ -175,8 +176,7 @@ class WritePathSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(exempt.nonEmpty, "the exemptions should match something; drop any that do not")
     assert(governed.size == 1, governed.mkString("\n"))
     val (file, line, _) = governed.head
-    assert(file == "graft/spark/StateDirs.scala" &&
-      stateDirs.take(line).reverseIterator.find(_.contains("def ")).exists(_.contains("def write[")),
+    assert(file == "graft/spark/StateDirs.scala" && stateDirsDefAt(line).exists(_.contains("def write[")),
       s"the only Dataset .write in src/main is StateDirs.write's own: $governed")
   }
 }
