@@ -113,66 +113,12 @@ object JobMain {
     val fingerprint = args.contains("--fingerprint-inputs")
     val convGrained = args.contains("--conv-grained")
     val doCompact = args.contains("--compact")
-    val orphanAge: Option[Long] =
-      args.find(_.startsWith("--remove-orphans=")).map { a =>
-        val ms =
-          try a.stripPrefix("--remove-orphans=").toLong
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"--remove-orphans=AGE_MS requires an integer, got: $a")
-          }
-        require(ms >= 0, s"--remove-orphans=AGE_MS must be >= 0, got $ms")
-        ms
-      }
-    val branchTtl: Option[Long] =
-      args.find(_.startsWith("--expire-branches=")).map { a =>
-        val ms =
-          try a.stripPrefix("--expire-branches=").toLong
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"--expire-branches=AGE_MS requires an integer, got: $a")
-          }
-        require(ms >= 0, s"--expire-branches=AGE_MS must be >= 0, got $ms")
-        ms
-      }
-    val expireRetain: Option[Int] =
-      args.find(_.startsWith("--expire=")).map { a =>
-        val n = // fail at PARSE time, not after the whole extraction ran
-          try a.stripPrefix("--expire=").toInt
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"--expire=N requires an integer, got: $a")
-          }
-        require(n >= 1, s"--expire=N must retain at least 1 snapshot, got $n")
-        n
-      }
-    val rebucketTo: Option[Int] =
-      args.find(_.startsWith("--rebucket=")).map { a =>
-        val n =
-          try a.stripPrefix("--rebucket=").toInt
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"--rebucket=N requires an integer, got: $a")
-          }
-        require(n >= 1, s"--rebucket=N requires a positive modulus, got $n")
-        n
-      }
-    val rewriteSortedTarget: Option[Long] =
-      args.find(_.startsWith("--rewrite-sorted=")).map { a =>
-        val n =
-          try a.stripPrefix("--rewrite-sorted=").toLong
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"--rewrite-sorted=ROWS_PER_FILE requires an integer, got: $a")
-          }
-        require(n >= 1, s"--rewrite-sorted=ROWS_PER_FILE must be positive, got $n")
-        n
-      }
-    val binpackMin: Option[Long] =
-      args.find(_.startsWith("--binpack=")).map { a =>
-        val n =
-          try a.stripPrefix("--binpack=").toLong
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"--binpack=MIN_ROWS requires an integer, got: $a")
-          }
-        require(n >= 1, s"--binpack=MIN_ROWS must be positive, got $n")
-        n
-      }
+    val orphanAge = intFlag(args, "--remove-orphans=AGE_MS", min = 0)
+    val branchTtl = intFlag(args, "--expire-branches=AGE_MS", min = 0)
+    val expireRetain = intFlag(args, "--expire=N", min = 1, max = Int.MaxValue).map(_.toInt)
+    val rebucketTo = intFlag(args, "--rebucket=N", min = 1, max = Int.MaxValue).map(_.toInt)
+    val rewriteSortedTarget = intFlag(args, "--rewrite-sorted=ROWS_PER_FILE", min = 1)
+    val binpackMin = intFlag(args, "--binpack=MIN_ROWS", min = 1)
     val setProps: Map[String, String] =
       args.filter(_.startsWith("--set-prop=")).map { a =>
         val kv = a.stripPrefix("--set-prop=")
@@ -325,14 +271,7 @@ object JobMain {
     // into one print; the sort+limit runs DISTRIBUTED and only N rows
     // reach the driver. Default bounds the accident, explicit --limit
     // raises it deliberately.
-    val metaLimit: Int = args.find(_.startsWith("--limit=")).map { a =>
-      val v = a.stripPrefix("--limit=")
-      val n = try v.toInt catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(s"--limit=N expects an integer, got: '$v'")
-      }
-      require(n >= 1, s"--limit=N must be positive, got $n")
-      n
-    }.getOrElse(10000)
+    val metaLimit: Int = intFlag(args, "--limit=N", min = 1, max = Int.MaxValue).fold(10000)(_.toInt)
     args.find(a => a == "--files" || a.startsWith("--files=")).foreach { a =>
       // $files metadata table (Iceberg files analog): current snapshot, or
       // --files=SNAP for any retained one — per-file bucket/rows/seq/bounds
@@ -535,6 +474,19 @@ object JobMain {
   }
 
   private def jstr(s: String): String = Json.renderCompact(JStr(s))
+
+  /** The value of `flag` (`--name=META`), checked at parse time, not after
+    * the whole extraction ran: an integer from `min` to `max`. */
+  private def intFlag(args: Array[String], flag: String, min: Long,
+                      max: Long = Long.MaxValue): Option[Long] = {
+    val prefix = flag.takeWhile(_ != '=') + "="
+    args.find(_.startsWith(prefix)).map { a =>
+      val n = a.stripPrefix(prefix).toLongOption.filter(_ <= max).getOrElse(
+        throw new IllegalArgumentException(s"$flag requires an integer, got: $a"))
+      require(n >= min, s"$flag must be >= $min, got $n")
+      n
+    }
+  }
 
   /** The post-run maintenance half shared by the batch and streaming paths:
     * compaction, snapshot expiry, orphan sweep, props commit. Returns the

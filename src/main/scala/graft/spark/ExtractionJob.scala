@@ -263,26 +263,20 @@ object ExtractionJob {
       "toBranch (write-audit-publish) requires convGrained: only merge-on-read " +
         "delta commits are additive and can be staged unpublished")
     val acc = scala.collection.mutable.Set.empty[Int]
-    var attempt = 0
-    while (true) {
-      try {
-        // on an existing table the RECORDED bucket modulus is authoritative
-        // (same contract as the streaming sink): an operator passing a
-        // different [buckets] must not silently mix moduli — dirty-bucket
-        // diffing, keyed reads and equality deletes all key on the recorded
-        // one. rebucket() is the sanctioned way to change it. Re-resolved
-        // per attempt: a concurrent rebucket advances it between retries.
-        val eff = format.readManifest(config.outDir).flatMap(_.bucketCount)
-          .map(n => config.copy(buckets = n)).getOrElse(config)
-        if (eff.convGrained) runConvGrained(spark, turns, eff, format, acc)
-        else runBucketGrained(spark, turns, eff, format, acc)
-        return acc.toSet
-      } catch {
-        case _: CommitConflictException if attempt < config.commitRetries =>
-          attempt += 1 // re-plan from the winner's state and try again
-      }
+    // a lost race re-plans from the winner's state and tries again
+    SnapshotManifestFormat.retrying(config.commitRetries) {
+      // on an existing table the RECORDED bucket modulus is authoritative
+      // (same contract as the streaming sink): an operator passing a
+      // different [buckets] must not silently mix moduli — dirty-bucket
+      // diffing, keyed reads and equality deletes all key on the recorded
+      // one. rebucket() is the sanctioned way to change it. Re-resolved
+      // per attempt: a concurrent rebucket advances it between retries.
+      val eff = format.readManifest(config.outDir).flatMap(_.bucketCount)
+        .map(n => config.copy(buckets = n)).getOrElse(config)
+      if (eff.convGrained) runConvGrained(spark, turns, eff, format, acc)
+      else runBucketGrained(spark, turns, eff, format, acc)
     }
-    acc.toSet // unreachable
+    acc.toSet
   }
 
   private def runBucketGrained(spark: SparkSession, turns: Dataset[Turn], config: Config,
@@ -558,10 +552,11 @@ object ExtractionJob {
 
       // ---- delta stage: changed conversations of dirty buckets ----
       if (dirty.nonEmpty) {
-        val priorConvFps: DataFrame = man.flatMap(_.convFpsDir) match {
-          case Some(d) if new java.io.File(s"${config.outDir}/conv_fps/$d").isDirectory =>
-            spark.read.parquet(s"${config.outDir}/conv_fps/$d")
-          case _ => // no recorded sidecar: every conversation counts as changed
+        val priorDir = man.flatMap(_.convFpsDir).map(d => s"${config.outDir}/conv_fps/$d")
+          .filter(new java.io.File(_).isDirectory)
+        val priorConvFps: DataFrame = priorDir match {
+          case Some(d) => spark.read.parquet(d)
+          case None => // no recorded sidecar: every conversation counts as changed
             spark.emptyDataset[(Int, String, Long)].toDF("bucket", "conv_id", "fp")
         }
         val cur = convFps.where(col("bucket").isin(dirty: _*))
@@ -571,7 +566,32 @@ object ExtractionJob {
         val differing = cur.join(pri, Seq("bucket", "conv_id"), "full_outer")
           .where(!(col("cfp") <=> col("pfp"))).cache()
         val seq = snapshotId + 1
-        val nDiff = differing.count()
+        // per bucket: differing conversations, and those without a prior fingerprint
+        val perBucket = differing.groupBy("bucket")
+          .agg(count(lit(1)), count(when(col("pfp").isNull, lit(1)))).collect()
+          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+        // A conversation without a prior fingerprint has no older row to
+        // delete when its bucket has no data files, or when the sidecar lists
+        // every conversation committed to the bucket. Conv-grained commits
+        // record the bucket's conv-mode fingerprint with the sidecar, and
+        // drop it only when none of the bucket's conversations is left to
+        // list. A bucket-grained recompute drops the fingerprint of a bucket
+        // the sidecar still lists; stream-sink and replica commits (marked by
+        // their sticky `stream.` props) append rows the sidecar never lists.
+        val sidecarKept = priorDir.isDefined && man.exists(m =>
+          m.fpMode.contains("conv") && !m.props.keysIterator.exists(_.startsWith("stream.")))
+        val withFiles = committedFiles.map(_.bucket).toSet
+        val fresh = perBucket.collect { case (b, _, noPrior) if noPrior > 0 && withFiles(b) => b }
+        val unlisted: Seq[Int] =
+          if (!sidecarKept) fresh
+          else fresh.filterNot(manFps.contains) match {
+            case noFp if noFp.isEmpty => Seq.empty
+            case noFp => priorConvFps.where(col("bucket").isin(noFp: _*))
+              .select("bucket").distinct().collect().map(_.getInt(0)).toSeq
+          }
+        val nDiff = perBucket.map(_._2).sum
+        val nDel = perBucket.map { case (b, n, noPrior) =>
+          if (unlisted.contains(b)) n else n - noPrior }.sum
         fpsBase = dirty.foldLeft(fpsBase) { (m, b) =>
           currentFps.get(b) match {
             case Some(fp) => m.updated(b, fp)
@@ -580,12 +600,16 @@ object ExtractionJob {
         }
         val (staging, files, lineage) =
           if (nDiff > 0) {
-            // equality delete file (the Iceberg MOR shape): rows for these
-            // conversations in files with a LOWER seq are invisible to readers
-            val delDir = s"snap-$seq-$runToken"
-            StateDirs.write(differing.select(col("bucket"), col("conv_id"), lit(seq).as("seq")))
-              .mode(SaveMode.Overwrite).parquet(s"${config.outDir}/deletes/$delDir")
-            deleteDirs = deleteDirs :+ delDir
+            if (nDel > 0) {
+              // equality delete file (the Iceberg MOR shape): rows for these
+              // conversations in files with a LOWER seq are invisible to readers
+              val delDir = s"snap-$seq-$runToken"
+              StateDirs.write(differing
+                .where(col("pfp").isNotNull || col("bucket").isin(unlisted: _*))
+                .select(col("bucket"), col("conv_id"), lit(seq).as("seq")))
+                .mode(SaveMode.Overwrite).parquet(s"${config.outDir}/deletes/$delDir")
+              deleteDirs = deleteDirs :+ delDir
+            }
             // recompute ONLY conversations that still exist with changed content
             val changedKeys = differing.where(col("cfp").isNotNull).select("bucket", "conv_id")
             val toRecompute = withBucket
@@ -638,12 +662,8 @@ object ExtractionJob {
       if (config.autoCompactDeletes > 0 && deleteDirs.nonEmpty && config.toBranch.isEmpty) {
         // same loud policy as the read path: a MANIFEST-tracked delete dir
         // missing on disk is an integrity error, not something to skip over
-        val paths = deleteDirs.map { d =>
-          val p = s"${config.outDir}/deletes/$d"
-          require(new java.io.File(p).isDirectory, s"manifest-tracked delete dir missing: $p")
-          p
-        }
-        val nDeletes = spark.read.parquet(paths: _*).count()
+        val paths = SnapshotManifestFormat.manifestDeleteDirs(config.outDir, deleteDirs)
+        val nDeletes = spark.read.parquet(paths.map(_.toString): _*).count()
         if (nDeletes >= config.autoCompactDeletes) format.compact(spark, config.outDir)
       }
     } finally { convFps.unpersist(); () }
@@ -660,26 +680,17 @@ object ExtractionJob {
     * deletes are applied by the rewrite (the source is the committed
     * view) and one replacing snapshot is committed. Returns the new
     * snapshot id. */
-  def rewriteSorted(spark: SparkSession, outDir: String, targetRowsPerFile: Long,
-                    format: TableFormat = SnapshotManifestFormat): Int = {
+  def rewriteSorted(spark: SparkSession, outDir: String, targetRowsPerFile: Long): Int = {
     require(targetRowsPerFile > 0, s"targetRowsPerFile must be positive, got $targetRowsPerFile")
-    val man = format.readManifest(outDir).getOrElse(
+    val fmt = SnapshotManifestFormat
+    val man = fmt.readManifest(outDir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $outDir"))
     val buckets = man.files.map(_.bucket).distinct
     if (buckets.isEmpty) return man.snapshotId
-    val seq = man.snapshotId + 1
-    // writer-unique names (see runConvGrained's runToken note)
-    val runToken = SnapshotManifestFormat.newRunToken()
-    val staging = s"$outDir/staging-sortrewrite-$seq-$runToken"
-    val committed = format.readCommitted(spark, outDir).repartition(buckets.size, col("bucket"))
-    val newFiles = SnapshotManifestFormat.writeSortedBuckets(format, committed, staging,
-      maxRecordsPerFile = targetRowsPerFile).map(_.copy(seq = seq))
-    format.commitWave(outDir, staging, seq, man.buckets, newFiles,
-      SnapshotManifestFormat.bucketLineage(seq, newFiles),
-      man.inputFps, additive = false, convFpsDir = man.convFpsDir,
+    fmt.rewriteBuckets(outDir, man, "sortrewrite", fmt.readCommitted(spark, outDir), buckets.size,
+      kept = Seq.empty, additive = false,
       deleteDirs = Seq.empty, // applied by the rewrite
-      fpMode = man.fpMode, bucketCount = man.bucketCount, operation = "rewrite")
-    seq
+      maxRecordsPerFile = targetRowsPerFile)()
   }
 
   /** Partition evolution (Iceberg's spec change, realized the only way a
@@ -697,41 +708,34 @@ object ExtractionJob {
     * travel to pre-rebucket snapshots reports history loss once their
     * files are gone — both the established `compact` contracts. Returns
     * the new snapshot id; no-op when the modulus already matches. */
-  def rebucket(spark: SparkSession, outDir: String, newBuckets: Int,
-               format: TableFormat = SnapshotManifestFormat): Int = {
+  def rebucket(spark: SparkSession, outDir: String, newBuckets: Int): Int = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    val man = format.readManifest(outDir).getOrElse(
+    val fmt = SnapshotManifestFormat
+    val man = fmt.readManifest(outDir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $outDir"))
     if (man.bucketCount.contains(newBuckets)) return man.snapshotId
-    val seq = man.snapshotId + 1
-    // writer-unique names (see runConvGrained's runToken note)
-    val runToken = SnapshotManifestFormat.newRunToken()
-    val staging = s"$outDir/staging-rebucket-$seq-$runToken"
-    val rehashed = format.readCommitted(spark, outDir)
+    val rehashed = fmt.readCommitted(spark, outDir)
       .drop("bucket")
       .withColumn("bucket", bucketOf(newBuckets))
-      .repartition(newBuckets, col("bucket"))
-    val newFiles = SnapshotManifestFormat.writeSortedBuckets(format, rehashed, staging)
-      .map(_.copy(seq = seq))
-    val (newConvFpsDir, fps) = man.convFpsDir match {
-      case Some(d) if new java.io.File(s"$outDir/conv_fps/$d").isDirectory =>
-        val nd = s"fp-$seq-$runToken"
-        StateDirs.write(spark.read.parquet(s"$outDir/conv_fps/$d")
-          .drop("bucket").withColumn("bucket", bucketOf(newBuckets))
-          .select("bucket", "conv_id", "fp"))
-          .mode(SaveMode.Overwrite).parquet(s"$outDir/conv_fps/$nd")
-        (Some(nd), bucketFpsFromConv(spark.read.parquet(s"$outDir/conv_fps/$nd")))
-      case _ => (None, Map.empty[Int, Long])
+    // pending deletes are applied by the rewrite. Bucket dirs outside the
+    // new modulus range are no longer promoted over; their files stay for
+    // older manifests and are GC'd by expireSnapshots
+    fmt.rewriteBuckets(outDir, man, "rebucket", rehashed, newBuckets, kept = Seq.empty,
+        additive = false, deleteDirs = Seq.empty) { (seq, runToken) =>
+      val (newConvFpsDir, fps) = man.convFpsDir match {
+        case Some(d) if new java.io.File(s"$outDir/conv_fps/$d").isDirectory =>
+          val nd = s"fp-$seq-$runToken"
+          StateDirs.write(spark.read.parquet(s"$outDir/conv_fps/$d")
+            .drop("bucket").withColumn("bucket", bucketOf(newBuckets))
+            .select("bucket", "conv_id", "fp"))
+            .mode(SaveMode.Overwrite).parquet(s"$outDir/conv_fps/$nd")
+          (Some(nd), bucketFpsFromConv(spark.read.parquet(s"$outDir/conv_fps/$nd")))
+        case _ => (None, Map.empty[Int, Long])
+      }
+      man.copy(buckets = (0 until newBuckets).toSet, inputFps = fps, convFpsDir = newConvFpsDir,
+        fpMode = if (newConvFpsDir.isDefined) Some("conv") else None,
+        bucketCount = Some(newBuckets))
     }
-    format.commitWave(outDir, staging, seq, (0 until newBuckets).toSet, newFiles,
-      SnapshotManifestFormat.bucketLineage(seq, newFiles), fps, additive = false,
-      convFpsDir = newConvFpsDir,
-      deleteDirs = Seq.empty, // applied by the rewrite
-      fpMode = if (newConvFpsDir.isDefined) Some("conv") else None,
-      bucketCount = Some(newBuckets), operation = "rewrite")
-    // bucket dirs outside the new modulus range are no longer promoted over;
-    // their files stay for older manifests and are GC'd by expireSnapshots
-    seq
   }
 
   /** Structural audit verdict for a staged branch (the "A" of

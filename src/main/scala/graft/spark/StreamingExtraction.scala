@@ -43,8 +43,7 @@ object StreamingExtraction {
     */
   def runAvailableNowToTable(spark: SparkSession, inputDir: String, tableDir: String,
                              checkpointDir: String, buckets: Int = 8,
-                             queryKey: String = "stream",
-                             format: TableFormat = SnapshotManifestFormat): Long = {
+                             queryKey: String = "stream"): Long = {
     val sinkKey = s"$queryKey-${checkpointSinkId(checkpointDir)}"
     val appended = new java.util.concurrent.atomic.LongAdder
     val turns = spark.readStream
@@ -53,7 +52,8 @@ object StreamingExtraction {
       .as[Turn](Encoders.product[Turn])
     val q = turns.writeStream
       .foreachBatch { (batch: Dataset[Turn], batchId: Long) =>
-        appended.add(appendBatchToTable(spark, batch, batchId, tableDir, buckets, sinkKey, format))
+        appended.add(appendBatchToTable(spark, batch, batchId, tableDir, buckets, sinkKey,
+          SnapshotManifestFormat))
         ()
       }
       .option("checkpointLocation", checkpointDir)
@@ -118,7 +118,7 @@ object StreamingExtraction {
     */
   def appendBatchToTable(spark: SparkSession, batch: Dataset[Turn], batchId: Long,
                          tableDir: String, buckets: Int, queryKey: String,
-                         format: TableFormat, commitRetries: Int = 2): Long = {
+                         format: TableFormat): Long = {
     val man0 = format.readManifest(tableDir)
     markerOf(man0, queryKey) match {
       case Some(maxId) if batchId <= maxId => return 0L // replayed batch: already in the table
@@ -179,7 +179,8 @@ object StreamingExtraction {
           props = Map(s"stream.$queryKey" -> batchId.toString))
         return files.map(_.rowCount).sum
       } catch {
-        case _: CommitConflictException if attempt < commitRetries => attempt += 1
+        // two retries, as the batch job's default `commitRetries`
+        case _: CommitConflictException if attempt < 2 => attempt += 1
       }
     }
     0L // unreachable

@@ -23,13 +23,16 @@ final class CommitConflictException(msg: String,
                                      val retryable: Boolean = true)
   extends RuntimeException(msg)
 
-/** Table-format seam (SURVEY.md §7.4.7): everything ExtractionJob needs
-  * from the underlying table format — snapshot lookup, committed-state
-  * verification, wave commit (promote + manifest + lineage, atomically
-  * versioned) and snapshot-isolated reads. The default implementation is
-  * the file-based snapshot-manifest protocol below; a real Iceberg catalog
-  * (commit via Catalog/Table.newAppend, read via the snapshot scan) drops
-  * in behind this trait without touching the job.
+/** The table seam: what `ExtractionJob.run` and
+  * `StreamingExtraction.appendBatchToTable` take as their `format`. The
+  * race-injection specs substitute a delegating format here to land a
+  * concurrent commit inside a run, and perfbench's `TracingFormat` does to
+  * time commits, staging listings and manifest reads. Its member set is
+  * exactly what `TracingFormat` forwards, and no member has a body, so a
+  * delegator cannot answer differently from the real format. The one
+  * implementation is the file-based snapshot-manifest protocol,
+  * [[SnapshotManifestFormat]], which also holds the operations no
+  * substitute needs: tags, rollback, metadata tables, table properties.
   */
 trait TableFormat {
 
@@ -91,14 +94,10 @@ trait TableFormat {
   def readCommitted(spark: SparkSession, outDir: String): DataFrame
 
   /** Keyed read — rows of exactly the requested conversations (Iceberg
-    * data-skipping analog). Implementations may prune manifest files via
-    * the recorded bucket modulus and per-file conv_id bounds; this default
-    * filters a full committed read (always correct, never pruned). */
+    * data-skipping analog), with manifest files pruned via the recorded
+    * bucket modulus and per-file conv_id bounds. */
   def readCommittedForConvs(spark: SparkSession, outDir: String,
-                            convIds: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    readCommitted(spark, outDir).where(col("conv_id").isin(convIds: _*))
-  }
+                            convIds: Seq[String]): DataFrame
 
   /** Manifest of a specific snapshot (time travel). */
   def readManifestAt(outDir: String, snapshotId: Int): Option[Manifest]
@@ -118,8 +117,9 @@ trait TableFormat {
                          fromSnapshot: Int, toSnapshot: Int): DataFrame
 
   /** The upsert keys (bucket, conv_id) whose content changed in the range
-    * (fromSnapshot, toSnapshot]: re-extracted, newly added, or removed
-    * conversations, from the range's equality delete files. CDC
+    * (fromSnapshot, toSnapshot]: re-extracted or removed conversations
+    * that had committed rows, from the range's equality delete files (a
+    * conversation new to the table only appends). CDC
     * consumption = delete these keys downstream, then apply
     * readAppendsBetween's rows. Same range validation as appends. */
   def readDeleteKeysBetween(spark: SparkSession, outDir: String,
@@ -141,12 +141,6 @@ trait TableFormat {
     * gap between commits, the same contract Iceberg's timestamp travel
     * carries. Throws when no snapshot is old enough. */
   def snapshotAsOfTimestamp(outDir: String, tsMillis: Long): Int
-
-  /** [[snapshotAsOfTimestamp]] + [[readCommittedAsOf]] in one step; `ts`
-    * is an ISO-8601 instant (e.g. "2026-08-18T12:00:00Z"). */
-  def readCommittedAsOfTimestamp(spark: SparkSession, outDir: String, ts: String): DataFrame =
-    readCommittedAsOf(spark, outDir,
-      snapshotAsOfTimestamp(outDir, java.time.Instant.parse(ts).toEpochMilli))
 
   /** Merge-on-read maintenance (Iceberg rewrite_data_files): rewrite the
     * buckets carrying equality deletes into clean sorted files and commit a
@@ -204,8 +198,7 @@ trait TableFormat {
     * cherrypick_snapshot. On conflict, throws CommitConflictException:
     * abandon and re-stage against the new head. The sidecar/delete-dir
     * merge is a batch-bounded Spark job, never a table rewrite. */
-  def publishBranch(spark: SparkSession, outDir: String, name: String): Int =
-    publishBranch(outDir, name)
+  def publishBranch(spark: SparkSession, outDir: String, name: String): Int
 
   /** Drop branch `name` without publishing: delete the staged snapshot's
     * manifest, lineage, and every data file / delete dir / conv-fp sidecar
@@ -228,212 +221,11 @@ trait TableFormat {
     * application exactly as the table would read AFTER publish. */
   def readCommittedAtBranch(spark: SparkSession, outDir: String, name: String): DataFrame
 
-  /** Tag a snapshot with a named ref (Iceberg tag analog): the tag is a
-    * sticky prop `ref.<name>` -> snapshot id, so it survives every later
-    * commit and — because `expireSnapshots` retains tagged snapshots — the
-    * tagged data itself survives retention. This is the reproducibility
-    * primitive for training-data pipelines: tag the exact table version a
-    * model trained on and `readCommittedAtTag` serves those bytes years of
-    * commits later. */
-  def tagSnapshot(outDir: String, name: String, snapshotId: Int): Unit = {
-    // conservative charset: tag names surface in CLI JSON and file-less
-    // prop keys, so quotes/backslashes/braces are all trouble
-    require(name.matches("[A-Za-z0-9._-]+"), s"invalid tag name: '$name'")
-    require(readManifestAt(outDir, snapshotId).nonEmpty,
-      s"cannot tag snapshot $snapshotId under $outDir: no such retained snapshot")
-    setTableProps(outDir, Map(s"ref.$name" -> snapshotId.toString))
-    ()
-  }
-
-  /** Remove a tag (prop tombstone). The formerly tagged snapshot becomes
-    * expirable again on the next `expireSnapshots`. */
-  def dropTag(outDir: String, name: String): Unit = {
-    setTableProps(outDir, Map(s"ref.$name" -> ""))
-    ()
-  }
-
-  /** All tags on the table: name -> snapshot id. */
-  def tags(outDir: String): Map[String, Int] =
-    readManifest(outDir).map(_.props.collect {
-      case (k, v) if k.startsWith("ref.") =>
-        require(v.matches("\\d+"),
-          s"corrupt tag prop $k='$v' on $outDir: expected a snapshot id")
-        k.stripPrefix("ref.") -> v.toInt
-    }).getOrElse(Map.empty)
-
-  /** Snapshot-isolated read of a tagged table version. */
-  def readCommittedAtTag(spark: SparkSession, outDir: String, name: String): DataFrame = {
-    val id = tags(outDir).getOrElse(name,
-      throw new IllegalArgumentException(s"no tag '$name' on table $outDir"))
-    readCommittedAsOf(spark, outDir, id)
-  }
-
-  /** Roll the table back to snapshot `snapshotId` by committing that
-    * snapshot's content forward as a NEW snapshot (Iceberg rollback
-    * analog) — history is never rewritten in place, so time travel to the
-    * rolled-back-over snapshots keeps working until they expire. The
-    * commit's operation is "replace" (content CHANGES — stronger than a
-    * maintenance "rewrite"): incremental (CDC) reads across it are
-    * refused, and incremental curation rebuilds. Streaming-sink markers
-    * are NOT rolled back (batches whose data was rolled away stay marked
-    * committed — resuming a sink over a rolled-back table needs a fresh
-    * checkpoint, the standard lakehouse caveat). Returns the new snapshot
-    * id. */
-  def rollbackTo(outDir: String, snapshotId: Int, retries: Int = 2): Int = {
-    var attempt = 0
-    while (true) {
-      val target = readManifestAt(outDir, snapshotId).getOrElse(throw new IllegalStateException(
-        s"cannot roll back to snapshot $snapshotId under $outDir: " +
-          "manifest missing — rewritten or expired"))
-      // the target's files may have been rewritten by compaction or GC'd
-      // by expiry since its manifest was retained: committing them forward
-      // would wedge the table HEAD on missing files
-      if (!snapshotIntact(outDir, target))
-        throw new IllegalStateException(
-          s"cannot roll back to snapshot $snapshotId under $outDir: its data files " +
-            "have been rewritten or expired (compaction / expireSnapshots GC)")
-      val latest = readManifest(outDir).getOrElse(throw new IllegalStateException(
-        s"no committed snapshot under $outDir"))
-      if (latest.snapshotId == snapshotId) return snapshotId // already there: no-op
-      try {
-        commitWave(outDir, staging = outDir + "/no-staging", latest.snapshotId + 1,
-          target.buckets, target.files, lineage = Seq.empty, inputFps = target.inputFps,
-          additive = true, convFpsDir = target.convFpsDir, deleteDirs = target.deleteDirs,
-          fpMode = target.fpMode, bucketCount = target.bucketCount,
-          operation = "replace", schemaDdl = Some(target.schemaDdl))
-        return latest.snapshotId + 1
-      } catch {
-        case e: CommitConflictException =>
-          if (attempt >= retries) throw e
-          attempt += 1
-      }
-    }
-    -1 // unreachable
-  }
-
   /** True when every data file and tracked delete dir of `man` still
     * exists — the same sweep time travel performs, exposed so rollback can
     * refuse before committing a manifest that references rewritten or
-    * GC'd files. Formats without direct file access may return true. */
-  def snapshotIntact(outDir: String, man: Manifest): Boolean = true
-
-  /** Every retained snapshot's manifest, ascending. Snapshot ids are a
-    * dense counter from 0, so probing the id range covers expiry holes;
-    * the cost is manifest reads only, never data IO. */
-  def retainedManifests(outDir: String): Seq[Manifest] =
-    latestSnapshot(outDir) match {
-      case None => Seq.empty
-      case Some(latest) => (0 to latest).flatMap(readManifestAt(outDir, _))
-    }
-
-  /** Per-snapshot lineage rows. Formats that record no lineage serve an
-    * empty seq. */
-  def readLineage(outDir: String, snapshotId: Int): Seq[LineageRow] = Seq.empty
-
-  /** Metadata table (Iceberg `$snapshots` / `$history` analog): one row
-    * per retained snapshot — id, operation, commit instant, file/row/
-    * bucket/delete-dir counts, whether it is the current snapshot, and the
-    * tags pinning it. Driver-side and manifest-sized: the driver already
-    * holds each manifest to read the table at all, so this never touches
-    * data files. */
-  def readSnapshotsTable(spark: SparkSession, outDir: String): DataFrame = {
-    val current = latestSnapshot(outDir)
-    val tagged = tags(outDir).toSeq.groupBy(_._2).view.mapValues(_.map(_._1).sorted).toMap
-    val rows = retainedManifests(outDir).map { m =>
-      SnapshotMetaRow(m.snapshotId, m.operation, m.committedAt, m.files.size,
-        m.files.map(_.rowCount).sum, m.buckets.size, m.deleteDirs.size,
-        current.contains(m.snapshotId), tagged.getOrElse(m.snapshotId, Seq.empty),
-        org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl).fieldNames.toSeq)
-    }
-    import spark.implicits._
-    rows.toDF()
-  }
-
-  /** Metadata table (Iceberg `$files` analog): one row per committed data
-    * file of a snapshot's manifest (default: current) — bucket, path, row
-    * count, commit seq, conv_id bounds. Same driver-side cost bound as
-    * `readSnapshotsTable`. */
-  def readFilesTable(spark: SparkSession, outDir: String,
-                     snapshotId: Option[Int] = None): DataFrame = {
-    val k = snapshotId.orElse(latestSnapshot(outDir)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $outDir"))
-    val man = readManifestAt(outDir, k).getOrElse(throw new IllegalStateException(
-      s"no manifest for snapshot $k under $outDir — rewritten or expired"))
-    val rows = man.files.map(f => FileMetaRow(man.snapshotId, f.bucket, f.path,
-      f.rowCount, f.seq, f.minConv, f.maxConv))
-    import spark.implicits._
-    rows.toDF()
-  }
-
-  /** Metadata table (`$partitions` analog): per-bucket file/row health of
-    * the CURRENT snapshot — file counts, rows, small-file debt below
-    * `smallRowThreshold`, and pending equality-delete rows. Everything
-    * but the delete count comes from the manifest (driver-side,
-    * O(manifest)); the delete count is one narrow scan of the tracked
-    * delete dirs (delete files are tiny by construction). This is the
-    * input a maintenance planner reads to target --compact/--binpack. */
-  def readPartitionsTable(spark: SparkSession, outDir: String,
-                          smallRowThreshold: Long = 1000L): DataFrame = {
-    import spark.implicits._
-    val man = readManifest(outDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $outDir"))
-    val delByBucket: Map[Int, Long] = {
-      val dirs = man.deleteDirs
-        .map(d => java.nio.file.Paths.get(outDir, "deletes", d))
-        .filter(java.nio.file.Files.isDirectory(_))
-      if (dirs.isEmpty) Map.empty
-      else spark.read.parquet(dirs.map(_.toString): _*)
-        .groupBy("bucket").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    }
-    val rows = man.files.groupBy(_.bucket).toSeq.sortBy(_._1).map { case (b, fs) =>
-      PartitionMetaRow(b, fs.size, fs.map(_.rowCount).sum,
-        fs.count(_.rowCount < smallRowThreshold),
-        fs.map(_.rowCount).min, fs.map(_.rowCount).max,
-        delByBucket.getOrElse(b, 0L))
-    }
-    // buckets with only delete debt and no files still surface
-    val fileless = delByBucket.keySet -- man.files.map(_.bucket).toSet
-    (rows ++ fileless.toSeq.sorted.map(b =>
-      PartitionMetaRow(b, 0, 0L, 0, 0L, 0L, delByBucket(b)))).toDF()
-  }
-
-  /** Metadata table: the per-bucket lineage rows of every retained
-    * snapshot (input row counts, field sums, extraction wall time) — the
-    * audit trail for "which run produced this bucket and how long did it
-    * take". Empty for formats that record no lineage. */
-  def readLineageTable(spark: SparkSession, outDir: String): DataFrame = {
-    val rows = retainedManifests(outDir).flatMap(m => readLineage(outDir, m.snapshotId))
-    import spark.implicits._
-    rows.toDF()
-  }
-
-  /** Props-only maintenance commit (`ALTER TABLE SET/UNSET TBLPROPERTIES`
-    * analog): lays `props` over the sticky table properties without
-    * touching data — an empty value retires a key, the operator's removal
-    * path for dead markers (e.g. a decommissioned streaming sink). Retries
-    * lost optimistic races against the fresh state. Returns the committed
-    * snapshot id. */
-  def setTableProps(outDir: String, props: Map[String, String], retries: Int = 2): Int = {
-    var attempt = 0
-    while (true) {
-      val man = readManifest(outDir).getOrElse(throw new IllegalStateException(
-        s"no committed snapshot under $outDir — props live on manifests"))
-      try {
-        commitWave(outDir, staging = outDir + "/no-staging", man.snapshotId + 1,
-          man.buckets, man.files, lineage = Seq.empty, inputFps = man.inputFps,
-          additive = true, convFpsDir = man.convFpsDir, deleteDirs = man.deleteDirs,
-          fpMode = man.fpMode, bucketCount = man.bucketCount,
-          operation = "props", props = props)
-        return man.snapshotId + 1
-      } catch {
-        case e: CommitConflictException =>
-          if (attempt >= retries) throw e
-          attempt += 1
-      }
-    }
-    -1 // unreachable
-  }
+    * GC'd files. */
+  def snapshotIntact(outDir: String, man: Manifest): Boolean
 }
 
 /** One row of the `$snapshots` metadata table. */
@@ -1079,21 +871,7 @@ object SnapshotManifestFormat extends TableFormat {
         // a publish losing its optimistic race (another head commit or
         // another branch's publish landed first) re-reads the moved head
         // and re-validates — the same re-plan loop every head writer runs
-        var attempt = 0
-        while (true) {
-          try return publishStaged(sparkOpt, outDir, name, man)
-          catch {
-            // deterministic validation conflicts (bucket overlap,
-            // rewritten base, divergent schema/modulus/sidecar) cannot
-            // clear on re-validation — propagate at once instead of
-            // re-paying the validation's Spark scans to throw again
-            case e: CommitConflictException if !e.retryable => throw e
-            case e: CommitConflictException =>
-              attempt += 1
-              if (attempt > retries) throw e
-          }
-        }
-        -1 // unreachable
+        retrying(retries)(publishStaged(sparkOpt, outDir, name, man))
       case None =>
         // A COMPLETED publish that crashed between deleting the branch
         // manifest and the ref: only the intent marker can prove it (and
@@ -1334,7 +1112,7 @@ object SnapshotManifestFormat extends TableFormat {
     // LAST, so a crash mid-abandon re-runs to completion. A ref without a
     // staged manifest is a crash remnant: only the ref is dropped.
     readBranchManifest(outDir, name).foreach { man =>
-      val others = allManifests(outDir) ++ (pendingBranchManifests(outDir) - name).values
+      val others = retainedManifests(outDir) ++ (pendingBranchManifests(outDir) - name).values
       val refFiles = others.flatMap(_.files.map(_.path)).toSet
       man.files.filterNot(f => refFiles.contains(f.path))
         .foreach(f => Files.deleteIfExists(Paths.get(outDir, "data", f.path)))
@@ -1353,7 +1131,7 @@ object SnapshotManifestFormat extends TableFormat {
   }
 
   override def snapshotAsOfTimestamp(outDir: String, tsMillis: Long): Int = {
-    val dated = allManifests(outDir)
+    val dated = retainedManifests(outDir)
       .map(m => m.snapshotId -> java.time.Instant.parse(m.committedAt).toEpochMilli)
     require(dated.nonEmpty, s"no committed snapshot under $outDir")
     val qualifying = dated.filter(_._2 <= tsMillis)
@@ -1400,14 +1178,14 @@ object SnapshotManifestFormat extends TableFormat {
     if (Files.exists(p)) readLineageFile(p) else Vector.empty
   }
 
-  /** Delete-file directories visible at a snapshot: exactly the manifest's
-    * delete_dirs list (manifest-tracked like data files — an orphan
+  /** Paths of delete-file directories `names` from a manifest's delete_dirs
+    * list (manifest-tracked like data files — an orphan
     * deletes/snap-K dir left by a killed run is NEVER activated, even if a
     * later unrelated commit reuses snapshot id K). A tracked dir that is
     * missing on disk is an integrity error and fails LOUDLY, like a missing
     * data file — silently skipping it would serve deleted rows. */
-  private def manifestDeleteDirs(outDir: String, man: Manifest): Vector[Path] =
-    man.deleteDirs.map { d =>
+  private[spark] def manifestDeleteDirs(outDir: String, names: Seq[String]): Seq[Path] =
+    names.map { d =>
       val p = Paths.get(outDir, "deletes", d)
       require(Files.isDirectory(p), s"manifest-tracked delete dir missing: $p")
       p
@@ -1436,20 +1214,29 @@ object SnapshotManifestFormat extends TableFormat {
     readAt(spark, outDir, readManifest(outDir)
       .getOrElse(throw new IllegalStateException(s"no committed snapshot under $outDir")))
 
-  override def readCommittedAsOf(spark: SparkSession, outDir: String, snapshotId: Int): DataFrame = {
+  override def readCommittedAsOf(spark: SparkSession, outDir: String, snapshotId: Int): DataFrame =
+    readAsOf(spark, outDir, snapshotId, streaming = false)
+
+  private def readAsOf(spark: SparkSession, outDir: String, snapshotId: Int,
+                       streaming: Boolean): DataFrame = {
     val man = readManifestAt(outDir, snapshotId)
       .getOrElse(throw new IllegalStateException(s"no snapshot $snapshotId under $outDir"))
     // Time travel to a NON-latest snapshot whose files were rewritten
     // (compaction) or GC'd (expiry) is history loss, not corruption — report
     // it distinctly instead of tripping the integrity checks meant for the
     // live snapshot. The existence sweep is driver-side, manifest-sized.
-    if (!latestSnapshot(outDir).contains(snapshotId)) {
-      if (!snapshotIntact(outDir, man))
-        throw new IllegalStateException(
-          s"snapshot $snapshotId history has been rewritten or expired " +
-            "(compaction / expireSnapshots GC'd its files); time travel to it is no longer available")
-    }
-    readAt(spark, outDir, man)
+    // DOUBLY important for the streaming read: its relation resolves with
+    // checkFilesExist=false (the FileStreamSource convention: no per-file
+    // existence RPCs per batch), which would otherwise silently skip
+    // rewritten/GC'd files when the engine replays an uncommitted
+    // initial-snapshot batch over a since-compacted table
+    if (!latestSnapshot(outDir).contains(snapshotId) && !snapshotIntact(outDir, man))
+      throw new IllegalStateException(
+        s"snapshot $snapshotId history has been rewritten or expired " +
+          "(compaction / expireSnapshots GC'd its files); " +
+          (if (streaming) "the stream cannot replay its initial batch — restart from a fresh checkpoint"
+           else "time travel to it is no longer available"))
+    readAt(spark, outDir, man, streaming)
   }
 
   /** Above this many accumulated equality-delete rows the aggregated delete
@@ -1461,7 +1248,7 @@ object SnapshotManifestFormat extends TableFormat {
   private def readAt(spark: SparkSession, outDir: String, man: Manifest,
                      streaming: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit, max}
-    val deletes = manifestDeleteDirs(outDir, man)
+    val deletes = manifestDeleteDirs(outDir, man.deleteDirs)
     // pin the scan to the manifest's snapshot-scoped schema: older files
     // null-fill columns added since they were written, files carrying
     // since-dropped columns project them away, and NO footer is read for
@@ -1683,22 +1470,8 @@ object SnapshotManifestFormat extends TableFormat {
     * data-side parquet relations flagged `isStreaming` so
     * MicroBatchExecution accepts them as a microbatch. */
   def readCommittedAsOfStreaming(spark: SparkSession, outDir: String,
-                                 snapshotId: Int): DataFrame = {
-    val man = readManifestAt(outDir, snapshotId)
-      .getOrElse(throw new IllegalStateException(s"no snapshot $snapshotId under $outDir"))
-    // same history-loss guard as readCommittedAsOf — DOUBLY important here
-    // because the streaming relation resolves with checkFilesExist=false
-    // (the FileStreamSource convention: no per-file existence RPCs per
-    // batch), which would otherwise silently skip rewritten/GC'd files
-    // when the engine replays an uncommitted initial-snapshot batch over a
-    // since-compacted table
-    if (!latestSnapshot(outDir).contains(snapshotId) && !snapshotIntact(outDir, man))
-      throw new IllegalStateException(
-        s"snapshot $snapshotId history has been rewritten or expired " +
-          "(compaction / expireSnapshots GC'd its files); the stream cannot replay its " +
-          "initial batch — restart from a fresh checkpoint")
-    readAt(spark, outDir, man, streaming = true)
-  }
+                                 snapshotId: Int): DataFrame =
+    readAsOf(spark, outDir, snapshotId, streaming = true)
 
   def readAppendsBetweenStreaming(spark: SparkSession, outDir: String,
                                   fromSnapshot: Int, toSnapshot: Int): DataFrame =
@@ -1707,11 +1480,7 @@ object SnapshotManifestFormat extends TableFormat {
   override def readDeleteKeysBetween(spark: SparkSession, outDir: String,
                                      fromSnapshot: Int, toSnapshot: Int): DataFrame = {
     val manTo = rangeManifests(outDir, fromSnapshot, toSnapshot).last
-    val dirs = rangeDeleteDirs(manTo, fromSnapshot, toSnapshot).map { d =>
-      val p = Paths.get(outDir, "deletes", d)
-      require(Files.isDirectory(p), s"manifest-tracked delete dir missing: $p")
-      p
-    }
+    val dirs = manifestDeleteDirs(outDir, rangeDeleteDirs(manTo, fromSnapshot, toSnapshot))
     if (dirs.isEmpty) {
       import spark.implicits._
       spark.emptyDataset[(Int, String)].toDF("bucket", "conv_id")
@@ -1722,43 +1491,31 @@ object SnapshotManifestFormat extends TableFormat {
   override def compact(spark: SparkSession, outDir: String): Set[Int] = {
     import org.apache.spark.sql.functions.col
     val man = readManifest(outDir).getOrElse(return Set.empty)
-    val delDirs = manifestDeleteDirs(outDir, man)
+    val delDirs = manifestDeleteDirs(outDir, man.deleteDirs)
     if (delDirs.isEmpty) return Set.empty
     val delDf = spark.read.parquet(delDirs.map(_.toString): _*)
     val withDeletes = delDf.select("bucket").distinct().collect().map(_.getInt(0)).toSet
     // only buckets that still have data files need a rewrite; a delete for a
     // fileless bucket hides nothing and can simply be dropped
     val affected = withDeletes.intersect(man.files.map(_.bucket).toSet)
-    val seq = man.snapshotId + 1
-    // writer-unique staging (see ExtractionJob.runConvGrained's runToken
-    // note): a concurrent compactor computing the same seq must not share
-    // a staging dir with this one
-    val runToken = newRunToken()
     if (affected.isEmpty) {
       // no data to rewrite, but the tracked deletes must still be RETIRED
       // through a manifest commit BEFORE their dirs are removed — deleting
       // dirs a live manifest references would trip the integrity check
-      commitWave(outDir, s"$outDir/staging-compact-$seq-$runToken", seq, man.buckets, man.files,
-        Vector.empty, man.inputFps, additive = true, convFpsDir = man.convFpsDir,
+      val seq = man.snapshotId + 1
+      commitWave(outDir, s"$outDir/staging-compact-$seq-${newRunToken()}", seq, man.buckets,
+        man.files, Vector.empty, man.inputFps, additive = true, convFpsDir = man.convFpsDir,
         deleteDirs = Seq.empty, fpMode = man.fpMode, bucketCount = man.bucketCount,
         operation = "rewrite")
     } else {
       // the committed view already applies the deletes — rewrite it as
-      // clean sorted files, one dir per bucket
-      val staging = s"$outDir/staging-compact-$seq-$runToken"
-      val rows = readCommitted(spark, outDir)
-        .where(col("bucket").isin(affected.toSeq: _*))
-        .repartition(affected.size, col("bucket"))
-      val newFiles = writeSortedBuckets(this, rows, staging).map(_.copy(seq = seq))
-      val kept = man.files.filterNot(f => affected.contains(f.bucket))
-      val lineage = bucketLineage(seq, newFiles)
-      // non-additive promote replaces the affected bucket dirs (base +
-      // delta files) with the compacted ones; fingerprints and the conv-fp
-      // sidecar pointer are carried through unchanged
-      commitWave(outDir, staging, seq, man.buckets, kept ++ newFiles, lineage,
-        man.inputFps, additive = false, convFpsDir = man.convFpsDir,
-        deleteDirs = Seq.empty, // every tracked delete is applied by the rewrite
-        fpMode = man.fpMode, bucketCount = man.bucketCount, operation = "rewrite")
+      // clean sorted files, one dir per bucket. The non-additive promote
+      // replaces the affected bucket dirs (base + delta files); every
+      // tracked delete is applied by the rewrite
+      rewriteBuckets(outDir, man, "compact",
+        readCommitted(spark, outDir).where(col("bucket").isin(affected.toSeq: _*)),
+        affected.size, kept = man.files.filterNot(f => affected.contains(f.bucket)),
+        additive = false, deleteDirs = Seq.empty)()
     }
     // The applied deletes are dead for the NEW manifest, but older retained
     // manifests still reference them — deleting those would turn time travel
@@ -1766,7 +1523,7 @@ object SnapshotManifestFormat extends TableFormat {
     // dirs no on-disk manifest references (normally none until the history
     // is expired; expireSnapshots GCs the rest — the Iceberg split between
     // rewrite_data_files and expire_snapshots).
-    val stillReferenced = allManifests(outDir).flatMap(_.deleteDirs).toSet
+    val stillReferenced = retainedManifests(outDir).flatMap(_.deleteDirs).toSet
     delDirs.filterNot(d => stillReferenced.contains(d.getFileName.toString))
       .foreach(deleteRecursively)
     affected
@@ -1797,26 +1554,46 @@ object SnapshotManifestFormat extends TableFormat {
     * Returns the affected bucket set (empty = nothing to do). */
   def binpackDataFiles(spark: SparkSession, outDir: String,
                        minRows: Long = 1000L): Set[Int] = {
-    import org.apache.spark.sql.functions.col
     val man = readManifest(outDir).getOrElse(return Set.empty)
     val byBucket = man.files.filter(_.rowCount < minRows)
       .groupBy(_.bucket).filter(_._2.size >= 2)
     if (byBucket.isEmpty) return Set.empty
     val toRewrite = byBucket.values.flatten.toVector
     val rewritten = toRewrite.map(_.path).toSet
-    val seq = man.snapshotId + 1
-    val runToken = newRunToken()
-    val staging = s"$outDir/staging-binpack-$seq-$runToken"
     // committed view of ONLY the small files: deletes applied, nothing else read
-    val rows = readAt(spark, outDir, man.copy(files = toRewrite))
-      .repartition(byBucket.size, col("bucket"))
-    val newFiles = writeSortedBuckets(this, rows, staging).map(_.copy(seq = seq))
-    val kept = man.files.filterNot(f => rewritten.contains(f.path))
-    commitWave(outDir, staging, seq, man.buckets, kept ++ newFiles, bucketLineage(seq, newFiles),
-      man.inputFps, additive = true, convFpsDir = man.convFpsDir,
-      deleteDirs = man.deleteDirs, fpMode = man.fpMode,
-      bucketCount = man.bucketCount, operation = "rewrite")
+    rewriteBuckets(outDir, man, "binpack", readAt(spark, outDir, man.copy(files = toRewrite)),
+      byBucket.size, kept = man.files.filterNot(f => rewritten.contains(f.path)),
+      additive = true, deleteDirs = man.deleteDirs)()
     byBucket.keySet
+  }
+
+  /** The one maintenance rewrite of table data (compact, binpack,
+    * `ExtractionJob.rewriteSorted`, `ExtractionJob.rebucket`), planned
+    * against the latest manifest `man`: stage `rows` (carrying their target
+    * `bucket`) under `staging-<kind>-<seq>-<token>` as sorted per-bucket
+    * files over `partitions` partitions, split at `maxRecordsPerFile` when
+    * positive, stamp them with the next seq and commit them after `kept` as
+    * one `rewrite` snapshot with `deleteDirs`. `table` gives the committed
+    * buckets, fingerprints, conv-fp sidecar, fp mode and modulus from the
+    * seq and run token; by default they are `man`'s own. Returns the seq. */
+  private[spark] def rewriteBuckets(outDir: String, man: Manifest, kind: String, rows: DataFrame,
+                                    partitions: Int, kept: Seq[FileEntry], additive: Boolean,
+                                    deleteDirs: Seq[String], maxRecordsPerFile: Long = 0L)(
+      table: (Int, String) => Manifest = (_, _) => man): Int = {
+    import org.apache.spark.sql.functions.col
+    val seq = man.snapshotId + 1
+    // writer-unique staging (see ExtractionJob.runConvGrained's runToken
+    // note): a concurrent rewriter computing the same seq must not share a
+    // staging dir with this one
+    val runToken = newRunToken()
+    val staging = s"$outDir/staging-$kind-$seq-$runToken"
+    val newFiles = writeSortedBuckets(this, rows.repartition(partitions, col("bucket")), staging,
+      maxRecordsPerFile).map(_.copy(seq = seq))
+    val t = table(seq, runToken)
+    commitWave(outDir, staging, seq, t.buckets, kept ++ newFiles, bucketLineage(seq, newFiles),
+      t.inputFps, additive = additive, convFpsDir = t.convFpsDir, deleteDirs = deleteDirs,
+      fpMode = t.fpMode, bucketCount = t.bucketCount, operation = "rewrite")
+    seq
   }
 
   override def expireSnapshots(outDir: String, retainLast: Int): (Int, Int) = {
@@ -1875,11 +1652,199 @@ object SnapshotManifestFormat extends TableFormat {
     (expired.size, deletedFiles)
   }
 
-  /** Directory listing beats probing the dense id range: expired tables
-    * can have a latest id far above their retained count. */
-  override def retainedManifests(outDir: String): Seq[Manifest] = allManifests(outDir)
+  /** [[snapshotAsOfTimestamp]] + [[readCommittedAsOf]] in one step; `ts`
+    * is an ISO-8601 instant (e.g. "2026-08-18T12:00:00Z"). */
+  def readCommittedAsOfTimestamp(spark: SparkSession, outDir: String, ts: String): DataFrame =
+    readCommittedAsOf(spark, outDir,
+      snapshotAsOfTimestamp(outDir, java.time.Instant.parse(ts).toEpochMilli))
 
-  override def readLineage(outDir: String, snapshotId: Int): Seq[LineageRow] = {
+  /** Tag a snapshot with a named ref (Iceberg tag analog): the tag is a
+    * sticky prop `ref.<name>` -> snapshot id, so it survives every later
+    * commit and — because `expireSnapshots` retains tagged snapshots — the
+    * tagged data itself survives retention. This is the reproducibility
+    * primitive for training-data pipelines: tag the exact table version a
+    * model trained on and `readCommittedAtTag` serves those bytes years of
+    * commits later. */
+  def tagSnapshot(outDir: String, name: String, snapshotId: Int): Unit = {
+    // conservative charset: tag names surface in CLI JSON and file-less
+    // prop keys, so quotes/backslashes/braces are all trouble
+    require(name.matches("[A-Za-z0-9._-]+"), s"invalid tag name: '$name'")
+    require(readManifestAt(outDir, snapshotId).nonEmpty,
+      s"cannot tag snapshot $snapshotId under $outDir: no such retained snapshot")
+    setTableProps(outDir, Map(s"ref.$name" -> snapshotId.toString))
+    ()
+  }
+
+  /** Remove a tag (prop tombstone). The formerly tagged snapshot becomes
+    * expirable again on the next `expireSnapshots`. */
+  def dropTag(outDir: String, name: String): Unit = {
+    setTableProps(outDir, Map(s"ref.$name" -> ""))
+    ()
+  }
+
+  /** All tags on the table: name -> snapshot id. */
+  def tags(outDir: String): Map[String, Int] =
+    readManifest(outDir).map(_.props.collect {
+      case (k, v) if k.startsWith("ref.") =>
+        require(v.matches("\\d+"),
+          s"corrupt tag prop $k='$v' on $outDir: expected a snapshot id")
+        k.stripPrefix("ref.") -> v.toInt
+    }).getOrElse(Map.empty)
+
+  /** Snapshot-isolated read of a tagged table version. */
+  def readCommittedAtTag(spark: SparkSession, outDir: String, name: String): DataFrame = {
+    val id = tags(outDir).getOrElse(name,
+      throw new IllegalArgumentException(s"no tag '$name' on table $outDir"))
+    readCommittedAsOf(spark, outDir, id)
+  }
+
+  /** Roll the table back to snapshot `snapshotId` by committing that
+    * snapshot's content forward as a NEW snapshot (Iceberg rollback
+    * analog) — history is never rewritten in place, so time travel to the
+    * rolled-back-over snapshots keeps working until they expire. The
+    * commit's operation is "replace" (content CHANGES — stronger than a
+    * maintenance "rewrite"): incremental (CDC) reads across it are
+    * refused, and incremental curation rebuilds. Streaming-sink markers
+    * are NOT rolled back (batches whose data was rolled away stay marked
+    * committed — resuming a sink over a rolled-back table needs a fresh
+    * checkpoint, the standard lakehouse caveat). Returns the new snapshot
+    * id. */
+  def rollbackTo(outDir: String, snapshotId: Int, retries: Int = 2): Int = retrying(retries) {
+    val target = readManifestAt(outDir, snapshotId).getOrElse(throw new IllegalStateException(
+      s"cannot roll back to snapshot $snapshotId under $outDir: " +
+        "manifest missing — rewritten or expired"))
+    // the target's files may have been rewritten by compaction or GC'd
+    // by expiry since its manifest was retained: committing them forward
+    // would wedge the table HEAD on missing files
+    if (!snapshotIntact(outDir, target))
+      throw new IllegalStateException(
+        s"cannot roll back to snapshot $snapshotId under $outDir: its data files " +
+          "have been rewritten or expired (compaction / expireSnapshots GC)")
+    val latest = readManifest(outDir).getOrElse(throw new IllegalStateException(
+      s"no committed snapshot under $outDir"))
+    if (latest.snapshotId == snapshotId) snapshotId // already there: no-op
+    else {
+      commitWave(outDir, staging = outDir + "/no-staging", latest.snapshotId + 1,
+        target.buckets, target.files, lineage = Seq.empty, inputFps = target.inputFps,
+        additive = true, convFpsDir = target.convFpsDir, deleteDirs = target.deleteDirs,
+        fpMode = target.fpMode, bucketCount = target.bucketCount,
+        operation = "replace", schemaDdl = Some(target.schemaDdl))
+      latest.snapshotId + 1
+    }
+  }
+
+  /** Run `attempt` again after each lost optimistic race, at most `retries`
+    * more times. The last conflict propagates, and so does at once one
+    * that re-validating cannot clear (`retryable` false: bucket overlap,
+    * rewritten base, divergent schema/modulus/sidecar), instead of
+    * re-paying the validation's Spark scans to throw it again. */
+  @annotation.tailrec
+  private[spark] def retrying[A](retries: Int)(attempt: => A): A =
+    (try Some(attempt) catch {
+      case e: CommitConflictException if retries > 0 && e.retryable => None
+    }) match {
+      case Some(a) => a
+      case None => retrying(retries - 1)(attempt)
+    }
+
+  /** Metadata table (Iceberg `$snapshots` / `$history` analog): one row
+    * per retained snapshot — id, operation, commit instant, file/row/
+    * bucket/delete-dir counts, whether it is the current snapshot, and the
+    * tags pinning it. Driver-side and manifest-sized: the driver already
+    * holds each manifest to read the table at all, so this never touches
+    * data files. */
+  def readSnapshotsTable(spark: SparkSession, outDir: String): DataFrame = {
+    val current = latestSnapshot(outDir)
+    val tagged = tags(outDir).toSeq.groupBy(_._2).view.mapValues(_.map(_._1).sorted).toMap
+    val rows = retainedManifests(outDir).map { m =>
+      SnapshotMetaRow(m.snapshotId, m.operation, m.committedAt, m.files.size,
+        m.files.map(_.rowCount).sum, m.buckets.size, m.deleteDirs.size,
+        current.contains(m.snapshotId), tagged.getOrElse(m.snapshotId, Seq.empty),
+        org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl).fieldNames.toSeq)
+    }
+    import spark.implicits._
+    rows.toDF()
+  }
+
+  /** Metadata table (Iceberg `$files` analog): one row per committed data
+    * file of a snapshot's manifest (default: current) — bucket, path, row
+    * count, commit seq, conv_id bounds. Same driver-side cost bound as
+    * `readSnapshotsTable`. */
+  def readFilesTable(spark: SparkSession, outDir: String,
+                     snapshotId: Option[Int] = None): DataFrame = {
+    val k = snapshotId.orElse(latestSnapshot(outDir)).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot under $outDir"))
+    val man = readManifestAt(outDir, k).getOrElse(throw new IllegalStateException(
+      s"no manifest for snapshot $k under $outDir — rewritten or expired"))
+    val rows = man.files.map(f => FileMetaRow(man.snapshotId, f.bucket, f.path,
+      f.rowCount, f.seq, f.minConv, f.maxConv))
+    import spark.implicits._
+    rows.toDF()
+  }
+
+  /** Metadata table (`$partitions` analog): per-bucket file/row health of
+    * the CURRENT snapshot — file counts, rows, small-file debt below
+    * `smallRowThreshold`, and pending equality-delete rows. Everything
+    * but the delete count comes from the manifest (driver-side,
+    * O(manifest)); the delete count is one narrow scan of the tracked
+    * delete dirs (delete files are tiny by construction). This is the
+    * input a maintenance planner reads to target --compact/--binpack. */
+  def readPartitionsTable(spark: SparkSession, outDir: String,
+                          smallRowThreshold: Long = 1000L): DataFrame = {
+    import spark.implicits._
+    val man = readManifest(outDir).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot under $outDir"))
+    val delByBucket: Map[Int, Long] = {
+      val dirs = man.deleteDirs
+        .map(d => java.nio.file.Paths.get(outDir, "deletes", d))
+        .filter(java.nio.file.Files.isDirectory(_))
+      if (dirs.isEmpty) Map.empty
+      else spark.read.parquet(dirs.map(_.toString): _*)
+        .groupBy("bucket").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    }
+    val rows = man.files.groupBy(_.bucket).toSeq.sortBy(_._1).map { case (b, fs) =>
+      PartitionMetaRow(b, fs.size, fs.map(_.rowCount).sum,
+        fs.count(_.rowCount < smallRowThreshold),
+        fs.map(_.rowCount).min, fs.map(_.rowCount).max,
+        delByBucket.getOrElse(b, 0L))
+    }
+    // buckets with only delete debt and no files still surface
+    val fileless = delByBucket.keySet -- man.files.map(_.bucket).toSet
+    (rows ++ fileless.toSeq.sorted.map(b =>
+      PartitionMetaRow(b, 0, 0L, 0, 0L, 0L, delByBucket(b)))).toDF()
+  }
+
+  /** Metadata table: the per-bucket lineage rows of every retained
+    * snapshot (input row counts, field sums, extraction wall time) — the
+    * audit trail for "which run produced this bucket and how long did it
+    * take". */
+  def readLineageTable(spark: SparkSession, outDir: String): DataFrame = {
+    val rows = retainedManifests(outDir).flatMap(m => readLineage(outDir, m.snapshotId))
+    import spark.implicits._
+    rows.toDF()
+  }
+
+  /** Props-only maintenance commit (`ALTER TABLE SET/UNSET TBLPROPERTIES`
+    * analog): lays `props` over the sticky table properties without
+    * touching data — an empty value retires a key, the operator's removal
+    * path for dead markers (e.g. a decommissioned streaming sink). Retries
+    * lost optimistic races against the fresh state. Returns the committed
+    * snapshot id. */
+  def setTableProps(outDir: String, props: Map[String, String], retries: Int = 2): Int =
+    retrying(retries) {
+      val man = readManifest(outDir).getOrElse(throw new IllegalStateException(
+        s"no committed snapshot under $outDir — props live on manifests"))
+      commitWave(outDir, staging = outDir + "/no-staging", man.snapshotId + 1,
+        man.buckets, man.files, lineage = Seq.empty, inputFps = man.inputFps,
+        additive = true, convFpsDir = man.convFpsDir, deleteDirs = man.deleteDirs,
+        fpMode = man.fpMode, bucketCount = man.bucketCount,
+        operation = "props", props = props)
+      man.snapshotId + 1
+    }
+
+  /** Per-snapshot lineage rows (empty when the snapshot has no lineage file). */
+  def readLineage(outDir: String, snapshotId: Int): Seq[LineageRow] = {
     val p = Paths.get(outDir, "lineage", s"lineage-$snapshotId.json")
     if (Files.exists(p)) readLineageFile(p) else Seq.empty
   }
@@ -1889,8 +1854,10 @@ object SnapshotManifestFormat extends TableFormat {
       r("row_count").long, r("field_count_sum").long, r("extract_ms").long,
       r("committed_at").str))
 
-  /** Every manifest currently on disk (retained history), snapshot order. */
-  private[spark] def allManifests(outDir: String): Vector[Manifest] =
+  /** Every retained snapshot's manifest, ascending. Listing the snapshot
+    * dir beats probing the dense id range: expired tables can have a latest
+    * id far above their retained count. Manifest reads only, no data IO. */
+  def retainedManifests(outDir: String): Vector[Manifest] =
     snapshotIds(outDir).flatMap(readManifestAt(outDir, _))
 
   /** Ids of the snapshot manifests on disk, ascending (snap-branch-<name>
@@ -1924,7 +1891,7 @@ object SnapshotManifestFormat extends TableFormat {
     val cutoff = System.currentTimeMillis() - olderThanMs
     // pending branches' staged files/dirs/sidecars are referenced, not
     // orphaned — include their manifests in every reference set
-    val mans = allManifests(outDir) ++ pendingBranchManifests(outDir).values
+    val mans = retainedManifests(outDir) ++ pendingBranchManifests(outDir).values
     def oldEnough(p: Path): Boolean =
       try {
         (if (Files.isDirectory(p)) newestMtime(p)

@@ -33,21 +33,20 @@ object TableReplication {
     * applied (inserts + retraction keys); 0 when the replica is current.
     */
   def replicateAvailableNow(spark: SparkSession, srcDir: String, dstDir: String,
-                            checkpointDir: String, queryKey: String = "replica",
-                            format: TableFormat = SnapshotManifestFormat): Long = {
+                            checkpointDir: String, queryKey: String = "replica"): Long = {
     // the source's recorded modulus is adopted verbatim (change-feed rows
     // carry their source bucket): keyed-read pruning on the replica is
     // then exactly as effective as on the source. A mid-stream rebucket
     // upstream is a replacing commit and fails the stream before any
     // mixed-modulus batch could commit.
-    val srcBuckets = format.readManifest(srcDir).flatMap(_.bucketCount)
+    val srcBuckets = SnapshotManifestFormat.readManifest(srcDir).flatMap(_.bucketCount)
     val sinkKey = s"$queryKey-${StreamingExtraction.checkpointSinkId(checkpointDir)}"
     // re-baseline guard: a fresh checkpoint is a fresh sink whose first
     // batch is the FULL source snapshot — appended onto a replica that
     // already has content it would silently double every row. Refuse;
     // re-baselining after an upstream replacing commit means starting
     // with an empty replica dir (or resuming the original checkpoint).
-    format.readManifest(dstDir).foreach { man =>
+    SnapshotManifestFormat.readManifest(dstDir).foreach { man =>
       require(man.files.isEmpty || man.props.contains(s"stream.$sinkKey"),
         s"replica $dstDir already has content but no marker for sink '$sinkKey' — " +
           "a fresh checkpoint would replay the full source snapshot on top of it; " +
@@ -58,7 +57,7 @@ object TableReplication {
       .option("changeFeed", "true").load(srcDir)
       .writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applied.add(replicateBatch(spark, batch, batchId, dstDir, sinkKey, srcBuckets, format))
+        applied.add(replicateBatch(spark, batch, batchId, dstDir, sinkKey, srcBuckets))
         ()
       }
       .option("checkpointLocation", checkpointDir)
@@ -75,10 +74,8 @@ object TableReplication {
     * metadata (and re-stamps the delete file under the new seq) without
     * re-staging data. Returns rows applied. */
   def replicateBatch(spark: SparkSession, batch: Dataset[Row], batchId: Long,
-                     dstDir: String, queryKey: String, srcBuckets: Option[Int],
-                     format: TableFormat = SnapshotManifestFormat,
-                     commitRetries: Int = 2): Long = {
-    import ExtractionJob.FileEntry
+                     dstDir: String, queryKey: String, srcBuckets: Option[Int]): Long = {
+    val format = SnapshotManifestFormat
     val man0 = format.readManifest(dstDir)
     def marker(man: Option[ExtractionJob.Manifest]): Option[Long] =
       man.flatMap(_.props.get(s"stream.$queryKey")).map(_.toLong)
@@ -161,7 +158,7 @@ object TableReplication {
           return files.map(_.rowCount).sum + nDel
         } catch {
           case e: CommitConflictException =>
-            if (attempt >= commitRetries) {
+            if (attempt >= 2) { // two retries, as the batch job's default `commitRetries`
               // leave nothing half-applied: the staged files and the
               // un-committed delete dir are orphans for removeOrphanFiles
               throw e

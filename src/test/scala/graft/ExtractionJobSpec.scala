@@ -7,7 +7,7 @@ import org.scalatest.time.{Seconds, Span}
 import org.apache.spark.SparkException
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.{lit, rand}
-import graft.spark.{CommitConflictException, ExtractionJob, SnapshotManifestFormat, TableFormat,
+import graft.spark.{CommitConflictException, ExtractionJob, SnapshotManifestFormat,
   TableReplication, Transcripts}
 import graft.spark.ExtractionJob.{FileEntry, LineageRow}
 import java.nio.file.{Files, Paths}
@@ -38,41 +38,17 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     * competing writer lands a manifest-only commit, computed from the
     * current state, just before the job's own commit, which therefore
     * fails the optimistic check. */
-  private class RacingFormat(raceAt: Int = 0) extends TableFormat {
+  private class RacingFormat(raceAt: Int = 0) extends ForwardingFormat {
     private val inner = SnapshotManifestFormat
     private var commits = 0
     var conflicts = 0
-    def latestSnapshot(outDir: String) = inner.latestSnapshot(outDir)
-    def readManifest(outDir: String) = inner.readManifest(outDir)
-    def committedBuckets(outDir: String) = inner.committedBuckets(outDir)
-    def listStagedFiles(s: SparkSession, staging: String) = inner.listStagedFiles(s, staging)
-    def readCommitted(s: SparkSession, outDir: String) = inner.readCommitted(s, outDir)
-    def readManifestAt(outDir: String, k: Int) = inner.readManifestAt(outDir, k)
-    def readCommittedAsOf(s: SparkSession, outDir: String, k: Int) =
-      inner.readCommittedAsOf(s, outDir, k)
-    def compact(s: SparkSession, outDir: String) = inner.compact(s, outDir)
-    def expireSnapshots(outDir: String, retainLast: Int) = inner.expireSnapshots(outDir, retainLast)
-    def removeOrphanFiles(outDir: String, olderThanMs: Long) =
-      inner.removeOrphanFiles(outDir, olderThanMs)
-    def readAppendsBetween(s: SparkSession, outDir: String, from: Int, to: Int) =
-      inner.readAppendsBetween(s, outDir, from, to)
-    def readDeleteKeysBetween(s: SparkSession, outDir: String, from: Int, to: Int) =
-      inner.readDeleteKeysBetween(s, outDir, from, to)
-    def branches(outDir: String) = inner.branches(outDir)
-    def expireBranches(outDir: String, olderThanMs: Long) = inner.expireBranches(outDir, olderThanMs)
-    def snapshotAsOfTimestamp(outDir: String, tsMillis: Long) =
-      inner.snapshotAsOfTimestamp(outDir, tsMillis)
-    def publishBranch(outDir: String, name: String) = inner.publishBranch(outDir, name)
-    def abandonBranch(outDir: String, name: String) = inner.abandonBranch(outDir, name)
-    def readCommittedAtBranch(s: SparkSession, outDir: String, name: String) =
-      inner.readCommittedAtBranch(s, outDir, name)
-    def commitWave(outDir: String, staging: String, snapshotId: Int,
-                   buckets: Set[Int], files: Seq[FileEntry], lineage: Seq[LineageRow],
-                   inputFps: Map[Int, Long], additive: Boolean,
-                   convFpsDir: Option[String], deleteDirs: Seq[String],
-                   fpMode: Option[String], bucketCount: Option[Int],
-                   operation: String, props: Map[String, String],
-                   schemaDdl: Option[String], toBranch: Option[String]): Unit = {
+    override def commitWave(outDir: String, staging: String, snapshotId: Int,
+                            buckets: Set[Int], files: Seq[FileEntry], lineage: Seq[LineageRow],
+                            inputFps: Map[Int, Long], additive: Boolean,
+                            convFpsDir: Option[String], deleteDirs: Seq[String],
+                            fpMode: Option[String], bucketCount: Option[Int],
+                            operation: String, props: Map[String, String],
+                            schemaDdl: Option[String], toBranch: Option[String]): Unit = {
       if (commits == raceAt) {
         val man = inner.readManifest(outDir).get
         inner.commitWave(outDir, s"$outDir/none", man.snapshotId + 1, man.buckets,
@@ -81,8 +57,9 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
           bucketCount = man.bucketCount)
       }
       commits += 1
-      try inner.commitWave(outDir, staging, snapshotId, buckets, files, lineage,
-        inputFps, additive, convFpsDir, deleteDirs, fpMode, bucketCount, operation)
+      try super.commitWave(outDir, staging, snapshotId, buckets, files, lineage,
+        inputFps, additive, convFpsDir, deleteDirs, fpMode, bucketCount, operation, props,
+        schemaDdl, toBranch)
       catch { case e: CommitConflictException => conflicts += 1; throw e }
     }
   }
@@ -445,6 +422,47 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after.count() == without.count())
     assert(after.where(col("conv_id") === victim).count() == 0)
     assert(ExtractionJob.run(spark, without, cfg) == Set.empty)
+  }
+
+  test("conv-grained: conversations new to committed buckets get no equality deletes") {
+    val out = Files.createTempDirectory("graft-newconv").toString
+    val cfg = ExtractionJob.Config(out, buckets = 4, waves = 2, convGrained = true)
+    // every bucket committed with no files, then a run that only adds
+    assert(ExtractionJob.run(spark, Transcripts.generate(spark, 0), cfg) == Set(0, 1, 2, 3))
+    val s0 = SnapshotManifestFormat.latestSnapshot(out).get
+    val turns = Transcripts.generate(spark, 6)
+    assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
+    val s1 = SnapshotManifestFormat.latestSnapshot(out).get
+    assert(SnapshotManifestFormat.readDeleteKeysBetween(spark, out, s0, s1).count() == 0L)
+    assert(ExtractionJob.readManifest(out).get.deleteDirs.isEmpty)
+    assert(!Files.exists(Paths.get(out, "deletes")), "no delete dir may be written")
+    assert(ExtractionJob.readCommitted(spark, out).count() == turns.count())
+  }
+
+  test("conv-grained: a conversation committed outside the conv-fp sidecar is still replaced") {
+    val ss = spark
+    import ss.implicits._
+    val added = Transcripts.turnsFor(25)
+    val b = ExtractionJob.bucketOfConvId(added.head.conv_id, 4)
+    val grown = Transcripts.generate(spark, 26)
+    // commit `added` outside the conv-grained path, then rerun it over `grown`
+    def served(commitOutside: String => Unit): Long = {
+      val out = Files.createTempDirectory("graft-sidecar").toString
+      val cfg = ExtractionJob.Config(out, buckets = 4, waves = 2, convGrained = true)
+      assert(ExtractionJob.run(spark, Transcripts.generate(spark, 25), cfg).nonEmpty)
+      commitOutside(out)
+      assert(ExtractionJob.run(spark, grown, cfg) == Set(b))
+      ExtractionJob.readCommitted(spark, out).count()
+    }
+    // a stream-sink append: its `stream.` marker says the sidecar is partial
+    assert(served(out => graft.spark.StreamingExtraction.appendBatchToTable(spark,
+      spark.createDataset(added), 0L, out, 4, "q", SnapshotManifestFormat)) == grown.count())
+    // a bucket-grained recompute of a lost bucket drops its fingerprint
+    assert(served { out =>
+      ExtractionJob.readManifest(out).get.files.filter(_.bucket == b)
+        .foreach(f => Files.delete(Paths.get(out, "data", f.path)))
+      assert(ExtractionJob.run(spark, grown, ExtractionJob.Config(out, buckets = 4)) == Set(b))
+    } == grown.count())
   }
 
   test("conv-grained resume: two successive corrections resolve to the latest (max-seq deletes)") {

@@ -169,7 +169,12 @@ class MorLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
       } else if (roll < 65) { // add a brand-new conversation
         model = model ++ nextConv()
+        val dirsBefore = SnapshotManifestFormat.readManifest(out).get.deleteDirs
         ExtractionJob.run(spark, toDs(model), cfg)
+        // it has no older row to hide (auto-compaction may still retire dirs)
+        val dirsAfter = SnapshotManifestFormat.readManifest(out).get.deleteDirs
+        assert(dirsAfter.forall(dirsBefore.contains),
+          s"[seed=$seed $ctx] adding a conversation wrote delete dirs ${dirsAfter.diff(dirsBefore)}")
         record(); checkServed(s"$ctx add")
       } else if (roll < 75) { // compaction (content-neutral)
         SnapshotManifestFormat.compact(spark, out)

@@ -191,43 +191,18 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Delegating format that runs `inject` once just before the first commit
     * attempt — the standard way these specs simulate a racing writer. */
-  private class InjectingFormat(inject: String => Unit) extends graft.spark.TableFormat {
+  private class InjectingFormat(inject: String => Unit) extends ForwardingFormat(fmt) {
     import graft.spark.ExtractionJob.{FileEntry, LineageRow}
     private var injected = false
-    def latestSnapshot(outDir: String) = fmt.latestSnapshot(outDir)
-    def readManifest(outDir: String) = fmt.readManifest(outDir)
-    def committedBuckets(outDir: String) = fmt.committedBuckets(outDir)
-    def listStagedFiles(s: org.apache.spark.sql.SparkSession, staging: String) =
-      fmt.listStagedFiles(s, staging)
-    def readCommitted(s: org.apache.spark.sql.SparkSession, outDir: String) =
-      fmt.readCommitted(s, outDir)
-    def readManifestAt(outDir: String, k: Int) = fmt.readManifestAt(outDir, k)
-    def readCommittedAsOf(s: org.apache.spark.sql.SparkSession, outDir: String, k: Int) =
-      fmt.readCommittedAsOf(s, outDir, k)
-    def compact(s: org.apache.spark.sql.SparkSession, outDir: String) = fmt.compact(s, outDir)
-    def expireSnapshots(outDir: String, retainLast: Int) = fmt.expireSnapshots(outDir, retainLast)
-    def removeOrphanFiles(outDir: String, olderThanMs: Long) =
-      fmt.removeOrphanFiles(outDir, olderThanMs)
-    def readAppendsBetween(s: org.apache.spark.sql.SparkSession, outDir: String,
-                           from: Int, to: Int) = fmt.readAppendsBetween(s, outDir, from, to)
-    def readDeleteKeysBetween(s: org.apache.spark.sql.SparkSession, outDir: String,
-                              from: Int, to: Int) = fmt.readDeleteKeysBetween(s, outDir, from, to)
-    def branches(outDir: String) = fmt.branches(outDir)
-    def expireBranches(outDir: String, olderThanMs: Long) = fmt.expireBranches(outDir, olderThanMs)
-    def snapshotAsOfTimestamp(outDir: String, tsMillis: Long) = fmt.snapshotAsOfTimestamp(outDir, tsMillis)
-    def publishBranch(outDir: String, name: String) = fmt.publishBranch(outDir, name)
-    def abandonBranch(outDir: String, name: String) = fmt.abandonBranch(outDir, name)
-    def readCommittedAtBranch(s: org.apache.spark.sql.SparkSession, outDir: String,
-                              name: String) = fmt.readCommittedAtBranch(s, outDir, name)
-    def commitWave(outDir: String, staging: String, snapshotId: Int,
-                   buckets: Set[Int], files: Seq[FileEntry], lineage: Seq[LineageRow],
-                   inputFps: Map[Int, Long], additive: Boolean,
-                   convFpsDir: Option[String], deleteDirs: Seq[String],
-                   fpMode: Option[String], bucketCount: Option[Int],
-                   operation: String, props: Map[String, String],
-                   schemaDdl: Option[String], toBranch: Option[String]): Unit = {
+    override def commitWave(outDir: String, staging: String, snapshotId: Int,
+                            buckets: Set[Int], files: Seq[FileEntry], lineage: Seq[LineageRow],
+                            inputFps: Map[Int, Long], additive: Boolean,
+                            convFpsDir: Option[String], deleteDirs: Seq[String],
+                            fpMode: Option[String], bucketCount: Option[Int],
+                            operation: String, props: Map[String, String],
+                            schemaDdl: Option[String], toBranch: Option[String]): Unit = {
       if (!injected) { injected = true; inject(outDir) }
-      fmt.commitWave(outDir, staging, snapshotId, buckets, files, lineage,
+      super.commitWave(outDir, staging, snapshotId, buckets, files, lineage,
         inputFps, additive, convFpsDir, deleteDirs, fpMode, bucketCount, operation, props,
         schemaDdl, toBranch)
     }
