@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The north-star batch job (SURVEY.md §3.5, §4.3):
@@ -365,6 +365,7 @@ object ExtractionJob {
           // recomputing a previously committed bucket rewrites its content
           // (non-additive promote) — incremental readers must refuse across it
           operation = if (waveBuckets.exists(verified.contains)) "replace" else "append",
+          props = SnapshotManifestFormat.unlistedAfter(priorMan, doneThisRun),
           schemaDdl = if (waveFiles.isEmpty) Some(stagedSchemaDdl) else None)
         acc ++= waveBuckets
     }
@@ -549,11 +550,16 @@ object ExtractionJob {
       // like data files); the delta stage appends its new dir
       var deleteDirs: Vector[String] = man.map(_.deleteDirs).getOrElse(Vector.empty)
       val withBucket = turns.withColumn("bucket", bucketOf(config.buckets))
+      val priorDir = man.flatMap(_.convFpsDir).map(d => s"${config.outDir}/conv_fps/$d")
+        .filter(new java.io.File(_).isDirectory)
+      // buckets whose rows the prior sidecar may not all list (see
+      // UnlistedProp): without a sidecar, every bucket with data files
+      var unlisted: Set[Int] =
+        if (priorDir.isEmpty) committedFiles.map(_.bucket).toSet
+        else SnapshotManifestFormat.unlistedBuckets(man)
 
       // ---- delta stage: changed conversations of dirty buckets ----
       if (dirty.nonEmpty) {
-        val priorDir = man.flatMap(_.convFpsDir).map(d => s"${config.outDir}/conv_fps/$d")
-          .filter(new java.io.File(_).isDirectory)
         val priorConvFps: DataFrame = priorDir match {
           case Some(d) => spark.read.parquet(d)
           case None => // no recorded sidecar: every conversation counts as changed
@@ -566,32 +572,11 @@ object ExtractionJob {
         val differing = cur.join(pri, Seq("bucket", "conv_id"), "full_outer")
           .where(!(col("cfp") <=> col("pfp"))).cache()
         val seq = snapshotId + 1
-        // per bucket: differing conversations, and those without a prior fingerprint
-        val perBucket = differing.groupBy("bucket")
-          .agg(count(lit(1)), count(when(col("pfp").isNull, lit(1)))).collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-        // A conversation without a prior fingerprint has no older row to
-        // delete when its bucket has no data files, or when the sidecar lists
-        // every conversation committed to the bucket. Conv-grained commits
-        // record the bucket's conv-mode fingerprint with the sidecar, and
-        // drop it only when none of the bucket's conversations is left to
-        // list. A bucket-grained recompute drops the fingerprint of a bucket
-        // the sidecar still lists; stream-sink and replica commits (marked by
-        // their sticky `stream.` props) append rows the sidecar never lists.
-        val sidecarKept = priorDir.isDefined && man.exists(m =>
-          m.fpMode.contains("conv") && !m.props.keysIterator.exists(_.startsWith("stream.")))
-        val withFiles = committedFiles.map(_.bucket).toSet
-        val fresh = perBucket.collect { case (b, _, noPrior) if noPrior > 0 && withFiles(b) => b }
-        val unlisted: Seq[Int] =
-          if (!sidecarKept) fresh
-          else fresh.filterNot(manFps.contains) match {
-            case noFp if noFp.isEmpty => Seq.empty
-            case noFp => priorConvFps.where(col("bucket").isin(noFp: _*))
-              .select("bucket").distinct().collect().map(_.getInt(0)).toSeq
-          }
-        val nDiff = perBucket.map(_._2).sum
-        val nDel = perBucket.map { case (b, n, noPrior) =>
-          if (unlisted.contains(b)) n else n - noPrior }.sum
+        // a conversation the prior sidecar does not list has an older row
+        // to hide only in an unlisted bucket
+        val hides = col("pfp").isNotNull || col("bucket").isin(unlisted.toSeq: _*)
+        val Row(nDiff: Long, nDel: Long) =
+          differing.agg(count(lit(1)), count(when(hides, lit(1)))).head()
         fpsBase = dirty.foldLeft(fpsBase) { (m, b) =>
           currentFps.get(b) match {
             case Some(fp) => m.updated(b, fp)
@@ -604,8 +589,7 @@ object ExtractionJob {
               // equality delete file (the Iceberg MOR shape): rows for these
               // conversations in files with a LOWER seq are invisible to readers
               val delDir = s"snap-$seq-$runToken"
-              StateDirs.write(differing
-                .where(col("pfp").isNotNull || col("bucket").isin(unlisted: _*))
+              StateDirs.write(differing.where(hides)
                 .select(col("bucket"), col("conv_id"), lit(seq).as("seq")))
                 .mode(SaveMode.Overwrite).parquet(s"${config.outDir}/deletes/$delDir")
               deleteDirs = deleteDirs :+ delDir
@@ -629,7 +613,8 @@ object ExtractionJob {
         format.commitWave(config.outDir, staging, snapshotId, committed, committedFiles,
           lineage, fpsBase, additive = true, convFpsDir = Some(newConvFpsDir),
           deleteDirs = deleteDirs, fpMode = Some("conv"), bucketCount = Some(config.buckets),
-          operation = "delta", toBranch = config.toBranch)
+          operation = "delta", props = SnapshotManifestFormat.unlistedProp(unlisted),
+          toBranch = config.toBranch)
         acc ++= dirty
         // the failAfterWave hook counts the delta stage as wave 0
         if (config.failAfterWave == 0)
@@ -645,10 +630,13 @@ object ExtractionJob {
             committed = committed ++ waveBuckets
             committedFiles = committedFiles ++ files
             fpsBase = fpsBase ++ waveBuckets.flatMap(b => currentFps.get(b).map(b -> _))
+            // the new sidecar lists every row a full wave writes
+            unlisted = unlisted -- waveBuckets
             format.commitWave(config.outDir, staging, seq, committed, committedFiles,
               lineage, fpsBase, additive = false, convFpsDir = Some(newConvFpsDir),
               deleteDirs = deleteDirs, fpMode = Some("conv"), bucketCount = Some(config.buckets),
               operation = "append", // never-committed buckets: pure append
+              props = SnapshotManifestFormat.unlistedProp(unlisted),
               schemaDdl = if (files.isEmpty) Some(stagedSchemaDdl) else None)
             acc ++= waveBuckets
         }
@@ -690,7 +678,7 @@ object ExtractionJob {
     fmt.rewriteBuckets(outDir, man, "sortrewrite", fmt.readCommitted(spark, outDir), buckets.size,
       kept = Seq.empty, additive = false,
       deleteDirs = Seq.empty, // applied by the rewrite
-      maxRecordsPerFile = targetRowsPerFile)()
+      maxRecordsPerFile = targetRowsPerFile)
   }
 
   /** Partition evolution (Iceberg's spec change, realized the only way a
@@ -717,25 +705,28 @@ object ExtractionJob {
     val rehashed = fmt.readCommitted(spark, outDir)
       .drop("bucket")
       .withColumn("bucket", bucketOf(newBuckets))
+    val runToken = fmt.newRunToken()
+    val (newConvFpsDir, fps) = man.convFpsDir match {
+      case Some(d) if new java.io.File(s"$outDir/conv_fps/$d").isDirectory =>
+        val nd = s"fp-${man.snapshotId + 1}-$runToken"
+        StateDirs.write(spark.read.parquet(s"$outDir/conv_fps/$d")
+          .drop("bucket").withColumn("bucket", bucketOf(newBuckets))
+          .select("bucket", "conv_id", "fp"))
+          .mode(SaveMode.Overwrite).parquet(s"$outDir/conv_fps/$nd")
+        (Some(nd), bucketFpsFromConv(spark.read.parquet(s"$outDir/conv_fps/$nd")))
+      case _ => (None, Map.empty[Int, Long])
+    }
+    // rows the sidecar does not list may land in any new bucket
+    val unlisted =
+      if (fmt.unlistedBuckets(Some(man)).isEmpty) Set.empty[Int] else (0 until newBuckets).toSet
     // pending deletes are applied by the rewrite. Bucket dirs outside the
     // new modulus range are no longer promoted over; their files stay for
     // older manifests and are GC'd by expireSnapshots
-    fmt.rewriteBuckets(outDir, man, "rebucket", rehashed, newBuckets, kept = Seq.empty,
-        additive = false, deleteDirs = Seq.empty) { (seq, runToken) =>
-      val (newConvFpsDir, fps) = man.convFpsDir match {
-        case Some(d) if new java.io.File(s"$outDir/conv_fps/$d").isDirectory =>
-          val nd = s"fp-$seq-$runToken"
-          StateDirs.write(spark.read.parquet(s"$outDir/conv_fps/$d")
-            .drop("bucket").withColumn("bucket", bucketOf(newBuckets))
-            .select("bucket", "conv_id", "fp"))
-            .mode(SaveMode.Overwrite).parquet(s"$outDir/conv_fps/$nd")
-          (Some(nd), bucketFpsFromConv(spark.read.parquet(s"$outDir/conv_fps/$nd")))
-        case _ => (None, Map.empty[Int, Long])
-      }
-      man.copy(buckets = (0 until newBuckets).toSet, inputFps = fps, convFpsDir = newConvFpsDir,
-        fpMode = if (newConvFpsDir.isDefined) Some("conv") else None,
-        bucketCount = Some(newBuckets))
-    }
+    fmt.rewriteBuckets(outDir, man.copy(buckets = (0 until newBuckets).toSet, inputFps = fps,
+        convFpsDir = newConvFpsDir, fpMode = if (newConvFpsDir.isDefined) Some("conv") else None,
+        bucketCount = Some(newBuckets), props = man.props ++ fmt.unlistedProp(unlisted)),
+      "rebucket", rehashed, newBuckets, kept = Seq.empty, additive = false,
+      deleteDirs = Seq.empty, runToken = runToken)
   }
 
   /** Structural audit verdict for a staged branch (the "A" of

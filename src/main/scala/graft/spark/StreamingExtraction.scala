@@ -176,7 +176,8 @@ object StreamingExtraction {
           fpMode = man.flatMap(_.fpMode),
           bucketCount = Some(effBuckets),
           operation = "append",
-          props = Map(s"stream.$queryKey" -> batchId.toString))
+          props = Map(s"stream.$queryKey" -> batchId.toString) ++
+            SnapshotManifestFormat.unlistedAfter(man, files.map(_.bucket)))
         return files.map(_.rowCount).sum
       } catch {
         // two retries, as the batch job's default `commitRetries`

@@ -1421,6 +1421,29 @@ object SnapshotManifestFormat extends TableFormat {
   private[spark] def newRunToken(): String =
     java.util.UUID.randomUUID().toString.substring(0, 8)
 
+  /** Sticky prop listing the buckets that may hold rows of conversations
+    * the conv-fp sidecar does not list: rows a stream-sink, replica or
+    * bucket-grained commit added while the table had a sidecar, or rows
+    * the first conversation-grained run found without one. Elsewhere the
+    * sidecar lists every conversation with rows, so a conversation it does
+    * not list has no older row to hide. Only a conversation-grained full
+    * wave, which rewrites a bucket from the sidecar's own input, takes a
+    * bucket off; `rollbackTo` restores the target's list. */
+  private[spark] val UnlistedProp = "conv_fps.unlisted"
+
+  private[spark] def unlistedBuckets(man: Option[Manifest]): Set[Int] =
+    man.flatMap(_.props.get(UnlistedProp)).toSet[String].flatMap(_.split(',')).map(_.toInt)
+
+  /** The props entry recording `buckets` as unlisted (a tombstone when empty). */
+  private[spark] def unlistedProp(buckets: Set[Int]): Map[String, String] =
+    Map(UnlistedProp -> buckets.toSeq.sorted.mkString(","))
+
+  /** The props entry of a commit that adds rows to `buckets` without
+    * listing them in the sidecar of `man`; none when `man` has no sidecar. */
+  private[spark] def unlistedAfter(man: Option[Manifest], buckets: Iterable[Int]): Map[String, String] =
+    if (man.flatMap(_.convFpsDir).isEmpty) Map.empty
+    else unlistedProp(unlistedBuckets(man) ++ buckets)
+
   /** Test-only race-injection point: invoked inside commitWave AFTER the
     * optimistic-CAS + branch checks and the staged-dir
     * promote, but BEFORE any pointer/manifest write — i.e. at the widest
@@ -1515,7 +1538,7 @@ object SnapshotManifestFormat extends TableFormat {
       rewriteBuckets(outDir, man, "compact",
         readCommitted(spark, outDir).where(col("bucket").isin(affected.toSeq: _*)),
         affected.size, kept = man.files.filterNot(f => affected.contains(f.bucket)),
-        additive = false, deleteDirs = Seq.empty)()
+        additive = false, deleteDirs = Seq.empty)
     }
     // The applied deletes are dead for the NEW manifest, but older retained
     // manifests still reference them — deleting those would turn time travel
@@ -1563,36 +1586,35 @@ object SnapshotManifestFormat extends TableFormat {
     // committed view of ONLY the small files: deletes applied, nothing else read
     rewriteBuckets(outDir, man, "binpack", readAt(spark, outDir, man.copy(files = toRewrite)),
       byBucket.size, kept = man.files.filterNot(f => rewritten.contains(f.path)),
-      additive = true, deleteDirs = man.deleteDirs)()
+      additive = true, deleteDirs = man.deleteDirs)
     byBucket.keySet
   }
 
   /** The one maintenance rewrite of table data (compact, binpack,
     * `ExtractionJob.rewriteSorted`, `ExtractionJob.rebucket`), planned
-    * against the latest manifest `man`: stage `rows` (carrying their target
-    * `bucket`) under `staging-<kind>-<seq>-<token>` as sorted per-bucket
-    * files over `partitions` partitions, split at `maxRecordsPerFile` when
-    * positive, stamp them with the next seq and commit them after `kept` as
-    * one `rewrite` snapshot with `deleteDirs`. `table` gives the committed
-    * buckets, fingerprints, conv-fp sidecar, fp mode and modulus from the
-    * seq and run token; by default they are `man`'s own. Returns the seq. */
-  private[spark] def rewriteBuckets(outDir: String, man: Manifest, kind: String, rows: DataFrame,
+    * against `table`, the latest manifest with the committed buckets,
+    * fingerprints, conv-fp sidecar, fp mode, modulus and props this commit
+    * records: stage `rows` (carrying their target `bucket`) under
+    * `staging-<kind>-<seq>-<runToken>` as sorted per-bucket files over
+    * `partitions` partitions, split at `maxRecordsPerFile` when positive,
+    * stamp them with the next seq and commit them after `kept` as one
+    * `rewrite` snapshot with `deleteDirs`. Returns the seq. */
+  private[spark] def rewriteBuckets(outDir: String, table: Manifest, kind: String, rows: DataFrame,
                                     partitions: Int, kept: Seq[FileEntry], additive: Boolean,
-                                    deleteDirs: Seq[String], maxRecordsPerFile: Long = 0L)(
-      table: (Int, String) => Manifest = (_, _) => man): Int = {
+                                    deleteDirs: Seq[String], maxRecordsPerFile: Long = 0L,
+                                    runToken: String = newRunToken()): Int = {
     import org.apache.spark.sql.functions.col
-    val seq = man.snapshotId + 1
+    val seq = table.snapshotId + 1
     // writer-unique staging (see ExtractionJob.runConvGrained's runToken
     // note): a concurrent rewriter computing the same seq must not share a
     // staging dir with this one
-    val runToken = newRunToken()
     val staging = s"$outDir/staging-$kind-$seq-$runToken"
     val newFiles = writeSortedBuckets(this, rows.repartition(partitions, col("bucket")), staging,
       maxRecordsPerFile).map(_.copy(seq = seq))
-    val t = table(seq, runToken)
-    commitWave(outDir, staging, seq, t.buckets, kept ++ newFiles, bucketLineage(seq, newFiles),
-      t.inputFps, additive = additive, convFpsDir = t.convFpsDir, deleteDirs = deleteDirs,
-      fpMode = t.fpMode, bucketCount = t.bucketCount, operation = "rewrite")
+    commitWave(outDir, staging, seq, table.buckets, kept ++ newFiles, bucketLineage(seq, newFiles),
+      table.inputFps, additive = additive, convFpsDir = table.convFpsDir, deleteDirs = deleteDirs,
+      fpMode = table.fpMode, bucketCount = table.bucketCount, operation = "rewrite",
+      props = table.props)
     seq
   }
 
@@ -1728,7 +1750,8 @@ object SnapshotManifestFormat extends TableFormat {
         target.buckets, target.files, lineage = Seq.empty, inputFps = target.inputFps,
         additive = true, convFpsDir = target.convFpsDir, deleteDirs = target.deleteDirs,
         fpMode = target.fpMode, bucketCount = target.bucketCount,
-        operation = "replace", schemaDdl = Some(target.schemaDdl))
+        operation = "replace", props = unlistedProp(unlistedBuckets(Some(target))),
+        schemaDdl = Some(target.schemaDdl))
       latest.snapshotId + 1
     }
   }

@@ -154,7 +154,8 @@ object TableReplication {
             fpMode = man.flatMap(_.fpMode),
             bucketCount = man.flatMap(_.bucketCount).orElse(srcBuckets),
             operation = if (nDel == 0L) "append" else "delta",
-            props = Map(s"stream.$queryKey" -> batchId.toString))
+            props = Map(s"stream.$queryKey" -> batchId.toString) ++
+              SnapshotManifestFormat.unlistedAfter(man, files.map(_.bucket)))
           return files.map(_.rowCount).sum + nDel
         } catch {
           case e: CommitConflictException =>

@@ -442,27 +442,51 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("conv-grained: a conversation committed outside the conv-fp sidecar is still replaced") {
     val ss = spark
     import ss.implicits._
+    val fmt = SnapshotManifestFormat
     val added = Transcripts.turnsFor(25)
-    val b = ExtractionJob.bucketOfConvId(added.head.conv_id, 4)
+    val x = added.head.conv_id
+    val b = ExtractionJob.bucketOfConvId(x, 4)
+    val base = Transcripts.generate(spark, 25)
     val grown = Transcripts.generate(spark, 26)
-    // commit `added` outside the conv-grained path, then rerun it over `grown`
-    def served(commitOutside: String => Unit): Long = {
+    def conv(out: String) = ExtractionJob.Config(out, buckets = 4, waves = 2, convGrained = true)
+    def convRun(out: String, turns: org.apache.spark.sql.Dataset[graft.spark.Turn]) =
+      assert(ExtractionJob.run(spark, turns, conv(out)).nonEmpty)
+    def append(out: String): Unit = graft.spark.StreamingExtraction.appendBatchToTable(spark,
+      spark.createDataset(added), 0L, out, 4, "q", fmt)
+    // build a table in which x has rows the sidecar does not list, then
+    // rerun `grown`: only x's bucket is recomputed and x is served once
+    def check(what: String)(build: String => Unit): Unit = {
       val out = Files.createTempDirectory("graft-sidecar").toString
-      val cfg = ExtractionJob.Config(out, buckets = 4, waves = 2, convGrained = true)
-      assert(ExtractionJob.run(spark, Transcripts.generate(spark, 25), cfg).nonEmpty)
-      commitOutside(out)
-      assert(ExtractionJob.run(spark, grown, cfg) == Set(b))
-      ExtractionJob.readCommitted(spark, out).count()
+      build(out)
+      val n = fmt.readManifest(out).get.bucketCount.get
+      assert(ExtractionJob.run(spark, grown, conv(out)) == Set(ExtractionJob.bucketOfConvId(x, n)),
+        what)
+      assert(ExtractionJob.readCommitted(spark, out).count() == grown.count(), what)
     }
-    // a stream-sink append: its `stream.` marker says the sidecar is partial
-    assert(served(out => graft.spark.StreamingExtraction.appendBatchToTable(spark,
-      spark.createDataset(added), 0L, out, 4, "q", SnapshotManifestFormat)) == grown.count())
-    // a bucket-grained recompute of a lost bucket drops its fingerprint
-    assert(served { out =>
-      ExtractionJob.readManifest(out).get.files.filter(_.bucket == b)
+    check("stream-sink append") { out => convRun(out, base); append(out) }
+    check("stream-sink append, marker retired") { out =>
+      convRun(out, base); append(out)
+      fmt.setTableProps(out, Map("stream.q" -> ""))
+    }
+    check("stream-sink append, then a delta of its bucket without x") { out =>
+      convRun(out, base); append(out)
+      val y = base.map(_.conv_id).collect().find(ExtractionJob.bucketOfConvId(_, 4) == b).get
+      convRun(out, base.map(t => if (t.conv_id == y) t.copy(text = t.text + "\nfix") else t))
+    }
+    check("stream-sink append, then rebucket") { out =>
+      convRun(out, base); append(out)
+      ExtractionJob.rebucket(spark, out, 3)
+    }
+    check("bucket-grained recompute of a lost bucket") { out =>
+      convRun(out, base)
+      fmt.readManifest(out).get.files.filter(_.bucket == b)
         .foreach(f => Files.delete(Paths.get(out, "data", f.path)))
       assert(ExtractionJob.run(spark, grown, ExtractionJob.Config(out, buckets = 4)) == Set(b))
-    } == grown.count())
+    }
+    check("bucket-grained build, then a conv-grained run without x") { out =>
+      assert(ExtractionJob.run(spark, grown, ExtractionJob.Config(out, buckets = 4)).nonEmpty)
+      convRun(out, base)
+    }
   }
 
   test("conv-grained resume: two successive corrections resolve to the latest (max-seq deletes)") {

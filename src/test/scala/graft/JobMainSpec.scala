@@ -39,6 +39,17 @@ class JobMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(again.isEmpty)
   }
 
+  test("JobMain refuses a malformed or out-of-range numeric flag before any run") {
+    def refusal(flag: String): String =
+      intercept[IllegalArgumentException](JobMain.main(Array("in", "out", flag))).getMessage
+    assert(refusal("--expire=x") == "--expire=N requires an integer, got: --expire=x")
+    assert(refusal("--rebucket=3000000000") ==
+      "--rebucket=N requires an integer, got: --rebucket=3000000000")
+    assert(refusal("--rebucket=0") == "requirement failed: --rebucket=N must be >= 1, got 0")
+    assert(refusal("--remove-orphans=-1") ==
+      "requirement failed: --remove-orphans=AGE_MS must be >= 0, got -1")
+  }
+
   test("JobMain --conv-grained --compact --expire runs the full maintenance cycle") {
     val s = spark
     import s.implicits._
