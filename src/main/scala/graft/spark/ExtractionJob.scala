@@ -337,6 +337,14 @@ object ExtractionJob {
     val carriedConvFps = priorMan.flatMap(_.convFpsDir)
     val carriedDeleteDirs = priorMan.map(_.deleteDirs).getOrElse(Vector.empty)
     val carriedFps = manFps
+    // a recomputed bucket holds rows the sidecar does not describe unless
+    // its input is the one the sidecar records for it
+    val sidecarCurrent: Set[Int] = carriedConvFps.map(d => s"${config.outDir}/conv_fps/$d")
+      .filter(new java.io.File(_).isDirectory).map { dir =>
+        val recorded = bucketFpsFromConv(spark.read.parquet(dir))
+        val current = bucketFpsFromConv(convFingerprints(spark, turns, config.buckets))
+        remaining.filter(b => recorded.get(b) == current.get(b)).toSet
+      }.getOrElse(Set.empty)
 
     val withBucket = turns
       .withColumn("bucket", bucketOf(config.buckets))
@@ -365,7 +373,7 @@ object ExtractionJob {
           // recomputing a previously committed bucket rewrites its content
           // (non-additive promote) — incremental readers must refuse across it
           operation = if (waveBuckets.exists(verified.contains)) "replace" else "append",
-          props = SnapshotManifestFormat.unlistedAfter(priorMan, doneThisRun),
+          props = SnapshotManifestFormat.unlistedAfter(priorMan, doneThisRun -- sidecarCurrent),
           schemaDdl = if (waveFiles.isEmpty) Some(stagedSchemaDdl) else None)
         acc ++= waveBuckets
     }
@@ -569,8 +577,10 @@ object ExtractionJob {
           .select(col("bucket"), col("conv_id"), col("fp").as("cfp"))
         val pri = priorConvFps.where(col("bucket").isin(dirty: _*))
           .select(col("bucket"), col("conv_id"), col("fp").as("pfp"))
+        // the prior sidecar does not describe every row of an unlisted
+        // bucket, so each of its conversations counts as differing
         val differing = cur.join(pri, Seq("bucket", "conv_id"), "full_outer")
-          .where(!(col("cfp") <=> col("pfp"))).cache()
+          .where(!(col("cfp") <=> col("pfp")) || col("bucket").isin(unlisted.toSeq: _*)).cache()
         val seq = snapshotId + 1
         // a conversation the prior sidecar does not list has an older row
         // to hide only in an unlisted bucket

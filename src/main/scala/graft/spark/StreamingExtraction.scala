@@ -1,7 +1,10 @@
 package graft.spark
 
+import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
+import ExtractionJob.{FileEntry, LineageRow, Manifest}
 
 /** Structured Streaming surface (SURVEY.md §7.5): `readStream` over the
   * transcripts table, the same fused per-turn extraction, and a
@@ -9,22 +12,21 @@ import org.apache.spark.sql.streaming.Trigger
   * checkpointLocation and Trigger.AvailableNow. The checkpoint records
   * which input files were processed, so a killed run resumes from the last
   * committed micro-batch and never re-extracts a processed file.
+  *
+  * Both table sinks, this one and [[TableReplication]]'s, follow one sink
+  * protocol: they drain through [[drainAvailableNow]] and commit through
+  * [[commitSinkBatch]], which fences a replayed batch by its marker, stages
+  * at the next seq and re-stages at the new head when it loses a commit
+  * race. A sink supplies only its stage function.
   */
 object StreamingExtraction {
 
   /** Exactly-once streaming ingestion into the snapshot-manifest TABLE
-    * (Iceberg streaming-sink analog). Each micro-batch runs the same fused
-    * per-turn extraction, stages sorted per-bucket parquet, and commits one
-    * additive snapshot whose manifest records the sink's exactly-once
-    * marker (`stream.<sink>` -> batch id) in the STICKY commit props —
-    * the Delta txn-map / Iceberg snapshot-summary pattern. Structured
-    * Streaming's contract is that a micro-batch may be REPLAYED after a
-    * crash (commit succeeded, checkpoint write didn't); the replay is
-    * detected by comparing the incoming batch id against the committed
-    * marker and skipped, so the table never double-appends — end-to-end
-    * exactly-once on top of an at-least-once replay. Because props are
-    * sticky and the latest manifest is always retained, the marker
-    * survives maintenance commits AND snapshot expiry.
+    * (Iceberg streaming-sink analog): each micro-batch is appended by
+    * [[appendBatchToTable]] as one additive snapshot whose STICKY props
+    * record the sink's marker (`stream.<sink>` -> batch id, the Delta
+    * txn-map pattern), so a replayed micro-batch is skipped and the table
+    * never double-appends.
     *
     * Sink identity is CHECKPOINT-SCOPED (a uuid persisted in the
     * checkpoint dir), because batch ids only mean anything relative to one
@@ -45,145 +47,142 @@ object StreamingExtraction {
                              checkpointDir: String, buckets: Int = 8,
                              queryKey: String = "stream"): Long = {
     val sinkKey = s"$queryKey-${checkpointSinkId(checkpointDir)}"
-    val appended = new java.util.concurrent.atomic.LongAdder
-    val turns = spark.readStream
-      .schema(Encoders.product[Turn].schema)
-      .parquet(inputDir)
+    val turns = spark.readStream.schema(Encoders.product[Turn].schema).parquet(inputDir)
       .as[Turn](Encoders.product[Turn])
-    val q = turns.writeStream
-      .foreachBatch { (batch: Dataset[Turn], batchId: Long) =>
-        appended.add(appendBatchToTable(spark, batch, batchId, tableDir, buckets, sinkKey,
-          SnapshotManifestFormat))
-        ()
-      }
+    drainAvailableNow(turns, checkpointDir)((batch, batchId) =>
+      appendBatchToTable(spark, batch, batchId, tableDir, buckets, sinkKey, SnapshotManifestFormat))
+  }
+
+  /** Drain `rows` once (Trigger.AvailableNow) through `batch`, with the
+    * engine's offset and commit logs under `checkpointDir`. Returns the sum
+    * of what `batch` returned over the micro-batches. */
+  private[spark] def drainAvailableNow[T](rows: Dataset[T], checkpointDir: String)(
+      batch: (Dataset[T], Long) => Long): Long = {
+    val total = new java.util.concurrent.atomic.LongAdder
+    rows.writeStream
+      .foreachBatch { (b: Dataset[T], batchId: Long) => total.add(batch(b, batchId)); () }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    appended.sum()
+      .awaitTermination()
+    total.sum()
   }
 
   /** The sink uuid bound to a checkpoint dir, created on first use. Batch
     * ids are only comparable within one checkpoint's numbering, so the
     * table marker must change identity exactly when the checkpoint does. */
   private[graft] def checkpointSinkId(checkpointDir: String): String = {
-    val p = java.nio.file.Paths.get(checkpointDir, "graft-sink-id")
-    def readId() = new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    if (java.nio.file.Files.exists(p)) readId()
+    val p = Paths.get(checkpointDir, "graft-sink-id")
+    def readId() = new String(Files.readAllBytes(p), UTF_8).trim
+    if (Files.exists(p)) readId()
     else {
       val id = java.util.UUID.randomUUID().toString
-      java.nio.file.Files.createDirectories(p.getParent)
+      Files.createDirectories(p.getParent)
       // the temp name must be PER-ATTEMPT unique: with a shared name, a
       // racing starter can overwrite this one's half-published id and the
       // file would then disagree with the id this call returns
       val tmp = p.resolveSibling(s"${p.getFileName}.$id.tmp")
-      java.nio.file.Files.write(tmp, id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Files.write(tmp, id.getBytes(UTF_8))
       try {
-        try java.nio.file.Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        try Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         catch { // plain move still fails if the target exists — good enough
-          case _: java.nio.file.AtomicMoveNotSupportedException =>
-            java.nio.file.Files.move(tmp, p)
+          case _: java.nio.file.AtomicMoveNotSupportedException => Files.move(tmp, p)
         }
         id
       } catch { // another starter won the race: adopt its id
         case e: java.nio.file.FileSystemException =>
-          java.nio.file.Files.deleteIfExists(tmp)
-          if (java.nio.file.Files.exists(p)) readId() else throw e
+          Files.deleteIfExists(tmp)
+          if (Files.exists(p)) readId() else throw e
       }
     }
   }
 
-  /** Highest micro-batch id sink `queryKey` has committed to the table:
-    * the `stream.<queryKey>` marker in the latest manifest's sticky props.
-    * One driver-side manifest read; no history walk, so expiry cannot
-    * erase the marker (the latest manifest always survives retention). */
-  def lastCommittedBatch(tableDir: String, queryKey: String, format: TableFormat): Option[Long] =
-    markerOf(format.readManifest(tableDir), queryKey)
-
-  private def markerOf(man: Option[ExtractionJob.Manifest], queryKey: String): Option[Long] =
-    man.flatMap(_.props.get(s"stream.$queryKey")).map(_.toLong)
-
-  /** Idempotent micro-batch append (the foreachBatch body). Returns rows
-    * appended — 0 when the batch id was already committed (crash replay) or
-    * the batch is empty. Extraction + staging happen once; only the commit
-    * metadata is re-planned when an optimistic race is lost to a concurrent
-    * maintenance writer (compaction, expiry bookkeeping). Two exceptions
-    * re-do work: a racing FIRST commit that fixed a different bucket
-    * modulus forces a re-stage under the winner's modulus (mixed moduli in
-    * one table would break keyed-read pruning and MOR delete application),
-    * and a racing commit that advanced this sink's own marker past
-    * `batchId` (a zombie driver on the same checkpoint) turns the append
-    * into a no-op instead of a double-append.
+  /** Idempotent micro-batch append (the foreachBatch body): the batch
+    * job's per-turn extraction, staged as sorted per-bucket parquet under
+    * the table's recorded modulus (`buckets` only for a new table) and
+    * committed through [[commitSinkBatch]]. Returns rows appended: 0 when
+    * the batch id was already committed (a crash replay, or a zombie driver
+    * on the same checkpoint) or the batch is empty. A commit lost to a
+    * concurrent writer re-extracts and re-stages the batch at the new head,
+    * once per lost race, as `ExtractionJob.run` re-plans a lost run.
     */
   def appendBatchToTable(spark: SparkSession, batch: Dataset[Turn], batchId: Long,
                          tableDir: String, buckets: Int, queryKey: String,
-                         format: TableFormat): Long = {
-    val man0 = format.readManifest(tableDir)
-    markerOf(man0, queryKey) match {
-      case Some(maxId) if batchId <= maxId => return 0L // replayed batch: already in the table
-      case _ =>
-    }
-    def stageFor(eb: Int, provisionalSeq: Int) = {
+                         format: TableFormat): Long =
+    commitSinkBatch(tableDir, batchId, queryKey, "stream", format) { attempt =>
+      val eb = attempt.man.flatMap(_.bucketCount).getOrElse(buckets)
       val withBucket = batch
         .withColumn("bucket", ExtractionJob.bucketOf(eb))
         .as[TurnWithBucket](Encoders.product[TurnWithBucket])
-      val cfg = ExtractionJob.Config(outDir = tableDir, buckets = eb)
-      ExtractionJob.stageWave(spark, withBucket, cfg, format, 0 until eb,
-        s"stream-$queryKey-$batchId", provisionalSeq)
+      val (_, files, lineage) = ExtractionJob.stageWave(spark, withBucket,
+        ExtractionJob.Config(outDir = tableDir, buckets = eb), format, 0 until eb,
+        attempt.tag, attempt.seq)
+      SinkStaged(files, lineage, Some(eb))
     }
-    def dropStaging(dir: String): Unit = {
-      val root = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(root)) SnapshotManifestFormat.deleteRecursively(root)
-    }
-    var effBuckets = man0.flatMap(_.bucketCount).getOrElse(buckets)
-    var (staging, files0, lineage0) = stageFor(effBuckets, man0.map(_.snapshotId).getOrElse(-1) + 1)
-    if (files0.isEmpty) { // empty batch: nothing to commit, nothing to replay
-      dropStaging(staging)
-      return 0L
-    }
-    var attempt = 0
-    while (true) {
-      val man = if (attempt == 0) man0 else format.readManifest(tableDir)
-      // a zombie driver on the same checkpoint may have raced this batch in
-      if (attempt > 0 && markerOf(man, queryKey).exists(batchId <= _)) {
-        dropStaging(staging)
-        return 0L
+
+  /** One attempt of a sink commit: the head manifest it stages against, the
+    * seq it commits at, and its writer-unique names. The sink stages under
+    * `<table>/staging-<tag>` (`tag` = `<kind>-<seq>-<runToken>`) and writes
+    * delete keys, if any, to `<table>/deletes/<deleteDir>`. */
+  private[spark] final case class SinkAttempt(man: Option[Manifest], seq: Int, tag: String,
+                                              deleteDir: String)
+
+  /** What a sink staged in one attempt: files and lineage stamped with its
+    * seq, the modulus to record, and the delete keys it wrote (0: none). */
+  private[spark] final case class SinkStaged(files: Vector[FileEntry], lineage: Seq[LineageRow],
+                                             bucketCount: Option[Int], deletes: Long = 0L)
+
+  /** The exactly-once micro-batch commit of both table sinks. Structured
+    * Streaming may replay a micro-batch after a crash (commit landed,
+    * checkpoint write did not), so each commit records the sink's marker,
+    * `stream.<queryKey>` -> batch id, in the sticky props.
+    *
+    * Each attempt reads the head manifest and returns 0 when the marker
+    * covers `batchId` (a crash replay, or a zombie driver on the same
+    * checkpoint that raced the batch in). Otherwise it calls `stage` at the
+    * next seq and commits one additive snapshot: the manifest's buckets,
+    * files, fingerprints, sidecar, delete dirs and fp mode plus what was
+    * staged, the marker, and the written buckets added to
+    * `conv_fps.unlisted`. An empty stage commits nothing. A commit lost to
+    * a concurrent writer drops the attempt's staging dir and its delete dir
+    * (unless a retained manifest references it) and stages again at the
+    * new head, at most twice, as the batch job's default `commitRetries`.
+    * Returns rows staged plus delete keys. */
+  private[spark] def commitSinkBatch(tableDir: String, batchId: Long, queryKey: String,
+                                     kind: String, format: TableFormat)(
+      stage: SinkAttempt => SinkStaged): Long =
+    SnapshotManifestFormat.retrying(2) {
+      val man = format.readManifest(tableDir)
+      if (man.flatMap(_.props.get(s"stream.$queryKey")).exists(batchId <= _.toLong)) 0L
+      else {
+        val seq = man.map(_.snapshotId).getOrElse(-1) + 1
+        val token = SnapshotManifestFormat.newRunToken()
+        val attempt = SinkAttempt(man, seq, s"$kind-$seq-$token", s"snap-$seq-$token")
+        val staging = s"$tableDir/staging-${attempt.tag}"
+        val staged = stage(attempt)
+        val deleteDir = Option.when(staged.deletes > 0)(attempt.deleteDir)
+        def dropAttempt(): Unit = {
+          StateDirs.deleteRecursively(Paths.get(staging))
+          deleteDir.filterNot(d => SnapshotManifestFormat.retainedManifests(tableDir)
+            .exists(_.deleteDirs.contains(d)))
+            .foreach(d => StateDirs.deleteRecursively(Paths.get(tableDir, "deletes", d)))
+        }
+        if (staged.files.isEmpty && deleteDir.isEmpty) { dropAttempt(); 0L }
+        else try {
+          format.commitWave(tableDir, staging, seq,
+            man.map(_.buckets).getOrElse(Set.empty) ++ staged.files.map(_.bucket),
+            man.map(_.files).getOrElse(Vector.empty) ++ staged.files, staged.lineage,
+            inputFps = man.map(_.inputFps).getOrElse(Map.empty), additive = true,
+            convFpsDir = man.flatMap(_.convFpsDir),
+            deleteDirs = man.map(_.deleteDirs).getOrElse(Vector.empty) ++ deleteDir,
+            fpMode = man.flatMap(_.fpMode), bucketCount = staged.bucketCount,
+            operation = if (deleteDir.isEmpty) "append" else "delta",
+            props = Map(s"stream.$queryKey" -> batchId.toString) ++
+              SnapshotManifestFormat.unlistedAfter(man, staged.files.map(_.bucket)))
+          staged.files.map(_.rowCount).sum + staged.deletes
+        } catch {
+          case e: CommitConflictException => dropAttempt(); throw e
+        }
       }
-      // a racing first commit may have fixed a DIFFERENT modulus: the staged
-      // files are bucketed wrong for this table now — re-stage, don't mix
-      val recorded = man.flatMap(_.bucketCount)
-      if (recorded.exists(_ != effBuckets)) {
-        dropStaging(staging)
-        effBuckets = recorded.get
-        val re = stageFor(effBuckets, man.map(_.snapshotId).getOrElse(-1) + 1)
-        staging = re._1; files0 = re._2; lineage0 = re._3
-      }
-      // seq stamps gate merge-on-read delete application (a delete hides
-      // only files with lower seq), so appended files must carry the REAL
-      // snapshot id — re-stamped here in case a racing commit moved it
-      val snapshotId = man.map(_.snapshotId).getOrElse(-1) + 1
-      val files = files0.map(_.copy(seq = snapshotId))
-      val lineage = lineage0.map(_.copy(snapshot_id = snapshotId))
-      try {
-        format.commitWave(tableDir, staging, snapshotId,
-          man.map(_.buckets).getOrElse(Set.empty) ++ files.map(_.bucket),
-          man.map(_.files).getOrElse(Vector.empty) ++ files, lineage,
-          inputFps = man.map(_.inputFps).getOrElse(Map.empty),
-          additive = true,
-          convFpsDir = man.flatMap(_.convFpsDir),
-          deleteDirs = man.map(_.deleteDirs).getOrElse(Vector.empty),
-          fpMode = man.flatMap(_.fpMode),
-          bucketCount = Some(effBuckets),
-          operation = "append",
-          props = Map(s"stream.$queryKey" -> batchId.toString) ++
-            SnapshotManifestFormat.unlistedAfter(man, files.map(_.bucket)))
-        return files.map(_.rowCount).sum
-      } catch {
-        // two retries, as the batch job's default `commitRetries`
-        case _: CommitConflictException if attempt < 2 => attempt += 1
-      }
     }
-    0L // unreachable
-  }
 }

@@ -721,7 +721,9 @@ object SnapshotManifestFormat extends TableFormat {
     // and publish re-stamps the rows to the published id anyway
     atomicWrite(toBranch.map(branchLineagePath(outDir, _))
       .getOrElse(Paths.get(outDir, "lineage", s"lineage-$snapshotId.json")), lineageJson)
-    val fileEntries = files.toVector.sortBy(f => (f.bucket, f.path)).map { f =>
+    // ordered by what the commit sequence fixes; the path, which carries a
+    // random part-file UUID, only breaks ties
+    val fileEntries = files.toVector.sortBy(f => (f.bucket, f.seq, f.minConv, f.path)).map { f =>
       val bounds = (f.minConv, f.maxConv) match {
         case (Some(lo), Some(hi)) => Vector("min_conv" -> JStr(lo), "max_conv" -> JStr(hi))
         case _ => Vector.empty
@@ -1421,14 +1423,16 @@ object SnapshotManifestFormat extends TableFormat {
   private[spark] def newRunToken(): String =
     java.util.UUID.randomUUID().toString.substring(0, 8)
 
-  /** Sticky prop listing the buckets that may hold rows of conversations
-    * the conv-fp sidecar does not list: rows a stream-sink, replica or
-    * bucket-grained commit added while the table had a sidecar, or rows
-    * the first conversation-grained run found without one. Elsewhere the
-    * sidecar lists every conversation with rows, so a conversation it does
-    * not list has no older row to hide. Only a conversation-grained full
-    * wave, which rewrites a bucket from the sidecar's own input, takes a
-    * bucket off; `rollbackTo` restores the target's list. */
+  /** Sticky prop listing the buckets that may hold rows the conv-fp
+    * sidecar does not describe: rows a stream-sink or replica commit added
+    * while the table had a sidecar, rows a bucket-grained commit wrote from
+    * input other than the sidecar records for the bucket, or rows the first
+    * conversation-grained run found without a sidecar. Elsewhere the
+    * sidecar lists every conversation with rows, with the content they came
+    * from. A conversation-grained delta therefore diffs every conversation
+    * of a dirty unlisted bucket. Only a conversation-grained full wave,
+    * which rewrites a bucket from the sidecar's own input, takes a bucket
+    * off; `rollbackTo` restores the target's list. */
   private[spark] val UnlistedProp = "conv_fps.unlisted"
 
   private[spark] def unlistedBuckets(man: Option[Manifest]): Set[Int] =

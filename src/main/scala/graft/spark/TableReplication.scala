@@ -1,8 +1,7 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental table replication (the Delta deep-clone-with-CDF /
   * Iceberg replication analog): maintain an exact replica of a source
@@ -18,13 +17,14 @@ import org.apache.spark.sql.streaming.Trigger
   * all behave as on any table. Per-cycle work scales with the CHANGED
   * data, never with table size — the 100 TB replication shape.
   *
-  * Crash safety is the sink contract: a replayed micro-batch (commit
-  * landed, checkpoint write didn't) is fenced by the marker; a restart
-  * resumes from the engine-checkpointed source offset. Replacing commits
-  * upstream (compaction, rebucket, rollback) fail the stream with the
-  * table format's distinct errors — re-baseline the replica from a fresh
-  * checkpoint, the standard lakehouse CDC contract (the replica itself
-  * may compact freely; its MOR state need not mirror the source's).
+  * Crash safety is the extraction sink's protocol
+  * (`StreamingExtraction.commitSinkBatch`): the marker fences a replayed
+  * micro-batch, a commit lost to a concurrent writer re-stages the batch at
+  * the new head, and a restart resumes from the checkpointed source offset.
+  * Replacing commits upstream (compaction, rebucket, rollback) fail the
+  * stream with the table format's distinct errors — re-baseline the replica
+  * from a fresh checkpoint, the standard lakehouse CDC contract (the replica
+  * itself may compact freely; its MOR state need not mirror the source's).
   */
 object TableReplication {
 
@@ -52,127 +52,50 @@ object TableReplication {
           "a fresh checkpoint would replay the full source snapshot on top of it; " +
           "re-baseline into an empty replica dir or resume the original checkpoint")
     }
-    val applied = new java.util.concurrent.atomic.LongAdder
-    val q = spark.readStream.format("graft-table")
-      .option("changeFeed", "true").load(srcDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applied.add(replicateBatch(spark, batch, batchId, dstDir, sinkKey, srcBuckets))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    applied.sum()
+    val feed = spark.readStream.format("graft-table").option("changeFeed", "true").load(srcDir)
+    StreamingExtraction.drainAvailableNow(feed, checkpointDir)((batch, batchId) =>
+      replicateBatch(spark, batch, batchId, dstDir, sinkKey, srcBuckets))
   }
 
   /** Idempotent micro-batch apply (the foreachBatch body): split the
     * change-feed batch into retraction keys and post-image rows, write an
-    * equality-delete file + staged delta files, commit one additive
-    * snapshot. Same fencing as the extraction sink: marker comparison
-    * skips crash replays; an optimistic-commit race re-plans commit
-    * metadata (and re-stamps the delete file under the new seq) without
-    * re-staging data. Returns rows applied. */
+    * equality-delete file + staged delta files, and commit them through
+    * `StreamingExtraction.commitSinkBatch`: the marker skips crash replays,
+    * and a commit lost to a concurrent writer re-stages the batch at the new
+    * head from the feed, cached once. Returns inserts + retraction keys. */
   def replicateBatch(spark: SparkSession, batch: Dataset[Row], batchId: Long,
                      dstDir: String, queryKey: String, srcBuckets: Option[Int]): Long = {
-    val format = SnapshotManifestFormat
-    val man0 = format.readManifest(dstDir)
-    def marker(man: Option[ExtractionJob.Manifest]): Option[Long] =
-      man.flatMap(_.props.get(s"stream.$queryKey")).map(_.toLong)
-    if (marker(man0).exists(batchId <= _)) return 0L // crash replay: fenced
-    // feed rows carry SOURCE buckets, and unlike the extraction sink this
-    // one cannot re-stage under a different modulus (the source bucket
-    // column is all it has) — a replica whose recorded modulus diverged
-    // (e.g. an out-of-band --rebucket on the replica) must refuse, or
-    // keyed-read pruning and MOR delete application would silently miss
-    // rows bucketed under the old modulus
-    man0.flatMap(_.bucketCount).foreach { rec =>
-      require(srcBuckets.forall(_ == rec),
-        s"replica $dstDir records bucket modulus $rec but the source uses " +
-          s"${srcBuckets.getOrElse("(none)")} — a rebucketted replica cannot accept " +
-          "source-bucketed change-feed rows; re-baseline it instead")
-    }
-
-    // one pass over the incoming batch: retraction keys (conv-grained,
-    // bounded by the batch's changed conversations) and post-images into
-    // sorted per-bucket staging — both written DISTRIBUTED; the driver
-    // sees only counts and footer metadata. _change_type is dropped from
-    // the stored rows — the replica stores table rows, not CDC rows.
+    // retraction keys (bounded by the batch's changed conversations) and
+    // post-images are written DISTRIBUTED; the driver sees only counts and
+    // footer metadata. The replica stores table rows, not CDC rows.
     val cached = batch.cache()
     try {
       val delDf = cached.where(col("_change_type") === "delete")
         .select(col("bucket"), col("conv_id"))
-      val nDel = delDf.count()
-      val staging = s"$dstDir/staging-replica-$queryKey-$batchId"
+      lazy val nDel = delDf.count()
       val inserts = cached.where(col("_change_type") === "insert").drop("_change_type")
         .repartition(col("bucket"))
-      val files0 = SnapshotManifestFormat.writeSortedBuckets(format, inserts, staging)
-      if (files0.isEmpty && nDel == 0L) {
-        dropDir(staging)
-        return 0L // empty batch: nothing to commit, nothing to fence
-      }
-
-      var attempt = 0
-      var lastDeleteDir: Option[String] = None
-      // writer-unique delete-dir names (snap-<seq>-<token>, the
-      // ExtractionJob runToken convention): a concurrent writer computing
-      // the same seq can never overwrite ours pre-commit. The
-      // unreferenced-only drop stays as defense in depth — a name a
-      // retained manifest tracks is never ours to delete.
-      val runToken = SnapshotManifestFormat.newRunToken()
-      def dropDeleteDirIfUnreferenced(name: String): Unit = {
-        val referenced = format.retainedManifests(dstDir).exists(_.deleteDirs.contains(name))
-        if (!referenced) dropDir(s"$dstDir/deletes/$name")
-      }
-      while (true) {
-        val man = if (attempt == 0) man0 else format.readManifest(dstDir)
-        if (attempt > 0 && marker(man).exists(batchId <= _)) { // zombie fence
-          dropDir(staging); lastDeleteDir.foreach(dropDeleteDirIfUnreferenced)
-          return 0L
+      StreamingExtraction.commitSinkBatch(dstDir, batchId, queryKey, "replica",
+          SnapshotManifestFormat) { attempt =>
+        // feed rows carry SOURCE buckets: a replica whose recorded modulus
+        // diverged (an out-of-band --rebucket) must refuse, or keyed reads
+        // and MOR deletes would miss rows bucketed under the other modulus
+        attempt.man.flatMap(_.bucketCount).foreach { rec =>
+          require(srcBuckets.forall(_ == rec),
+            s"replica $dstDir records bucket modulus $rec but the source uses " +
+              s"${srcBuckets.getOrElse("(none)")} — a rebucketted replica cannot accept " +
+              "source-bucketed change-feed rows; re-baseline it instead")
         }
-        val seq = man.map(_.snapshotId).getOrElse(-1) + 1
-        // the delete file's name and seq column are commit-seq-stamped, so
-        // a lost race rewrites it under the winner's successor seq
-        val deleteDir = if (nDel == 0L) None else {
-          val name = s"snap-$seq-$runToken"
-          lastDeleteDir.filter(_ != name).foreach(dropDeleteDirIfUnreferenced)
-          StateDirs.write(delDf.withColumn("seq", lit(seq)))
-            .mode(SaveMode.Overwrite).parquet(s"$dstDir/deletes/$name")
-          lastDeleteDir = Some(name)
-          lastDeleteDir
-        }
-        val files = files0.map(_.copy(seq = seq))
-        try {
-          format.commitWave(dstDir, staging, seq,
-            man.map(_.buckets).getOrElse(Set.empty) ++ files.map(_.bucket),
-            man.map(_.files).getOrElse(Vector.empty) ++ files,
-            lineage = Seq.empty,
-            inputFps = man.map(_.inputFps).getOrElse(Map.empty),
-            additive = true,
-            convFpsDir = man.flatMap(_.convFpsDir),
-            deleteDirs = man.map(_.deleteDirs).getOrElse(Vector.empty) ++ deleteDir,
-            fpMode = man.flatMap(_.fpMode),
-            bucketCount = man.flatMap(_.bucketCount).orElse(srcBuckets),
-            operation = if (nDel == 0L) "append" else "delta",
-            props = Map(s"stream.$queryKey" -> batchId.toString) ++
-              SnapshotManifestFormat.unlistedAfter(man, files.map(_.bucket)))
-          return files.map(_.rowCount).sum + nDel
-        } catch {
-          case e: CommitConflictException =>
-            if (attempt >= 2) { // two retries, as the batch job's default `commitRetries`
-              // leave nothing half-applied: the staged files and the
-              // un-committed delete dir are orphans for removeOrphanFiles
-              throw e
-            }
-            attempt += 1
-        }
+        // the delete file's seq column gates merge-on-read: it hides rows of
+        // files with a lower seq, so it carries this attempt's commit seq
+        if (nDel > 0L)
+          StateDirs.write(delDf.withColumn("seq", lit(attempt.seq)))
+            .mode(SaveMode.Overwrite).parquet(s"$dstDir/deletes/${attempt.deleteDir}")
+        val files = SnapshotManifestFormat.writeSortedBuckets(SnapshotManifestFormat, inserts,
+          s"$dstDir/staging-${attempt.tag}").map(_.copy(seq = attempt.seq))
+        StreamingExtraction.SinkStaged(files, Seq.empty,
+          attempt.man.flatMap(_.bucketCount).orElse(srcBuckets), nDel)
       }
-      0L // unreachable
     } finally cached.unpersist()
-  }
-
-  private def dropDir(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) SnapshotManifestFormat.deleteRecursively(p)
   }
 }

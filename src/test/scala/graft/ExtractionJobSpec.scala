@@ -489,6 +489,29 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("conv-grained: a bucket a bucket-grained run rewrote is diffed whole, not against the sidecar") {
+    val ss = spark
+    import ss.implicits._
+    val out = Files.createTempDirectory("graft-stale-diff").toString
+    val base = Transcripts.generate(spark, 25)
+    val conv = ExtractionJob.Config(out, buckets = 4, waves = 2, convGrained = true)
+    assert(ExtractionJob.run(spark, base, conv).nonEmpty)
+    SnapshotManifestFormat.readManifest(out).get.files.filter(_.bucket == 1)
+      .foreach(f => Files.delete(Paths.get(out, "data", f.path)))
+    // the lost bucket is recomputed bucket-grained from an edited input
+    val victim = base.map(_.conv_id).collect().find(ExtractionJob.bucketOfConvId(_, 4) == 1).get
+    val edited = base.map(t =>
+      if (t.conv_id == victim) t.copy(text = t.text + "\nPatient Name: Stale Edit") else t)
+    assert(ExtractionJob.run(spark, edited, ExtractionJob.Config(out, buckets = 4)) == Set(1))
+    // the input returns to the content the sidecar recorded
+    assert(ExtractionJob.run(spark, base, conv).nonEmpty)
+    val cols = Seq("conv_id", "turn_idx", "main_text", "fields_json")
+    val served = ExtractionJob.readCommitted(spark, out).select(cols.head, cols.tail: _*)
+    val want = ExtractionJob.extract(spark, base).select(cols.head, cols.tail: _*)
+    assert(served.count() == want.count())
+    assert(served.except(want).count() == 0L, "no served row may keep the edited content")
+  }
+
   test("conv-grained resume: two successive corrections resolve to the latest (max-seq deletes)") {
     val ss = spark
     import ss.implicits._

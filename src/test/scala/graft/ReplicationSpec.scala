@@ -125,6 +125,52 @@ class ReplicationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!content(dst).exists(_._1 == victim), "delete-only batch must retract the conv")
   }
 
+  test("a batch whose commit loses a race is re-staged at the new head and applied once") {
+    val ss = spark
+    import ss.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    val base = Files.createTempDirectory("graft-replica-race").toString
+    val src = s"$base/src"
+    val dst = s"$base/dst"
+    val cfg = ExtractionJob.Config(src, buckets = 4, waves = 1, convGrained = true,
+      autoCompactDeletes = 0)
+    val turns = Transcripts.generate(spark, 6)
+    assert(ExtractionJob.run(spark, turns, cfg).nonEmpty)
+    val srcBuckets = fmt.readManifest(src).flatMap(_.bucketCount)
+    assert(TableReplication.replicateBatch(spark,
+      fmt.readCommitted(spark, src).withColumn("_change_type", lit("insert")),
+      batchId = 0L, dst, "q", srcBuckets) > 0L)
+
+    // a correction: the victim's retraction key plus its post-image rows
+    val victim = turns.select("conv_id").as[String].head()
+    assert(ExtractionJob.run(spark, turns.map(t =>
+      if (t.conv_id == victim) t.copy(text = t.text + "\nreplica race") else t), cfg).nonEmpty)
+    val post = fmt.readCommitted(spark, src).where(col("conv_id") === victim)
+    val feed = post.withColumn("_change_type", lit("insert"))
+      .unionByName(post.limit(1).withColumn("_change_type", lit("delete")))
+    // an unrelated writer commits inside the replica's first commit, after
+    // its delete dir and staged files are written
+    fmt.commitRaceHook = () => {
+      fmt.commitRaceHook = () => ()
+      fmt.setTableProps(dst, Map("note" -> "race")); ()
+    }
+    val n = try TableReplication.replicateBatch(spark, feed, batchId = 1L, dst, "q", srcBuckets)
+    finally fmt.commitRaceHook = () => ()
+    assert(n == post.count() + 1L)
+    val man = fmt.readManifest(dst).get
+    assert(man.snapshotId == 2 && man.props.get("note").contains("race") &&
+      man.props.get("stream.q").contains("1") && man.operation == "delta")
+    assert(man.deleteDirs.size == 1 && man.deleteDirs.head.startsWith("snap-2-"),
+      "the delete dir is written at the seq the batch committed at")
+    assert(content(dst) == content(src))
+    assert(fmt.readCommitted(spark, dst).count() == fmt.readCommitted(spark, src).count(),
+      "the batch's rows appear once")
+    val names = new java.io.File(dst).list().toSet
+    assert(!names.exists(_.startsWith("staging-")))
+    assert(new java.io.File(dst, "deletes").list().toSet == man.deleteDirs.toSet,
+      "the lost attempt's delete dir must be dropped")
+  }
+
   test("guards: re-baseline into a non-empty replica refuses; a diverged modulus refuses") {
     val ss = spark
     import ss.implicits._

@@ -35,6 +35,10 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def expectedRows(ordinals: Range): Long =
     ordinals.map(o => Transcripts.convLength(o.toLong).toLong).sum
 
+  /** Sink `queryKey`'s exactly-once marker: the highest batch id it committed. */
+  private def marker(tableDir: String, queryKey: String): Option[Long] =
+    fmt.readManifest(tableDir).flatMap(_.props.get(s"stream.$queryKey")).map(_.toLong)
+
   private def streamMarker(tableDir: String): (String, Long) =
     fmt.readManifest(tableDir).get.props
       .collectFirst { case (k, v) if k.startsWith("stream.") => (k, v.toLong) }.get
@@ -136,13 +140,13 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       inputFps = man.inputFps, additive = true, convFpsDir = man.convFpsDir,
       deleteDirs = man.deleteDirs, fpMode = man.fpMode, bucketCount = man.bucketCount,
       operation = "replace")
-    assert(StreamingExtraction.lastCommittedBatch(table, "q", fmt).contains(7L),
+    assert(marker(table, "q").contains(7L),
       "sticky props must carry the marker through a prop-less commit")
 
     // expire history down to ONLY the maintenance snapshot: the marker must
     // still be readable and the replay still skipped
     fmt.expireSnapshots(table, retainLast = 1)
-    assert(StreamingExtraction.lastCommittedBatch(table, "q", fmt).contains(7L),
+    assert(marker(table, "q").contains(7L),
       "marker must survive snapshot expiry")
     val n = StreamingExtraction.appendBatchToTable(spark, batch, batchId = 7L,
       table, buckets = 4, queryKey = "q", fmt)
@@ -150,13 +154,13 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // a different sink (query key) is independent: batch 0 of "other" lands
     val other = sp.range(4, 6).flatMap(o => Transcripts.turnsFor(o))
-    assert(StreamingExtraction.lastCommittedBatch(table, "other", fmt).isEmpty)
+    assert(marker(table, "other").isEmpty)
     val nOther = StreamingExtraction.appendBatchToTable(spark, other, batchId = 0L,
       table, buckets = 4, queryKey = "other", fmt)
     assert(nOther == expectedRows(4 until 6))
     // both sinks' markers coexist in the latest manifest
-    assert(StreamingExtraction.lastCommittedBatch(table, "q", fmt).contains(7L))
-    assert(StreamingExtraction.lastCommittedBatch(table, "other", fmt).contains(0L))
+    assert(marker(table, "q").contains(7L))
+    assert(marker(table, "other").contains(0L))
   }
 
   test("manifest props round-trip through escaping and merge stickily; braces round-trip too") {
@@ -252,6 +256,75 @@ class StreamingTableSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fmt.readCommitted(spark, table).count() == rowsAfter0, "no double-append")
     val names = new java.io.File(table).list().toSet
     assert(!names.exists(_.startsWith("staging-")), "fenced append must clean its staging")
+  }
+
+  /** Leftovers of sink attempts: staging dirs, and delete dirs no retained
+    * manifest references. */
+  private def leftovers(table: String): Set[String] = {
+    val referenced = fmt.retainedManifests(table).flatMap(_.deleteDirs).toSet
+    val deletes = Option(new java.io.File(table, "deletes").list()).toSet.flatten
+    new java.io.File(table).list().toSet.filter(_.startsWith("staging-")) ++
+      (deletes -- referenced).map("deletes/" + _)
+  }
+
+  test("a lost commit race re-stages the batch at the new head; it lands once, nothing left over") {
+    val sp = spark
+    import sp.implicits._
+    val table = Files.createTempDirectory("tsink-restage").toString
+    StreamingExtraction.appendBatchToTable(spark, sp.range(0, 3).flatMap(o => Transcripts.turnsFor(o)),
+      batchId = 0L, table, buckets = 4, queryKey = "q", fmt)
+    // an unrelated writer commits between this batch's staging and its commit
+    val racing = new InjectingFormat(out => { fmt.setTableProps(out, Map("note" -> "race")); () })
+    val n = StreamingExtraction.appendBatchToTable(spark,
+      sp.range(3, 6).flatMap(o => Transcripts.turnsFor(o)), batchId = 1L,
+      table, buckets = 4, queryKey = "q", racing)
+    assert(n == expectedRows(3 until 6))
+    val man = fmt.readManifest(table).get
+    assert(man.snapshotId == 2 && man.props.get("note").contains("race"),
+      "the batch must land once, on top of the racing commit")
+    assert(marker(table, "q").contains(1L))
+    assert(man.files.filter(_.seq == 2).map(_.rowCount).sum == expectedRows(3 until 6),
+      "the re-staged files carry the seq they committed at")
+    val served = fmt.readCommitted(spark, table)
+    assert(served.count() == expectedRows(0 until 6))
+    assert(served.select("conv_id", "turn_idx").distinct().count() == expectedRows(0 until 6))
+    assert(leftovers(table).isEmpty, s"left over: ${leftovers(table)}")
+  }
+
+  test("both sinks add the buckets they write to conv_fps.unlisted; rollbackTo restores the list") {
+    val sp = spark
+    import sp.implicits._
+    import graft.spark.{ExtractionJob, TableReplication}
+    val base = Files.createTempDirectory("tsink-unlisted").toString
+    val table = s"$base/table"
+    def unlisted(): Set[Int] = fmt.readManifest(table).get.props.get("conv_fps.unlisted")
+      .toSet[String].flatMap(_.split(',')).map(_.toInt)
+    def bucket(o: Long): Int = ExtractionJob.bucketOfConvId(Transcripts.turnsFor(o).head.conv_id, 4)
+    // a conv-grained table has a conv-fp sidecar, which lists every conversation
+    assert(ExtractionJob.run(spark, Transcripts.generate(spark, 6),
+      ExtractionJob.Config(table, buckets = 4, waves = 1, convGrained = true)).nonEmpty)
+    val s0 = fmt.readManifest(table).get
+    assert(s0.convFpsDir.nonEmpty && unlisted().isEmpty)
+
+    StreamingExtraction.appendBatchToTable(spark, Transcripts.turnsFor(6).toDS(), batchId = 0L,
+      table, buckets = 4, queryKey = "q", fmt)
+    val s1 = fmt.readManifest(table).get
+    assert(unlisted() == Set(bucket(6)))
+
+    // the replica sink, fed the rows of a conversation in another bucket
+    val o = (7L until 64L).find(bucket(_) != bucket(6)).get
+    assert(ExtractionJob.run(spark, Transcripts.turnsFor(o).toDS(),
+      ExtractionJob.Config(s"$base/src", buckets = 4)).nonEmpty)
+    val feed = fmt.readCommitted(spark, s"$base/src")
+      .withColumn("_change_type", org.apache.spark.sql.functions.lit("insert"))
+    assert(TableReplication.replicateBatch(spark, feed, batchId = 0L, table, "r", Some(4)) ==
+      Transcripts.convLength(o).toLong)
+    assert(unlisted() == Set(bucket(6), bucket(o)))
+
+    fmt.rollbackTo(table, s1.snapshotId)
+    assert(unlisted() == Set(bucket(6)), "rollback restores the target's list")
+    fmt.rollbackTo(table, s0.snapshotId)
+    assert(unlisted().isEmpty)
   }
 
   test("setTableProps commits sticky props and retires keys with empty values") {
